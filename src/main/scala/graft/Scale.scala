@@ -724,7 +724,7 @@ object Scale {
         }
         // Fixed-point risk parity on the k×k quantized moment matrix:
         // cost is the ONE pair-moment pass (k²·rows/k join rows); the
-        // 4 iteration steps touch only k-row relations.
+        // 4 rounds run on one row of k×k arrays.
         timed("eod_risk_parity", m, nEv) {
           sink(SparkEntry.queries("eod_risk_parity")(spark, qDir))
         }

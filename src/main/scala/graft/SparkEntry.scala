@@ -372,18 +372,31 @@ object SparkEntry {
     * price crossing puts q² ~ 1e20 past 2^63). Built with the
     * eod_corr_matrix bucket-pair shape — ONE returns window, the
     * cross-section grouped once and pairs emitted inside the group —
-    * and shared by every K×K matrix op (PCA factor, risk parity), so
-    * correlation/covariance entries are identical integers on any
-    * engine/partitioning.
+    * and shared by every K×K matrix op (PCA factor, tangency, risk
+    * parity), so correlation/covariance entries are identical integers
+    * on any engine/partitioning.
+    *
+    * Upper triangle only: one row per pair with `ta <= tb` (each rn's
+    * list sorts by name and pairs an entry with itself and the entries
+    * after it). The moments are symmetric in a/b, so a caller reads
+    * cell (i, j) from the (least, greatest) row — [[pairGrid]] does.
+    *
+    * Not pinned: each caller reads the relation once, through
+    * [[pairGrid]]'s single aggregation, so a pin would add a job and
+    * hide the producer plan without saving any recomputation — and
+    * unpinned, column pruning drops the Σqa²/Σqb² sums the covariance
+    * callers never read.
     */
   private def quantizedPairMoments(s: SparkSession, dir: String): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(19,0)")
     withRet(s, dir).withColumn("rn", row_number().over(wT))
       .withColumn("q", floor(col("ret") * 1e6 + 0.5).cast("long"))
       .groupBy(col("rn"))
-      .agg(collect_list(struct(col("event_type"), col("q"))).as("l"))
-      .select(explode(col("l")).as("a"), col("l"))
-      .select(col("a"), explode(col("l")).as("b"))
+      .agg(array_sort(collect_list(struct(col("event_type"), col("q"))))
+        .as("l"))
+      .select(posexplode(col("l")).as(Seq("p", "a")), col("l"))
+      .select(col("a"),
+        explode(slice(col("l"), col("p") + 1, size(col("l")))).as("b"))
       .where(col("a.q").isNotNull && col("b.q").isNotNull)
       .groupBy(col("a.event_type").as("ta"), col("b.event_type").as("tb"))
       .agg(count(lit(1)).as("n"),
@@ -391,14 +404,87 @@ object SparkEntry {
         sum(dec(col("a.q")) * dec(col("b.q"))).as("sab"),
         sum(dec(col("a.q")) * dec(col("a.q"))).as("saa"),
         sum(dec(col("b.q")) * dec(col("b.q"))).as("sbb"))
-      // r15: every caller (the K×K matrix ops) consumes this relation
-      // at least twice — the diagonal for the position grid and the
-      // full matrix for the pivot — so without a pin the returns
-      // window + cross-section explode² chain runs twice per query.
-      // The pinned relation is k×k rows (r14 pin rule: heavy producer,
-      // bounded output). At cluster scale swap for `checkpoint` (the
-      // SemDeDup convention).
-      .localCheckpoint()
+  }
+
+  /** Series-count bound of the k×k portfolio solvers (eod_pca_factor,
+    * eod_tangency, eod_risk_parity). Their whole state is one row of
+    * k² cells and every sweep is O(k²) work in one task, so the bound
+    * keeps that row small; [[pairGrid]] raises past it rather than
+    * building an unbounded row.
+    */
+  private[graft] val SMAX = 64
+
+  /** `f(e)` with `e` evaluated once. Catalyst has no let: CollapseProject
+    * inlines a column that a consumer names once, and inside a lambda
+    * that one mention runs per element — binding `e` to a lambda
+    * variable keeps the grid and each sweep's state evaluated once.
+    */
+  private def let(e: Column)(f: Column => Column): Column =
+    transform(array(e), f)(0)
+
+  /** Σ a_i·b_i over two equal-length arrays, folded from `zero`. */
+  private def dot(a: Column, b: Column, zero: Column): Column =
+    aggregate(zip_with(a, b, _ * _), zero, _ + _)
+
+  private def d38(v: Long): Column = lit(v).cast("decimal(38,0)")
+
+  /** The quantized covariance cell of a [[quantizedPairMoments]] row on
+    * the integer 1e-12 grid: ⌊(n·Σab − Σa·Σb)/(n(n−1))⌉ (tangency and
+    * risk parity; symmetric in a/b).
+    */
+  private val quantizedCov: Column = {
+    val dec = (c: Column) => c.cast("decimal(19,0)")
+    val num = dec(col("n")) * col("sab") - dec(col("sa")) * dec(col("sb"))
+    floor(num.cast("double") /
+      (col("n").cast("double") * (col("n").cast("double") - 1.0))
+      + 0.5).cast("decimal(38,0)")
+  }
+
+  /** Runs a k×k portfolio solve on ONE row. Aggregates
+    * [[quantizedPairMoments]] once into the grid `g`, a struct of
+    * `ty` (the k series names, sorted), `c` (k rows of k `cell` values,
+    * row-major by name) and one k-array per `diag` expression, evaluated
+    * on the diagonal rows and aligned with `ty`. `solve(g)` returns one
+    * struct per output row. `cell` must be symmetric in a/b: (i, j) and
+    * (j, i) both read the upper-triangle row. A pair without a moments
+    * row reads `zero`. Raises past SMAX series, before any solve work.
+    *
+    * O(k²) assembly: the entries, mirrored below the diagonal and
+    * padded with a `zero` filler per cell (h = 1), sort row-major once;
+    * a real entry sorts just before its own filler, so one filter pass
+    * that drops each filler following a real entry leaves exactly k²
+    * cells and row i is the slice [i·k, (i+1)·k).
+    */
+  private def pairGrid(s: SparkSession, dir: String, query: String,
+                       cell: Column, zero: Column, diag: (String, Column)*)
+                      (solve: Column => Column): DataFrame = {
+    val entry = (a: Column, b: Column, h: Int, v: Column) =>
+      struct(a.as("ta"), b.as("tb"), lit(h).as("h"), v.as("v"))
+    val k = size(col("d"))
+    val grid = let(when(k > SMAX, raise_error(concat(lit(s"$query: "),
+        k.cast("string"), lit(s" series exceed the SMAX=$SMAX bound " +
+          "of the one-row k-by-k solve"))))
+        .otherwise(transform(col("d"), _("t")))) { ty =>
+      val mirrored = flatten(transform(col("l"), x =>
+        when(x("ta") === x("tb"), array(x))
+          .otherwise(array(x, entry(x("tb"), x("ta"), 0, x("v"))))))
+      val fill = flatten(transform(ty, a =>
+        transform(ty, b => entry(a, b, 1, zero))))
+      let(array_sort(concat(mirrored, fill))) { es =>
+        let(filter(es, (x, i) => x("h") === 0 ||
+            when(i === 0, lit(true)).otherwise(es(i - 1)("h") === 1))) { g =>
+          struct(Seq(ty.as("ty"), transform(ty, (_, i) =>
+              transform(slice(g, i * k + 1, k), _("v"))).as("c")) ++
+            diag.map { case (n, _) => transform(col("d"), _(n)).as(n) }: _*)
+        }
+      }
+    }
+    quantizedPairMoments(s, dir).agg(
+        collect_list(entry(col("ta"), col("tb"), 0, cell)).as("l"),
+        array_sort(collect_list(when(col("ta") === col("tb"),
+          struct(col("ta").as("t") +: diag.map { case (n, e) => e.as(n) }: _*))))
+          .as("d"))
+      .select(inline(let(grid)(solve)))
   }
 
   /** The click/view return series rn-paired into (rn, ra, rb) — one
@@ -8198,15 +8284,15 @@ object SparkEntry {
     // eod_corr_matrix bucket-pair shape — group the cross-section
     // once, emit pairs inside it, never a second returns window),
     // each correlation re-quantizes to 1e-6, and the 6 power
-    // iterations run on the K²-row matrix relation with the
-    // embed_power_iter integer conventions (v at 1e-6, norms through
-    // decimal, localCheckpoint per iterate to stop plan blowup — the
-    // matrix build runs ONCE). K ~ series count, so post-matrix work
-    // is tiny at any data scale; the one data-sized pass is the
+    // iterations run with the embed_power_iter integer conventions
+    // (v at 1e-6, norms through decimal) on the one-row k×k grid of
+    // [[pairGrid]]: the matrix-vector products are exact long sums,
+    // the norm an exact decimal sum-of-squares → identical doubles, so
+    // the oracle replays bit-for-bit. K ~ series count, so post-matrix
+    // work is tiny at any data scale; the one data-sized pass is the
     // cross-section agg every matrix op here shares.
     "eod_pca_factor" -> ((s, dir) => {
       val dec = (c: Column) => c.cast("decimal(19,0)")
-      val mm = quantizedPairMoments(s, dir)
       val nDec = col("n").cast("decimal(19,0)")
       val num = nDec * col("sab") - dec(col("sa")) * dec(col("sb"))
       val dxx = nDec * col("saa") - dec(col("sa")) * dec(col("sa"))
@@ -8214,77 +8300,31 @@ object SparkEntry {
       val rho = when(dxx > 0 && dyy > 0,
         num.cast("double") / sqrt(dxx.cast("double") * dyy.cast("double")))
         .otherwise(lit(0.0)) // flat series: no co-movement signal
-      // r14: the op-325 wide-unroll idiom — the k×k power-iteration
-      // state pivots to ONE row and the 5 iterations + final unroll
-      // as scalar column algebra (zero joins, zero per-iterate
-      // checkpoint jobs). Contract unchanged: the matrix-vector
-      // products are exact long sums, the norm an exact decimal
-      // sum-of-squares → identical doubles, so the oracle replays
-      // bit-for-bit. Absent positions stay 0 and drop at the name
-      // join.
-      val SMAX = 7
-      val ty = mm.where(col("ta") === col("tb")).select(col("ta").as("t"))
-      val pos = ty
-        .join(broadcast(ty.select(col("t").as("u"))), col("u") <= col("t"))
-        .groupBy(col("t")).agg(count(lit(1)).cast("int").as("i"))
-        // r15 (r14 verdict #3): a series count beyond the static grid
-        // would silently fall off the 1..SMAX pivot aggregations and
-        // return a WRONG result — fail loudly instead. The guard rides
-        // the k-row position relation (evaluated eagerly by the pin).
-        .select(col("t"), when(col("i") > SMAX, raise_error(concat(
-            lit(s"eod_pca_factor: series count exceeds the SMAX=$SMAX " +
-              "wide-unroll grid (raise SMAX) at event_type "), col("t"))))
-          .otherwise(col("i")).as("i"))
-        .coalesce(1).localCheckpoint()
-      val keyed = mm
-        .join(broadcast(pos).withColumnRenamed("t", "ta")
-          .withColumnRenamed("i", "fi"), "ta")
-        .join(broadcast(pos).withColumnRenamed("t", "tb")
-          .withColumnRenamed("i", "fj"), "tb")
-        .select(col("fi"), col("fj"),
-          floor(rho * 1e6 + 0.5).cast("long").as("rq"))
-      val cells = for { i <- 1 to SMAX; j <- 1 to SMAX } yield (i, j)
-      val aggs = cells.map { case (i, j) =>
-        coalesce(max(when(col("fi") === i && col("fj") === j, col("rq"))),
-          lit(0L)).as(s"rq_${i}_$j")
-      } ++ (1 to SMAX).map { i =>
-        coalesce(max(when(col("fi") === i && col("fj") === i, lit(1))),
-          lit(0)).as(s"ex_$i")
+      val rq = floor(rho * 1e6 + 0.5).cast("long")
+      pairGrid(s, dir, "eod_pca_factor", rq, lit(0L)) { g =>
+        val (ty, c) = (g("ty"), g("c"))
+        // v ← normalize(R·v), the norm on exact decimal sums; the state
+        // keeps the last norm for the eigenvalue/variance-share report.
+        def step(v: Column): Column =
+          let(transform(c, r => dot(r, v, lit(0L)))) { wv =>
+            let(sqrt(aggregate(wv, d38(0L), (a, x) => a + dec(x) * dec(x))
+                .cast("double"))) { nrm =>
+              struct(transform(wv, x =>
+                  floor(x.cast("double") / nrm * 1e6 + 0.5).cast("long"))
+                  .as("v"), nrm.as("nrm"))
+            }
+          }
+        val v0 = struct(transform(ty, _ => lit(1000000L)).as("v"),
+          lit(0.0).as("nrm"))
+        let(aggregate(sequence(lit(1), lit(6)), v0, (st, _) => step(st("v")))) {
+            st =>
+          transform(ty, (t, i) => struct(t.as("event_type"),
+            (round(st("v")(i) / 1e6, 4) + lit(0.0)).as("loading"),
+            (round(st("nrm") / 1e12, 6) + lit(0.0)).as("eigval"),
+            (round(st("nrm") / 1e12 / size(ty), 4) + lit(0.0))
+              .as("var_share")))
+        }
       }
-      val wide = keyed.agg(aggs.head, aggs.tail: _*)
-        .withColumn("k", (1 to SMAX).map(i => col(s"ex_$i")).reduce(_ + _))
-      val keep = cells.map { case (i, j) => col(s"rq_${i}_$j") } ++
-        (1 to SMAX).map(i => col(s"ex_$i")) :+ col("k")
-      var a = wide.select(keep ++ (1 to SMAX).map { i =>
-        when(col(s"ex_$i") === 1, lit(1000000L)).otherwise(0L).as(s"vq_$i")
-      }: _*)
-      // v ← normalize(R·v), the norm on exact decimal sums; the final
-      // pass keeps nrm for the eigenvalue/variance-share report.
-      def multNorm(withNrm: Boolean): Unit = {
-        val wv = a.select(keep ++ (1 to SMAX).map { i =>
-          (1 to SMAX).map(j => col(s"rq_${i}_$j") * col(s"vq_$j"))
-            .reduce(_ + _).as(s"wv_$i")
-        }: _*)
-        val nrmd = wv.withColumn("nrm",
-          sqrt((1 to SMAX).map(i => dec(col(s"wv_$i")) * dec(col(s"wv_$i")))
-            .reduce(_ + _).cast("double")))
-        a = nrmd.select((keep ++ (1 to SMAX).map { i =>
-          floor(col(s"wv_$i").cast("double") / col("nrm") * 1e6 + 0.5)
-            .cast("long").as(s"vq_$i")
-        }) ++ (if (withNrm) Seq(col("nrm")) else Nil): _*)
-      }
-      (1 to 5).foreach(_ => multNorm(withNrm = false))
-      multNorm(withNrm = true)
-      val fin = a.select(col("nrm"), col("k"),
-        inline(array((1 to SMAX).map { i =>
-          struct(lit(i).as("i"), col(s"vq_$i").as("vq"))
-        }: _*)))
-      fin.join(broadcast(pos), "i")
-        .select(col("t").as("event_type"),
-          (round(col("vq") / 1e6, 4) + lit(0.0)).as("loading"),
-          (round(col("nrm") / 1e12, 6) + lit(0.0)).as("eigval"),
-          (round(col("nrm") / 1e12 / col("k"), 4) + lit(0.0))
-            .as("var_share"))
     }),
     // Tangency (max-Sharpe) portfolio (op 325; Markowitz 1952 /
     // Tobin 1958): w ∝ Σ⁻¹μ, the third member of the allocation
@@ -8303,108 +8343,41 @@ object SparkEntry {
     // denominator where Σw can cross zero under shorting); per-period
     // portfolio Sharpe μᵀw/√(wᵀΣw) from the exact integer sums.
     "eod_tangency" -> ((s, dir) => {
-      val mm = quantizedPairMoments(s, dir)
-      val nDec = col("n").cast("decimal(19,0)")
-      val dec = (c: Column) => c.cast("decimal(19,0)")
-      val num = nDec * col("sab") - dec(col("sa")) * dec(col("sb"))
-      val d38 = (v: Long) => lit(v).cast("decimal(38,0)")
-      // r14: the k×k sweep state pivots WIDE (one row, one decimal
-      // column per cell on the static 1..SMAX position grid) and the
-      // six Jacobi sweeps unroll as scalar column algebra — zero
-      // joins, zero per-sweep checkpoint jobs (the r13 relational
-      // loop paid six), one codegen'd projection chain (the op-388
-      // idiom). The INTEGER SWEEP CONTRACT IS UNCHANGED — every
-      // product/sum is exact decimal, so the relational oracle and
-      // the Round12bSpec BigInt re-derivation replay bit-for-bit;
-      // absent positions carry inert identity rows (muq = 0, cq = 0,
-      // dq clamps to 1 → wq = 0 forever).
-      val SMAX = 7
-      // rank WITHOUT a window (the suite bans un-partitioned
-      // Windows): types are unique, so i = |{u : u ≤ t}| over the
-      // k-row diagonal relation is row_number by name.
-      val ty = mm.where(col("ta") === col("tb")).select(col("ta").as("t"))
-      val pos = ty
-        .join(broadcast(ty.select(col("t").as("u"))), col("u") <= col("t"))
-        .groupBy(col("t")).agg(count(lit(1)).cast("int").as("i"))
-        // r15 (r14 verdict #3): fail loudly past the static grid —
-        // positions > SMAX would silently drop from the pivot and
-        // corrupt the solve. Evaluated eagerly by the pin below.
-        .select(col("t"), when(col("i") > SMAX, raise_error(concat(
-            lit(s"eod_tangency: series count exceeds the SMAX=$SMAX " +
-              "wide-unroll grid (raise SMAX) at event_type "), col("t"))))
-          .otherwise(col("i")).as("i"))
-        .coalesce(1).localCheckpoint()
-      val cqE = floor(num.cast("double") /
-        (col("n").cast("double") * (col("n").cast("double") - 1.0))
-        + 0.5).cast("decimal(38,0)")
       // μ on the 1e6-refined q grid; diagonal clamps at +1 raw unit
       // (a zero-variance series would make Jacobi divide by zero).
       val muqE = floor(col("sa").cast("double") * 1e6 /
         col("n").cast("double") + 0.5).cast("decimal(38,0)")
-      val keyed = mm
-        .join(broadcast(pos).withColumnRenamed("t", "ta")
-          .withColumnRenamed("i", "fi"), "ta")
-        .join(broadcast(pos).withColumnRenamed("t", "tb")
-          .withColumnRenamed("i", "fj"), "tb")
-        .select(col("fi"), col("fj"), cqE.as("cq"), muqE.as("muq"))
-      val cells = for { i <- 1 to SMAX; j <- 1 to SMAX } yield (i, j)
-      val aggs = cells.map { case (i, j) =>
-        coalesce(max(when(col("fi") === i && col("fj") === j, col("cq"))),
-          d38(0L)).as(s"cq_${i}_$j")
-      } ++ (1 to SMAX).map { i =>
-        coalesce(max(when(col("fi") === i && col("fj") === i, col("muq"))),
-          d38(0L)).as(s"muq_$i")
+      pairGrid(s, dir, "eod_tangency", quantizedCov, d38(0L),
+          "muq" -> muqE) { g =>
+        val (ty, c, muq) = (g("ty"), g("c"), g("muq"))
+        // wq_i ← ⌊(μ_i·SW − Σ_{j≠i} C_ij·w_j)/max(C_ii, 1)⌉, the
+        // off-diagonal sum as the exact row sum minus its diagonal term
+        def sweep(w: Column): Column = transform(muq, (m, i) =>
+          floor((m * d38(1000000000L) -
+              (dot(c(i), w, d38(0L)) - c(i)(i) * w(i))).cast("double") /
+            greatest(c(i)(i), d38(1L)).cast("double") + 0.5)
+            .cast("decimal(38,0)"))
+        // w0 is the sweep from w = 0 (its off-diagonal sum is exactly
+        // 0), then six more: seven sweeps from zero
+        val zeros = transform(muq, _ => d38(0L))
+        let(aggregate(sequence(lit(1), lit(7)), zeros, (w, _) => sweep(w))) {
+            w =>
+          // finals, exact decimal scalars: l1 = Σ|w|, pr = 1e21·μᵀw,
+          // pv = 1e30·wᵀΣw (Σw on the full, unclamped matrix) →
+          // Sharpe = pr/√pv/1e6
+          val pv = dot(w, transform(c, r => dot(r, w, d38(0L))), d38(0L))
+          let(struct(
+              aggregate(w, d38(0L), (a, x) => a + abs(x)).as("l1"),
+              (round(dot(muq, w, d38(0L)).cast("double") /
+                sqrt(greatest(pv, d38(1L)).cast("double")) / 1e6, 6)
+                + lit(0.0)).as("sharpe"))) { f =>
+            transform(ty, (t, i) => struct(t.as("event_type"),
+              (round(w(i).cast("double") / f("l1").cast("double"), 6)
+                + lit(0.0)).as("weight"),
+              f("sharpe").as("port_sharpe")))
+          }
+        }
       }
-      val wide = keyed.agg(aggs.head, aggs.tail: _*)
-      val carry = cells.map { case (i, j) => col(s"cq_${i}_$j") } ++
-        (1 to SMAX).map(i => col(s"muq_$i")) ++
-        (1 to SMAX).map(i => greatest(col(s"cq_${i}_$i"), d38(1L))
-          .as(s"dq_$i"))
-      var a = wide.select(carry: _*)
-      val keep = cells.map { case (i, j) => col(s"cq_${i}_$j") } ++
-        (1 to SMAX).map(i => col(s"muq_$i")) ++
-        (1 to SMAX).map(i => col(s"dq_$i"))
-      // w0 then six sweeps: wq_i ← ⌊(μ_i·SW − Σ_{j≠i} C_ij·w_j)/C_ii⌉
-      a = a.select(keep ++ (1 to SMAX).map { i =>
-        floor((col(s"muq_$i") * d38(1000000000L)).cast("double") /
-          col(s"dq_$i").cast("double") + 0.5)
-          .cast("decimal(38,0)").as(s"wq_$i")
-      }: _*)
-      for (_ <- 1 to 6) {
-        a = a.select(keep ++ (1 to SMAX).map { i =>
-          val oq = (1 to SMAX).filter(_ != i)
-            .map(j => col(s"cq_${i}_$j") * col(s"wq_$j"))
-            .reduce(_ + _)
-          floor((col(s"muq_$i") * d38(1000000000L) - oq).cast("double") /
-            col(s"dq_$i").cast("double") + 0.5)
-            .cast("decimal(38,0)").as(s"wq_$i")
-        }: _*)
-      }
-      // finals, all exact decimal scalars on the one row:
-      // cwq_i = (Σw)_i (full matrix, unclamped diagonal), l1 = Σ|w|,
-      // pr = 1e21·μᵀw, pv = 1e30·wᵀΣw → Sharpe = pr/√pv/1e6.
-      val fin = a.select(keep ++
-        (1 to SMAX).map(i => col(s"wq_$i")) ++
-        (1 to SMAX).map { i =>
-          (1 to SMAX).map(j => col(s"cq_${i}_$j") * col(s"wq_$j"))
-            .reduce(_ + _).as(s"cwq_$i")
-        }: _*)
-        .select(
-          (1 to SMAX).map(i => abs(col(s"wq_$i"))).reduce(_ + _).as("l1"),
-          (1 to SMAX).map(i => col(s"muq_$i") * col(s"wq_$i"))
-            .reduce(_ + _).as("pr"),
-          (1 to SMAX).map(i => col(s"wq_$i") * col(s"cwq_$i"))
-            .reduce(_ + _).as("pv"),
-          inline(array((1 to SMAX).map { i =>
-            struct(lit(i).as("i"), col(s"wq_$i").as("wq"))
-          }: _*)))
-      fin.join(broadcast(pos), "i")
-        .select(col("t").as("event_type"),
-          (round(col("wq").cast("double") / col("l1").cast("double"), 6)
-            + lit(0.0)).as("weight"),
-          (round(col("pr").cast("double") /
-            sqrt(greatest(col("pv"), d38(1L)).cast("double")) / 1e6, 6)
-            + lit(0.0)).as("port_sharpe"))
     }),
     // Equal-risk-contribution weights (op 306; "risk parity", Maillard/
     // Roncalli/Teïletche 2010): weights where each series contributes
@@ -8422,106 +8395,44 @@ object SparkEntry {
     // lazy-guard rule as safeDiv, and the oracle replays it. Output:
     // weight, realized risk-contribution share, portfolio vol.
     "eod_risk_parity" -> ((s, dir) => {
-      val mm = quantizedPairMoments(s, dir)
-      val nDec = col("n").cast("decimal(19,0)")
-      val dec = (c: Column) => c.cast("decimal(19,0)")
-      val num = nDec * col("sab") - dec(col("sa")) * dec(col("sb"))
-      val d38 = (v: Long) => lit(v).cast("decimal(38,0)")
-      // r14: the op-325 wide-unroll idiom — the k×k fixed-point state
-      // pivots to ONE row (static positions 1..SMAX, rank via
-      // self-join) and the 4 multiplicative rounds unroll as scalar
-      // column algebra: zero joins, zero per-round checkpoint jobs.
-      // INTEGER/SCALAR CONTRACT UNCHANGED (exact decimal sums, max
-      // via greatest — order-free either way), so the relational
-      // oracle replays bit-for-bit. Absent positions carry ex = 0 →
-      // wq = 0 forever and drop at the final name join.
-      val SMAX = 7
-      val ty = mm.where(col("ta") === col("tb")).select(col("ta").as("t"))
-      val pos = ty
-        .join(broadcast(ty.select(col("t").as("u"))), col("u") <= col("t"))
-        .groupBy(col("t")).agg(count(lit(1)).cast("int").as("i"))
-        // r15 (r14 verdict #3): fail loudly past the static grid —
-        // positions > SMAX would silently drop from the pivot and
-        // corrupt the fixed point. Evaluated eagerly by the pin below.
-        .select(col("t"), when(col("i") > SMAX, raise_error(concat(
-            lit(s"eod_risk_parity: series count exceeds the SMAX=$SMAX " +
-              "wide-unroll grid (raise SMAX) at event_type "), col("t"))))
-          .otherwise(col("i")).as("i"))
-        .coalesce(1).localCheckpoint()
-      val cqE = floor(num.cast("double") /
-        (col("n").cast("double") * (col("n").cast("double") - 1.0))
-        + 0.5).cast("decimal(38,0)")
-      val keyed = mm
-        .join(broadcast(pos).withColumnRenamed("t", "ta")
-          .withColumnRenamed("i", "fi"), "ta")
-        .join(broadcast(pos).withColumnRenamed("t", "tb")
-          .withColumnRenamed("i", "fj"), "tb")
-        .select(col("fi"), col("fj"), cqE.as("cq"))
-      val cells = for { i <- 1 to SMAX; j <- 1 to SMAX } yield (i, j)
-      val aggs = cells.map { case (i, j) =>
-        coalesce(max(when(col("fi") === i && col("fj") === j, col("cq"))),
-          d38(0L)).as(s"cq_${i}_$j")
-      } ++ (1 to SMAX).map { i =>
-        coalesce(max(when(col("fi") === i && col("fj") === i, lit(1))),
-          lit(0)).as(s"ex_$i")
+      pairGrid(s, dir, "eod_risk_parity", quantizedCov, d38(0L)) { g =>
+        val (ty, c) = (g("ty"), g("c"))
+        def cw(w: Column): Column = transform(c, r => dot(r, w, d38(0L)))
+        // one round of w ← normalize(√(w/(Cw))): the greatest()-clamped
+        // denominator, the max-of-u pivot onto the 1e12 grid, then the
+        // 1e8 weight grid
+        def step(w: Column): Column =
+          let(zip_with(w, cw(w), (x, r) =>
+              sqrt(x.cast("double") / greatest(r, d38(1L)).cast("double")))) {
+              u =>
+            let(array_max(u)) { mx =>
+              let(transform(u, x => floor(x / mx * 1e12 + 0.5).cast("long"))) {
+                  uq =>
+                let(aggregate(uq, lit(0L), _ + _)) { su =>
+                  transform(uq, x => floor(x.cast("double") /
+                    su.cast("double") * 1e8 + 0.5).cast("long"))
+                }
+              }
+            }
+          }
+        // w0 = equal weight on the 1e8 grid, then 4 rounds
+        val w0 = transform(ty, _ =>
+          floor(lit(1e8) / size(ty) + 0.5).cast("long"))
+        let(aggregate(sequence(lit(1), lit(4)), w0, (w, _) => step(w))) { w =>
+          // finals: wr_i = w_i·(Cw)_i exact decimal, twr = Σ wr
+          let(zip_with(cw(w), w, _ * _)) { wr =>
+            let(aggregate(wr, d38(0L), _ + _)) { twr =>
+              transform(ty, (t, i) => struct(t.as("event_type"),
+                (round(w(i) / 1e8, 6) + lit(0.0)).as("weight"),
+                (round(wr(i).cast("double") / twr.cast("double"), 4)
+                  + lit(0.0)).as("risk_share"),
+                // wᵀCw is PSD up to ±0.5/entry quantization — clamp the dip
+                (round(sqrt(greatest(twr, d38(0L)).cast("double"))
+                  / 1e8 / 1e6, 6) + lit(0.0)).as("port_vol")))
+            }
+          }
+        }
       }
-      val wide = keyed.agg(aggs.head, aggs.tail: _*)
-        .withColumn("k", (1 to SMAX).map(i => col(s"ex_$i")).reduce(_ + _))
-      val keep = cells.map { case (i, j) => col(s"cq_${i}_$j") } ++
-        (1 to SMAX).map(i => col(s"ex_$i")) :+ col("k")
-      // w0 = equal weight on the 1e8 grid, then 4 unrolled rounds of
-      // w ← normalize(√(w/(Cw))) with the same greatest()-clamped
-      // denominator, max-of-u pivot, and floor grids as r13.
-      var a = wide.select(keep ++ (1 to SMAX).map { i =>
-        when(col(s"ex_$i") === 1,
-          floor(lit(1e8) / col("k") + 0.5).cast("long")).otherwise(0L)
-          .as(s"wq_$i")
-      }: _*)
-      for (_ <- 1 to 4) {
-        val withU = a.select(keep ++ (1 to SMAX).map(i => col(s"wq_$i")) ++
-          (1 to SMAX).map { i =>
-            val rc = (1 to SMAX)
-              .map(j => col(s"cq_${i}_$j") * col(s"wq_$j")).reduce(_ + _)
-            sqrt(col(s"wq_$i").cast("double") /
-              greatest(rc, d38(1L)).cast("double")).as(s"u_$i")
-          }: _*)
-        val withQ = withU
-          .withColumn("mx",
-            greatest((1 to SMAX).map(i => col(s"u_$i")): _*))
-          .select(keep ++ (1 to SMAX).map { i =>
-            floor(col(s"u_$i") / col("mx") * 1e12 + 0.5).cast("long")
-              .as(s"uq_$i")
-          }: _*)
-        a = withQ
-          .withColumn("su",
-            (1 to SMAX).map(i => col(s"uq_$i")).reduce(_ + _))
-          .select(keep ++ (1 to SMAX).map { i =>
-            floor(col(s"uq_$i").cast("double") / col("su").cast("double")
-              * 1e8 + 0.5).cast("long").as(s"wq_$i")
-          }: _*)
-      }
-      // finals: wr_i = w_i·(Cw)_i exact decimal; twr = Σ wr (absent
-      // rows contribute 0), then explode to rows and attach names.
-      val fin = a.select(
-        (1 to SMAX).map { i =>
-          val rc = (1 to SMAX)
-            .map(j => col(s"cq_${i}_$j") * col(s"wq_$j")).reduce(_ + _)
-          (rc * col(s"wq_$i")).as(s"wr_$i")
-        } ++ (1 to SMAX).map(i => col(s"wq_$i")): _*)
-        .select(
-          (1 to SMAX).map(i => col(s"wr_$i")).reduce(_ + _).as("twr"),
-          inline(array((1 to SMAX).map { i =>
-            struct(lit(i).as("i"), col(s"wq_$i").as("wq"),
-              col(s"wr_$i").as("wr"))
-          }: _*)))
-      fin.join(broadcast(pos), "i")
-        .select(col("t").as("event_type"),
-          (round(col("wq") / 1e8, 6) + lit(0.0)).as("weight"),
-          (round(col("wr").cast("double") / col("twr").cast("double"), 4)
-            + lit(0.0)).as("risk_share"),
-          // wᵀCw is PSD up to ±0.5/entry quantization — clamp the dip
-          (round(sqrt(greatest(col("twr"), lit(0).cast("decimal(38,0)"))
-            .cast("double")) / 1e8 / 1e6, 6) + lit(0.0)).as("port_vol"))
     }),
     // Two-factor OLS (op 316; the CAPM grid's multi-factor successor —
     // Fama/French-style attribution): each non-factor series regressed

@@ -79,7 +79,7 @@ class Round12bSpec extends SparkSpec {
   /** Shared with Round11eSpec's convention: per-type quantized returns
     * aligned by index.
     */
-  private def quantizedSeries(): Map[String, Array[Long]] =
+  private def quantizedSeries(dir: String): Map[String, Array[Long]] =
     graft.sources.Tables.load(spark, dir, "events")
       .select($"event_type", unix_micros($"ts"), $"event_id", $"value")
       .as[(String, Long, Long, Double)].collect()
@@ -198,78 +198,81 @@ class Round12bSpec extends SparkSpec {
   }
 
   test("eod_tangency: 6 Jacobi sweeps re-derived; direction matches a dense solve") {
-    val qs = quantizedSeries()
-    val types = qs.keys.toArray.sorted
-    val k = types.length
-    def mom(a: String, b: String): (Long, BigInt, BigInt, BigInt) = {
-      val z = qs(a).zip(qs(b))
-      (z.length.toLong, BigInt(z.map(_._1).sum), BigInt(z.map(_._2).sum),
-        z.map { case (x, y) => BigInt(x) * y }.sum)
-    }
-    val cq = Array.tabulate(k, k) { (i, j) =>
-      val (n, sa, sb, sab) = mom(types(i), types(j))
-      BigInt(math.floor((BigInt(n) * sab - sa * sb).toDouble /
-        (n.toDouble * (n - 1.0)) + 0.5).toLong)
-    }
-    val muq = types.map { t =>
-      val (n, sa, _, _) = mom(t, t)
-      BigInt(math.floor(sa.toDouble * 1e6 / n.toDouble + 0.5).toLong)
-    }
-    val dq = Array.tabulate(k)(i => cq(i)(i).max(BigInt(1)))
-    val SW = BigInt(1000000000L)
-    var wq = Array.tabulate(k)(i =>
-      BigInt(math.floor((muq(i) * SW).toDouble / dq(i).toDouble + 0.5).toLong))
-    for (_ <- 1 to 6) {
-      wq = Array.tabulate(k) { i =>
-        val oq = (0 until k).filter(_ != i).map(j => cq(i)(j) * wq(j)).sum
-        BigInt(math.floor((muq(i) * SW - oq).toDouble / dq(i).toDouble + 0.5)
-          .toLong)
+    // the testdata plus 8- and 16-series twins (past the old 7-series grid)
+    for (dir <- dir +: Seq(8, 16).map(Round15Spec.eventsDir(spark, _))) {
+      val qs = quantizedSeries(dir)
+      val types = qs.keys.toArray.sorted
+      val k = types.length
+      def mom(a: String, b: String): (Long, BigInt, BigInt, BigInt) = {
+        val z = qs(a).zip(qs(b))
+        (z.length.toLong, BigInt(z.map(_._1).sum), BigInt(z.map(_._2).sum),
+          z.map { case (x, y) => BigInt(x) * y }.sum)
       }
-    }
-    val l1 = wq.map(_.abs).sum
-    val cw = Array.tabulate(k)(i => (0 until k).map(j => cq(i)(j) * wq(j)).sum)
-    val pr = (0 until k).map(i => muq(i) * wq(i)).sum
-    val pv = (0 until k).map(i => wq(i) * cw(i)).sum
-    val sharpe = pr.toDouble / math.sqrt(pv.max(BigInt(1)).toDouble) / 1e6
-
-    val got = SparkEntry.queries("eod_tangency")(spark, dir)
-      .select($"event_type", $"weight", $"port_sharpe")
-      .as[(String, Double, Double)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    assert(got.keySet == types.toSet)
-    for ((t, i) <- types.zipWithIndex) {
-      val (gw, gs) = got(t)
-      assert(math.abs(gw - wq(i).toDouble / l1.toDouble) < 6e-7,
-        s"$t weight $gw vs ${wq(i).toDouble / l1.toDouble}")
-      assert(math.abs(gs - sharpe) < 6e-7, s"$t sharpe $gs vs $sharpe")
-    }
-
-    // Independent check: dense Gaussian elimination on the REAL-valued
-    // system Σw = μ (doubles straight from the integer moments). The
-    // Jacobi direction must agree up to quantization + truncation —
-    // cosine > 0.999 is far tighter than any wrong-matrix answer gets.
-    val a = Array.tabulate(k, k)((i, j) => cq(i)(j).toDouble)
-    val bvec = Array.tabulate(k)(i => muq(i).toDouble * SW.toDouble)
-    for (p <- 0 until k) {
-      val piv = (p until k).maxBy(r => math.abs(a(r)(p)))
-      val (tr, tb) = (a(piv), bvec(piv))
-      a(piv) = a(p); bvec(piv) = bvec(p); a(p) = tr; bvec(p) = tb
-      for (r <- p + 1 until k) {
-        val f = a(r)(p) / a(p)(p)
-        for (cc <- p until k) a(r)(cc) -= f * a(p)(cc)
-        bvec(r) -= f * bvec(p)
+      val cq = Array.tabulate(k, k) { (i, j) =>
+        val (n, sa, sb, sab) = mom(types(i), types(j))
+        BigInt(math.floor((BigInt(n) * sab - sa * sb).toDouble /
+          (n.toDouble * (n - 1.0)) + 0.5).toLong)
       }
+      val muq = types.map { t =>
+        val (n, sa, _, _) = mom(t, t)
+        BigInt(math.floor(sa.toDouble * 1e6 / n.toDouble + 0.5).toLong)
+      }
+      val dq = Array.tabulate(k)(i => cq(i)(i).max(BigInt(1)))
+      val SW = BigInt(1000000000L)
+      var wq = Array.tabulate(k)(i =>
+        BigInt(math.floor((muq(i) * SW).toDouble / dq(i).toDouble + 0.5).toLong))
+      for (_ <- 1 to 6) {
+        wq = Array.tabulate(k) { i =>
+          val oq = (0 until k).filter(_ != i).map(j => cq(i)(j) * wq(j)).sum
+          BigInt(math.floor((muq(i) * SW - oq).toDouble / dq(i).toDouble + 0.5)
+            .toLong)
+        }
+      }
+      val l1 = wq.map(_.abs).sum
+      val cw = Array.tabulate(k)(i => (0 until k).map(j => cq(i)(j) * wq(j)).sum)
+      val pr = (0 until k).map(i => muq(i) * wq(i)).sum
+      val pv = (0 until k).map(i => wq(i) * cw(i)).sum
+      val sharpe = pr.toDouble / math.sqrt(pv.max(BigInt(1)).toDouble) / 1e6
+
+      val got = SparkEntry.queries("eod_tangency")(spark, dir)
+        .select($"event_type", $"weight", $"port_sharpe")
+        .as[(String, Double, Double)].collect()
+        .map(r => r._1 -> (r._2, r._3)).toMap
+      assert(got.keySet == types.toSet)
+      for ((t, i) <- types.zipWithIndex) {
+        val (gw, gs) = got(t)
+        assert(math.abs(gw - wq(i).toDouble / l1.toDouble) < 6e-7,
+          s"$t weight $gw vs ${wq(i).toDouble / l1.toDouble}")
+        assert(math.abs(gs - sharpe) < 6e-7, s"$t sharpe $gs vs $sharpe")
+      }
+
+      // Independent check: dense Gaussian elimination on the REAL-valued
+      // system Σw = μ (doubles straight from the integer moments). The
+      // Jacobi direction must agree up to quantization + truncation —
+      // cosine > 0.999 is far tighter than any wrong-matrix answer gets.
+      val a = Array.tabulate(k, k)((i, j) => cq(i)(j).toDouble)
+      val bvec = Array.tabulate(k)(i => muq(i).toDouble * SW.toDouble)
+      for (p <- 0 until k) {
+        val piv = (p until k).maxBy(r => math.abs(a(r)(p)))
+        val (tr, tb) = (a(piv), bvec(piv))
+        a(piv) = a(p); bvec(piv) = bvec(p); a(p) = tr; bvec(p) = tb
+        for (r <- p + 1 until k) {
+          val f = a(r)(p) / a(p)(p)
+          for (cc <- p until k) a(r)(cc) -= f * a(p)(cc)
+          bvec(r) -= f * bvec(p)
+        }
+      }
+      val sol = new Array[Double](k)
+      for (p <- k - 1 to 0 by -1) {
+        var s = bvec(p)
+        for (cc <- p + 1 until k) s -= a(p)(cc) * sol(cc)
+        sol(p) = s / a(p)(p)
+      }
+      val wD = wq.map(_.toDouble)
+      val dot = (0 until k).map(i => sol(i) * wD(i)).sum
+      val cos = dot / math.sqrt(sol.map(x => x * x).sum) /
+        math.sqrt(wD.map(x => x * x).sum)
+      assert(cos > 0.999, s"Jacobi direction vs dense solve: cos=$cos")
     }
-    val sol = new Array[Double](k)
-    for (p <- k - 1 to 0 by -1) {
-      var s = bvec(p)
-      for (cc <- p + 1 until k) s -= a(p)(cc) * sol(cc)
-      sol(p) = s / a(p)(p)
-    }
-    val wD = wq.map(_.toDouble)
-    val dot = (0 until k).map(i => sol(i) * wD(i)).sum
-    val cos = dot / math.sqrt(sol.map(x => x * x).sum) /
-      math.sqrt(wD.map(x => x * x).sum)
-    assert(cos > 0.999, s"Jacobi direction vs dense solve: cos=$cos")
   }
 }

@@ -4,13 +4,15 @@ package graft
   * family. The r14 rewrites of the four iterative-state queries
   * (Markov absorption, tangency Jacobi, PCA power iteration, risk
   * parity) replaced per-iteration materialization (one-plus Spark
-  * jobs per sweep — 24 for Markov) with a single unrolled scalar
-  * projection chain. Catalyst can't see that invariant, so this spec
+  * jobs per sweep — 24 for Markov) with a single in-plan solve (an
+  * unrolled scalar projection chain for Markov, one-row array sweeps
+  * for the portfolio solvers). Catalyst can't see that invariant, so this spec
   * pins it: each query must complete within a small fixed job budget,
   * far below what any per-iteration-materialization regression would
-  * cost. Bounds are ~2× the measured counts — loose enough for plan
-  * jitter (AQE stages, broadcasts), tight enough that re-introducing
-  * per-sweep checkpoints (Markov: +24 jobs) fails immediately.
+  * cost. Bounds sit a stated headroom above the measured counts —
+  * loose enough for plan jitter (AQE stages, broadcasts), tight enough
+  * that re-introducing per-sweep checkpoints (Markov: +24 jobs) or the
+  * portfolio solvers' pins (+2) fails immediately.
   */
 class Round14bSpec extends SparkSpec {
 
@@ -26,10 +28,8 @@ class Round14bSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      // listener events are posted asynchronously; give the bus a
-      // beat to drain (the private listenerBus.waitUntilEmpty is
-      // inaccessible outside org.apache.spark)
-      Thread.sleep(500)
+      // listener events are posted asynchronously: drain the bus
+      org.apache.spark.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     jobs.get
   }
@@ -40,16 +40,18 @@ class Round14bSpec extends SparkSpec {
   }
 
   test("wide-unroll queries stay within their job budgets") {
-    // measured (AQE stage materializations + broadcasts + the two
-    // pinned checkpoints): markov 18, the three portfolio ops 14.
-    // Budgets leave +4/+10 headroom but sit BELOW measured + the
-    // smallest regression (+5 per-iterate checkpoints for PCA, +6
-    // tangency, +8 risk parity, +24 markov sweeps).
+    // measured (AQE stage materializations + broadcasts, and markov's
+    // pinned checkpoints): markov 16, each portfolio solver 6 — its
+    // one-row array solve pins nothing and joins nothing. Budgets leave
+    // markov +12 and the portfolio solvers +1, and sit BELOW measured +
+    // the smallest regression (+24 markov sweeps; for the solvers +2
+    // if the moments pin and the position pin came back, +4..+6
+    // per-iterate checkpoints).
     val budgets = Seq(
       "events_markov_attribution" -> 28,
-      "eod_tangency" -> 19,
-      "eod_pca_factor" -> 18,
-      "eod_risk_parity" -> 19)
+      "eod_tangency" -> 7,
+      "eod_pca_factor" -> 7,
+      "eod_risk_parity" -> 7)
     val over = budgets.flatMap { case (name, budget) =>
       val n = run(name)
       info(s"$name: $n jobs (budget $budget)")

@@ -1,17 +1,18 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-15 (second optimization round) guards.
   *
-  * 1. SMAX overflow guards (r14 verdict #3): the wide-unroll grids
-  *    (eod_pca_factor / eod_tangency / eod_risk_parity, and
-  *    markovAttribution's transient-state grid) pivot key-count-bounded
-  *    state onto a static 1..SMAX position grid. A key cardinality
-  *    beyond SMAX used to fall off the `when(fi === i …)` pivot
-  *    aggregations SILENTLY — wrong answer, no error. The guards added
-  *    in r15 raise instead; these tests prove the failure is loud and
-  *    that the in-contract cardinality still passes.
+  * 1. SMAX overflow guards (r14 verdict #3): markovAttribution pivots
+  *    its transient states onto a static 1..SMAX position grid, where a
+  *    key cardinality beyond SMAX used to fall off the `when(fi === i …)`
+  *    pivot aggregations SILENTLY — wrong answer, no error. The k×k
+  *    portfolio solvers (eod_pca_factor / eod_tangency /
+  *    eod_risk_parity) keep their state in one row of k-arrays, bounded
+  *    by SparkEntry.SMAX series. The guards raise instead; these tests
+  *    prove the failure is loud and that in-bound cardinalities pass.
   *
   * 2. Shared landing-dir staging (r14 verdict #1): streamReplay now
   *    stages each source table once per process and shares the
@@ -21,32 +22,6 @@ import org.apache.spark.sql.functions._
   *    query over the same table must see every row.
   */
 class Round15Spec extends SparkSpec {
-
-  /** events-table twin with `n` distinct event types, written as a
-    * single-file-per-table dir the SparkEntry loaders accept.
-    */
-  private def eventsDir(nTypes: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-r15-ev").toString
-    val s = spark
-    import s.implicits._
-    val rows = for {
-      t <- 0 until nTypes
-      i <- 0 until 12
-    } yield (
-      (t * 12 + i).toLong,                                   // event_id
-      java.sql.Timestamp.valueOf(f"2024-01-${i + 1}%02d 00:00:00"),
-      (i % 5).toLong,                                        // user_id
-      s"type_$t",                                            // event_type
-      // genuinely noisy prices (a near-deterministic series quantizes
-      // to ~zero variance and the clamped Jacobi denominators blow up
-      // the decimal grid — not the failure under test here)
-      50.0 + ((t * 7919 + i * 104729) % 997) / 10.0,         // value
-      """{"k": 1}""")                                        // props
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
-  }
 
   private def guardFires(query: String, dir: String): Boolean =
     try {
@@ -63,11 +38,13 @@ class Round15Spec extends SparkSpec {
     }
 
   test("wide-unroll grids fail loudly past SMAX and pass within it") {
-    val over = eventsDir(8)   // 8 series > SMAX = 7
-    val under = eventsDir(7)  // exactly at the grid bound: must pass
+    val over = SparkEntry.SMAX + 1
+    val unders = Seq(7, 8, 16) // the old 7-series grid, just past it, 2×
+    val dirs = (over +: unders).map(n => n -> Round15Spec.eventsDir(spark, n)).toMap
     for (q <- Seq("eod_pca_factor", "eod_tangency", "eod_risk_parity")) {
-      assert(guardFires(q, over), s"$q did not raise with 8 series")
-      assert(!guardFires(q, under), s"$q raised with 7 series")
+      assert(guardFires(q, dirs(over)), s"$q did not raise with $over series")
+      for (n <- unders)
+        assert(!guardFires(q, dirs(n)), s"$q raised with $n series")
     }
   }
 
@@ -109,5 +86,37 @@ class Round15Spec extends SparkSpec {
     // A different query over the SAME staged table also sees all rows.
     val scd = rows("streaming_scd2")
     assert(scd.nonEmpty)
+  }
+}
+
+object Round15Spec {
+  /** events-table twin with `nTypes` distinct event types, written as a
+    * single-file-per-table dir the SparkEntry loaders accept. Each type
+    * is an independent 250-step random walk (1% steps, seeded by type),
+    * so the series are near-uncorrelated: with n ≫ k² returns the
+    * sample covariance stays diagonally dominant and the k×k solvers'
+    * fixed iteration counts converge for every k the specs use.
+    */
+  def eventsDir(spark: SparkSession, nTypes: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-r15-ev").toString
+    import spark.implicits._
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    val nObs = 250
+    val rows = (0 until nTypes).flatMap { t =>
+      val rnd = new java.util.Random(t)
+      val prices = Iterator.iterate(100.0)(_ * (1.0 + 0.01 * rnd.nextGaussian()))
+      prices.take(nObs).zipWithIndex.map { case (p, i) => (
+        (t * nObs + i).toLong,                              // event_id
+        java.sql.Timestamp.valueOf(t0.plusHours(i)),        // ts
+        (i % 5).toLong,                                     // user_id
+        s"type_$t",                                         // event_type
+        p,                                                  // value
+        """{"k": 1}""")                                     // props
+      }
+    }
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    dir
   }
 }
