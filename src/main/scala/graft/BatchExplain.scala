@@ -6,7 +6,6 @@
 // PlanAudit's header — localCheckpoint is eager, so plans of pinned
 // queries render the pinned subtree as `Scan ExistingRDD`.
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 object BatchExplain {
@@ -14,13 +13,7 @@ object BatchExplain {
     val outDir = args(0)
     val names = args(1).split(",")
     val suffix = if (args.length > 2) args(2) else ""
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.Graft.register(spark)
     new java.io.File(outDir).mkdirs()

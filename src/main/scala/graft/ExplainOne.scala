@@ -1,16 +1,9 @@
 // plan-audit main: ExplainOne <query-name> prints the formatted
 // physical plan of one SparkEntry query at sf0.01.
 package graft
-import org.apache.spark.sql.SparkSession
 object ExplainOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.Graft.register(spark)
     val df = SparkEntry.queries(args(0))(spark, "/root/testdata/sf0.01")

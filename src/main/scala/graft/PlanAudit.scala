@@ -18,7 +18,6 @@
 // run once at build time. Compare pinned queries by wall-clock (which
 // charges those jobs), not by scan counts alone.
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 object PlanAudit {
@@ -26,13 +25,7 @@ object PlanAudit {
     val out = args(0)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.Graft.register(spark)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")

@@ -170,14 +170,7 @@ object Scale {
       op == "gen" || only.forall(_.contains(op))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dim = 64
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Graft.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft-scale").toString

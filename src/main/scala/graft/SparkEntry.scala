@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{safeDiv, Eod, Graft, Pii, Text, Tick}
+import graft.functions.{denseGrid, dot, gridEntry, let, safeDiv, SMAX, Eod, Graft, Pii, Text, Tick}
 import graft.operators.{AsOfJoin, Cluster, Corpus, Dedup, Drawdown, Multimodal, Resample, Similarity, Sketch}
 import graft.sim.MarketSim
 
@@ -406,26 +406,6 @@ object SparkEntry {
         sum(dec(col("b.q")) * dec(col("b.q"))).as("sbb"))
   }
 
-  /** Series-count bound of the k×k portfolio solvers (eod_pca_factor,
-    * eod_tangency, eod_risk_parity). Their whole state is one row of
-    * k² cells and every sweep is O(k²) work in one task, so the bound
-    * keeps that row small; [[pairGrid]] raises past it rather than
-    * building an unbounded row.
-    */
-  private[graft] val SMAX = 64
-
-  /** `f(e)` with `e` evaluated once. Catalyst has no let: CollapseProject
-    * inlines a column that a consumer names once, and inside a lambda
-    * that one mention runs per element — binding `e` to a lambda
-    * variable keeps the grid and each sweep's state evaluated once.
-    */
-  private def let(e: Column)(f: Column => Column): Column =
-    transform(array(e), f)(0)
-
-  /** Σ a_i·b_i over two equal-length arrays, folded from `zero`. */
-  private def dot(a: Column, b: Column, zero: Column): Column =
-    aggregate(zip_with(a, b, _ * _), zero, _ + _)
-
   private def d38(v: Long): Column = lit(v).cast("decimal(38,0)")
 
   /** The quantized covariance cell of a [[quantizedPairMoments]] row on
@@ -446,20 +426,13 @@ object SparkEntry {
     * row-major by name) and one k-array per `diag` expression, evaluated
     * on the diagonal rows and aligned with `ty`. `solve(g)` returns one
     * struct per output row. `cell` must be symmetric in a/b: (i, j) and
-    * (j, i) both read the upper-triangle row. A pair without a moments
-    * row reads `zero`. Raises past SMAX series, before any solve work.
-    *
-    * O(k²) assembly: the entries, mirrored below the diagonal and
-    * padded with a `zero` filler per cell (h = 1), sort row-major once;
-    * a real entry sorts just before its own filler, so one filter pass
-    * that drops each filler following a real entry leaves exactly k²
-    * cells and row i is the slice [i·k, (i+1)·k).
+    * (j, i) both read the upper-triangle row, mirrored below the
+    * diagonal before [[graft.functions.denseGrid]] pads the holes with
+    * `zero`. Raises past SMAX series, before any solve work.
     */
   private def pairGrid(s: SparkSession, dir: String, query: String,
                        cell: Column, zero: Column, diag: (String, Column)*)
                       (solve: Column => Column): DataFrame = {
-    val entry = (a: Column, b: Column, h: Int, v: Column) =>
-      struct(a.as("ta"), b.as("tb"), lit(h).as("h"), v.as("v"))
     val k = size(col("d"))
     val grid = let(when(k > SMAX, raise_error(concat(lit(s"$query: "),
         k.cast("string"), lit(s" series exceed the SMAX=$SMAX bound " +
@@ -467,20 +440,12 @@ object SparkEntry {
         .otherwise(transform(col("d"), _("t")))) { ty =>
       val mirrored = flatten(transform(col("l"), x =>
         when(x("ta") === x("tb"), array(x))
-          .otherwise(array(x, entry(x("tb"), x("ta"), 0, x("v"))))))
-      val fill = flatten(transform(ty, a =>
-        transform(ty, b => entry(a, b, 1, zero))))
-      let(array_sort(concat(mirrored, fill))) { es =>
-        let(filter(es, (x, i) => x("h") === 0 ||
-            when(i === 0, lit(true)).otherwise(es(i - 1)("h") === 1))) { g =>
-          struct(Seq(ty.as("ty"), transform(ty, (_, i) =>
-              transform(slice(g, i * k + 1, k), _("v"))).as("c")) ++
-            diag.map { case (n, _) => transform(col("d"), _(n)).as(n) }: _*)
-        }
-      }
+          .otherwise(array(x, gridEntry(x("tb"), x("ta"), x("v"))))))
+      struct(Seq(ty.as("ty"), denseGrid(ty, ty, mirrored, zero).as("c")) ++
+        diag.map { case (n, _) => transform(col("d"), _(n)).as(n) }: _*)
     }
     quantizedPairMoments(s, dir).agg(
-        collect_list(entry(col("ta"), col("tb"), 0, cell)).as("l"),
+        collect_list(gridEntry(col("ta"), col("tb"), cell)).as("l"),
         array_sort(collect_list(when(col("ta") === col("tb"),
           struct(col("ta").as("t") +: diag.map { case (n, e) => e.as(n) }: _*))))
           .as("d"))
@@ -15454,14 +15419,19 @@ object SparkEntry {
       // op 388: the same journey cut / tail-close / transition
       // counts, 24 unrolled floor-division sweeps on the 1e-9 grid.
       "events_markov_attribution" -> {
-        // mirrors Events.markovAttribution: the whole chain pivots to
+        // replays Events.markovAttribution's solve: the chain pivots to
         // ONE wide row (positions 1..7, conv = 8, null = 9), explodes
-        // 7 removal variants, and runs the fixed-pivot-order Gaussian
-        // elimination fully unrolled as scalar column algebra. Every
+        // 7 removal variants, and runs the same fixed-pivot-order
+        // Gaussian elimination unrolled as scalar column algebra. The
+        // Spark side eliminates over exactly its k states; the padded
+        // positions here are inert identity rows (and variants past k
+        // remove nothing), so both yield the same doubles. Every
         // arithmetic step is a scalar IEEE op in the same order as
         // the Spark plan (a - b*c/d parses as a - ((b*c)/d) in both
         // engines) and every cross-row aggregate is INTEGER, so the
-        // two engines agree bit-for-bit without a grid.
+        // two engines agree bit-for-bit without a grid. The 7-state
+        // grid covers the testdata's 5 states; the specs check larger
+        // chains against an exact JVM solve.
         val smax = 7; val convj = smax + 1; val nullj = smax + 2
         val rhs = convj
         val nCols = (for { i <- 1 to smax; j <- 1 to nullj } yield

@@ -99,10 +99,6 @@ object Eod {
     safeDiv(rollingMean(ret, w, n), rollingVolatility(ret, w, n)) *
       math.sqrt(periods.toDouble)
 
-  /** Rolling max drawdown over the trailing n rows of a drawdown series. */
-  def rollingMaxDrawdown(dd: Column, w: WindowSpec, n: Int): Column =
-    min(dd).over(trailing(w, n))
-
   /** Rolling downside deviation over the trailing n rows: RMS of the
     * loss part, sqrt(mean(min(r,0)²)) — Sortino's denominator
     * (ref ratios.py:23 uses the same loss-only std over the full

@@ -3,20 +3,12 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distribution statistics over metric columns — exact and approximate
-  * quantiles plus fixed-width histograms. At 100 TB use the approx
-  * variants (t-digest sketches, mergeable map-side); the exact form is
-  * the small-group / oracle-checkable path.
+/** Distribution statistics over metric columns — exact quantiles,
+  * robust dispersion and location, and fixed-width histograms.
   */
 object Stats {
   /** Exact linear-interpolation percentile (Spark `percentile`). */
   def quantile(value: Column, p: Double): Column = percentile(value, lit(p))
-
-  /** Sketch-based quantile for very large groups (mergeable,
-    * bounded-memory; accuracy ~ 1/acc).
-    */
-  def approxQuantile(value: Column, p: Double, acc: Int = 10000): Column =
-    percentile_approx(value, lit(p), lit(acc))
 
   /** Median absolute deviation given a PRECOMPUTED per-group median
     * (compute the median over a per-group window first, then

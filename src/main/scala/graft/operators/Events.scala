@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{denseGrid, gridEntry, let, SMAX}
+
 /** Product/event analytics over an append-only event log — the
   * funnel / cohort-retention / SCD2-compaction trio every
   * clickstream lake runs at 100 TB (SURVEY §2 ops 330-332). No
@@ -568,15 +570,14 @@ object Events {
     * DIRECTLY by Gaussian elimination in a fixed pivot order
     * (channels sorted by name, 'start' last) — exact to IEEE-double
     * precision (~1e−14) instead of the r13 24 quantized fixed-point
-    * sweeps (whose ρ²⁴ ≈ 0.005 truncation this removes). The
-    * augmented matrix is PIVOTED WIDE — one row per removal variant,
-    * one column per (i,j) cell on the static position grid 1..SMAX
-    * plus rhs — so the whole elimination unrolls to scalar column
-    * algebra inside a single codegen'd projection chain: zero joins,
-    * zero checkpoints, one job (the r13 sweep loop paid ~24 tiny
-    * jobs; the wide form pays none). Missing positions get inert
-    * identity rows (pivot 1.0), so eliminating past the real state
-    * count is a no-op and SMAX needs no data peek.
+    * sweeps (whose ρ²⁴ ≈ 0.005 truncation this removes). The whole
+    * solve is ONE projection over ONE row: the (f, t, n) transition
+    * counts collect into one list, [[graft.functions.denseGrid]] lays
+    * them out as k rows of k + 2 integer counts (the k transient
+    * states, then conv and null), and each removal variant builds its
+    * augmented matrix [I − Q | b] as an array of rows and eliminates
+    * with `aggregate` over `transform` — zero joins, zero checkpoints.
+    * More than SMAX transient states raise before any solve work.
     *
     * Cross-engine bit-parity holds WITHOUT an integer grid because
     * every arithmetic step is a SCALAR double expression in a fixed
@@ -622,153 +623,87 @@ object Events {
             .as("t")))).as("e"))
       .select(col("e.f").as("f"), col("e.t").as("t"))
       .where(col("t").isNotNull)
-    // localCheckpoint (op-317 convention): trans is (channels+2)²
-    // rows — cutting the journey-window lineage HERE means the event
-    // scan runs once, not once per downstream read.
+    // the chain as (channels+2)² integer counts — driver-sized at any
+    // event volume, gathered into ONE row for the solve below
     val trans = edges
       .groupBy(col("f"), col("t")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    val channels = trans.select(col("f").as("ch"))
-      .unionByName(trans.select(col("t").as("ch")))
-      .where(!col("ch").isin("start", "conv", "null")).distinct()
-    val spark = events.sparkSession
-    // fixed pivot order: channels by name, 'start' LAST — after
-    // forward elimination the start row alone yields x_start.
-    // Rank WITHOUT a window (the suite bans un-partitioned Windows;
-    // names are unique, so pos = |{y : key(y) ≤ key(x)}| over the
-    // (channels+1)-row relation is row_number on the same key).
-    // Checkpointed because it is read three times (two position
-    // attachments + the final name join) as a broadcast side.
-    val st0 = channels.select(col("ch").as("state"))
-      .unionByName(spark.range(1).select(lit("start").as("state")))
-      .withColumn("ka", concat(
-        when(col("state") === "start", lit("1")).otherwise(lit("0")),
-        col("state")))
-    val SMAX = 7  // supported transient states (6 channels + start)
-    val statePos = st0
-      .join(broadcast(st0.select(col("ka").as("kb"))), col("kb") <= col("ka"))
-      .groupBy(col("state")).agg(count(lit(1)).cast("int").as("pos"))
-      // r15 (r14 verdict #3): a channel count beyond the static grid
-      // would silently fall off the 1..SMAX pivot aggregations and
-      // return a WRONG attribution — fail loudly instead. The guard
-      // rides the (channels+1)-row position relation, which the pin
-      // below evaluates eagerly at build time.
-      .select(col("state"), when(col("pos") > SMAX, raise_error(concat(
-          lit(s"markovAttribution: transient state count exceeds the " +
-            s"SMAX=$SMAX wide-unroll grid (raise SMAX) at state "),
-          col("state"))))
-        .otherwise(col("pos")).as("pos"))
-      .coalesce(1).localCheckpoint()
-    val CONVJ = SMAX + 1 // absorbing column ids, off the 1..SMAX grid
-    val NULLJ = SMAX + 2
-    // attach positions and pivot the WHOLE chain into ONE wide row:
-    // n_i_j transition counts plus per-row totals (exact integer
-    // sums — order-free on any engine/partitioning).
-    val tf = trans
-      .join(broadcast(statePos).withColumnRenamed("state", "f")
-        .withColumnRenamed("pos", "fi"), "f")
-      .join(broadcast(statePos).withColumnRenamed("state", "t")
-        .withColumnRenamed("pos", "tj0"), Seq("t"), "left")
-      .select(col("fi"),
-        coalesce(col("tj0"),
-          when(col("t") === "conv", lit(CONVJ)).otherwise(lit(NULLJ)))
-          .as("tj"),
-        col("n"))
-    val nCells = for { i <- 1 to SMAX; j <- 1 to NULLJ } yield (i, j)
-    val aggCols =
-      nCells.map { case (i, j) =>
-        sum(when(col("fi") === i && col("tj") === j, col("n")))
-          .as(s"n_${i}_$j") } ++
-      (1 to SMAX).map(i =>
-        coalesce(sum(when(col("fi") === i, col("n"))), lit(0L))
-          .as(s"tot_$i"))
-    val wide = tf.agg(aggCols.head, aggCols.tail: _*)
-      // states occupy positions 1..nst compactly ('start' is nst);
-      // every observed state has outgoing mass, so tot_i > 0 marks it
-      .withColumn("nst", (1 to SMAX).map(i =>
-        when(col(s"tot_$i") > 0, 1).otherwise(0)).reduce(_ + _))
-    // one row per removal variant: rv = 0 keeps the full chain,
-    // rv = r zeroes every edge touching position r (denominators stay
-    // the ORIGINAL totals — the removed mass is lost, the standard
-    // convention, so removal is monotone decreasing). The explode is
-    // in-partition: the whole frame stays (SMAX)-row, zero shuffles.
-    val frame = wide.withColumn("rv",
-      explode(array((0 to SMAX - 1).map(lit(_)): _*)))
-    // augmented matrix A = [I − Q | b]; q_ij = n/tot as an
-    // int64→double cast + one IEEE divide — deterministic on any
-    // engine. Absent positions (and the removed row/column) become
-    // inert identity rows with pivot 1.0, so eliminating past the
-    // real state count is an exact no-op (a_ik = a_kj = 0).
-    def qExpr(i: Int, j: Int): Column =
-      when(col("rv") === i || (if (j <= SMAX) col("rv") === j else lit(false)),
-        lit(0.0))
-        .otherwise(when(col(s"tot_$i") > 0,
-          coalesce(col(s"n_${i}_$j"), lit(0L)).cast("double") /
-            col(s"tot_$i").cast("double")).otherwise(lit(0.0)))
-    val RHS = CONVJ // the rhs/b column of the augmented matrix
-    val cells = for { i <- 1 to SMAX; j <- (1 to SMAX) :+ RHS } yield (i, j)
-    val carry = Seq(col("rv"), col("nst"))
-    var a: DataFrame = frame.select(carry ++ cells.map { case (i, j) =>
-      val base = if (j == RHS) qExpr(i, j)
-        else (if (i == j) lit(1.0) else lit(0.0)) - qExpr(i, j)
-      base.as(s"a_${i}_$j")
-    }: _*)
-    // forward elimination fully unrolled as scalar column algebra:
-    // step k rewrites cells (i>k, j>k) as a_ij − a_ik·a_kj/a_kk.
-    // Sub-pivot cells keep their stale values — never read again
-    // (later pivots have index > k). Every alias below is consumed
-    // more than once, which stops CollapseProject from inlining the
-    // chain, so the plan stays a flat stack of narrow projections
-    // inside one WholeStageCodegen — zero joins, zero extra jobs
-    // (the r13 sweep loop paid ~24 tiny jobs here).
-    for (k <- 1 until SMAX) {
-      val updated = cells.map { case (i, j) =>
-        if (i > k && (j > k || j == RHS))
-          (col(s"a_${i}_$j") -
-            col(s"a_${i}_$k") * col(s"a_${k}_$j") / col(s"a_${k}_$k"))
-            .as(s"a_${i}_$j")
-        else col(s"a_${i}_$j")
-      }
-      a = a.select(carry ++ updated: _*)
+    // fixed pivot order: channels by name, 'start' LAST — after forward
+    // elimination the start row alone yields x_start. conv and null key
+    // after every state, so they close each row of the count grid as
+    // the b column and the lost mass.
+    val key = (s: Column) => concat(when(s === "start", lit("1"))
+      .when(s.isin("conv", "null"), lit("2")).otherwise(lit("0")), s)
+    val l = col("l")
+    val names = filter(concat(transform(l, _("f")), transform(l, _("t"))),
+      s => !s.isin("conv", "null"))
+    val entries = transform(l, x => gridEntry(key(x("f")), key(x("t")), x("n")))
+    val report = let(array_sort(array_distinct(
+        transform(names, s => struct(key(s).as("key"), s.as("state")))))) {
+        st =>
+      val k = size(st)
+      val keys = transform(st, _("key"))
+      // k rows of k+2 integer counts: Q, then b (conv), then the null mass
+      val counts = let(concat(keys, array(lit("2conv"), lit("2null")))) {
+        cols => denseGrid(keys, cols, entries, lit(0L)) }
+      when(k > SMAX, raise_error(concat(lit("markovAttribution: "),
+          k.cast("string"), lit(s" transient states exceed the SMAX=$SMAX " +
+            "bound of the one-row k-by-k solve"))))
+        .otherwise(let(counts) { g =>
+          // exact integer row totals — order-free on any engine
+          let(transform(g, r => aggregate(r, lit(0L), _ + _))) { tot =>
+            // q_ij = n/tot as an int64→double cast + one IEEE divide.
+            // Variant rv = 0 keeps the full chain; rv = r zeroes every
+            // edge touching position r (1-based), leaving an identity
+            // row. Denominators stay the ORIGINAL totals — the removed
+            // mass is lost, the standard convention, so removal is
+            // monotone decreasing.
+            def q(gate: Column, i: Column, n: Column): Column =
+              when(gate, lit(0.0)).otherwise(when(tot(i) > 0,
+                n.cast("double") / tot(i).cast("double")).otherwise(lit(0.0)))
+            // augmented matrix A = [I − Q | b] of variant rv
+            def a0(rv: Column): Column = transform(g, (r, i) => concat(
+              transform(slice(r, lit(1), k), (n, j) =>
+                when(i === j, lit(1.0)).otherwise(lit(0.0)) -
+                  q(rv === i + 1 || rv === j + 1, i, n)),
+              array(q(rv === i + 1, i, r(k)))))
+            // forward elimination: pivot p rewrites cells (i > p, j > p),
+            // the rhs included, as a_ij − a_ip·a_pj/a_pp. Sub-pivot cells
+            // keep stale values — never read again. A 1-state chain has
+            // nothing to eliminate (its one pivot reaches no row).
+            def eliminate(m: Column): Column =
+              aggregate(sequence(lit(0), greatest(k - 2, lit(0))), m, (a, p) =>
+                transform(a, (r, i) => when(i > p, transform(r, (x, j) =>
+                    when(j > p, x - r(p) * a(p)(j) / a(p)(p)).otherwise(x)))
+                  .otherwise(r)))
+            // the start row (last) is fully reduced: a_kk·x_start = b_k,
+            // landed on the op-317 1e-9 grid (round-half-up)
+            let(transform(st, (_, rv) => let(eliminate(a0(rv))) { a =>
+                floor(a(k - 1)(k) / a(k - 1)(k - 1) * 1e9 + 0.5).cast("long")
+              })) { pq =>
+              // removal effects on the 1e-6 grid as exact integer
+              // micro-units, so the normalization sum is INTEGER — no
+              // order can perturb it (a double sum's cross-engine hazard)
+              val pf = pq(0)
+              let(transform(filter(pq, (_, rv) => rv > 0), p =>
+                  when(pf > 0, floor((lit(1.0) - p.cast("double")
+                      / pf.cast("double")) * 1e6 + 0.5).cast("long"))
+                    .otherwise(lit(0L)))) { rei =>
+                let(aggregate(rei, lit(0L), _ + _)) { reSum =>
+                  transform(rei, (re, c) => struct(
+                    st(c)("state").as("channel"),
+                    (pf.cast("double") / 1e9).as("p_full"),
+                    (pq(c + 1).cast("double") / 1e9).as("p_removed"),
+                    (re.cast("double") / 1e6).as("removal_effect"),
+                    when(reSum > 0, floor(re.cast("double") /
+                      reSum.cast("double") * 1e6 + 0.5) / 1e6)
+                      .as("attribution")))
+                }
+              }
+            }
+          }
+        })
     }
-    // the start row (position nst, data-dependent) is fully reduced:
-    // a_nn·x_start = b_n. Land on the op-317 1e-9 grid
-    // (round-half-up); removal effects on the 1e-6 grid as exact
-    // integer micro-units, so the cross-row normalization sums are
-    // INTEGER — aggregation order can't perturb them (the one
-    // cross-engine hazard of a double sum).
-    val xs = (1 to SMAX).foldRight(lit(null).cast("double")) { (n, rest) =>
-      when(col("nst") === n,
-        col(s"a_${n}_$RHS") / col(s"a_${n}_$n")).otherwise(rest)
-    }
-    // checkpointed: the ≤SMAX-row report relation is read three times
-    // (full-chain row, removal rows, normalization agg); 1-row
-    // aggregates + broadcasts instead of global windows (the suite
-    // bans un-partitioned Window operators).
-    val scored = a.select(col("rv"), col("nst"),
-        floor(xs * 1e9 + 0.5).cast("long").as("pq"))
-      .coalesce(1).localCheckpoint()
-    val pf = scored.where(col("rv") === 0).select(col("pq").as("pq_full"))
-    val withRe = scored.where(col("rv") =!= 0).crossJoin(broadcast(pf))
-      .withColumn("rei",
-        when(col("pq_full") > 0,
-          floor((lit(1.0) - col("pq").cast("double")
-            / col("pq_full").cast("double")) * 1e6 + 0.5).cast("long"))
-          .otherwise(0L))
-    // rv = nst is the start row's own position — not a channel;
-    // rv > nst variants remove nothing (pq == pq_full → rei = 0)
-    val rs = withRe.agg(sum(
-      when(col("rv") =!= col("nst"), col("rei")).otherwise(0L))
-      .as("re_sum"))
-    val re = withRe.crossJoin(broadcast(rs))
-    re.join(broadcast(statePos.where(col("state") =!= "start")),
-        col("rv") === col("pos"))
-      .select(col("state").as("channel"),
-        (col("pq_full").cast("double") / 1e9).as("p_full"),
-        (col("pq").cast("double") / 1e9).as("p_removed"),
-        (col("rei").cast("double") / 1e6).as("removal_effect"),
-        when(col("re_sum") > 0,
-          floor(col("rei").cast("double") / col("re_sum").cast("double")
-            * 1e6 + 0.5) / 1e6).as("attribution"))
+    trans.agg(collect_list(struct(col("f"), col("t"), col("n"))).as("l"))
+      .select(inline(report))
   }
 }

@@ -131,12 +131,4 @@ object EventStream {
         col(leftKey) === col(rightKey) &&
           col(rightTs) >= col(leftTs) - expr(s"INTERVAL $lookbackSec SECONDS") &&
           col(rightTs) <= col(leftTs))
-
-  /** Read the events table shape as a file stream (parquet source). */
-  def readEventStream(spark: org.apache.spark.sql.SparkSession,
-                      path: String): DataFrame =
-    spark.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-        "event_type STRING, value DOUBLE, props STRING")
-      .parquet(path)
 }

@@ -214,4 +214,21 @@ class EventsSpec extends SparkSpec {
     assert(u2.getLong(1) == 20L && u2.getInt(4) == 1 && u2.getInt(5) == 1 &&
       u2.getInt(6) == 1 && u2.getString(7) == "111")
   }
+
+  test("markov: a chain without channels gives no rows and no error") {
+    // no events at all (k = 0), and only first-touch purchases, where
+    // 'start' is the one transient state (k = 1): nothing to credit
+    val none = ev()
+    val startOnly = ev((1L, t(1, 9), 1L, "purchase"),
+      (2L, t(1, 9), 2L, "purchase"), (3L, t(1, 10), 2L, "click"))
+    for (df <- Seq(none, startOnly))
+      assert(Events.markovAttribution(df, "purchase").collect().isEmpty)
+    // one channel: removing it loses every conversion → full credit
+    val one = Events.markovAttribution(ev((1L, t(1, 9), 1L, "click"),
+      (2L, t(1, 10), 1L, "purchase"), (3L, t(1, 9), 2L, "click")), "purchase")
+      .collect()
+    assert(one.length == 1 && one(0).getString(0) == "click" &&
+      one(0).getDouble(1) == 0.5 && one(0).getDouble(2) == 0.0 &&
+      one(0).getDouble(3) == 1.0 && one(0).getDouble(4) == 1.0)
+  }
 }

@@ -14,79 +14,87 @@ class Round13bSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("events_markov_attribution: matches an exact absorption solve") {
-    val rows = graft.sources.Tables.load(spark, dir, "events")
-      .select($"user_id", unix_micros($"ts"), $"event_id", $"event_type")
-      .as[(Long, Long, Long, String)].collect()
-    // journey construction mirroring the CONTRACT (cut at first
-    // conversion, tail → null), then an EXACT Gaussian solve of the
-    // absorption system — not the operator's iterative sweeps.
-    val trans = scala.collection.mutable.Map[(String, String), Long]()
-      .withDefaultValue(0L)
-    rows.groupBy(_._1).foreach { case (_, es) =>
-      val ordered = es.sortBy(e => (e._2, e._3)).map(_._4)
-      val cutIdx = ordered.indexOf("purchase")
-      val (touches, converted): (Seq[String], Boolean) =
-        if (cutIdx >= 0) (ordered.take(cutIdx).toSeq, true)
-        else (ordered.toSeq, false)
-      val states = touches :+ (if (converted) "conv" else null)
-      var prev = "start"
-      states.foreach { st =>
-        val cur = if (st == null) "null" else st
-        trans((prev, cur)) += 1
-        prev = cur
-      }
-    }
-    val channels = trans.keys.flatMap(k => Seq(k._1, k._2))
-      .filter(c => c != "start" && c != "conv" && c != "null").toSeq.distinct
-    def solve(removed: Option[String]): Double = {
-      val keep = trans.filter { case ((f, t), _) =>
-        !removed.contains(f) && !removed.contains(t) }
-      val totals = trans.toSeq.groupBy(_._1._1)
-        .map { case (f, xs) => f -> xs.map(_._2).sum } // ORIGINAL totals
-      val states = ("start" +: channels.filterNot(removed.contains)).toArray
-      val idx = states.zipWithIndex.toMap
-      val n = states.length
-      // x = b + A x  ⇒  (I − A) x = b
-      val a = Array.fill(n, n)(0.0); val b = Array.fill(n)(0.0)
-      keep.foreach { case ((f, t), c) =>
-        if (idx.contains(f)) {
-          val p = c.toDouble / totals(f)
-          if (t == "conv") b(idx(f)) += p
-          else if (idx.contains(t)) a(idx(f))(idx(t)) += p
+    // sf0.001 (5 transient states), then seeded random-journey twins
+    // with 8 and 16 — past the oracle's 7-state grid
+    val inputs = Seq(graft.sources.Tables.load(spark, dir, "events") -> 5,
+      Round13bSpec.randomJourneys(spark, nChannels = 7, seed = 8) -> 8,
+      Round13bSpec.randomJourneys(spark, nChannels = 15, seed = 16) -> 16)
+    for ((ev, nStates) <- inputs) {
+      val rows = ev.select($"user_id", unix_micros($"ts"), $"event_id", $"event_type")
+        .as[(Long, Long, Long, String)].collect()
+      // journey construction mirroring the CONTRACT (cut at first
+      // conversion, tail → null), then an EXACT Gaussian solve of the
+      // absorption system — not the operator's iterative sweeps.
+      val trans = scala.collection.mutable.Map[(String, String), Long]()
+        .withDefaultValue(0L)
+      rows.groupBy(_._1).foreach { case (_, es) =>
+        val ordered = es.sortBy(e => (e._2, e._3)).map(_._4)
+        val cutIdx = ordered.indexOf("purchase")
+        val (touches, converted): (Seq[String], Boolean) =
+          if (cutIdx >= 0) (ordered.take(cutIdx).toSeq, true)
+          else (ordered.toSeq, false)
+        val states = touches :+ (if (converted) "conv" else null)
+        var prev = "start"
+        states.foreach { st =>
+          val cur = if (st == null) "null" else st
+          trans((prev, cur)) += 1
+          prev = cur
         }
       }
-      val m = Array.tabulate(n, n)((i, j) => (if (i == j) 1.0 else 0.0) - a(i)(j))
-      // Gaussian elimination
-      for (col <- 0 until n) {
-        val piv = (col until n).maxBy(r => math.abs(m(r)(col)))
-        val tmp = m(col); m(col) = m(piv); m(piv) = tmp
-        val tb = b(col); b(col) = b(piv); b(piv) = tb
-        for (r <- 0 until n if r != col && m(r)(col) != 0.0) {
-          val f = m(r)(col) / m(col)(col)
-          for (c2 <- 0 until n) m(r)(c2) -= f * m(col)(c2)
-          b(r) -= f * b(col)
+      val channels = trans.keys.flatMap(k => Seq(k._1, k._2))
+        .filter(c => c != "start" && c != "conv" && c != "null").toSeq.distinct
+      def solve(removed: Option[String]): Double = {
+        val keep = trans.filter { case ((f, t), _) =>
+          !removed.contains(f) && !removed.contains(t) }
+        val totals = trans.toSeq.groupBy(_._1._1)
+          .map { case (f, xs) => f -> xs.map(_._2).sum } // ORIGINAL totals
+        val states = ("start" +: channels.filterNot(removed.contains)).toArray
+        val idx = states.zipWithIndex.toMap
+        val n = states.length
+        // x = b + A x  ⇒  (I − A) x = b
+        val a = Array.fill(n, n)(0.0); val b = Array.fill(n)(0.0)
+        keep.foreach { case ((f, t), c) =>
+          if (idx.contains(f)) {
+            val p = c.toDouble / totals(f)
+            if (t == "conv") b(idx(f)) += p
+            else if (idx.contains(t)) a(idx(f))(idx(t)) += p
+          }
         }
+        val m = Array.tabulate(n, n)((i, j) => (if (i == j) 1.0 else 0.0) - a(i)(j))
+        // Gaussian elimination
+        for (col <- 0 until n) {
+          val piv = (col until n).maxBy(r => math.abs(m(r)(col)))
+          val tmp = m(col); m(col) = m(piv); m(piv) = tmp
+          val tb = b(col); b(col) = b(piv); b(piv) = tb
+          for (r <- 0 until n if r != col && m(r)(col) != 0.0) {
+            val f = m(r)(col) / m(col)(col)
+            for (c2 <- 0 until n) m(r)(c2) -= f * m(col)(c2)
+            b(r) -= f * b(col)
+          }
+        }
+        b(idx("start")) / m(idx("start"))(idx("start"))
       }
-      b(idx("start")) / m(idx("start"))(idx("start"))
+      val pExact = solve(None)
+      val out = graft.operators.Events.markovAttribution(ev, "purchase")
+        .select($"channel", $"p_full", $"p_removed", $"removal_effect",
+          $"attribution")
+        .as[(String, Double, Double, Double, Double)].collect()
+      assert(channels.size + 1 == nStates)
+      assert(out.nonEmpty && out.length == channels.size,
+        s"${out.length} of ${channels.size} channels")
+      out.foreach { case (ch, pf, pr, re, _) =>
+        // the operator now solves (I − Q)x = b directly (fixed-order
+        // double Gaussian elimination), so it must agree with this
+        // partial-pivoting solve to FP + the 1e-9 report grid
+        assert(math.abs(pf - pExact) < 1e-6, s"p_full $pf vs exact $pExact")
+        val prExact = solve(Some(ch))
+        assert(math.abs(pr - prExact) < 1e-6, s"$ch p_removed $pr vs $prExact")
+        assert(pr <= pf + 1e-9, s"$ch removal increased P")
+        assert(re >= 0.0)
+      }
+      val attSum = out.map(_._5).sum
+      assert(math.abs(attSum - 1.0) < 1e-3, s"attribution sums to $attSum")
     }
-    val pExact = solve(None)
-    val out = SparkEntry.queries("events_markov_attribution")(spark, dir)
-      .select($"channel", $"p_full", $"p_removed", $"removal_effect",
-        $"attribution")
-      .as[(String, Double, Double, Double, Double)].collect()
-    assert(out.nonEmpty)
-    out.foreach { case (ch, pf, pr, re, _) =>
-      // the operator now solves (I − Q)x = b directly (fixed-order
-      // double Gaussian elimination), so it must agree with this
-      // partial-pivoting solve to FP + the 1e-9 report grid
-      assert(math.abs(pf - pExact) < 1e-6, s"p_full $pf vs exact $pExact")
-      val prExact = solve(Some(ch))
-      assert(math.abs(pr - prExact) < 1e-6, s"$ch p_removed $pr vs $prExact")
-      assert(pr <= pf + 1e-9, s"$ch removal increased P")
-      assert(re >= 0.0)
-    }
-    val attSum = out.map(_._5).sum
-    assert(math.abs(attSum - 1.0) < 1e-3, s"attribution sums to $attSum")
   }
 
   test("embed_cluster_purity: purity and NMI match a JVM contingency recount") {
@@ -189,5 +197,30 @@ class Round13bSpec extends SparkSpec {
     // the measured rate must sit near the estimate (loose band: the
     // estimate itself is approximate for dependent bits)
     assert(math.abs(meas - theo) < 0.1, s"measured $meas vs theory $theo")
+  }
+}
+
+object Round13bSpec {
+  /** An events table of seeded random journeys over `nChannels` touch
+    * types ch_00.. plus 'purchase': 400 users, 1-12 events each, every
+    * event a purchase with probability 0.15, so some journeys convert
+    * (some more than once — the cut keeps the first) and the rest end
+    * in null.
+    */
+  def randomJourneys(spark: org.apache.spark.sql.SparkSession,
+                     nChannels: Int, seed: Long)
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val rnd = new java.util.Random(seed)
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    val rows = (0 until 400).flatMap { u =>
+      (0 until 1 + rnd.nextInt(12)).map { i =>
+        val ty = if (rnd.nextDouble() < 0.15) "purchase"
+          else f"ch_${rnd.nextInt(nChannels)}%02d"
+        ((u * 100 + i).toLong, java.sql.Timestamp.valueOf(t0.plusMinutes(i)),
+          u.toLong, ty, 1.0, "{}")
+      }
+    }
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
   }
 }

@@ -1,18 +1,16 @@
 package graft
 
-/** Round-14 wave 2: job-count regression guard for the wide-unroll
-  * family. The r14 rewrites of the four iterative-state queries
-  * (Markov absorption, tangency Jacobi, PCA power iteration, risk
-  * parity) replaced per-iteration materialization (one-plus Spark
-  * jobs per sweep — 24 for Markov) with a single in-plan solve (an
-  * unrolled scalar projection chain for Markov, one-row array sweeps
-  * for the portfolio solvers). Catalyst can't see that invariant, so this spec
-  * pins it: each query must complete within a small fixed job budget,
-  * far below what any per-iteration-materialization regression would
-  * cost. Bounds sit a stated headroom above the measured counts —
-  * loose enough for plan jitter (AQE stages, broadcasts), tight enough
-  * that re-introducing per-sweep checkpoints (Markov: +24 jobs) or the
-  * portfolio solvers' pins (+2) fails immediately.
+/** Round-14 wave 2: job-count regression guard for the one-row
+  * solvers. The rewrites of the four iterative-state queries (Markov
+  * absorption, tangency Jacobi, PCA power iteration, risk parity)
+  * replaced per-iteration materialization (one-plus Spark jobs per
+  * sweep — 24 for Markov) with a single in-plan solve over one row of
+  * array state. Catalyst can't see that invariant, so this spec pins
+  * it: each query must complete within a small fixed job budget, far
+  * below what any per-iteration-materialization regression would
+  * cost. Bounds sit one job above the measured counts — room for plan
+  * jitter (an AQE stage), below any regression that brings back two
+  * pins or per-sweep checkpoints (+1 job each).
   */
 class Round14bSpec extends SparkSpec {
 
@@ -40,15 +38,14 @@ class Round14bSpec extends SparkSpec {
   }
 
   test("wide-unroll queries stay within their job budgets") {
-    // measured (AQE stage materializations + broadcasts, and markov's
-    // pinned checkpoints): markov 16, each portfolio solver 6 — its
-    // one-row array solve pins nothing and joins nothing. Budgets leave
-    // markov +12 and the portfolio solvers +1, and sit BELOW measured +
-    // the smallest regression (+24 markov sweeps; for the solvers +2
-    // if the moments pin and the position pin came back, +4..+6
-    // per-iterate checkpoints).
+    // measured (AQE stage materializations): markov 5, each portfolio
+    // solver 6 — the one-row array solves pin nothing and join
+    // nothing. Budgets leave +1, and sit BELOW measured + the smallest
+    // regression (markov: +3 if its trans/position/score pins came
+    // back, +24 sweeps; the solvers: +2 if the moments pin and the
+    // position pin came back, +4..+6 per-iterate checkpoints).
     val budgets = Seq(
-      "events_markov_attribution" -> 28,
+      "events_markov_attribution" -> 6,
       "eod_tangency" -> 7,
       "eod_pca_factor" -> 7,
       "eod_risk_parity" -> 7)

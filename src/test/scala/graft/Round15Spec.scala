@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Round-15 (second optimization round) guards.
   *
-  * 1. SMAX overflow guards (r14 verdict #3): markovAttribution pivots
-  *    its transient states onto a static 1..SMAX position grid, where a
-  *    key cardinality beyond SMAX used to fall off the `when(fi === i …)`
-  *    pivot aggregations SILENTLY — wrong answer, no error. The k×k
-  *    portfolio solvers (eod_pca_factor / eod_tangency /
-  *    eod_risk_parity) keep their state in one row of k-arrays, bounded
-  *    by SparkEntry.SMAX series. The guards raise instead; these tests
-  *    prove the failure is loud and that in-bound cardinalities pass.
+  * 1. SMAX overflow guards (r14 verdict #3): markovAttribution once
+  *    pivoted its transient states onto a static 1..SMAX position grid,
+  *    where a key cardinality beyond SMAX fell off the `when(fi === i …)`
+  *    pivot aggregations SILENTLY — wrong answer, no error. It and the
+  *    k×k portfolio solvers (eod_pca_factor / eod_tangency /
+  *    eod_risk_parity) now keep their state in one row of k-arrays,
+  *    bounded by graft.functions.SMAX. The guards raise instead; these
+  *    tests prove the failure is loud and that in-bound sizes pass.
   *
   * 2. Shared landing-dir staging (r14 verdict #1): streamReplay now
   *    stages each source table once per process and shares the
@@ -38,7 +38,7 @@ class Round15Spec extends SparkSpec {
     }
 
   test("wide-unroll grids fail loudly past SMAX and pass within it") {
-    val over = SparkEntry.SMAX + 1
+    val over = graft.functions.SMAX + 1
     val unders = Seq(7, 8, 16) // the old 7-series grid, just past it, 2×
     val dirs = (over +: unders).map(n => n -> Round15Spec.eventsDir(spark, n)).toMap
     for (q <- Seq("eod_pca_factor", "eod_tangency", "eod_risk_parity")) {
@@ -52,25 +52,28 @@ class Round15Spec extends SparkSpec {
     val s = spark
     import s.implicits._
     def journeys(nChannels: Int) = {
+      val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
       val rows = for {
         u <- 0 until 10
-        (ch, i) <- ((0 until nChannels).map(c => s"ch_$c") :+ "purchase").zipWithIndex
-      } yield ((u * 100 + i).toLong,
-        java.sql.Timestamp.valueOf(f"2024-01-01 ${i % 24}%02d:00:00"),
+        (ch, i) <- ((0 until nChannels).map(c => f"ch_$c%02d") :+ "purchase").zipWithIndex
+      } yield ((u * 100 + i).toLong, java.sql.Timestamp.valueOf(t0.plusMinutes(i)),
         u.toLong, ch, 1.0, "{}")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     }
-    // 7 channels + start = 8 transient states > SMAX = 7 → loud failure
+    // SMAX channels + start = SMAX + 1 transient states → loud failure
     val e = intercept[Throwable] {
-      graft.operators.Events.markovAttribution(journeys(7), "purchase")
+      graft.operators.Events.markovAttribution(journeys(graft.functions.SMAX), "purchase")
         .write.format("noop").mode("overwrite").save()
     }
     val msg = Option(e.getMessage).getOrElse("") +
       Option(e.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
     assert(msg.contains("SMAX"), s"failed but not via the SMAX guard: $e")
-    // 6 channels + start = 7 fits the grid exactly → computes
-    val ok = graft.operators.Events.markovAttribution(journeys(6), "purchase")
-    assert(ok.count() == 6)
+    // 7, 8 and 16 transient states (the old 7-state grid, just past
+    // it, 2×) compute
+    for (n <- Seq(7, 8, 16)) {
+      val ok = graft.operators.Events.markovAttribution(journeys(n - 1), "purchase")
+      assert(ok.count() == n - 1)
+    }
   }
 
   test("shared landing dir: replays stay deterministic across reruns") {
