@@ -1,6 +1,6 @@
 // plan-audit main (r14): BatchExplain <outDir> <q1,q2,...> [suffix]
-// writes one formatted-physical-plan file per named query in a single
-// JVM session (ExplainOne's format, without the per-query JVM spinup).
+// writes one formatted-physical-plan file (`explain("formatted")`) per
+// named query, all in a single JVM session.
 // Data dir comes from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01),
 // the Verify/Bench contract (r14 ADVICE #4). Pinned-query caveat: see
 // PlanAudit's header — localCheckpoint is eager, so plans of pinned

@@ -252,6 +252,8 @@ object Bench {
       catch { case _: Throwable => () } // read-only cwd must not kill the print
     writeMirror(s"BENCH_LOCAL_${round}_c$cpus.json")
     if (cpus == "32") writeMirror(s"BENCH_LOCAL_$round.json")
+    else System.err.println(s"[bench] BENCH_LOCAL_$round.json not " +
+      s"written: SPARK_GRAFT_CPUS=$cpus, not 32")
     println(line)
     // The LAST stdout line is what the driver parses. r15 (r14 verdict
     // #2): it now carries the per-query map too — the driver's PERF

@@ -1,9 +1,9 @@
 // plan-audit main (r14 optimization evidence): dumps, for EVERY query in
 // SparkEntry.queries, a one-line physical-plan shape summary — operator
 // counts that matter for the optimization playbook (Exchange, Sort,
-// join strategies, codegen spans) — plus, optionally, the full formatted
-// plan of named queries. One JVM session for all 400+ queries, so the
-// before/after sweep of an optimization is cheap to regenerate.
+// join strategies, codegen spans). One JVM session for all 400+
+// queries, so the before/after sweep of an optimization is cheap to
+// regenerate. Full formatted plans come from BatchExplain.
 //
 //   PlanAudit <out.tsv>                 — shape manifest for all queries
 //   PlanAudit <out.tsv> q1,q2,...       — manifest restricted to names

@@ -344,8 +344,9 @@ object Scale {
       }
       // k-means family sized by the √n rule (Cluster scaladoc): k ≈ √n
       // balances assignment (n·k) against within-cluster pairing
-      // (n·(n/k)) for SemDeDup.
-      val kKm = math.max(8, math.sqrt(nEmb.toDouble).toInt)
+      // (n·(n/k)) for SemDeDup, up to the one-row centroid bound SMAX.
+      val kKm = math.min(graft.functions.SMAX,
+        math.max(8, math.sqrt(nEmb.toDouble).toInt))
       timed("embed_kmeans", m, nEmb) {
         sink(Cluster.kmeans(emb, "vec_id", "embedding", k = kKm, iters = 2))
       }
@@ -382,11 +383,12 @@ object Scale {
       timed("ann_topk_pq", m, nEmb) {
         sink(Pq.adcTopK(queries, emb, "vec_id", "embedding", 10))
       }
-      // IVF+PQ with the √n cell rule: exhaustive ADC grows linearly in
-      // corpus per query; the inverted lists bound it to nProbe·n/nCells.
+      // IVF+PQ with the √n cell rule up to SMAX cells: exhaustive ADC
+      // grows linearly in corpus per query; the inverted lists bound it
+      // to nProbe·n/nCells.
       timed("ann_topk_ivfpq", m, nEmb) {
         sink(Pq.ivfAdcTopK(queries, emb, "vec_id", "embedding", 10,
-          nCells = nCells, nProbe = 8))
+          nCells = math.min(nCells, graft.functions.SMAX), nProbe = 8))
       }
       timed("embed_sq8", m, nEmb) {
         sink(Embed.scalarQuantizeInt8(emb, "vec_id", "embedding"))
@@ -1056,10 +1058,14 @@ object Scale {
       // claim being proven: a pin's materialization cost tracks the
       // pinned AGGREGATE (bounded or sublinear by construction), never
       // the corpus — so query wall-time must grow at most linearly
-      // (the producer chain), and the `<q>_pin_rows` lines record the
-      // pinned relation's actual row count per scale (flat/sublinear
-      // is the pass condition). At cluster scale each pin site's
-      // scaladoc documents the localCheckpoint → checkpoint swap.
+      // (the producer chain), and a `<q>_pin_rows` line, printed with
+      // its `<q>_pin` probe, records the pinned relation's row count
+      // per scale, re-derived from the data (flat/sublinear is the pass
+      // condition). embed_cluster_purity (the k×labels contingency
+      // table) and embed_power_iter (one row per vector) print none:
+      // their pin sizes follow from the query, not the data. At cluster
+      // scale each pin site's scaladoc documents the localCheckpoint →
+      // checkpoint swap.
       if (Seq("embed_cluster_purity_pin", "stats_dunn_pin",
           "text_textrank_pin", "dedup_eval_containment_pin",
           "embed_power_iter_pin").exists(wanted)) {
@@ -1083,15 +1089,15 @@ object Scale {
         // Pinned-relation sizes, re-derived with the same public
         // expressions (outside any timing): what actually gets
         // materialized by each pin.
-        def pinRows(tag: String, n: => Long): Unit = if (wanted(tag))
-          try println(s"""{"op":"$tag","scale":$m,"pin_rows":$n}""")
+        def pinRows(q: String, n: => Long): Unit = if (wanted(s"${q}_pin"))
+          try println(s"""{"op":"${q}_pin_rows","scale":$m,"pin_rows":$n}""")
           catch { case scala.util.control.NonFatal(e) =>
-            println(s"""{"op":"$tag","scale":$m,"err":"${e.toString.take(120)}"}""") }
+            println(s"""{"op":"${q}_pin_rows","scale":$m,"err":"${e.toString.take(120)}"}""") }
         val evQ = spark.read.parquet(s"$qDir/events.parquet")
         val docsQ = spark.read.parquet(s"$qDir/documents.parquet")
         // stats_dunn pins (event_type, quantized-return) counts — the
         // distinct quantized-return grid, not the row count, bounds it.
-        pinRows("stats_dunn_pin_rows", {
+        pinRows("stats_dunn", {
           val wTp = org.apache.spark.sql.expressions.Window
             .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
           evQ.withColumn("ret",
@@ -1104,7 +1110,7 @@ object Scale {
         // text_textrank pins bigram counts — vocabulary (Heaps-law
         // sublinear; this generator draws from a 5000-token pool, so
         // the bigram space saturates).
-        pinRows("text_textrank_pin_rows", {
+        pinRows("text_textrank", {
           val toks = graft.functions.Text.tokens(col("text"))
           docsQ.select(explode(zip_with(
               slice(toks, lit(1), size(toks) - 1),
@@ -1116,16 +1122,10 @@ object Scale {
         // the planted-dup fraction of the corpus (n/10 near + n/25
         // exact), linear in dups but ~100× below the shingle joins
         // that produce them.
-        pinRows("dedup_eval_containment_pin_rows",
+        pinRows("dedup_eval_containment",
           graft.operators.Dedup.ngramJaccardPairs(
             docsQ.select(col("doc_id"), col("text")),
             "doc_id", "text", threshold = 0.5).count())
-        // embed_cluster_purity pins the k×labels contingency table
-        // (≤ 8×10 rows at any corpus size); embed_power_iter pins the
-        // dim-row (64) product per iteration — both constants by
-        // construction, recorded for completeness.
-        pinRows("embed_cluster_purity_pin_rows", 8L * 10L)
-        pinRows("embed_power_iter_pin_rows", dim.toLong)
       }
 
       // Skewed shuffle join + agg under AQE; broadcast disabled so the

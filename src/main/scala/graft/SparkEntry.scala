@@ -6917,9 +6917,11 @@ object SparkEntry {
     * direction after 5 quantized power iterations + one final
     * multiply — the shared engine of embed_power_iter (op 198) and
     * embed_whitening (op 327). Returns (means(pos, mu, n, sxx, sx),
-    * rows(id, xqa), wLast(pos, nrm, vq)); see op 198's scaladoc for
-    * the exactness/headroom argument (every iteration an integer
-    * fold, norms through DECIMAL(19,0)², bit-for-bit on any engine).
+    * rows(id, xqa), top(nrm, va)); `top` is ONE row: the last product's
+    * norm and the quantized direction `va` in pos order. See op 198's
+    * scaladoc for the exactness/headroom argument (every iteration an
+    * integer fold, norms through DECIMAL(19,0)², bit-for-bit on any
+    * engine).
     */
   private def embTopPc(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -6928,20 +6930,15 @@ object SparkEntry {
         posexplode(col("embedding").cast("array<double>"))
           .as(Seq("pos", "x")))
       .withColumn("xq0", floor(col("x") * 1e4 + 0.5).cast("long"))
-    // localCheckpoint (the Lloyd/Dedup.clusters idiom): without it
-    // the declarative 6-iteration chain re-derives the explode +
-    // centering + array assembly ~12× inside one plan — measured
-    // 11.2 s at sf0.1; checkpointing the shared relations and each
-    // superseded iterate cuts it to one derivation per input. At
-    // cluster scale swap for `checkpoint` (the SemDeDup convention,
-    // Cluster.semanticDedupVerdict); the per-iterate pins are dim-row
-    // (64) products — flat in corpus (SCALE §19); `rows` is the one
-    // corpus-sized pin and is the natural restart point.
     val means = ex.groupBy(col("pos"))
       .agg((sum(col("xq0")).cast("double") / count(lit(1)) / 1e4).as("mu"),
         count(lit(1)).as("n"),
         sum(col("xq0") * col("xq0")).as("sxx"), sum(col("xq0")).as("sx"))
-      .localCheckpoint()
+    // `rows` is read by every power step: pin it (the Dedup.clusters
+    // idiom) so the explode + centering + array assembly runs once, not
+    // once per step. It is the one corpus-sized pin and the natural
+    // restart point; at cluster scale swap for `checkpoint` (the
+    // SemDeDup convention, Cluster.semanticDedupVerdict).
     val rows = ex.join(broadcast(means.select(col("pos"), col("mu"))), "pos")
       .withColumn("xq", floor((col("x") - col("mu")) * 1e4 + 0.5)
         .cast("long"))
@@ -6949,55 +6946,27 @@ object SparkEntry {
       .agg(transform(array_sort(collect_list(struct(col("pos"),
           col("xq")))), e => e.getField("xq")).as("xqa"))
       .localCheckpoint()
-    def vArr(vdf: DataFrame): DataFrame = vdf
-      .agg(transform(array_sort(collect_list(struct(col("pos"),
-        col("vq")))), e => e.getField("vq")).as("va"))
-    def multiply(vdf: DataFrame): DataFrame =
-      rows.crossJoin(broadcast(vArr(vdf)))
-        .withColumn("st", aggregate(
-          zip_with(col("xqa"), col("va"), (a, b) => a * b),
-          lit(0L), (acc, x) => acc + x))
-        .withColumn("ssc", floor(col("st") / 1e4).cast("long"))
-        .select(posexplode(col("xqa")).as(Seq("pos", "xqe")), col("ssc"))
-        .groupBy(col("pos")).agg(sum(col("xqe") * col("ssc")).as("w"))
-    def normed(wdf0: DataFrame): DataFrame = {
-      // r14: wdf feeds BOTH the norm agg and the projection — pin the
-      // 64-row product so the data-sized multiply pass runs once per
-      // iteration, not once per consumer (and the returned wLast can
-      // be consumed twice downstream, e.g. embed_whitening, without
-      // re-running the multiply).
-      //
-      // Pin lifetime (r14 ADVICE): per-iterate pins here (and the
-      // other single-consumer-chain pins in this file) are NOT
-      // explicitly unpersisted — their blocks are released by
-      // ContextCleaner when the superseded DataFrame becomes
-      // unreachable after the query's action completes. That is the
-      // deliberate trade: an eager unpersist is only safe after the
-      // LAST consumer ran, which a query-builder function cannot see
-      // (consumers execute at the caller's action). The loop-carried
-      // pins that ARE provably superseded mid-build (Dedup.clusters
-      // rounds, pagerank iterates) do unpersist eagerly via
-      // GraftSqlBridge. Pinned relations here are KB-scale (64-row
-      // products, aggregates), so the transient footprint between
-      // action end and GC is bounded; LEAKCHECK watches block-manager
-      // growth for regressions.
-      val wdf = wdf0.localCheckpoint()
-      val nrm = wdf.agg(sqrt(sum(col("w").cast("decimal(19,0)")
-        * col("w").cast("decimal(19,0)")).cast("double")).as("nrm"))
-      wdf.crossJoin(broadcast(nrm))
-        .select(col("pos"), col("nrm"),
-          floor(col("w").cast("double") / col("nrm") * 1e4 + 0.5)
-            .cast("long").as("vq"))
-    }
-    val v0 = means.select(col("pos"),
-      lit(math.floor(1.0 / 8.0 * 1e4 + 0.5).toLong).as("vq"))
-    val vFinal = (1 to 5).foldLeft(v0) { (v, _) =>
-      // r14: normed() pins the 64-row product itself now, so the
-      // per-iterate checkpoint job on this cheap projection is gone —
-      // each iteration materializes exactly one relation (the wdf pin).
-      normed(multiply(v)).select(col("pos"), col("vq"))
-    }
-    (means, rows, normed(multiply(vFinal)))
+    // One power step on the one-row iterate `va`: per pos,
+    // w = Σ_rows xq·⌊xq·va/1e4⌋, then va' = round(w/|w|·1e4) with |w|
+    // summed exactly in DECIMAL(19,0)².
+    def step(state: DataFrame): DataFrame = rows.crossJoin(broadcast(state))
+      .select(posexplode(col("xqa")).as(Seq("pos", "xqe")),
+        floor(dot(col("xqa"), col("va"), lit(0L)) / 1e4).cast("long")
+          .as("ssc"))
+      .groupBy(col("pos")).agg(sum(col("xqe") * col("ssc")).as("w"))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("w")))),
+        e => e.getField("w")).as("w"))
+      .select(let(sqrt(aggregate(col("w"), lit(0).cast("decimal(38,0)"),
+          (acc, w) => acc + w.cast("decimal(19,0)") * w.cast("decimal(19,0)"))
+          .cast("double"))) { nrm =>
+        struct(nrm.as("nrm"), transform(col("w"), w =>
+          floor(w.cast("double") / nrm * 1e4 + 0.5).cast("long")).as("va"))
+      }.as("top"))
+      .select(col("top.nrm"), col("top.va"))
+    val v0 = rows.agg(array_repeat(
+      lit(math.floor(1.0 / 8.0 * 1e4 + 0.5).toLong),
+      max(size(col("xqa")))).as("va"))
+    (means, rows, (1 to 6).foldLeft(v0)((v, _) => step(v)))
   }
 
   private def pipelineQueries: Map[String, (SparkSession, String) => DataFrame] =
@@ -7726,13 +7695,18 @@ object SparkEntry {
     // top-k can't do (near-identical neighbors crowd out coverage).
     // λ = 0.7 as INTEGER algebra: relevance and pair cosines quantize
     // to 1e-9 longs, score = 7·relq − 3·simq (exact ×10), ties →
-    // smallest id — the greedy unrolls to 3 in-plan steps (the op-317
-    // idiom) and replays bit-for-bit. At 100 TB the candidate set
-    // comes from the ANN index; the rerank touches k² pairs per query.
+    // smallest id. Each query is ONE row holding its candidates and
+    // their 10×10 quantized similarity grid; the 3 picks run as an
+    // `aggregate` over that row and replay bit-for-bit. At 100 TB the
+    // candidate set comes from the ANN index; the rerank touches k²
+    // pairs per query.
     "embed_mmr_rerank" -> ((s, dir) => {
       import graft.expressions.DotProduct
       def cos(a: Column, b: Column) = DotProduct(a, b) /
         (sqrt(DotProduct(a, a)) * sqrt(DotProduct(b, b)))
+      def q9(x: Column) = floor(x * 1e9 + lit(0.5)).cast("long")
+      val nCand = 10
+      require(nCand <= SMAX, s"MMR candidate count $nCand exceeds SMAX = $SMAX")
       val emb = tbl(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val q = emb.where(col("vec_id") < 5)
@@ -7741,59 +7715,38 @@ object SparkEntry {
         .select(col("vec_id").as("neighbor_id"), col("v").as("cv"))
       val wq = Window.partitionBy(col("query_id"))
         .orderBy(col("cosine").desc, col("neighbor_id"))
-      val top = c.crossJoin(broadcast(q))
+      val cand = c.crossJoin(broadcast(q))
         .withColumn("cosine", cos(col("qv"), col("cv")))
-        .withColumn("rnk", row_number().over(wq)).where(col("rnk") <= 10)
-        .withColumn("relq", floor(col("cosine") * 1e9 + lit(0.5))
-          .cast("long"))
-        .select(col("query_id"), col("neighbor_id"), col("cv"),
-          col("relq"), col("cosine"))
-        .localCheckpoint()
-      val pair = top.select(col("query_id"), col("neighbor_id").as("ni"),
-          col("cv").as("vi"))
-        .join(top.select(col("query_id"), col("neighbor_id").as("nj"),
-          col("cv").as("vj")), "query_id")
-        .where(col("ni") =!= col("nj"))
-        .withColumn("simq",
-          floor(cos(col("vi"), col("vj")) * 1e9 + lit(0.5)).cast("long"))
-        .select(col("query_id"), col("ni"), col("nj"), col("simq"))
-        .localCheckpoint()
-      def pick(scored: DataFrame) = {
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("neighbor_id"))
-        scored.withColumn("_r", row_number().over(w)).where(col("_r") === 1)
-          .select(col("query_id"), col("neighbor_id"))
+        .withColumn("rnk", row_number().over(wq)).where(col("rnk") <= nCand)
+        .groupBy(col("query_id"))
+        .agg(array_sort(collect_list(struct(col("neighbor_id"), col("cv"),
+          q9(col("cosine")).as("relq"), col("cosine")))).as("c"))
+      val cs = col("c")
+      // sim(i)(j) = quantized cosine of candidate i to candidate j
+      val grid = transform(cs, a =>
+        transform(cs, b => q9(cos(a("cv"), b("cv")))))
+      // the best unpicked candidate index, ties → smallest id; null once
+      // every candidate is picked
+      def best(sim: Column, picked: Column): Column = {
+        def score(i: Column) = when(size(picked) === 0, cs(i)("relq"))
+          .otherwise(lit(7) * cs(i)("relq") -
+            lit(3) * array_max(transform(picked, p => sim(i)(p))))
+        array_min(transform(
+          filter(sequence(lit(0), size(cs) - 1),
+            i => !array_contains(picked, i)),
+          i => struct((-score(i)).as("k"), cs(i)("neighbor_id").as("id"),
+            i.as("i"))))("i")
       }
-      val p1 = pick(top.withColumn("score", col("relq")))
-      val simTo = (sel: DataFrame, alias: String) =>
-        pair.join(sel.select(col("query_id"),
-            col("neighbor_id").as("nj")), Seq("query_id", "nj"))
-          .select(col("query_id"), col("ni").as("neighbor_id"),
-            col("simq").as(alias))
-      val r2 = top.join(p1.select(col("query_id"),
-          col("neighbor_id").as("s1")), "query_id")
-        .where(col("neighbor_id") =!= col("s1"))
-        .join(simTo(p1, "sim1"), Seq("query_id", "neighbor_id"))
-        .withColumn("score", lit(7) * col("relq") - lit(3) * col("sim1"))
-      val p2 = pick(r2)
-      val r3 = top.join(p1.select(col("query_id"),
-          col("neighbor_id").as("s1")), "query_id")
-        .join(p2.select(col("query_id"), col("neighbor_id").as("s2")),
-          "query_id")
-        .where(col("neighbor_id") =!= col("s1") &&
-          col("neighbor_id") =!= col("s2"))
-        .join(simTo(p1, "sim1"), Seq("query_id", "neighbor_id"))
-        .join(simTo(p2, "sim2"), Seq("query_id", "neighbor_id"))
-        .withColumn("score",
-          lit(7) * col("relq") - lit(3) * greatest(col("sim1"), col("sim2")))
-      val p3 = pick(r3)
-      val picks = p1.withColumn("pick", lit(1L))
-        .unionByName(p2.withColumn("pick", lit(2L)))
-        .unionByName(p3.withColumn("pick", lit(3L)))
-      picks.join(top.select(col("query_id"), col("neighbor_id"),
-          col("cosine")), Seq("query_id", "neighbor_id"))
-        .select(col("query_id"), col("pick"), col("neighbor_id"),
-          round(col("cosine"), 6).as("cosine"))
+      cand.select(col("query_id"), cs, let(grid) { sim =>
+          aggregate(sequence(lit(1), lit(3)), array().cast("array<int>"),
+            (picked, _) => concat(picked, array(best(sim, picked))))
+        }.as("picked"))
+        .select(col("query_id"), cs,
+          posexplode(col("picked")).as(Seq("p", "i")))
+        .where(col("i").isNotNull)
+        .select(col("query_id"), (col("p") + 1).cast("long").as("pick"),
+          cs(col("i"))("neighbor_id").as("neighbor_id"),
+          round(cs(col("i"))("cosine"), 6).as("cosine"))
     }),
     // Leave-one-out kNN label accuracy (op 360; the probe-accuracy
     // representation metric — "do nearest neighbors share labels", the
@@ -11324,8 +11277,9 @@ object SparkEntry {
     // v ← C·v / ||C·v|| iterated 5 times from the uniform start, then
     // one final multiply yields the loadings, the top eigenvalue, and
     // its explained-variance share. No driver-side state, no collect:
-    // each iteration is ONE map-side-combinable (pos) aggregation over
-    // rows carrying the centered vector — the per-row x·v is an
+    // the iterate and its norm ride on ONE broadcast row, and each
+    // iteration is ONE map-side-combinable (pos) aggregation over rows
+    // carrying the centered vector — the per-row x·v is an
     // INTEGER fold (1e-4-quantized components × 1e-4-quantized v), the
     // per-dim Σ x_d·(x·v) are integer sums, and the 64-element norm
     // squares through DECIMAL(19,0)² (long² would overflow; a float
@@ -11334,14 +11288,16 @@ object SparkEntry {
     // Integer headroom: |Σ xq·ssc| ≤ N·dim·(1.2e4)²·8 ≈ N·1e10 — exact
     // to N ≈ 1e8 rows; beyond that, coarsen the grid one decade.
     "embed_power_iter" -> ((s, dir) => {
-      val (means, _, wLast) = embTopPc(s, dir)
+      val (means, _, top) = embTopPc(s, dir)
       val scalars = means
         .withColumn("varp", ((col("sxx").cast("double")
           - col("sx").cast("double") * col("sx") / col("n")) / col("n")
           / 1e8).cast("decimal(30,12)"))
         .agg(sum(col("varp")).cast("double").as("totvar"),
           max(col("n")).cast("double").as("nn"))
-      wLast.crossJoin(broadcast(scalars))
+      top.crossJoin(broadcast(scalars))
+        .select(posexplode(col("va")).as(Seq("pos", "vq")), col("nrm"),
+          col("nn"), col("totvar"))
         .select(col("pos"),
           (round(col("vq") / 1e4, 4) + lit(0.0)).as("loading"),
           (round(col("nrm") / 1e8 / col("nn"), 6) + lit(0.0)).as("eigval"),
@@ -11360,19 +11316,14 @@ object SparkEntry {
     // xw) — the op-90 embed_rp convention. At 100 TB: the PC fit is
     // the op-198 cost, the projection a map-only second pass.
     "embed_whitening" -> ((s, dir) => {
-      val (_, rows, wLast) = embTopPc(s, dir)
-      val vA = wLast.agg(transform(array_sort(collect_list(struct(
-        col("pos"), col("vq")))), e => e.getField("vq")).as("va"))
-      rows.crossJoin(broadcast(vA))
-        .withColumn("d", aggregate(
-          zip_with(col("xqa"), col("va"), (a, b) => a * b),
-          lit(0L), (acc, x) => acc + x))
-        .select(col("id").as("vec_id"), col("d"),
+      val (_, rows, top) = embTopPc(s, dir)
+      rows.crossJoin(broadcast(top.select(col("va"))))
+        .withColumn("d", dot(col("xqa"), col("va"), lit(0L)))
+        .select(col("id").as("vec_id"), col("d"), col("va"),
           posexplode(col("xqa")).as(Seq("pos", "xq")))
-        .join(broadcast(wLast.select(col("pos"), col("vq"))), "pos")
         .select(col("vec_id"), col("pos").cast("long").as("pos"),
-          ((col("xq") - floor(col("d").cast("double") * col("vq") / 1e8
-            + 0.5).cast("long")).cast("double") / 1e4).as("xw"))
+          ((col("xq") - floor(col("d").cast("double") * col("va")(col("pos"))
+            / 1e8 + 0.5).cast("long")).cast("double") / 1e4).as("xw"))
     }),
     // Class-scatter report (op 193, the Fisher-criterion diagnostic —
     // is the embedding space separable by label?): per label, the

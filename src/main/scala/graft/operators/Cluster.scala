@@ -18,17 +18,19 @@ import graft.expressions.DotProduct
   * longs (order-independent — a parallel double sum would wiggle low
   * bits per SURVEY §6), then divide once in double.
   *
-  * Scale shape: the whole (assign → update)^iters chain is ONE
-  * declarative plan — each iteration is a broadcast of the k·dim
-  * centroid table, one map-side-combinable (cid, pos) aggregation
-  * (the 64× posexplode fan-out collapses to k·dim rows per task
-  * before the shuffle), and a k-row reassembly. iters+1 passes over
-  * the data, exactly Lloyd's cost; no pair expansion, no driver-side
-  * state (MLlib's KMeans collects centroids to the driver every
-  * iteration; here they stay plan-internal, so the job is resumable
-  * and the lineage is auditable). Clusters that lose all members drop
-  * out (standard Lloyd variant); k and iters are small constants, so
-  * plan size is bounded.
+  * Scale shape ([[Lloyd]]): the whole (assign → update)^iters chain is
+  * ONE declarative plan — each iteration broadcasts ONE row holding the
+  * k centroids, assigns every vector by a map-only argmin over that
+  * row, runs one map-side-combinable (cid, pos) aggregation (the 64×
+  * posexplode fan-out collapses to k·dim rows per task before the
+  * shuffle), and folds the k new centroids back into one row. iters+1
+  * passes over the data, exactly Lloyd's cost; no pair expansion, no
+  * shuffle by vector, no driver-side state (MLlib's KMeans collects
+  * centroids to the driver every iteration; here they stay
+  * plan-internal, so the job is resumable and the lineage is
+  * auditable). Clusters that lose all members drop out (standard Lloyd
+  * variant); k ≤ [[graft.functions.SMAX]] and iters is a small
+  * constant, so the row and the plan stay bounded.
   */
 object Cluster {
 
@@ -51,33 +53,12 @@ object Cluster {
     // argmin_c |x-c|² = argmin_c (|c|² - 2·x·c); |x|² is constant per x.
     // The winning score rides along so pruning can recover the true
     // distance (d² = |x|² + score) without re-scanning the centroids.
-    def assigned(cent: DataFrame): DataFrame =
-      v.crossJoin(broadcast(cent))
-        .withColumn("_s",
-          col("cn2") - lit(2.0) * DotProduct(col("v"), col("cv")))
-        .groupBy(col("id"))
-        .agg(min_by(struct(col("cid"), col("v"), col("_s")),
-          struct(col("_s"), col("cid"))).as("_m"))
-        .select(col("id"), col("_m.cid").as("cid"), col("_m.v").as("v"),
-          col("_m._s").as("score"))
-    def withNorm(cent: DataFrame): DataFrame =
-      cent.withColumn("cn2", DotProduct(col("cv"), col("cv")))
-    val init = withNorm(
-      v.orderBy(col("id")).limit(k)
-        .select(col("id").as("cid"), col("v").as("cv")))
-    val centFinal = (1 to iters).foldLeft(init) { (cent, _) =>
-      withNorm(assigned(cent)
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "val")))
-        .select(col("cid"), col("pos"),
-          floor(col("val") * 1e6 + 0.5).cast("long").as("qv"))
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(col("qv")).as("sq"), count(lit(1)).as("cnt"))
-        .groupBy(col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"),
-            (col("sq").cast("double") / col("cnt") / 1e6).as("comp")))),
-          s => s.getField("comp")).as("cv")))
-    }
-    assigned(centFinal)
+    val pts = v.select(col("id"), lit(0).as("g"), col("v").as("x"))
+    val seeds = Lloyd.seeds(v, k)
+      .select(lit(0).as("g"), col("id").as("cid"), col("v").as("cv"))
+    Lloyd.assign(pts, Lloyd.train(pts, seeds, iters))
+      .select(col("id"), col("_m.cid").as("cid"), col("x").as("v"),
+        col("_m._s").as("score"))
   }
 
   /** Cluster-based data pruning (Sorscher et al. 2022, "Beyond neural
@@ -94,7 +75,7 @@ object Cluster {
     * after the one quantized compare.
     *
     * Scale shape: [[kmeansAssigned]]'s cost (iters+1 linear passes,
-    * broadcast centroids) plus ONE window over the cluster key — no
+    * one broadcast centroid row) plus ONE window over the cluster key — no
     * pair expansion at all, which is exactly why the published recipes
     * run it at web scale where pairwise dedup can't.
     */
@@ -124,7 +105,8 @@ object Cluster {
     * data-adaptive (centroid) buckets instead of random projections.
     *
     * Scale shape: pair cost is Σ_c n_c² — SIZE k TO THE CORPUS
-    * (k ≈ n/targetClusterSize, the same rule as IVF's √n cells), and
+    * (k ≈ n/targetClusterSize, the same rule as IVF's √n cells) up to
+    * the one-row centroid bound [[graft.functions.SMAX]], and
     * `maxCluster` caps a degenerate hot cluster to a bounded recall
     * trade, not an OOM (see [[Dedup.DefaultMaxBucket]]). Candidate
     * ids travel skinny through the cluster aggregation; vectors

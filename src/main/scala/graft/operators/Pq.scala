@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +25,9 @@ import graft.expressions.DotProduct
   * id; ADC sums 1e-6-quantized longs so the m-term reduction is
   * order-independent (SURVEY §6).
   *
-  * Scale shape: encoding is one broadcast of the m·k·subDim codebook
-  * and one (id, sub) argmin aggregation — linear in corpus rows, all
-  * map-side combinable. ADC search shuffles NOTHING corpus-sized:
+  * Scale shape: encoding is one broadcast codebook row (m·k·subDim
+  * doubles) and a map-only argmin per (id, sub) — linear in corpus
+  * rows, no shuffle ([[Lloyd]]). ADC search shuffles NOTHING corpus-sized:
   * the distance table is |queries|·m·k rows (broadcast), the per-pair
   * work is a long add, and the top-k window partitions by query.
   */
@@ -36,51 +36,28 @@ object Pq {
   /** Per-subspace codebook: seeds are the subvectors of the k
     * lowest-id vectors; `iters` grouped-Lloyd refinements (all m
     * subspace k-means problems advance together in ONE declarative
-    * plan — the `sub` column rides through every assignment and
-    * update, so the per-iteration cost is exactly [[Cluster.kmeans]]'s
-    * with an equi-join on `sub` instead of a cross join). Returns
-    * (sub, cid, cv, cn2); m·k rows — always broadcast.
+    * plan — [[Lloyd]] with the subspace as the group, so the
+    * per-iteration cost is exactly [[Cluster.kmeans]]'s). Returns the
+    * one-row centroid table: `cs` holds the m·k (g = sub, cid, cv, cn2)
+    * centroids — always broadcast.
     *
     * Same determinism conventions as [[Cluster.kmeans]]: argmin ties →
     * lowest cid, centroid means over 1e-6-quantized longs, clusters
     * that lose all members drop out.
     */
   private def codebook(v: DataFrame, k: Int, m: Int, subDim: Int,
-                       iters: Int = 0): DataFrame = {
-    val init = v.orderBy(col("id")).limit(k)
-      .select(col("id").as("cid"), col("v"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"))
-      .select(col("sub"), col("cid"),
-        slice(col("v"), col("sub") * subDim + 1, lit(subDim)).as("cv"))
-    def withN(c: DataFrame) = c.withColumn("cn2",
-      DotProduct(col("cv"), col("cv")))
-    val sv = subvecs(v, m, subDim)
-    val fin = (1 to iters).foldLeft(init) { (cent, _) =>
-      sv.join(broadcast(withN(cent)), "sub")
-        .withColumn("_s",
-          col("cn2") - lit(2.0) * DotProduct(col("sv"), col("cv")))
-        .groupBy(col("id"), col("sub"))
-        .agg(min_by(struct(col("cid"), col("sv")),
-          struct(col("_s"), col("cid"))).as("_m"))
-        .select(col("sub"), col("_m.cid").as("cid"),
-          posexplode(col("_m.sv")).as(Seq("pos", "val")))
-        .select(col("sub"), col("cid"), col("pos"),
-          floor(col("val") * 1e6 + 0.5).cast("long").as("qv"))
-        .groupBy(col("sub"), col("cid"), col("pos"))
-        .agg(sum(col("qv")).as("sq"), count(lit(1)).as("cnt"))
-        .groupBy(col("sub"), col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"),
-            (col("sq").cast("double") / col("cnt") / 1e6).as("comp")))),
-          s => s.getField("comp")).as("cv"))
-    }
-    withN(fin)
-  }
+                       iters: Int): DataFrame =
+    Lloyd.train(subvecs(v, m, subDim),
+      subvecs(Lloyd.seeds(v, k), m, subDim)
+        .select(col("g"), col("id").as("cid"), col("x").as("cv")),
+      iters)
 
+  /** (id, g = subspace, x = subvector) rows. */
   private def subvecs(df: DataFrame, m: Int, subDim: Int): DataFrame =
-    df.select(col("id"), explode(sequence(lit(0), lit(m - 1))).as("sub"),
+    df.select(col("id"), explode(sequence(lit(0), lit(m - 1))).as("g"),
         col("v"))
-      .select(col("id"), col("sub"),
-        slice(col("v"), col("sub") * subDim + 1, lit(subDim)).as("sv"))
+      .select(col("id"), col("g"),
+        slice(col("v"), col("g") * subDim + 1, lit(subDim)).as("x"))
 
   private def idv(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
@@ -95,20 +72,40 @@ object Pq {
     encodeWith(v, codebook(v, k, m, dim / m, iters), m, dim / m)
   }
 
-  /** Code assignment against an already-built codebook — the shared
-    * second half of [[encode]], split out so the ADC searches can feed
-    * ONE materialized codebook to both the encoder and the distance
-    * table (Catalyst does not dedupe common subplans; without the split
-    * each search executed the codebook's seed-limit + Lloyd chain
-    * twice).
+  /** Code assignment against an already-built codebook row — the
+    * shared second half of [[encode]], split out so the ADC searches
+    * broadcast the SAME codebook row to the encoder and the distance
+    * table: the two broadcasts are one reused exchange, so the seed
+    * limit and the Lloyd chain run once per search.
     */
   private def encodeWith(v: DataFrame, cb: DataFrame, m: Int,
                          subDim: Int): DataFrame =
-    subvecs(v, m, subDim).join(broadcast(cb), "sub")
-      .withColumn("_s",
-        col("cn2") - lit(2.0) * DotProduct(col("sv"), col("cv")))
-      .groupBy(col("id"), col("sub"))
-      .agg(min_by(col("cid"), struct(col("_s"), col("cid"))).as("code"))
+    Lloyd.assign(subvecs(v, m, subDim), cb)
+      .select(col("id"), col("g").as("sub"), col("_m.cid").as("code"))
+
+  /** Exact per-subspace distances from each query to every codebook
+    * centroid: (qid, sub, cid, d2q) with d2 = |q_s|² − 2·q_s·c_s + |c_s|²
+    * quantized to 1e-6 longs, so the m-term ADC sum is order-independent.
+    */
+  private def distTable(queries: DataFrame, cb: DataFrame, m: Int,
+                        subDim: Int): DataFrame =
+    subvecs(queries, m, subDim).crossJoin(broadcast(cb))
+      .select(col("id").as("qid"), col("g").as("sub"), col("x"),
+        inline(filter(col("cs"), c => c("g") === col("g"))))
+      .select(col("qid"), col("sub"), col("cid"),
+        floor((DotProduct(col("x"), col("x")) -
+          lit(2.0) * DotProduct(col("x"), col("cv")) + col("cn2")) * 1e6
+          + 0.5).cast("long").as("d2q"))
+
+  /** The `topK` smallest ADC sums per query, ties → lowest neighbor id. */
+  private def ranked(scored: DataFrame, topK: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sq"), col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .where(col("rank") <= topK)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        (col("sq").cast("double") / 1e6).as("adc_d2"))
+  }
 
   /** IVF+PQ (the combined index of Jégou et al. 2011 §V / the Faiss
     * "IVFx,PQy" recipe): coarse-quantize the corpus into `nCells`
@@ -116,13 +113,14 @@ object Pq {
     * nearest each query — the per-query candidate set shrinks from n
     * to ~nProbe·n/nCells, which is what makes PQ search usable when
     * exhaustive [[adcTopK]] (queries × corpus lookups) stops fitting
-    * the latency budget. Size `nCells ≈ √n` (the IVF rule).
+    * the latency budget. Size `nCells ≈ √n` (the IVF rule), up to the
+    * one-row centroid bound [[graft.functions.SMAX]].
     *
     * Determinism: cells seed from the nCells lowest-id corpus vectors;
     * corpus assignment is argmin (|c|² − 2·x·c, ties → lowest cell);
-    * query probing takes the nProbe best cells by the same score.
+    * query probing takes the nProbe best cells by the same order.
     *
-    * Scale shape: cell table (nCells·dim) and query-probe table
+    * Scale shape: the cell row (nCells·dim) and query-probe table
     * (|queries|·nProbe) broadcast; codes stay distributed and fan out
     * only to the queries probing their cell; nothing corpus-sized
     * shuffles or broadcasts — [[adcTopK]]'s shape with the candidate
@@ -133,52 +131,32 @@ object Pq {
                  nProbe: Int = 4, k: Int = 16, m: Int = 8,
                  dim: Int = 64, iters: Int = 0): DataFrame = {
     val cv = idv(corpus, idCol, vecCol)
-    // cell centroids and codebook are k-row tables consumed by TWO
-    // subplans each (corpus assign + query probe; encoder + distance
-    // table) — materialize once so the seed-limit corpus scans and the
-    // Lloyd chain run once per query, not per consumer.
-    val cent = cv.orderBy(col("id")).limit(nCells)
-      .select(col("id").as("cell_id"), col("v").as("centv"))
-      .withColumn("centn2", DotProduct(col("centv"), col("centv")))
-      .localCheckpoint()
-    def cellScore = col("centn2") - lit(2.0) * DotProduct(col("v"), col("centv"))
-    val ccells = cv.crossJoin(broadcast(cent))
-      .withColumn("_s", cellScore)
-      .groupBy(col("id"))
-      .agg(min_by(col("cell_id"), struct(col("_s"), col("cell_id")))
-        .as("cell_id"))
-    val cb = codebook(cv, k, m, dim / m, iters).localCheckpoint()
+    val cb = codebook(cv, k, m, dim / m, iters)
+    // one cell row for the corpus assignment and the query probe (one
+    // reused broadcast, like the codebook's)
+    val cells = Lloyd.centroidRow(Lloyd.seeds(cv, nCells)
+      .select(lit(0).as("g"), col("id").as("cid"), col("v").as("cv")))
+    def asPoints(df: DataFrame) = df.select(col("id"), lit(0).as("g"),
+      col("v").as("x"))
+    val ccells = Lloyd.assign(asPoints(cv), cells)
+      .select(col("id"), col("_m.cid").as("cell_id"))
     val codes = encodeWith(cv, cb, m, dim / m)
       .join(ccells, "id")
       .select(col("id").as("neighbor_id"), col("sub"), col("code"),
         col("cell_id"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("_s"), col("cell_id"))
-    val qcells = idv(queries, idCol, vecCol)
-      .select(col("id").as("qid"), col("v"))
-      .crossJoin(broadcast(cent))
-      .withColumn("_s", cellScore)
-      .withColumn("_r", row_number().over(wq)).where(col("_r") <= nProbe)
-      .select(col("qid"), col("cell_id"))
-    val dt = subvecs(idv(queries, idCol, vecCol), m, dim / m)
-      .join(broadcast(cb), "sub")
-      .select(col("id").as("qid"), col("sub"), col("cid"),
-        floor((DotProduct(col("sv"), col("sv")) -
-          lit(2.0) * DotProduct(col("sv"), col("cv")) + col("cn2")) * 1e6
-          + 0.5).cast("long").as("d2q"))
-    val scored = codes
+    val qcells = asPoints(idv(queries, idCol, vecCol))
+      .crossJoin(broadcast(cells))
+      .select(col("id").as("qid"), explode(slice(array_sort(
+        Lloyd.scores(col("x"), col("g"))), 1, nProbe)).as("_c"))
+      .select(col("qid"), col("_c.cid").as("cell_id"))
+    val dt = distTable(idv(queries, idCol, vecCol), cb, m, dim / m)
+    ranked(codes
       .join(broadcast(qcells), "cell_id")
       .join(broadcast(dt),
         codes("sub") === dt("sub") && codes("code") === dt("cid") &&
           qcells("qid") === dt("qid"))
       .groupBy(dt("qid").as("query_id"), col("neighbor_id"))
-      .agg(sum(col("d2q")).as("sq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sq"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        (col("sq").cast("double") / 1e6).as("adc_d2"))
+      .agg(sum(col("d2q")).as("sq")), topK)
   }
 
   /** ADC top-k: exact per-subspace distances from each query to every
@@ -191,29 +169,14 @@ object Pq {
               vecCol: String, topK: Int, k: Int = 16, m: Int = 8,
               dim: Int = 64, iters: Int = 0): DataFrame = {
     val cv = idv(corpus, idCol, vecCol)
-    // one materialized codebook for both the encoder and the distance
-    // table (see encodeWith)
-    val cb = codebook(cv, k, m, dim / m, iters).localCheckpoint()
+    val cb = codebook(cv, k, m, dim / m, iters)
     val codes = encodeWith(cv, cb, m, dim / m)
       .select(col("id").as("neighbor_id"), col("sub"), col("code"))
-    // d2 = |q_s|² − 2·q_s·c_s + |c_s|², quantized to 1e-6 longs so the
-    // m-term sum below is order-independent.
-    val dt = subvecs(idv(queries, idCol, vecCol), m, dim / m)
-      .join(broadcast(cb), "sub")
-      .select(col("id").as("query_id"), col("sub"), col("cid"),
-        floor((DotProduct(col("sv"), col("sv")) -
-          lit(2.0) * DotProduct(col("sv"), col("cv")) + col("cn2")) * 1e6
-          + 0.5).cast("long").as("d2q"))
-    val scored = codes
+    val dt = distTable(idv(queries, idCol, vecCol), cb, m, dim / m)
+    ranked(codes
       .join(broadcast(dt),
         codes("sub") === dt("sub") && codes("code") === dt("cid"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("d2q")).as("sq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sq"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        (col("sq").cast("double") / 1e6).as("adc_d2"))
+      .groupBy(dt("qid").as("query_id"), col("neighbor_id"))
+      .agg(sum(col("d2q")).as("sq")), topK)
   }
 }

@@ -111,6 +111,21 @@ class ClusterSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("more than SMAX centroids fail at build time, before any job") {
+    val df = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val sc = spark.sparkContext
+    sc.setJobGroup("cluster-smax", "k past SMAX")
+    // semanticDedupVerdict pins its assignment eagerly, so a late check
+    // would show up as a job in the group.
+    val e = try intercept[IllegalArgumentException] {
+      Cluster.semanticDedupVerdict(df, "vec_id", "embedding",
+        threshold = 0.99, k = graft.functions.SMAX + 1)
+    } finally sc.clearJobGroup()
+    assert(e.getMessage.contains("SMAX"), e.getMessage)
+    assert(sc.statusTracker.getJobIdsForGroup("cluster-smax").isEmpty)
+  }
+
   test("kmeans ties break to the lowest centroid id") {
     // Both seeds are the same point, so every vector is equidistant:
     // everything must land in the lower seed id.

@@ -115,6 +115,26 @@ class PqSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("more than SMAX codes or cells fail at build time, before any job") {
+    val df = Seq((0L, Seq(0.0, 0.0, 0.0, 0.0)), (1L, Seq(1.0, 1.0, 1.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val sc = spark.sparkContext
+    sc.setJobGroup("pq-smax", "k past SMAX")
+    val smax = graft.functions.SMAX
+    val errs = try Seq(
+      intercept[IllegalArgumentException] {
+        Pq.ivfAdcTopK(df, df, "vec_id", "embedding", 1,
+          nCells = 2, nProbe = 1, k = smax + 1, m = m, dim = dim)
+      },
+      intercept[IllegalArgumentException] {
+        Pq.ivfAdcTopK(df, df, "vec_id", "embedding", 1,
+          nCells = smax + 1, nProbe = 1, k = k, m = m, dim = dim)
+      })
+    finally sc.clearJobGroup()
+    errs.foreach(e => assert(e.getMessage.contains("SMAX"), e.getMessage))
+    assert(sc.statusTracker.getJobIdsForGroup("pq-smax").isEmpty)
+  }
+
   test("encode ties break to the lowest seed id") {
     val df = Seq(
       (0L, Seq(1.0, 1.0)), (1L, Seq(1.0, 1.0)), (2L, Seq(1.0, 1.0)))
