@@ -1,26 +1,110 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cluster, Corpus, Dedup, Drawdown, Embed, Layout, Pq, RangeJoin, Resample, Similarity, Sketch}
+import graft.functions.let
+import graft.operators.Similarity
+import graft.sources.Tables
 
-/** Scale probe: the driver's testdata stops at sf0.1, so this main
-  * self-generates inputs at multiples of the sf0.1 row counts (same
-  * md5-derived determinism as MarketSim) and times the heaviest
-  * operators at each multiple. The point is evidence, not a record:
-  * ~linear wall-time in rows, no OOM, caps/AQE engaging — the
-  * measurements behind "this formulation survives 100 TB".
+/** Scale probe: the testdata stops at sf0.1, so this main
+  * writes the ten testdata tables itself at multiples of the sf0.1 row
+  * counts ([[writeTables]], md5-derived and deterministic like
+  * MarketSim) and times registry queries on them. The point is
+  * evidence, not a record: ~linear wall-time in rows, no OOM,
+  * caps/AQE engaging — the measurements behind "this formulation
+  * survives 100 TB". The same directory also runs the unchanged Verify
+  * and `tools/check_oracle.py`, so every timed query can be
+  * oracle-checked at the scale it was timed at.
+  *
+  * Per factor m, `main` writes the directory once (the `gen` line),
+  * sets `graft.ann.planes` from [[Similarity.planesForN]] of the
+  * embedding count, times every query of [[Queries]] through
+  * `SparkEntry.queries(q)(spark, dir)` into the noop sink, and then
+  * runs the few direct probes that measure what no registry query can
+  * (each tagged `// why:`).
   *
   * Emits one JSON line per measurement:
   *   {"op":...,"scale":m,"rows":n,"sec":t}
   * Run: SPARK_GRAFT_SCALES=1,10,50 sbt "runMain graft.Scale"
+  * (`SPARK_GRAFT_ONLY=q1,q2` runs only those ops; generation always
+  * runs. `SPARK_GRAFT_CPUS` sets `local[n]`, default 32.)
   */
 object Scale {
   private def u(id: Column, tag: String): Column =
     conv(substring(md5(concat_ws("_", lit("sc"), id, lit(tag))), 1, 8), 16, 10)
       .cast("double") / 4294967296.0
+
+  /** A deterministic key in 0 until n, drawn from md5(tag_id). */
+  private def hashMod(id: Column, tag: String, n: Long): Column =
+    conv(substring(md5(concat_ws("_", lit(tag), id)), 1, 8), 16, 10)
+      .cast("long") % n
+
+  /** A deterministic uniform pick from `xs`. */
+  private def pick(id: Column, tag: String, xs: Seq[String]): Column =
+    element_at(typedLit(xs), (floor(u(id, tag) * xs.size) + 1).cast("int"))
+
+  /** A deterministic value in [lo, hi], rounded to cents. */
+  private def cents(id: Column, tag: String, lo: Double, hi: Double): Column =
+    round(lit(lo) + u(id, tag) * (hi - lo), 2)
+
+  /** Midnight `days` after 1995-01-01, as TIMESTAMP_NTZ. */
+  private def day(days: Column): Column =
+    timestamp_seconds(lit(788918400L) + days * 86400L).cast("timestamp_ntz")
+
+  /** Row counts of the sf0.1 testdata tables, in [[Tables.All]] order. */
+  val Sf01Rows: ListMap[String, Long] = ListMap("region" -> 5L,
+    "nation" -> 25L, "customer" -> 15000L, "supplier" -> 1000L,
+    "part" -> 20000L, "orders" -> 150000L, "lineitem" -> 600000L,
+    "events" -> 100000L, "documents" -> 5000L, "embeddings" -> 2000L)
+
+  /** Rows [[writeTables]] writes for `table` at `factor`: sf0.1's count
+    * × factor, except the fixed region (5) and nation (25).
+    */
+  def rowCount(table: String, factor: Double): Long =
+    if (table == "region" || table == "nation") Sf01Rows(table)
+    else math.max(1L, math.round(Sf01Rows(table) * factor))
+
+  /** Writes the ten testdata tables to `dir` at `factor` × sf0.1's row
+    * counts ([[rowCount]]). Column names, order and types equal
+    * the sf0.1 testdata's under DuckDB `DESCRIBE`: INTEGER region,
+    * nation and `*_nationkey` keys, `l_linenumber`, `p_size` and
+    * `label`; TIMESTAMP (`timestamp_ntz`) times; a FLOAT[] embedding.
+    *
+    * sf0.1 properties the registry queries read, kept at every factor:
+    *   - events: the five event types (interleaved by id, so every rn
+    *     cross-section is complete), `props` as `{"k": n}` with n in
+    *     0..99 (events_lift_by_segment's quartiles), 1,500 users per
+    *     100k events, a 30-day span with ts increasing in event_id, and
+    *     cent-valued positive prices;
+    *   - documents: `source` src0..src19, `lang` en plus four others,
+    *     `n_chars` = length(text); the text is [[genDocs]]'s corpus with
+    *     its planted duplicates;
+    *   - embeddings: 64-dim unit vectors with [[genEmbeddings]]'s planted
+    *     near-duplicates, and `label` in 0..9;
+    *   - TPC-H: the five region names (ASIA, EUROPE), NATION_i names with
+    *     n_regionkey = i % 5, sf0.1's p_type and first-word-of-p_name
+    *     vocabularies (PROMO, "blue …"), o_orderstatus F/O/P, and
+    *     modulo-consistent keys so every join finds its match.
+    */
+  def writeTables(spark: SparkSession, dir: String, factor: Double): Unit = {
+    def write(name: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
+    genTpch(spark, factor).foreach { case (name, df) => write(name, df) }
+    write("events", genEvents(spark, rowCount("events", factor))
+      .withColumn("ts", col("ts").cast("timestamp_ntz"))
+      .withColumn("props", concat(lit("{\"k\": "),
+        floor(u(col("event_id"), "pr") * 100).cast("long"), lit("}"))))
+    write("documents", genDocs(spark, rowCount("documents", factor))
+      .withColumn("lang", pick(col("doc_id"), "lang",
+        Seq("en", "en", "en", "de", "es", "fr", "zh")))
+      .withColumn("source", concat(lit("src"), col("doc_id") % 20))
+      .withColumn("n_chars", length(col("text")).cast("long")))
+    write("embeddings", genEmbeddings(spark, rowCount("embeddings", factor), 64)
+      .withColumn("label", floor(u(col("vec_id"), "lb") * 10).cast("int")))
+  }
 
   /** Synthetic corpus with a known dup structure: every 10th doc is a
     * one-token mutation of its predecessor (near-dup), every 25th an
@@ -42,8 +126,9 @@ object Scale {
       .select(col("id").as("doc_id"), concat_ws(" ", mutated).as("text"))
   }
 
-  /** Embedding corpus, same 1-in-10 near-dup structure (parent vector
-    * plus 1% noise → cosine ≈ 0.99998, inside every LSH table's reach).
+  /** Unit-length FLOAT embeddings, same 1-in-10 near-dup structure
+    * (parent vector plus 1% noise → cosine ≈ 0.99998, inside every LSH
+    * table's reach).
     */
   def genEmbeddings(spark: SparkSession, n: Long, dim: Int): DataFrame = {
     val isNear = col("id") % 10 === 9
@@ -52,16 +137,12 @@ object Scale {
       (u(concat_ws("#", parent, d), "v") * 2 - 1) +
         when(isNear, (u(concat_ws("#", col("id"), d), "nz") - 0.5) * 0.02)
           .otherwise(0.0))
+    val unit = let(vec)(v =>
+      let(sqrt(aggregate(v, lit(0.0), (a, x) => a + x * x)))(norm =>
+        transform(v, x => x / norm)))
     spark.range(n).select(col("id").as("vec_id"),
-      vec.cast("array<double>").as("embedding"))
+      unit.cast("array<float>").as("embedding"))
   }
-
-  /** Per-key return series (events shape) for the keyed resample. */
-  def genSeries(spark: SparkSession, n: Long, keys: Int): DataFrame =
-    spark.range(n).select(
-      (col("id") % keys).as("key"),
-      (col("id") / keys).as("ord"),
-      ((u(col("id"), "r") - 0.5) * 0.02).as("ret"))
 
   /** Skewed fact: ~90% of rows on one hot key — the rel_join_agg risk
     * shape whose 100×-scale story is AQE skew-join.
@@ -73,90 +154,119 @@ object Scale {
         .as("key"),
       (col("id") % 1000).cast("double").as("v"))
 
-  /** Synthetic events table in the driver-testdata shape (event_id, ts,
-    * event_type, value): 5 interleaved event types (so every rn
-    * cross-section is complete for the portfolio composites), 1 ms
-    * event spacing, deterministic positive prices. sf0.1 ≈ 100k rows,
-    * so scale multiples measure the real eod/stats query plans on
-    * 10×/50× longer series.
+  /** Synthetic events table in the testdata shape (event_id, ts,
+    * user_id, event_type, value): 5 interleaved event types, ts evenly
+    * spaced over 30 days (sf0.1's span) and increasing in event_id,
+    * 1,500 users per 100k events (more users, not longer per-user
+    * histories — the realistic 100 TB shape), positive cent prices.
     */
   def genEvents(spark: SparkSession, n: Long): DataFrame = {
     val types = array(lit("click"), lit("view"), lit("purchase"),
       lit("signup"), lit("error"))
-    // users scale WITH the corpus (~100 events/user at any m) — the
-    // realistic 100 TB shape: more users, not longer per-user histories
-    val nUsers = math.max(n / 100, 100L)
+    val nUsers = math.max(n * 3 / 200, 1L)
+    val stepUs = 30L * 86400L * 1000000L / n.toDouble
     spark.range(n).select(
       col("id").as("event_id"),
-      timestamp_micros(lit(1712928600000000L) + col("id") * 1000L).as("ts"),
-      (conv(substring(md5(concat_ws("_", lit("eu"), col("id"))), 1, 8),
-        16, 10).cast("long") % nUsers).as("user_id"),
+      timestamp_micros(lit(1704067200000000L) +
+        (col("id") * stepUs).cast("long")).as("ts"),
+      hashMod(col("id"), "eu", nUsers).as("user_id"),
       element_at(types, (col("id") % 5 + 1).cast("int")).as("event_type"),
-      (lit(50.0) + u(col("id"), "p") * 100.0).as("value"))
+      cents(col("id"), "p", 50.0, 150.0).as("value"))
   }
 
-  /** Mini TPC-H star schema sized off the lineitem row count with the
-    * sf0.1 table ratios (orders = li/4, customer = li/40, part = li/30,
-    * supplier = li/600, nation 25, region 5; region 2 is ASIA and every
-    * 5th part PROMO so Q8's filters keep their selectivity). Keys are
-    * modulo-consistent so every join finds its match.
+  /** The seven TPC-H tables at `factor` × sf0.1, in the testdata
+    * schemas (see [[writeTables]] for the properties kept).
     */
-  def genTpch(spark: SparkSession, dir: String, nLi: Long): Unit = {
-    val nOrd = math.max(nLi / 4, 100L)
-    val nCust = math.max(nLi / 40, 100L)
-    val nPart = math.max(nLi / 30, 100L)
-    val nSup = math.max(nLi / 600, 25L)
-    spark.range(5).select(col("id").as("r_regionkey"),
-        when(col("id") === 2, lit("ASIA"))
-          .when(col("id") === 3, lit("EUROPE"))
-          .otherwise(concat(lit("REGION_"), col("id"))).as("r_name"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/region.parquet")
-    spark.range(25).select(col("id").as("n_nationkey"),
-        concat(lit("NATION_"), col("id")).as("n_name"),
-        (col("id") % 5).as("n_regionkey"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/nation.parquet")
-    spark.range(nSup).select(col("id").as("s_suppkey"),
-        concat(lit("SUP_"), col("id")).as("s_name"),
-        (conv(substring(md5(concat_ws("_", lit("sn"), col("id"))), 1, 8),
-          16, 10).cast("long") % 25).as("s_nationkey"),
-        (u(col("id"), "sb") * 10000.0).as("s_acctbal"))
-      .write.mode("overwrite").parquet(s"$dir/supplier.parquet")
-    spark.range(nCust).select(col("id").as("c_custkey"),
-        (conv(substring(md5(concat_ws("_", lit("cn"), col("id"))), 1, 8),
-          16, 10).cast("long") % 25).as("c_nationkey"))
-      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    spark.range(nPart).select(col("id").as("p_partkey"),
-        // every 9th part "blue …" so Q20's name prefix keeps ~1/9
-        // selectivity at any scale
-        when(col("id") % 9 === 0, concat(lit("blue part"), col("id")))
-          .otherwise(concat(lit("part"), col("id"))).as("p_name"),
-        when(col("id") % 5 === 0, lit("PROMO"))
-          .otherwise(concat(lit("TYPE_"), col("id") % 7)).as("p_type"))
-      .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    spark.range(nOrd).select(col("id").as("o_orderkey"),
-        (conv(substring(md5(concat_ws("_", lit("oc"), col("id"))), 1, 8),
-          16, 10).cast("long") % nCust).as("o_custkey"),
-        // ~half the orders finished so Q21's status filter bites
-        when(col("id") % 2 === 0, lit("F")).otherwise(lit("O"))
-          .as("o_orderstatus"),
-        timestamp_seconds(lit(789000000L) + (col("id") % 1460) * 86400L)
-          .as("o_orderdate"))
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    spark.range(nLi).select(
-        (col("id") % nOrd).as("l_orderkey"),
-        (conv(substring(md5(concat_ws("_", lit("lp"), col("id"))), 1, 8),
-          16, 10).cast("long") % nPart).as("l_partkey"),
-        (conv(substring(md5(concat_ws("_", lit("ls"), col("id"))), 1, 8),
-          16, 10).cast("long") % nSup).as("l_suppkey"),
-        (col("id") % 50 + 1).cast("double").as("l_quantity"),
-        (lit(900.0) + u(col("id"), "ep") * 100000.0).as("l_extendedprice"),
-        ((col("id") % 11).cast("double") / 100.0).as("l_discount"),
-        // ship 0-120 days after a 1995-2001-spread anchor so Q20's
-        // 1997 window and Q21's 60-day lateness both select real rows
-        timestamp_seconds(lit(789000000L) + (col("id") % 1460) * 86400L +
-          (col("id") % 120) * 86400L).as("l_shipdate"))
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+  def genTpch(spark: SparkSession, factor: Double): Seq[(String, DataFrame)] = {
+    def n(t: String) = rowCount(t, factor)
+    val id = col("id")
+    def range(t: String) = spark.range(n(t))
+    Seq(
+      "region" -> range("region").select(id.cast("int").as("r_regionkey"),
+        element_at(typedLit(Seq("AFRICA", "AMERICA", "ASIA", "EUROPE",
+          "MIDDLE EAST")), (id + 1).cast("int")).as("r_name")),
+      "nation" -> range("nation").select(id.cast("int").as("n_nationkey"),
+        concat(lit("NATION_"), id).as("n_name"),
+        (id % 5).cast("int").as("n_regionkey")),
+      "customer" -> range("customer").select(id.as("c_custkey"),
+        format_string("Customer#%09d", id).as("c_name"),
+        hashMod(id, "cn", 25).cast("int").as("c_nationkey"),
+        cents(id, "cb", -999.99, 9999.99).as("c_acctbal"),
+        pick(id, "cm", Seq("AUTOMOBILE", "BUILDING", "FURNITURE",
+          "HOUSEHOLD", "MACHINERY")).as("c_mktsegment")),
+      "supplier" -> range("supplier").select(id.as("s_suppkey"),
+        format_string("Supplier#%09d", id).as("s_name"),
+        hashMod(id, "sn", 25).cast("int").as("s_nationkey"),
+        cents(id, "sb", -999.99, 9999.99).as("s_acctbal")),
+      "part" -> range("part").select(id.as("p_partkey"),
+        concat_ws(" ", pick(id, "pa", Seq("blue", "cold", "hot", "large",
+            "new", "old", "red", "small")),
+          pick(id, "pn", Seq("anvil", "bolt", "gear", "gizmo", "plate",
+            "ring", "rod", "widget"))).as("p_name"),
+        concat(lit("Brand#"), floor(u(id, "pb") * 25) + 1).as("p_brand"),
+        pick(id, "pt", Seq("ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL",
+          "STANDARD")).as("p_type"),
+        (floor(u(id, "ps") * 50) + 1).cast("int").as("p_size"),
+        (lit(900.0) + (id % 1000) / 10.0).as("p_retailprice")),
+      "orders" -> range("orders").select(id.as("o_orderkey"),
+        hashMod(id, "oc", n("customer")).as("o_custkey"),
+        pick(id, "os", Seq("F", "O", "P")).as("o_orderstatus"),
+        cents(id, "ot", 1000.0, 500000.0).as("o_totalprice"),
+        day(id % 2400).as("o_orderdate"),
+        pick(id, "op", Seq("1-URGENT", "2-HIGH", "3-MEDIUM",
+          "4-NOT SPECIFIED", "5-LOW")).as("o_orderpriority")),
+      // each line ships 0-119 days after its order's date, so Q20's
+      // 1997 window and Q21's 60-day lateness both select real rows
+      "lineitem" -> range("lineitem").select(
+        (id % n("orders")).as("l_orderkey"),
+        hashMod(id, "lp", n("part")).as("l_partkey"),
+        hashMod(id, "ls", n("supplier")).as("l_suppkey"),
+        (id / n("orders") % 7 + 1).cast("int").as("l_linenumber"),
+        (id % 50 + 1).cast("double").as("l_quantity"),
+        cents(id, "ep", 900.0, 105000.0).as("l_extendedprice"),
+        ((id % 11).cast("double") / 100.0).as("l_discount"),
+        ((id % 9).cast("double") / 100.0).as("l_tax"),
+        pick(id, "rf", Seq("A", "N", "R")).as("l_returnflag"),
+        pick(id, "lst", Seq("F", "O")).as("l_linestatus"),
+        day(id % n("orders") % 2400 + id % 120).as("l_shipdate")))
   }
+
+  /** Every registry query Scale has timed, under the table whose row
+    * count its `rows` field reports. The rule: every registry name a
+    * probe, wave or loop recorded, plus each query a `<q>_pin` probe
+    * ran.
+    */
+  val Queries: ListMap[String, Seq[String]] = ListMap(
+    "documents" -> Seq("dedup_exact", "dedup_minhash_lsh",
+      "dedup_simhash_pairs", "dedup_clusters", "dedup_ngram_jaccard",
+      "dedup_incremental", "dedup_containment", "dedup_chunks",
+      "dedup_windows", "dedup_eval_containment", "corpus_kl",
+      "corpus_gopher", "corpus_chunk_tokens", "corpus_bpe_pairs",
+      "corpus_dsir", "corpus_bloom", "corpus_sample_weighted",
+      "corpus_c4_filters", "corpus_ppl_buckets", "text_tfidf",
+      "text_normalize", "text_term_burstiness", "text_textrank",
+      "sketch_hll", "sketch_cms_topk", "sketch_kmv", "sketch_kmv_jaccard",
+      "layout_shard_plan", "layout_prune_report", "mm_phash_dedup"),
+    "embeddings" -> Seq("dedup_embedding", "dedup_semantic",
+      "dedup_semantic_verdict", "ann_topk_lsh", "ann_topk_ivf",
+      "ann_knn_graph", "ann_topk_pq", "ann_topk_ivfpq", "ann_topk_hamming",
+      "ann_hard_negatives", "ann_hard_negatives_ivf", "ann_triangles",
+      "ann_range_search", "embed_kmeans", "embed_prune", "embed_pq_codes",
+      "embed_sq8", "embed_rp", "embed_pagerank", "embed_mmr_rerank",
+      "embed_isotropy", "embed_cluster_purity", "embed_power_iter"),
+    "events" -> Seq("stats_robust", "stats_kruskal", "stats_psi",
+      "stats_friedman", "stats_jonckheere", "stats_changepoint",
+      "stats_ad_2sample", "stats_mood_median", "stats_dunn",
+      "sketch_quantiles", "layout_zorder", "eod_hurst",
+      "eod_portfolio_weighted", "eod_risk_parity", "eod_factor_ols",
+      "eod_es_backtest", "eod_holt", "eod_kalman", "eod_vol_targeting",
+      "tick_hawkes", "events_funnel", "events_lifecycle", "events_scd2",
+      "events_attribution", "events_journeys", "events_dau_mau",
+      "events_cohort_ltv", "events_conversion_lag", "events_cuped",
+      "events_markov_attribution", "events_lift_by_segment",
+      "streaming_hawkes", "streaming_journeys", "streaming_attribution",
+      "streaming_conversion_lag", "streaming_streaks", "streaming_ab_gate"),
+    "lineitem" -> Seq("rel_tpch_q8", "rel_tpch_q20", "rel_tpch_q21"))
 
   def main(args: Array[String]): Unit = {
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,10,50")
@@ -169,1060 +279,218 @@ object Scale {
     def wanted(op: String): Boolean =
       op == "gen" || only.forall(_.contains(op))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val dim = 64
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Graft.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft-scale").toString
 
-    def timed(op: String, m: Long, rows: Long)(body: => Unit): Unit = if (wanted(op)) {
-      val t0 = System.nanoTime()
-      // A failed op must not kill the probe: record it and move on, so
-      // one regression still yields a full scaling record for the rest.
-      // NonFatal only — after an OutOfMemoryError the JVM is degraded
-      // and every later "measurement" would be silent garbage.
-      try {
-        body
-        val sec = math.round((System.nanoTime() - t0) / 1e6) / 1e3
-        println(s"""{"op":"$op","scale":$m,"rows":$rows,"sec":$sec}""")
-      } catch {
+    // A failed op must not kill the probe: record it and move on, so
+    // one regression still yields a full scaling record for the rest.
+    // NonFatal only — after an OutOfMemoryError the JVM is degraded
+    // and every later "measurement" would be silent garbage.
+    def attempt(op: String, m: Long, rows: Long)(body: => String): Unit =
+      try println(s"""{"op":"$op","scale":$m,"rows":$rows${body}}""")
+      catch {
         case scala.util.control.NonFatal(e) =>
           val msg = e.toString.replaceAll("[\"\\\\\n\r\t]", " ").take(160)
           println(s"""{"op":"$op","scale":$m,"rows":$rows,"err":"$msg"}""")
       }
-    }
+    def timed(op: String, m: Long, rows: Long)(body: => Unit): Unit =
+      if (wanted(op)) attempt(op, m, rows) {
+        val t0 = System.nanoTime()
+        body
+        s""","sec":${math.round((System.nanoTime() - t0) / 1e6) / 1e3}"""
+      }
     def sink(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
     for (m <- scales) {
-      val nDocs = 5000L * m
-      val nEmb = 2000L * m
-      val nSeries = 100000L * m
-      val nFact = 600000L * m
-      // Materialize inputs first (generation timed apart from the
-      // operators, which then read parquet like any production run).
-      timed("gen", m, nDocs + nEmb + nSeries + nFact) {
-        genDocs(spark, nDocs).write.mode("overwrite").parquet(s"$root/$m/docs")
-        genEmbeddings(spark, nEmb, dim).write.mode("overwrite")
-          .parquet(s"$root/$m/emb")
-        genSeries(spark, nSeries, keys = 100).write.mode("overwrite")
-          .parquet(s"$root/$m/series")
-        genSkewFact(spark, nFact).write.mode("overwrite")
-          .parquet(s"$root/$m/fact")
+      val dir = s"$root/$m"
+      def rows(table: String): Long = rowCount(table, m.toDouble)
+      timed("gen", m, Sf01Rows.keys.map(rows).sum) {
+        writeTables(spark, dir, m.toDouble)
       }
-      val docs = spark.read.parquet(s"$root/$m/docs")
-      val emb = spark.read.parquet(s"$root/$m/emb")
-      val series = spark.read.parquet(s"$root/$m/series")
-      val fact = spark.read.parquet(s"$root/$m/fact")
-      val queries = emb.where(col("vec_id") < 256)
+      val nEmb = rows("embeddings")
+      // The kNN-graph family sizes its LSH planes from this conf; with
+      // the default of 4 planes, 100k vectors mean ~6k-
+      // occupancy buckets and a ~quadratic pair join (measured 8.3→49 s
+      // across 1×→10×, executor death at 50×).
+      spark.conf.set("graft.ann.planes", Similarity.planesForN(nEmb).toString)
+      for ((table, qs) <- Queries; q <- qs)
+        timed(q, m, rows(table)) { sink(SparkEntry.queries(q)(spark, dir)) }
 
-      timed("dedup_exact", m, nDocs) {
-        sink(Dedup.exact(docs, "doc_id", "text").where(col("is_dup")))
+      // why: the size of what a query pins is a property of the data,
+      // not a time; flat or sublinear across factors is the pass
+      // condition. Re-derived with the same public expressions.
+      def pinRows(q: String, table: String)(n: DataFrame => Long): Unit =
+        if (wanted(q)) attempt(s"${q}_pin_rows", m, rows(table)) {
+          s""","pin_rows":${n(Tables.load(spark, dir, table))}"""
+        }
+      // stats_dunn pins (event_type, quantized-return) counts — the
+      // distinct quantized-return grid, not the row count, bounds it.
+      pinRows("stats_dunn", "events") { ev =>
+        val wTp = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
+        ev.withColumn("ret", graft.functions.Eod.toReturns(col("value"), wTp))
+          .where(col("ret").isNotNull)
+          .select(col("event_type"),
+            floor(col("ret") * 1e6 + 0.5).cast("long").as("q"))
+          .distinct().count()
       }
-      timed("dedup_minhash_lsh", m, nDocs) {
-        sink(Dedup.minhashLshPairs(docs, "doc_id", "text"))
+      // text_textrank pins bigram counts — vocabulary (Heaps-law
+      // sublinear; the generator draws from a 5000-token pool, so the
+      // bigram space saturates).
+      pinRows("text_textrank", "documents") { docs =>
+        val toks = graft.functions.Text.tokens(col("text"))
+        docs.select(explode(zip_with(
+            slice(toks, lit(1), size(toks) - 1),
+            slice(toks, lit(2), size(toks) - 1),
+            (a, b) => struct(a.as("x"), b.as("y")))).as("p"))
+          .select(col("p.x"), col("p.y")).distinct().count()
       }
-      timed("dedup_simhash_pairs", m, nDocs) {
-        sink(Dedup.simhashPairs(docs, "doc_id", "text"))
+      // dedup_eval_containment pins the truth/candidate PAIR sets — the
+      // planted-dup fraction of the corpus, linear in dups but far below
+      // the shingle joins that produce them.
+      pinRows("dedup_eval_containment", "documents") { docs =>
+        graft.operators.Dedup.ngramJaccardPairs(
+          docs.select(col("doc_id"), col("text")), "doc_id", "text",
+          threshold = 0.5).count()
       }
-      // Iterative connected components over the minhash pairs: measures
-      // that the label-propagation loop converges in few rounds on a
-      // real dup graph at every tier (near-cliques from banding).
-      timed("dedup_clusters", m, nDocs) {
-        sink(Dedup.clusters(
-          Dedup.minhashLshPairs(docs, "doc_id", "text"), "id_a", "id_b"))
-      }
-      timed("dedup_ngram_jaccard", m, nDocs) {
-        sink(Dedup.ngramJaccardPairs(docs, "doc_id", "text"))
-      }
-      // Incremental dedup: a 10%-of-corpus arrival batch (every 10th
-      // doc re-sent verbatim under a new id) against the full corpus
-      // as the index — the daily-ingest shape. Cost should track
-      // index-build (linear in corpus) + batch join, never pairs².
-      timed("dedup_incremental", m, nDocs) {
-        val fresh = docs.where(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-        sink(Dedup.minhashLshIncremental(fresh, docs, "doc_id", "text"))
-      }
-      // Planes sized to the corpus (see embeddingCosinePairs scaladoc):
-      // occupancy² is the candidate cost, so hold occupancy ~64 as n
-      // grows instead of letting fixed-plane buckets fill quadratically.
-      val planes = math.max(8,
-        math.ceil(math.log(nEmb / 64.0) / math.log(2)).toInt)
-      timed("dedup_embedding", m, nEmb) {
-        sink(Dedup.embeddingCosinePairs(emb, "vec_id", "embedding", 0.99, dim,
-          planes = planes, tables = 4))
-      }
-      // Recall against the PLANTED structure: every id ≡ 9 (mod 10) is a
-      // near-dup of id-1 at cosine ≈ 0.99998. Adding planes shrinks
-      // buckets (speed) at a recall cost the OR-amplified tables must
-      // absorb — so the probe records recall alongside wall-time, else
-      // "faster at 50×" could silently mean "found nothing".
-      timed("dedup_embedding_recall_pct", m, nEmb) {
-        val found = Dedup.embeddingCosinePairs(emb, "vec_id", "embedding",
-            0.99, dim, planes = planes, tables = 4)
-          .where(col("id_b") - col("id_a") === 1 && col("id_b") % 10 === 9)
-          .count()
-        val expected = nEmb / 10
-        println(s"""{"op":"dedup_embedding_recall","scale":$m,"planes":$planes,"found":$found,"expected":$expected,"recall":${found.toDouble / expected}}""")
-      }
-      // ANN index params sized to the corpus (see each op's scaladoc):
-      // LSH planes hold occupancy ~256; IVF cells follow the √n rule.
-      val annPlanes = math.max(4,
-        math.ceil(math.log(nEmb / 256.0) / math.log(2)).toInt)
-      val nCells = math.max(16, math.sqrt(nEmb.toDouble).toInt)
-      timed("ann_topk_lsh", m, nEmb) {
-        sink(Similarity.lshTopK(queries, emb, "vec_id", "embedding", 10, dim,
-          planes = annPlanes))
-      }
-      timed("ann_topk_ivf", m, nEmb) {
-        sink(Similarity.ivfTopK(queries, emb, "vec_id", "embedding", 10,
-          nCells = nCells))
-      }
-      // Corpus-wide kNN graph (op 150): candidates shuffle on
-      // (table, bucket); cost ∝ Σ bucket² — with planes scaled to
-      // log2(n) the bucket count tracks n and the probe should stay
-      // near-linear, the evidence that the graph build never
-      // degenerates toward N².
-      timed("ann_knn_graph", m, nEmb) {
-        sink(Similarity.knnGraph(emb, "vec_id", "embedding", 10, dim,
-          planes = Similarity.planesForN(nEmb)))
-      }
-      // Planted hot bucket: 25% of the corpus replaced by ONE constant
-      // vector — all its copies land in the same sign bucket of every
-      // table, the degenerate near-dup cluster the cap exists for.
-      // Uncapped that bucket alone is (n/4)² pairs in one task; with
-      // the cap (set below the cluster size) the bucket drops from
-      // both tables and the probe's wall-time must stay in line with
-      // the clean-corpus run above — the evidence the cap bounds the
-      // max-task pair count rather than merely relabeling it.
+
+      // why: recall against the PLANTED near-dups (every id ≡ 9 mod 10
+      // copies id − 1 at cosine ≈ 0.99998) is a property of the answer
+      // the oracle cannot see — an oracle-equal answer that finds
+      // nothing passes it. Read off the registry query's own pairs.
+      for ((op, q) <- Seq("dedup_embedding_recall" -> "dedup_embedding",
+          "dedup_semantic_recall" -> "dedup_semantic"))
+        timed(s"${op}_pct", m, nEmb) {
+          val found = SparkEntry.queries(q)(spark, dir)
+            .where(col("id_b") - col("id_a") === 1 && col("id_b") % 10 === 9)
+            .count()
+          val expected = nEmb / 10
+          println(s"""{"op":"$op","scale":$m,"found":$found,"expected":$expected,"recall":${found.toDouble / expected}}""")
+        }
+
+      // why: no testdata table holds a degenerate near-dup cluster.
+      // 25% of the corpus is replaced by ONE constant vector — all its
+      // copies land in the same sign bucket of every table. Uncapped
+      // that bucket alone is (n/4)² pairs in one task; with the cap set
+      // below the cluster size the bucket drops from both tables, and
+      // the wall-time must stay in line with ann_knn_graph's — the
+      // evidence the cap bounds the max-task pair count.
       if (wanted("ann_knn_graph_hotbucket")) {
-        // Materialized OUTSIDE the timing (like every probe input):
-        // the spiked projection itself is what's expensive — Catalyst
-        // re-evaluates the `when(·, constLit)` branch inside each of
-        // the 2·planes bucket expressions (a measured 9× on the bare
-        // scan) — and that harness cost must not be charged to the op.
-        val constV = typedLit((0 until dim).map(d => 0.5 + 0.001 * d))
-        emb.select(col("vec_id"),
+        // Materialized OUTSIDE the timing: Catalyst re-evaluates the
+        // `when(·, constLit)` branch inside each of the 2·planes bucket
+        // expressions (a measured 9× on the bare scan), and that harness
+        // cost must not be charged to the op.
+        val constV = typedLit((0 until 64).map(d => 0.5 + 0.001 * d))
+        Tables.load(spark, dir, "embeddings").select(col("vec_id"),
             when(col("vec_id") % 4 === 0, constV)
               .otherwise(col("embedding").cast("array<double>"))
               .as("embedding"))
-          .write.mode("overwrite").parquet(s"$root/$m/embspiked")
-        val spiked = spark.read.parquet(s"$root/$m/embspiked")
+          .write.mode("overwrite").parquet(s"$dir/embspiked")
+        val spiked = spark.read.parquet(s"$dir/embspiked")
         timed("ann_knn_graph_hotbucket", m, nEmb) {
-          sink(Similarity.knnGraph(spiked, "vec_id", "embedding", 10, dim,
+          sink(Similarity.knnGraph(spiked, "vec_id", "embedding", 10, 64,
             planes = Similarity.planesForN(nEmb),
             maxBucket = math.max(64, (nEmb / 8).toInt)))
         }
       }
-      // Streaming kNN-graph maintenance (op 154): the index build is
-      // the amortized cost (≈ the ann_knn_graph probe above); what the
-      // per-arrival path pays is ONE stateless equi-join of the batch
-      // against the materialized index. Probe a 10%-of-corpus arrival
-      // batch: cost must track batch × bucket occupancy, far below the
-      // full graph build at every tier.
-      if (wanted("ann_knn_probe") &&
-          !new java.io.File(s"$root/$m/knn_ix").exists()) {
-        Similarity.knnIndexRelation(emb, "vec_id", "embedding", dim,
-            planes = Similarity.planesForN(nEmb))
-          .write.mode("overwrite").parquet(s"$root/$m/knn_ix")
-      }
-      timed("ann_knn_probe", m, nEmb / 10) {
-        val arrivals = emb.where(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + 10000000L).as("vec_id"), col("embedding"))
-        sink(Similarity.knnProbe(arrivals,
-          spark.read.parquet(s"$root/$m/knn_ix"), "vec_id", "embedding",
-          dim, planes = Similarity.planesForN(nEmb)))
-      }
-      // Mixture diagnostics (op 155): the claim is strictly linear in
-      // corpus tokens — explode, two keyed aggs, one vocab join.
-      timed("corpus_kl", m, nDocs) {
-        sink(Corpus.klDivergence(docs, col("doc_id") % 20, "text"))
-      }
-      timed("resample_by_key", m, nSeries) {
-        sink(Resample.resampleMean(series, "ret", Seq("key"), Seq("ord"), 10))
-      }
-      // k-means family sized by the √n rule (Cluster scaladoc): k ≈ √n
-      // balances assignment (n·k) against within-cluster pairing
-      // (n·(n/k)) for SemDeDup, up to the one-row centroid bound SMAX.
-      val kKm = math.min(graft.functions.SMAX,
-        math.max(8, math.sqrt(nEmb.toDouble).toInt))
-      timed("embed_kmeans", m, nEmb) {
-        sink(Cluster.kmeans(emb, "vec_id", "embedding", k = kKm, iters = 2))
-      }
-      timed("dedup_semantic", m, nEmb) {
-        sink(Cluster.semanticDedupPairs(emb, "vec_id", "embedding", 0.99,
-          k = kKm, iters = 2))
-      }
-      // Recall against the planted 1-in-10 near-dups: a near-identical
-      // pair should land in the same k-means cell at any k — record it
-      // so a sharding change that silently separates pairs fails loudly.
-      timed("dedup_semantic_recall_pct", m, nEmb) {
-        val found = Cluster.semanticDedupPairs(emb, "vec_id", "embedding",
-            0.99, k = kKm, iters = 2)
-          .where(col("id_b") - col("id_a") === 1 && col("id_b") % 10 === 9)
-          .count()
-        val expected = nEmb / 10
-        println(s"""{"op":"dedup_semantic_recall","scale":$m,"k":$kKm,"found":$found,"expected":$expected,"recall":${found.toDouble / expected}}""")
-      }
-      // Full SemDeDup verdict chain (pairs → components → centroid-
-      // distance argmax) on ONE materialized k-means assignment — the
-      // round-7 judge flagged the pre-fix plan for re-running the Lloyd
-      // chain 4×; this probe pins the post-fix wall-time scaling.
-      timed("dedup_semantic_verdict", m, nEmb) {
-        sink(Cluster.semanticDedupVerdict(emb, "vec_id", "embedding", 0.99,
-          k = kKm, iters = 2))
-      }
-      timed("embed_prune", m, nEmb) {
-        sink(Cluster.clusterPrune(emb, "vec_id", "embedding", keepFrac = 0.5,
-          k = kKm, iters = 2))
-      }
-      timed("embed_pq_codes", m, nEmb) {
-        sink(Pq.encode(emb, "vec_id", "embedding"))
-      }
-      timed("ann_topk_pq", m, nEmb) {
-        sink(Pq.adcTopK(queries, emb, "vec_id", "embedding", 10))
-      }
-      // IVF+PQ with the √n cell rule up to SMAX cells: exhaustive ADC
-      // grows linearly in corpus per query; the inverted lists bound it
-      // to nProbe·n/nCells.
-      timed("ann_topk_ivfpq", m, nEmb) {
-        sink(Pq.ivfAdcTopK(queries, emb, "vec_id", "embedding", 10,
-          nCells = math.min(nCells, graft.functions.SMAX), nProbe = 8))
-      }
-      timed("embed_sq8", m, nEmb) {
-        sink(Embed.scalarQuantizeInt8(emb, "vec_id", "embedding"))
-      }
-      timed("embed_rp", m, nEmb) {
-        sink(Embed.randomProject(emb, "vec_id", "embedding"))
-      }
-      timed("ann_topk_hamming", m, nEmb) {
-        sink(Embed.hammingTopK(queries, emb, "vec_id", "embedding", 10))
-      }
-      timed("dedup_chunks", m, nDocs) {
-        sink(Corpus.chunkDedup(docs, "doc_id", "text"))
-      }
-      timed("dedup_windows", m, nDocs) {
-        sink(Corpus.windowDedup(docs, "doc_id", "text"))
-      }
-      timed("text_tfidf", m, nDocs) {
-        sink(Corpus.tfIdfTopTerms(docs, "doc_id", "text"))
-      }
-      // Round-8 curation newcomers: gopher + normalize are map-only
-      // (linearity is the claim to verify), chunking is a bounded
-      // generate, BPE pairs one count shuffle over a bounded key space.
-      timed("corpus_gopher", m, nDocs) {
-        sink(Corpus.gopherQualityRules(docs, "doc_id", "text"))
-      }
-      timed("corpus_chunk_tokens", m, nDocs) {
-        sink(Corpus.tokenChunks(docs, "doc_id", "text"))
-      }
-      timed("corpus_bpe_pairs", m, nDocs) {
-        sink(Corpus.bpePairStats(docs, "doc_id", "text"))
-      }
-      timed("text_normalize", m, nDocs) {
-        sink(docs.select(col("doc_id"),
-          graft.functions.Text.normalize(col("text")).as("clean")))
-      }
-      timed("corpus_dsir", m, nDocs) {
-        sink(Corpus.dsirWeight(docs,
-          docs.where(col("doc_id") % 3 === 0), docs, "doc_id", "text"))
-      }
-      // Bloom bits sized to the bench side (text.md rule: ~18× expected
-      // distinct bench grams → FP ≈ 3.6e-3 at the k=3 default, cheap
-      // for a pre-filter whose hits go to the exact check); the bitmap
-      // stays a KB-scale broadcast even at the top tier.
-      val benchGrams = (nDocs / 97) * 43
-      val bloomBits = math.min(1L << 22,
-        math.max(65536L, ((18 * benchGrams / 32) + 1) * 32)).toInt
-      timed("corpus_bloom", m, nDocs) {
-        sink(Corpus.bloomContamination(
-          docs.where(col("doc_id") % 97 =!= 0),
-          docs.where(col("doc_id") % 97 === 0),
-          "doc_id", "text", bits = bloomBits))
-      }
-      // Round-9 probes. Hard-negative mining: brute is the O(Q·N)
-      // broadcast baseline; IVF bounds candidates to nProbe·n/nCells
-      // per query. Recall is measured against brute's exact answer —
-      // sublinear time only counts if the probed cells still hold the
-      // true closest wrong-label neighbors.
-      val labeled = emb.withColumn("label", col("vec_id") % 5)
-      val labeledQ = labeled.where(col("vec_id") < 256)
-      timed("ann_hard_negatives", m, nEmb) {
-        sink(Similarity.hardNegativesTopK(labeledQ, labeled, "vec_id",
-          "embedding", "label", 10))
-      }
-      timed("ann_hard_negatives_ivf", m, nEmb) {
-        sink(Similarity.hardNegativesIvfTopK(labeledQ, labeled, "vec_id",
-          "embedding", "label", 10, nCells = nCells, nProbe = 8))
-      }
-      // Build/search split: the N·√n assignment pass is the index
-      // BUILD, paid once per corpus refresh (ivf_build); searches
-      // against the materialized index see only nProbe·n/nCells
-      // candidates per query (ivf_search) — the number that must beat
-      // brute, and the amortization argument when Q is small.
-      timed("ann_hard_negatives_ivf_build", m, nEmb) {
-        val (cent, cells) = Similarity.ivfCorpusIndex(labeled, "vec_id",
-          "embedding", nCells, labelCol = Some("label"))
-        cent.write.mode("overwrite").parquet(s"$root/$m/ivf_cent")
-        cells.write.mode("overwrite").parquet(s"$root/$m/ivf_cells")
-      }
-      // The search probe reads the build's parquet: when run alone via
-      // SPARK_GRAFT_ONLY, materialize the index first (untimed).
-      if (wanted("ann_hard_negatives_ivf_search") &&
-          !new java.io.File(s"$root/$m/ivf_cent").exists()) {
-        val (cent, cells) = Similarity.ivfCorpusIndex(labeled, "vec_id",
-          "embedding", nCells, labelCol = Some("label"))
-        cent.write.mode("overwrite").parquet(s"$root/$m/ivf_cent")
-        cells.write.mode("overwrite").parquet(s"$root/$m/ivf_cells")
-      }
-      timed("ann_hard_negatives_ivf_search", m, nEmb) {
-        sink(Similarity.ivfSearchIndexed(labeledQ, "vec_id", "embedding",
-          10, 8, spark.read.parquet(s"$root/$m/ivf_cent"),
-          spark.read.parquet(s"$root/$m/ivf_cells"),
-          labelCol = Some("label")))
-      }
-      if (wanted("ann_hard_negatives_recall_pct")) {
-        def pairs(df: DataFrame) = df.select(col("query_id"), col("neighbor_id"))
-        val brute = pairs(Similarity.hardNegativesTopK(labeledQ, labeled,
-          "vec_id", "embedding", "label", 10))
-        val ivf = pairs(Similarity.hardNegativesIvfTopK(labeledQ, labeled,
-          "vec_id", "embedding", "label", 10, nCells = nCells, nProbe = 8))
-        val expected = brute.count()
-        val hit = ivf.intersect(brute).count()
-        println(s"""{"op":"ann_hard_negatives_recall","scale":$m,"n_cells":$nCells,"hit":$hit,"expected":$expected,"recall":${hit.toDouble / expected}}""")
-      }
-      // Robust group stats (op 116): two window quantile passes + one
-      // agg over the SAME per-key shuffle — the claim is linear rows
-      // per key, no extra exchange.
-      timed("stats_robust", m, nSeries) {
-        val wK = Window.partitionBy(col("key"))
-        sink(series
-          .withColumn("med",
-            graft.functions.Stats.quantile(col("ret"), 0.5).over(wK))
-          .withColumn("lo",
-            graft.functions.Stats.quantile(col("ret"), 0.05).over(wK))
-          .withColumn("hi",
-            graft.functions.Stats.quantile(col("ret"), 0.95).over(wK))
-          .groupBy(col("key"))
-          .agg(min(col("med")).as("median"),
-            graft.functions.Stats.madFromMedian(col("ret"), col("med"))
-              .as("mad"),
-            graft.functions.Stats.winsorizedMean(col("ret"), col("lo"),
-              col("hi")).as("winsor_mean")))
-      }
-      // Rolling beta/corr over MANY pairs (the op-107 r9 re-shape):
-      // every non-benchmark key vs key 0, window partitioned by the
-      // pair key — per-pair frame work is constant, so wall-time must
-      // track rows, and no single-partition WindowExec can appear.
-      timed("rolling_beta_corr", m, nSeries) {
-        val bench = series.where(col("key") === 0)
-          .select(col("ord"), col("ret").as("rb"))
-        val paired = series.where(col("key") =!= 0)
-          .select(col("key").as("pair_id"), col("ord"), col("ret").as("ra"))
-          .join(bench, "ord")
-        val w = Window.partitionBy(col("pair_id")).orderBy(col("ord"))
-        sink(paired.select(col("pair_id"), col("ord"),
-          graft.functions.Eod.rollingBeta(col("ra"), col("rb"), w, 60)
-            .as("beta"),
-          graft.functions.Eod.rollingCorr(col("ra"), col("rb"), w, 60)
-            .as("corr")))
-      }
 
-      // Multi-benchmark CAPM grid (op 143): 97 assets × 3 benchmarks
-      // over the keyed series — the benchmark slice (3 of 100 keys)
-      // broadcasts, the asset side never re-shuffles, one hash agg
-      // emits the grid. Linear-in-rows is the evidence the broadcast
-      // fan-out shape holds as series length grows.
-      timed("capm_multi", m, nSeries) {
-        val b = series.where(col("key") < 3)
-          .select(col("key").as("bench_id"), col("ord"), col("ret").as("rb"))
-        val a = series.where(col("key") >= 3)
-          .select(col("key").as("pair_id"), col("ord"), col("ret").as("ra"))
-        sink(a.join(broadcast(b), "ord")
-          .groupBy(col("pair_id"), col("bench_id"))
-          .agg(
-            graft.functions.Eod.capmBeta(col("ra"), col("rb")).as("beta"),
-            graft.functions.Eod.capmAlpha(col("ra"), col("rb")).as("alpha"),
-            graft.functions.Eod.capmR2(col("ra"), col("rb")).as("r2")))
-      }
-
-      // Rolling capture (op 144): same one-pass windowed shape as
-      // rolling_beta_corr (conditional windowed means).
-      timed("rolling_capture", m, nSeries) {
-        val bench = series.where(col("key") === 0)
-          .select(col("ord"), col("ret").as("rb"))
-        val paired = series.where(col("key") =!= 0)
-          .select(col("key").as("pair_id"), col("ord"), col("ret").as("ra"))
-          .join(bench, "ord")
-        val w = Window.partitionBy(col("pair_id")).orderBy(col("ord"))
-        sink(paired.select(col("pair_id"), col("ord"),
-          graft.functions.Eod.rollingUpCapture(col("ra"), col("rb"), w, 60)
-            .as("up"),
-          graft.functions.Eod.rollingDownCapture(col("ra"), col("rb"), w, 60)
-            .as("dn")))
-      }
-      // Sketches (ops 118-119): the claim is fixed-size mergeable
-      // state — wall-time linear in rows, state rows CONSTANT across
-      // scales (≤ m per group for HLL, ≤ depth·width for CMS). The
-      // state-rows line is the evidence the 100 TB rollup story rides
-      // on: partial aggregation collapses every partition to KBs.
-      val sketchToks = docs.select((col("doc_id") % 16).as("src"),
-        explode(split(col("text"), " ")).as("tok"))
-      timed("sketch_hll", m, nDocs) {
-        val regs = Sketch.hllRegisters(sketchToks, Seq("src"), "tok")
-        sink(Sketch.hllEstimate(regs, Seq("src")))
-      }
-      timed("sketch_cms_topk", m, nDocs) {
-        sink(Sketch.cmsTopK(sketchToks, "tok", depth = 4, width = 1024,
-          topK = 20))
-      }
-      // KMV (ops 129-130): the sketch is the k smallest distinct
-      // hashes — estimate + pairwise Jaccard read KBs of state; the
-      // linear part is the dedupe agg over the token stream.
-      timed("sketch_kmv", m, nDocs) {
-        val sk = Sketch.kmvSketch(sketchToks, Seq("src"), "tok", k = 256)
-        sink(Sketch.kmvEstimate(sk, Seq("src"), k = 256))
-      }
-      timed("sketch_kmv_jaccard", m, nDocs) {
-        val sk = Sketch.kmvSketch(sketchToks, Seq("src"), "tok", k = 256)
-        sink(Sketch.kmvJaccard(sk, "src", k = 256))
-      }
-      if (wanted("sketch_state_rows")) {
-        val hllRows = Sketch.hllRegisters(sketchToks, Seq("src"), "tok").count()
-        val cmsRows = Sketch.cmsCounters(sketchToks, "tok", 4, 1024).count()
-        val kmvRows = Sketch.kmvSketch(sketchToks, Seq("src"), "tok", k = 256).count()
-        println(s"""{"op":"sketch_state_rows","scale":$m,"rows":$nDocs,"hll_regs":$hllRows,"cms_cells":$cmsRows,"kmv_rows":$kmvRows}""")
-      }
-      // Histogram quantile sketch (op 141): wall linear in rows, state
-      // ≤ nBins counts per key at EVERY tier (the mergeable-rollup
-      // evidence, same claim shape as sketch_state_rows).
-      timed("sketch_quantiles", m, nSeries) {
-        val sk = Sketch.histSketch(series, Seq("key"), "ret",
-          lo = -0.02, hi = 0.02, nBins = 128)
-        sink(Sketch.histQuantiles(sk, Seq("key"),
-          Seq(0.25, 0.5, 0.75, 0.95), lo = -0.02, hi = 0.02, nBins = 128))
-      }
-      if (wanted("sketch_hist_rows")) {
-        val histRows = Sketch.histSketch(series, Seq("key"), "ret",
-          -0.02, 0.02, 128).count()
-        println(s"""{"op":"sketch_hist_rows","scale":$m,"rows":$nSeries,"hist_rows":$histRows}""")
-      }
-      // Two-sample KS (op 225): the dense grid is distinct QUANTIZED
-      // values × keys — the 1e-6 grid bounds distinct values by the
-      // VALUE RANGE (±0.01 → ≤ 20 001 points) regardless of row
-      // count, so the cross product saturates at ~2M rows while the
-      // counting aggregation stays linear in input rows. Wall should
-      // approach linear-in-rows once the grid saturates.
-      timed("stats_ks", m, nSeries) {
-        val r = series
-          .withColumn("q", floor(col("ret") * 1e6 + 0.5).cast("long"))
-        val cnt = r.groupBy(col("key"), col("q"))
-          .agg(count(lit(1)).as("c"))
-        val grid = cnt.select(col("q")).distinct()
-        val keyset = cnt.select(col("key")).distinct()
-        val dense = grid.crossJoin(broadcast(keyset))
-          .join(cnt, Seq("key", "q"), "left")
-          .withColumn("c", coalesce(col("c"), lit(0L)))
-        val wq = Window.partitionBy(col("key")).orderBy(col("q"))
-        val cum = dense.withColumn("cc", sum(col("c")).over(wq))
-        val tot = r.groupBy(col("key")).agg(count(lit(1)).as("nt"))
-        val cumT = cum.join(tot, "key")
-        val aSide = cumT.where(col("key") =!= 0)
-          .select(col("key"), col("q"), col("cc").as("ca"),
-            col("nt").as("na"))
-        val bSide = cumT.where(col("key") === 0)
-          .select(col("q"), col("cc").as("cb"), col("nt").as("nb"))
-        sink(aSide.join(bSide, "q")
-          .withColumn("num",
-            abs(col("ca") * col("nb") - col("cb") * col("na")))
-          .groupBy(col("key"))
-          .agg(max(col("num")).as("mx"), max(col("na")).as("na"),
-            max(col("nb")).as("nb")))
-      }
-      // Binned range join (op 137): every 50th key-0 row opens a
-      // 2-slot interval over the global position domain (~200 points
-      // each) — pair fan-out is rows/25, so wall must track rows, and
-      // the bin equi-key keeps the plan off nested loops at any tier.
-      timed("range_join", m, nSeries) {
-        val pos = (col("ord") * 100 + col("key")).cast("long")
-        val pts = series.select(pos.as("p"))
-        val ivs = series.where(col("key") === 0 && col("ord") % 50 === 0)
-          .select((col("ord") * 100).cast("long").as("lo"),
-            (col("ord") * 100 + 199).cast("long").as("hi"),
-            col("ord").cast("long").as("iid"))
-        sink(RangeJoin.binned(pts, "p", ivs, "lo", "hi", binWidth = 200L)
-          .groupBy(col("iid")).agg(count(lit(1)).as("n")))
-      }
-      // Write-side layout planners (ops 139-140): one per-group window
-      // pass / one codegen projection — both must stay linear.
-      timed("layout_shard_plan", m, nDocs) {
-        val sized = docs.select(col("doc_id"), (col("doc_id") % 64).as("src"),
-          length(col("text")).cast("long").as("bytes"))
-        sink(Layout.shardPlan(sized, "src", "doc_id", "bytes",
-            target = 1L << 20)
-          .groupBy(col("src"), col("shard_id"))
-          .agg(count(lit(1)).as("n"), sum(col("bytes")).as("b")))
-      }
-      timed("layout_zorder", m, nSeries) {
-        val z = series.select(Layout.zorderValue(
-          Seq(col("key") % 256, col("ord") % 256), bits = 8).as("z"))
-        sink(z.groupBy(expr("z div 256").as("file_id"))
-          .agg(count(lit(1)).as("n")))
-      }
-      // Drawdown episode report (op 126): two same-key window passes
-      // + one (key, episode) agg — must stay linear per key.
-      timed("drawdown_details", m, nSeries) {
-        val priced = series.select(col("key"), col("ord"),
-          (lit(100.0) + col("ret") * 1000).as("p"))
-        sink(Drawdown.details(priced, "key", "ord", "ord", "p"))
-      }
-      // Weighted sampler (op 120): one per-stratum window, linear scan.
-      timed("corpus_sample_weighted", m, nDocs) {
-        sink(Corpus.weightedSampleN(
-          docs.withColumn("w", length(col("text")).cast("long")),
-          "doc_id", col("doc_id") % 16, col("w"), n = 100))
-      }
-      // C4 line filters (op 121): map-only HOF pipeline — must track
-      // rows with zero shuffle (probe text gets a '.\n' every 6 tokens
-      // so the line rules do real work).
-      timed("corpus_c4_filters", m, nDocs) {
-        val lined = docs.withColumn("text", regexp_replace(col("text"),
-          "(\\S+ \\S+ \\S+ \\S+ \\S+ \\S+) ", "$1.\n"))
-        sink(Corpus.c4LineFilters(lined, "doc_id", "text"))
-      }
-
-      // ---- r11-heavyweight probes (r12): these five run the REAL
-      // SparkEntry query functions against self-generated tables in
-      // the events/TPC-H shapes, so the measurement covers the exact
-      // composed plan the driver benches — not a re-derived sketch.
-      // sf0.1 events ≈ 100k rows, so m=50 probes a 5M-row series set.
-      if (Seq("stats_kruskal", "eod_hurst", "eod_portfolio_weighted",
-          "eod_risk_parity", "rel_tpch_q8").exists(wanted)) {
-        val nEv = 100000L * m
-        genEvents(spark, nEv).write.mode("overwrite")
-          .parquet(s"$root/$m/events.parquet")
-        genTpch(spark, s"$root/$m", 600000L * m)
-        val qDir = s"$root/$m"
-        // Exact midranks via the two-level distributed prefix sum; the
-        // claim is no single-partition window, wall-time ~linear.
-        timed("stats_kruskal", m, nEv) {
-          sink(SparkEntry.queries("stats_kruskal")(spark, qDir))
-        }
-        // R/S over 3 block sizes: one explode(×3) + keyed windows.
-        timed("eod_hurst", m, nEv) {
-          sink(SparkEntry.queries("eod_hurst")(spark, qDir))
-        }
-        // Weighted composite: rn cross-section window + LSE fold.
-        timed("eod_portfolio_weighted", m, nEv) {
-          sink(SparkEntry.queries("eod_portfolio_weighted")(spark, qDir))
-        }
-        // Fixed-point risk parity on the k×k quantized moment matrix:
-        // cost is the ONE pair-moment pass (k²·rows/k join rows); the
-        // 4 rounds run on one row of k×k arrays.
-        timed("eod_risk_parity", m, nEv) {
-          sink(SparkEntry.queries("eod_risk_parity")(spark, qDir))
-        }
-        // Deepest relational join tree; all dims broadcast, the ASIA
-        // semi-join shrinks orders before the big exchange.
-        timed("rel_tpch_q8", m, 600000L * m) {
-          sink(SparkEntry.queries("rel_tpch_q8")(spark, qDir))
-        }
-      }
-
-      // ---- r12-wave probes: the round-12 heavyweights (kNN-graph
-      // PageRank, directed containment, 2-factor OLS, PSI, ES
-      // backtest, and the two hardest TPC-H completions) run the REAL
-      // query functions against self-generated tables at 1×/10×/50×.
-      if (Seq("embed_pagerank", "dedup_containment", "eod_factor_ols",
-          "stats_psi", "eod_es_backtest", "rel_tpch_q20", "rel_tpch_q21")
+      // why: Theil–Sen's d(d−1)/2 slope grid grows with the DAY count,
+      // and every written table spans sf0.1's 30 days. This twin spaces
+      // events 60 s apart (~70·m days): op 379's all-pairs grid must not
+      // dominate until d is in the thousands, and the trailing-14-day
+      // windowed variant must track the day count linearly.
+      if (Seq("stats_theil_sen_wide", "stats_theil_sen_windowed_wide")
           .exists(wanted)) {
-        val nEv = 100000L * m
-        genEvents(spark, nEv).write.mode("overwrite")
-          .parquet(s"$root/$m/events.parquet")
-        genTpch(spark, s"$root/$m", 600000L * m)
-        genDocs(spark, nDocs).write.mode("overwrite")
-          .parquet(s"$root/$m/documents.parquet")
-        genEmbeddings(spark, nEmb, dim).write.mode("overwrite")
-          .parquet(s"$root/$m/embeddings.parquet")
-        val qDir = s"$root/$m"
-        // 3 in-plan iterations over the kNN edge list; per-iteration
-        // cost is one shuffle on dst — linear in edges (k·n). The
-        // graph build sizes its LSH planes off the corpus count via
-        // the graft.ann.planes session conf (the production knob —
-        // with the driver-scale default of 4 planes, 100k vectors mean
-        // ~6k-occupancy buckets and a ~quadratic pair join: measured
-        // 8.3→49 s across 1×→10×, executor death at 50×).
-        spark.conf.set("graft.ann.planes",
-          Similarity.planesForN(nEmb).toString)
-        timed("embed_pagerank", m, nEmb) {
-          sink(SparkEntry.queries("embed_pagerank")(spark, qDir))
-        }
-        spark.conf.unset("graft.ann.planes")
-        // Same single-postings-shuffle shape as ngram_jaccard; the
-        // asymmetric denominator adds no extra exchange.
-        timed("dedup_containment", m, nDocs) {
-          sink(SparkEntry.queries("dedup_containment")(spark, qDir))
-        }
-        // Closed 2×2 normal equations: ONE keyed agg over rn-aligned
-        // factors; no matrix library, no driver loop.
-        timed("eod_factor_ols", m, nEv) {
-          sink(SparkEntry.queries("eod_factor_ols")(spark, qDir))
-        }
-        // Fixed 1e-3 bins: two keyed aggs + a broadcast of the
-        // benchmark histogram (≤ 20k bins regardless of row count).
-        timed("stats_psi", m, nEv) {
-          sink(SparkEntry.queries("stats_psi")(spark, qDir))
-        }
-        // Half-split train/test with exact quantized tail sums; cost
-        // is the rn window + two keyed aggs.
-        timed("eod_es_backtest", m, nEv) {
-          sink(SparkEntry.queries("eod_es_backtest")(spark, qDir))
-        }
-        // One (part,supp) pair-agg exchange + broadcast semi.
-        timed("rel_tpch_q20", m, 600000L * m) {
-          sink(SparkEntry.queries("rel_tpch_q20")(spark, qDir))
-        }
-        // Three orderkey-keyed legs (base, semi, anti) off one
-        // localCheckpointed self-relation.
-        timed("rel_tpch_q21", m, 600000L * m) {
-          sink(SparkEntry.queries("rel_tpch_q21")(spark, qDir))
-        }
-      }
-
-      // ---- r12 third-wave probes: the events product-analytics family
-      // (funnel / lifecycle / SCD2 / attribution) runs the REAL query
-      // functions on self-generated events whose user count scales with
-      // the corpus (~100 events/user at every m — the realistic shape).
-      // Every op is one hash(user_id) exchange + keyed windows, so the
-      // claim is wall-time ~linear in rows.
-      if (Seq("events_funnel", "events_lifecycle", "events_scd2",
-          "events_attribution", "events_journeys", "events_dau_mau",
-          "events_cohort_ltv").exists(wanted)) {
-        val nEv = 100000L * m
-        genEvents(spark, nEv).write.mode("overwrite")
-          .parquet(s"$root/$m/events.parquet")
-        val qDir = s"$root/$m"
-        // k running-min windows over the one user exchange.
-        timed("events_funnel", m, nEv) {
-          sink(SparkEntry.queries("events_funnel")(spark, qDir))
-        }
-        // distinct (user, week) → lag/lead window → week-keyed counts.
-        timed("events_lifecycle", m, nEv) {
-          sink(SparkEntry.queries("events_lifecycle")(spark, qDir))
-        }
-        // two windows (run-compression lag + interval lead), full
-        // dimension output — the largest result of the family.
-        timed("events_scd2", m, nEv) {
-          sink(SparkEntry.queries("events_scd2")(spark, qDir))
-        }
-        // running first/last IGNORE NULLS windows + two small aggs.
-        timed("events_attribution", m, nEv) {
-          sink(SparkEntry.queries("events_attribution")(spark, qDir))
-        }
-        // two lags + keyed count + driver-sized top-10.
-        timed("events_journeys", m, nEv) {
-          sink(SparkEntry.queries("events_journeys")(spark, qDir))
-        }
-        // three (grain, user) distinct aggs + report joins.
-        timed("events_dau_mau", m, nEv) {
-          sink(SparkEntry.queries("events_dau_mau")(spark, qDir))
-        }
-        // user-keyed revenue join + driver-sized cumulative report.
-        timed("events_cohort_ltv", m, nEv) {
-          sink(SparkEntry.queries("events_cohort_ltv")(spark, qDir))
-        }
-      }
-
-      // ---- r12 fourth-wave probes: Hawkes kernel fold, Holt linear
-      // filter, triangle joins, blocked Friedman — the round's new
-      // window/join heavyweights as their REAL SparkEntry plans.
-      if (Seq("tick_hawkes", "eod_holt", "stats_friedman", "ann_triangles")
-          .exists(wanted)) {
-        val nEv = 100000L * m
-        genEvents(spark, nEv).write.mode("overwrite")
-          .parquet(s"$root/$m/events.parquet")
-        genEmbeddings(spark, nEmb, dim).write.mode("overwrite")
-          .parquet(s"$root/$m/embeddings.parquet")
-        val qDir = s"$root/$m"
-        // O(60n) trailing-array fold over one keyed window.
-        timed("tick_hawkes", m, nEv) {
-          sink(SparkEntry.queries("tick_hawkes")(spark, qDir))
-        }
-        // Same frame, two quantized dot products per row.
-        timed("eod_holt", m, nEv) {
-          sink(SparkEntry.queries("eod_holt")(spark, qDir))
-        }
-        // One hash(rn) exchange; millions of 5-row blocks.
-        timed("stats_friedman", m, nEv) {
-          sink(SparkEntry.queries("stats_friedman")(spark, qDir))
-        }
-        // Wedge + closing-edge joins on the n·k edge list; planes
-        // sized off the corpus (the op-317 knob).
-        spark.conf.set("graft.ann.planes",
-          Similarity.planesForN(nEmb).toString)
-        timed("ann_triangles", m, nEmb) {
-          sink(SparkEntry.queries("ann_triangles")(spark, qDir))
-        }
-        spark.conf.unset("graft.ann.planes")
-      }
-
-      // ---- r13 fifth-wave probes (r12 verdict #4): the post-§16
-      // additions as their REAL SparkEntry plans at 1×/10×/50× —
-      // Kalman linear filter, the Jonckheere probe grid (the one
-      // structure in the suite whose row count is k·|distinct q|, so
-      // a wide-value corpus is exactly what must be measured), MMR
-      // rerank, time-to-convert, the zone-map prune report, and the
-      // four newest streaming twins.
-      if (Seq("eod_kalman", "stats_jonckheere", "embed_mmr_rerank",
-          "events_conversion_lag", "layout_prune_report",
-          "streaming_hawkes", "streaming_journeys",
-          "streaming_attribution", "streaming_conversion_lag")
-          .exists(wanted)) {
-        val nEv = 100000L * m
-        genEvents(spark, nEv).write.mode("overwrite")
-          .parquet(s"$root/$m/events.parquet")
-        // layout ops read the driver documents schema (source/n_chars)
-        genDocs(spark, nDocs)
-          .withColumn("lang", lit("en"))
-          .withColumn("source", concat(lit("src"), col("doc_id") % 4))
-          .withColumn("n_chars", length(col("text")).cast("long"))
-          .write.mode("overwrite").parquet(s"$root/$m/documents.parquet")
-        genEmbeddings(spark, nEmb, dim).write.mode("overwrite")
-          .parquet(s"$root/$m/embeddings.parquet")
-        val qDir = s"$root/$m"
-        // Two QuantizedDot folds over the trailing-60 keyed frame —
-        // the op-343 linear-filter contract with Riccati weights.
-        timed("eod_kalman", m, nEv) {
-          sink(SparkEntry.queries("eod_kalman")(spark, qDir))
-        }
-        // Grid size logged FIRST: genEvents draws value from a
-        // continuous md5-uniform, so quantized returns are almost
-        // all distinct — the adversarial |q| ≈ n case. The grid is
-        // k·|q| rows, one per-group prefix window over it; the claim
-        // is wall-time linear in n with the small k factor, never
-        // the k·n² a naive pairwise U-statistic would cost.
-        timed("stats_jonckheere_grid_rows", m, nEv) {
-          val ev = spark.read.parquet(s"$qDir/events.parquet")
-          val w = Window.partitionBy(col("event_type"))
-            .orderBy(col("ts"), col("event_id"))
-          val nq = ev
-            .withColumn("ret", col("value") / lag(col("value"), 1).over(w) - 1)
-            .where(col("ret").isNotNull)
-            .select(floor(col("ret") * 1e6 + 0.5).cast("long").as("q"))
-            .distinct().count()
-          val k = ev.select(col("event_type")).distinct().count()
-          println(s"""{"op":"stats_jonckheere_grid","scale":$m,"distinct_q":$nq,"k":$k,"grid_rows":${k * nq}}""")
-        }
-        timed("stats_jonckheere", m, nEv) {
-          sink(SparkEntry.queries("stats_jonckheere")(spark, qDir))
-        }
-        // Brute candidate top-10 (5 queries × n cosines, linear) + 3
-        // unrolled greedy picks on the k²-pair driver-sized top set.
-        timed("embed_mmr_rerank", m, nEmb) {
-          sink(SparkEntry.queries("embed_mmr_rerank")(spark, qDir))
-        }
-        // Two user-keyed aggs + a driver-sized quantile report.
-        timed("events_conversion_lag", m, nEv) {
-          sink(SparkEntry.queries("events_conversion_lag")(spark, qDir))
-        }
-        // Manifest build (one source-keyed prefix window over the doc
-        // metadata) + a #shards-row zone-map report.
-        timed("layout_prune_report", m, nDocs) {
-          sink(SparkEntry.queries("layout_prune_report")(spark, qDir))
-        }
-        // The four newest streaming twins: constant per-key state
-        // (≤60 µs-longs; two strings; two strings + long; long +
-        // boolean) — wall-time here is dominated by the fixed replay
-        // harness, so the scaling signal is the EXEC slope staying
-        // linear while state stays user/symbol-sized.
-        for (q <- Seq("streaming_hawkes", "streaming_journeys",
-            "streaming_attribution", "streaming_conversion_lag")) {
-          timed(q, m, nEv) {
-            sink(SparkEntry.queries(q)(spark, qDir))
+        Tables.load(spark, dir, "events")
+          .withColumn("ts", timestamp_micros(lit(1704067200000000L) +
+            col("event_id") * 60000000L).cast("timestamp_ntz"))
+          .write.mode("overwrite").parquet(s"$dir/wide/events.parquet")
+        for (q <- Seq("stats_theil_sen", "stats_theil_sen_windowed"))
+          timed(s"${q}_wide", m, rows("events")) {
+            sink(SparkEntry.queries(q)(spark, s"$dir/wide"))
           }
-        }
       }
 
-      // ---- r13 sixth-wave probes: the round's OWN additions at
-      // 1×/10×/50× — perceptual-hash dedup (decode + band join),
-      // the no-pair-join isotropy identity, term burstiness,
-      // perplexity terciles, LSH range search, CUPED, Theil–Sen on a
-      // WIDE day grid (the d² pair expansion is its real scale knob;
-      // genEvents spans one day, so a 60 s-spaced twin drives the
-      // grid to thousands of days at 50×), and the streaks twin.
-      if (Seq("mm_phash_dedup", "embed_isotropy", "text_term_burstiness",
-          "corpus_ppl_buckets", "ann_range_search", "events_cuped",
-          "stats_theil_sen_wide", "streaming_streaks").exists(wanted)) {
-        val nEv = 100000L * m
-        genEvents(spark, nEv).write.mode("overwrite")
-          .parquet(s"$root/$m/events.parquet")
-        genDocs(spark, nDocs)
-          .withColumn("lang", lit("en"))
-          .withColumn("source", concat(lit("src"), col("doc_id") % 4))
-          .withColumn("n_chars", length(col("text")).cast("long"))
-          .write.mode("overwrite").parquet(s"$root/$m/documents.parquet")
-        genEmbeddings(spark, nEmb, dim).write.mode("overwrite")
-          .parquet(s"$root/$m/embeddings.parquet")
-        val qDir = s"$root/$m"
-        // Decode is the mapPartitions media kernel; pairing is the
-        // band join — both linear in docs (planted dups every 25th).
-        timed("mm_phash_dedup", m, nDocs) {
-          sink(SparkEntry.queries("mm_phash_dedup")(spark, qDir))
-        }
-        // n·dim explode + dim-keyed agg — NO pair join at any n.
-        timed("embed_isotropy", m, nEmb) {
-          sink(SparkEntry.queries("embed_isotropy")(spark, qDir))
-        }
-        timed("text_term_burstiness", m, nDocs) {
-          sink(SparkEntry.queries("text_term_burstiness")(spark, qDir))
-        }
-        timed("corpus_ppl_buckets", m, nDocs) {
-          sink(SparkEntry.queries("corpus_ppl_buckets")(spark, qDir))
-        }
-        timed("ann_range_search", m, nEmb) {
-          sink(SparkEntry.queries("ann_range_search")(spark, qDir))
-        }
-        timed("events_cuped", m, nEv) {
-          sink(SparkEntry.queries("events_cuped")(spark, qDir))
-        }
-        timed("streaming_streaks", m, nEv) {
-          sink(SparkEntry.queries("streaming_streaks")(spark, qDir))
-        }
-        // Wide-day twin: 60 s event spacing ⇒ ~70·m days, so the
-        // per-type d(d−1)/2 slope grid grows quadratically in m while
-        // the event scan stays linear — the probe verifies the grid
-        // join (driver-sized at driver data) doesn't dominate until
-        // d is in the thousands, and the claim is in rows: grid pairs
-        // are logged, the scan is the wall-clock.
-        timed("stats_theil_sen_wide", m, nEv) {
-          val wide = genEvents(spark, nEv)
-            .withColumn("ts", timestamp_micros(
-              lit(1712928600000000L) + col("event_id") * 60000000L))
-          wide.write.mode("overwrite").parquet(s"$root/$m/wide/events.parquet")
-          sink(SparkEntry.queries("stats_theil_sen")(spark, s"$root/$m/wide"))
-        }
-      }
-
-      // ---- r14 seventh-wave probes (r13 verdict #3): the wave-2-4
-      // ops not yet probed — the Markov journey windows, cluster
-      // purity's contingency agg, the changepoint prefix windows, the
-      // AD pooled-grid growth, Mood's grand-median counts, the vol-
-      // targeting window chain, the streaming A/B gate's keyed state,
-      // lift-by-segment's two user-keyed aggs — plus the new windowed
-      // Theil–Sen on the SAME wide-day twin that exposed op 379's
-      // quadratic grid (the bounded window must stay linear there).
-      if (Seq("events_markov_attribution", "embed_cluster_purity",
-          "stats_changepoint", "stats_ad_2sample", "stats_mood_median",
-          "eod_vol_targeting", "streaming_ab_gate",
-          "events_lift_by_segment", "stats_theil_sen_windowed_wide")
-          .exists(wanted)) {
-        val nEv = 100000L * m
-        val qDir = s"$root/$m/w7"
-        // the driver events schema incl. props (lift_by_segment's
-        // segment source: ~uniform 0-99 digits → 4 quartile buckets);
-        // embeddings carry the 10-class label purity grades against.
-        genEvents(spark, nEv)
-          .withColumn("props", concat(lit("seg="),
-            (u(col("event_id"), "pr") * 100).cast("long")))
-          .write.mode("overwrite").parquet(s"$qDir/events.parquet")
-        genEmbeddings(spark, nEmb, dim)
-          .withColumn("label", (col("vec_id") % 10).cast("int"))
-          .write.mode("overwrite").parquet(s"$qDir/embeddings.parquet")
-        for (q <- Seq("events_markov_attribution", "stats_changepoint",
-            "stats_ad_2sample", "stats_mood_median", "eod_vol_targeting",
-            "events_lift_by_segment", "streaming_ab_gate")) {
-          timed(q, m, nEv) {
-            sink(SparkEntry.queries(q)(spark, qDir))
-          }
-        }
-        timed("embed_cluster_purity", m, nEmb) {
-          sink(SparkEntry.queries("embed_cluster_purity")(spark, qDir))
-        }
-        // Wide-day twin (60 s spacing ⇒ ~70·m days): op 379's grid
-        // grew quadratically here (157.6 s at 50×); the trailing-14-
-        // day window bounds pairs at 91/window, so this must track
-        // the day count LINEARLY.
-        timed("stats_theil_sen_windowed_wide", m, nEv) {
-          genEvents(spark, nEv)
-            .withColumn("ts", timestamp_micros(
-              lit(1712928600000000L) + col("event_id") * 60000000L))
-            .write.mode("overwrite").parquet(s"$root/$m/w7wide/events.parquet")
-          sink(SparkEntry.queries("stats_theil_sen_windowed")(
-            spark, s"$root/$m/w7wide"))
-        }
-      }
-
-      // ---- r15 eighth-wave probes (r14 verdict #5, SCALE §19): the
-      // five biggest localCheckpoint-pinned queries at 1×/10×/50×. The
-      // claim being proven: a pin's materialization cost tracks the
-      // pinned AGGREGATE (bounded or sublinear by construction), never
-      // the corpus — so query wall-time must grow at most linearly
-      // (the producer chain), and a `<q>_pin_rows` line, printed with
-      // its `<q>_pin` probe, records the pinned relation's row count
-      // per scale, re-derived from the data (flat/sublinear is the pass
-      // condition). embed_cluster_purity (the k×labels contingency
-      // table) and embed_power_iter (one row per vector) print none:
-      // their pin sizes follow from the query, not the data. At cluster
-      // scale each pin site's scaladoc documents the localCheckpoint →
-      // checkpoint swap.
-      if (Seq("embed_cluster_purity_pin", "stats_dunn_pin",
-          "text_textrank_pin", "dedup_eval_containment_pin",
-          "embed_power_iter_pin").exists(wanted)) {
-        val nEv = 100000L * m
-        val qDir = s"$root/$m/w8"
-        genEvents(spark, nEv)
-          .write.mode("overwrite").parquet(s"$qDir/events.parquet")
-        genDocs(spark, nDocs)
-          .withColumn("source", concat(lit("s"), col("doc_id") % 7))
-          .write.mode("overwrite").parquet(s"$qDir/documents.parquet")
-        genEmbeddings(spark, nEmb, dim)
-          .withColumn("label", (col("vec_id") % 10).cast("int"))
-          .write.mode("overwrite").parquet(s"$qDir/embeddings.parquet")
-        for ((q, tag, rows) <- Seq(
-            ("embed_cluster_purity", "embed_cluster_purity_pin", nEmb),
-            ("stats_dunn", "stats_dunn_pin", nEv),
-            ("text_textrank", "text_textrank_pin", nDocs),
-            ("dedup_eval_containment", "dedup_eval_containment_pin", nDocs),
-            ("embed_power_iter", "embed_power_iter_pin", nEmb)))
-          timed(tag, m, rows) { sink(SparkEntry.queries(q)(spark, qDir)) }
-        // Pinned-relation sizes, re-derived with the same public
-        // expressions (outside any timing): what actually gets
-        // materialized by each pin.
-        def pinRows(q: String, n: => Long): Unit = if (wanted(s"${q}_pin"))
-          try println(s"""{"op":"${q}_pin_rows","scale":$m,"pin_rows":$n}""")
-          catch { case scala.util.control.NonFatal(e) =>
-            println(s"""{"op":"${q}_pin_rows","scale":$m,"err":"${e.toString.take(120)}"}""") }
-        val evQ = spark.read.parquet(s"$qDir/events.parquet")
-        val docsQ = spark.read.parquet(s"$qDir/documents.parquet")
-        // stats_dunn pins (event_type, quantized-return) counts — the
-        // distinct quantized-return grid, not the row count, bounds it.
-        pinRows("stats_dunn", {
-          val wTp = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-          evQ.withColumn("ret",
-              graft.functions.Eod.toReturns(col("value"), wTp))
-            .where(col("ret").isNotNull)
-            .select(col("event_type"),
-              floor(col("ret") * 1e6 + 0.5).cast("long").as("q"))
-            .distinct().count()
-        })
-        // text_textrank pins bigram counts — vocabulary (Heaps-law
-        // sublinear; this generator draws from a 5000-token pool, so
-        // the bigram space saturates).
-        pinRows("text_textrank", {
-          val toks = graft.functions.Text.tokens(col("text"))
-          docsQ.select(explode(zip_with(
-              slice(toks, lit(1), size(toks) - 1),
-              slice(toks, lit(2), size(toks) - 1),
-              (a, b) => struct(a.as("x"), b.as("y")))).as("p"))
-            .select(col("p.x"), col("p.y")).distinct().count()
-        })
-        // dedup_eval_containment pins the truth/candidate PAIR sets —
-        // the planted-dup fraction of the corpus (n/10 near + n/25
-        // exact), linear in dups but ~100× below the shingle joins
-        // that produce them.
-        pinRows("dedup_eval_containment",
-          graft.operators.Dedup.ngramJaccardPairs(
-            docsQ.select(col("doc_id"), col("text")),
-            "doc_id", "text", threshold = 0.5).count())
-      }
-
-      // Skewed shuffle join + agg under AQE; broadcast disabled so the
-      // skew-join path (not a broadcast) is what's being measured.
-      if (wanted("skew_join_agg")) {
-      val dimTbl = spark.range(1001)
-        .select(when(col("id") === 1000, lit("hot"))
-          .otherwise(concat(lit("k"), col("id"))).as("key"),
-          col("id").as("attr"))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      try {
-        val joined = fact.join(dimTbl, "key")
-          .groupBy(col("key"))
+      // why: AQE's skew-join split needs one hot key holding most of a
+      // shuffle side; no testdata table has one. Broadcast is disabled
+      // so the skew-join path (not a broadcast) is what's measured.
+      if (Seq("skew_join_agg", "skew_join_agg_forced").exists(wanted)) {
+        val nFact = 600000L * m
+        genSkewFact(spark, nFact).write.mode("overwrite")
+          .parquet(s"$dir/fact")
+        val fact = spark.read.parquet(s"$dir/fact")
+        val dimTbl = spark.range(1001)
+          .select(when(col("id") === 1000, lit("hot"))
+            .otherwise(concat(lit("k"), col("id"))).as("key"),
+            col("id").as("attr"))
+        def joined = fact.join(dimTbl, "key").groupBy(col("key"))
           .agg(sum(col("v")).as("sum_v"), count(lit(1)).as("n"))
-        timed("skew_join_agg", m, nFact) {
-          val out = joined.collect()
-          require(out.nonEmpty)
-        }
-        val plan = joined.queryExecution.executedPlan.toString()
-        println(s"""{"op":"skew_join_agg_plan","scale":$m,"skew_split":${plan.contains("skew=true")}}""")
-        // skew_split is false above for TWO stacked reasons, both worth
-        // recording: (1) at probe scale the hot partition's compressed
-        // shuffle bytes sit under AQE's 256 MB default threshold — the
-        // production condition is bytes > threshold, so scale the
-        // threshold down since the data can't grow to 100 TB locally;
-        // (2) the join feeds an agg on the SAME key, so AQE's cost rule
-        // skips the split (it would break the join's output partitioning
-        // and cost an extra shuffle) unless forceOptimizeSkewedJoin opts
-        // into that trade. At 100 TB you flip that flag exactly when the
-        // skewed build dominates the extra shuffle — or salt the agg key
-        // instead (graft.operators.Skew).
-        spark.conf.set(
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-        spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
+        def skewSplit(op: String, df: DataFrame): Unit =
+          println(s"""{"op":"$op","scale":$m,"skew_split":${df.queryExecution.executedPlan.toString.contains("skew=true")}}""")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         try {
-          val joined2 = fact.join(dimTbl, "key")
-            .groupBy(col("key"))
-            .agg(sum(col("v")).as("sum_v"), count(lit(1)).as("n"))
-          timed("skew_join_agg_forced", m, nFact) { joined2.collect() }
-          val plan2 = joined2.queryExecution.executedPlan.toString()
-          println(s"""{"op":"skew_join_agg_plan_scaled_threshold","scale":$m,"skew_split":${plan2.contains("skew=true")}}""")
-        } finally {
-          spark.conf.unset(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-          spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-          spark.conf.unset("spark.sql.adaptive.forceOptimizeSkewedJoin")
-        }
-      } finally {
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
+          val j1 = joined
+          timed("skew_join_agg", m, nFact) { require(j1.collect().nonEmpty) }
+          skewSplit("skew_join_agg_plan", j1)
+          // skew_split is false above for TWO stacked reasons, both worth
+          // recording: (1) at probe scale the hot partition's compressed
+          // shuffle bytes sit under AQE's 256 MB default threshold — the
+          // production condition is bytes > threshold, so scale the
+          // threshold down since the data can't grow to 100 TB locally;
+          // (2) the join feeds an agg on the SAME key, so AQE's cost rule
+          // skips the split (it would break the join's output partitioning
+          // and cost an extra shuffle) unless forceOptimizeSkewedJoin opts
+          // into that trade. At 100 TB you flip that flag exactly when the
+          // skewed build dominates the extra shuffle — or salt the agg key
+          // instead (graft.operators.Skew).
+          spark.conf.set(
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
+          spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
+          spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
+          val j2 = joined
+          timed("skew_join_agg_forced", m, nFact) { j2.collect() }
+          skewSplit("skew_join_agg_plan_scaled_threshold", j2)
+        } finally Seq("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+            "spark.sql.adaptive.forceOptimizeSkewedJoin")
+          .foreach(spark.conf.unset)
       }
 
-      // Streaming MinHash-LSH dedup state growth (op 102): replay the
-      // generated docs as a 4-file AvailableNow stream (1 ms of event
-      // time per doc id, maxFilesPerTrigger=1 → 4 micro-batches so the
-      // watermark actually advances between batches and event-time
-      // timeouts FIRE). Two retentions: effectively-infinite (state =
-      // every band bucket ever touched — the round-7 NoTimeout shape)
-      // vs a 2-second horizon (idle buckets expire; final state is the
-      // recent-horizon working set only). The pair of state_rows lines
-      // is the evidence that the TTL bounds state on an unbounded
-      // stream instead of growing with corpus size.
-      if (wanted("streaming_minhash_state")) {
-        for (retention <- Seq("3650 days", "2 seconds")) {
-          try {
+      // why: the registry's streaming replays read each table as ONE
+      // micro-batch, so no event-time timeout ever fires. This replays
+      // the docs as a 4-file AvailableNow stream (maxFilesPerTrigger=1 →
+      // 4 micro-batches, the watermark advances between them) at two
+      // retentions: effectively infinite (state = every band bucket ever
+      // touched) vs a 2-second horizon (idle buckets expire). The pair of
+      // state_rows lines is the evidence that the TTL bounds state on an
+      // unbounded stream instead of growing with corpus size.
+      val docsPath = s"$dir/documents.parquet"
+      val nDocs = rows("documents")
+      if (wanted("streaming_minhash_state"))
+        for (retention <- Seq("3650 days", "2 seconds"))
+          attempt("streaming_minhash_state", m, nDocs) {
             val (sec, stateRows, flagged) =
-              minhashStreamProbe(spark, s"$root/$m/docs", nDocs, retention)
-            println(s"""{"op":"streaming_minhash_state","scale":$m,"rows":$nDocs,"retention":"$retention","sec":$sec,"state_rows":$stateRows,"flagged":$flagged}""")
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              val msg = e.toString.replaceAll("[\"\\\\\n\r\t]", " ").take(160)
-              println(s"""{"op":"streaming_minhash_state","scale":$m,"rows":$nDocs,"retention":"$retention","err":"$msg"}""")
+              minhashStreamProbe(spark, docsPath, nDocs, retention)
+            s""","retention":"$retention","sec":$sec,"state_rows":$stateRows,"flagged":$flagged"""
           }
-        }
-      }
 
-      // Streaming space-saving top-k state (op 145): the generated
+      // why: space-saving state must stay ≤ buckets·capacity while the
+      // token stream grows; the registry's heavy-hitter oracle runs where
+      // the vocabulary fits, so only this probe sees evictions. The
       // corpus has ~5000 distinct tokens, far beyond 16 buckets ×
-      // capacity 16 = 256 counters — evictions run constantly, and
-      // state_rows must stay ≤ 256 at EVERY scale while the token
-      // stream grows 50×. The constant-state evidence for the heavy-
-      // hitter sketch (its batch-exactness regime is separately pinned
-      // by the oracle at test SF, where the vocabulary fits).
-      if (wanted("spacesaving_state_rows")) {
-        try {
-          val (sec, stateRows) =
-            spaceSavingProbe(spark, s"$root/$m/docs", capacity = 16)
-          println(s"""{"op":"spacesaving_state_rows","scale":$m,"rows":$nDocs,"sec":$sec,"state_rows":$stateRows}""")
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            val msg = e.toString.replaceAll("[\"\\\\\n\r\t]", " ").take(160)
-            println(s"""{"op":"spacesaving_state_rows","scale":$m,"rows":$nDocs,"err":"$msg"}""")
+      // capacity 16 = 256 counters.
+      if (wanted("spacesaving_state_rows"))
+        attempt("spacesaving_state_rows", m, nDocs) {
+          val (sec, stateRows) = spaceSavingProbe(spark, docsPath, capacity = 16)
+          s""","sec":$sec,"state_rows":$stateRows"""
         }
-      }
+      spark.conf.unset("graft.ann.planes")
     }
     spark.stop()
   }
@@ -1237,7 +505,7 @@ object Scale {
   def minhashStreamProbe(spark: SparkSession, docsPath: String,
                          nDocs: Long, retention: String): (Double, Long, Long) = {
     import java.nio.file.{Files, Paths}
-    val docs = spark.read.parquet(docsPath)
+    val docs = spark.read.parquet(docsPath).select(col("doc_id"), col("text"))
     val stage = Files.createTempDirectory("graft-smh-in")
     val ckpt = Files.createTempDirectory("graft-smh-ck").toString
     val parts = 4

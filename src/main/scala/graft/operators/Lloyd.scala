@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
 
 import graft.expressions.DotProduct
@@ -20,22 +21,37 @@ import graft.functions.SMAX
   * −0.0 equals 0.0. Assignment is map-only: the points cross the one
   * broadcast row, and nothing shuffles by point.
   *
+  * The argmin is typed non-null: every group keeps at least one
+  * centroid (k ≥ 1 seeds, and a group's points always land on one of
+  * its centroids), and null ids never seed. Without that, a later
+  * equi-join on the assigned cid makes Catalyst infer
+  * `isnotnull(cid)` and push it into the cross join's condition,
+  * which evaluates the whole argmin a second time per point.
+  *
   * Scale rule: the centroid row is k·dim doubles copied to every task,
   * and each point scores every centroid of its group, so k is bounded
   * by [[graft.functions.SMAX]] and checked before any job runs.
   */
 private[operators] object Lloyd {
 
-  /** The `k` lowest-id rows of `v`: the seed rule of every centroid set. */
+  /** The `k` lowest non-null ids of `v`: the seed rule of every
+    * centroid set.
+    */
   def seeds(v: DataFrame, k: Int): DataFrame = {
     require(k >= 1 && k <= SMAX,
       s"centroid count $k is outside 1..SMAX = $SMAX")
-    v.orderBy(col("id")).limit(k)
+    v.where(col("id").isNotNull).orderBy(col("id")).limit(k)
   }
 
-  /** The one-row centroid table of (g, cid, cv) rows. */
+  private def knownNotNull(c: Column): Column =
+    GraftSqlBridge.column(KnownNotNull(GraftSqlBridge.expression(c)))
+
+  /** The one-row centroid table of (g, cid, cv) rows; cid is never null
+    * (a seed id or an assigned cid).
+    */
   def centroidRow(cent: DataFrame): DataFrame =
-    cent.agg(array_sort(collect_list(struct(col("g"), col("cid"), col("cv"),
+    cent.agg(array_sort(collect_list(struct(col("g"),
+      knownNotNull(col("cid")).as("cid"), col("cv"),
       DotProduct(col("cv"), col("cv")).as("cn2")))).as("cs"))
 
   /** struct(_s, cid) for every centroid of group `g`, against point `x`;
@@ -51,7 +67,8 @@ private[operators] object Lloyd {
     */
   def assign(pts: DataFrame, cs: DataFrame): DataFrame =
     pts.crossJoin(broadcast(cs))
-      .select(col("*"), array_min(scores(col("x"), col("g"))).as("_m"))
+      .select(col("*"),
+        knownNotNull(array_min(scores(col("x"), col("g")))).as("_m"))
       .drop("cs")
 
   /** The centroid row after `iters` Lloyd updates of `seeds` (g, cid, cv)

@@ -2,7 +2,14 @@
 """Local pre-check mimicking the driver's correctness gate:
 run Verify's oracle_sql.json in DuckDB over the same sf dir and compare
 each result to the Spark parquet dump (columns sorted by name, rows
-sorted, values hashed)."""
+sorted, values hashed).
+
+    check_oracle.py <sf_dir> <verify_out> [q1,q2,...]
+
+With the optional comma list (the same list given to Verify), only the
+named queries are checked; a named query with no Spark output still
+counts as bad. A table may be one parquet file or a directory of part
+files (as `graft.Scale.writeTables` writes them)."""
 import sys, json, glob, os
 import duckdb
 import pandas as pd
@@ -14,13 +21,20 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), kind="mergesort", na_position="first")
     return df.reset_index(drop=True)
 
-def main(sf_dir: str, out_dir: str) -> None:
+def main(sf_dir: str, out_dir: str, only=None) -> None:
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
+        if os.path.isdir(p):
+            p += "/*.parquet"
+        if glob.glob(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if only is not None:
+        unknown = sorted(only - oracle.keys())
+        if unknown:
+            sys.exit(f"no oracle for: {', '.join(unknown)}")
+        oracle = {k: v for k, v in oracle.items() if k in only}
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         spark_files = glob.glob(f"{out_dir}/{name}/*.parquet")
@@ -77,4 +91,5 @@ def main(sf_dir: str, out_dir: str) -> None:
     sys.exit(1 if n_bad else 0)
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    main(sys.argv[1], sys.argv[2],
+         set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None)
