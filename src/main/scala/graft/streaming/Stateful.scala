@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -46,6 +48,34 @@ object Stateful {
   private def tsMicros(ts: Timestamp): Long =
     Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000
 
+  /** The per-key ordered fold most operators here share: group by
+    * `key`; per key and micro-batch, read the state (or `init`), sort
+    * the batch's rows by `order`, step each row to (new state, optional
+    * output), then store the state. Append mode and no timeout — the
+    * state is a constant-size record per key. Cross-batch continuity
+    * rides on the stored state; in-batch order on `order`, which each
+    * operator ends with a tiebreak so equal timestamps still sort
+    * deterministically.
+    */
+  private def orderedFold[I: ClassTag, K: Encoder, S: Encoder, O: Encoder,
+                          B: Ordering](in: Dataset[I])(
+      key: I => K, init: S, order: I => B)(
+      step: (K, S, I) => (S, Option[O])): Dataset[O] =
+    in.groupByKey(key)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (k, it, state) =>
+          var st = state.getOption.getOrElse(init)
+          val out = scala.collection.mutable.ArrayBuffer[O]()
+          it.toArray.sortBy(order).foreach { r =>
+            val (next, o) = step(k, st, r)
+            st = next
+            out ++= o
+          }
+          state.update(st)
+          out.iterator
+      }
+
   // ------------------------------------------------------ running drawdown
 
   case class Tick(symbol: String, ts: Timestamp, price: Double)
@@ -60,19 +90,12 @@ object Stateful {
     */
   def runningDrawdown(ticks: Dataset[Tick]): Dataset[DrawdownRow] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[HighWater, DrawdownRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (symbol, it, state) =>
-          var hw = state.getOption.map(_.max).getOrElse(Double.NegativeInfinity)
-          val out = it.toArray.sortBy(t => (tsKey(t.ts), t.price)).map { t =>
-            hw = math.max(hw, t.price)
-            DrawdownRow(symbol, t.ts, t.price, hw,
-              if (hw != 0.0) t.price / hw - 1 else Double.NaN)
-          }
-          state.update(HighWater(hw))
-          out.iterator
-      }
+    orderedFold(ticks)(_.symbol, HighWater(Double.NegativeInfinity),
+        t => (tsKey(t.ts), t.price)) { (symbol, st, t) =>
+      val hw = math.max(st.max, t.price)
+      (HighWater(hw), Some(DrawdownRow(symbol, t.ts, t.price, hw,
+        if (hw != 0.0) t.price / hw - 1 else Double.NaN)))
+    }
   }
 
   // ------------------------------------------------- streaming as-of quote
@@ -388,20 +411,11 @@ object Stateful {
   private def thresholdBarStream(ticks: Dataset[VolTick], threshold: Long,
                                  units: VolTick => Long): Dataset[BarTick] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[BarAcc, BarTick](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym, it, state) =>
-          var acc = state.getOption.map(_.units).getOrElse(0L)
-          val out = it.toArray.sortBy(t => (tsKey(t.ts), t.price, t.volume))
-            .map { t =>
-            val bar = acc / threshold
-            acc += units(t)
-            BarTick(sym, t.ts, t.price, t.volume, bar)
-          }
-          state.update(BarAcc(acc))
-          out.iterator
-      }
+    orderedFold(ticks)(_.symbol, BarAcc(0L),
+        t => (tsKey(t.ts), t.price, t.volume)) { (sym, acc, t) =>
+      (BarAcc(acc.units + units(t)),
+        Some(BarTick(sym, t.ts, t.price, t.volume, acc.units / threshold)))
+    }
   }
 
   /** Streaming volume bars (op 136): a bar closes each `threshold`
@@ -439,23 +453,14 @@ object Stateful {
     */
   def vpinStream(ticks: Dataset[VolTick], threshold: Long): Dataset[VpinOut] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[VpinState, VpinOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym, it, state) =>
-          var st = state.getOption.getOrElse(VpinState(0L, Double.NaN))
-          val out = it.toArray.sortBy(t => (tsKey(t.ts), t.price, t.volume))
-            .map { t =>
-              val dirn =
-                if (st.lastPrice.isNaN || t.price == st.lastPrice) 0
-                else if (t.price > st.lastPrice) 1 else -1
-              val bar = st.units / threshold
-              st = VpinState(st.units + math.round(t.volume), t.price)
-              VpinOut(sym, t.ts, t.volume, dirn, bar)
-            }
-          state.update(st)
-          out.iterator
-      }
+    orderedFold(ticks)(_.symbol, VpinState(0L, Double.NaN),
+        t => (tsKey(t.ts), t.price, t.volume)) { (sym, st, t) =>
+      val dirn =
+        if (st.lastPrice.isNaN || t.price == st.lastPrice) 0
+        else if (t.price > st.lastPrice) 1 else -1
+      (VpinState(st.units + math.round(t.volume), t.price),
+        Some(VpinOut(sym, t.ts, t.volume, dirn, st.units / threshold)))
+    }
   }
 
   // ------------------------------------------------- streaming KMV sketch
@@ -496,7 +501,6 @@ object Stateful {
 
   // ------------------------------------------ streaming running risk
 
-  case class RiskTick(symbol: String, ts: Timestamp, price: Double)
   case class RiskState(lastPrice: Double, n: Long, sumQ: Long, sumSqQ: Long)
   case class RiskRow(symbol: String, ts: Timestamp, retQ: Long, n: Long,
                      sumQ: Long, sumSqQ: Long)
@@ -527,29 +531,18 @@ object Stateful {
     * (the bars/KMV constant-state argument); in-batch rows sort by
     * event time per symbol, cross-batch continuity rides on lastPrice.
     */
-  def runningRiskStream(ticks: Dataset[RiskTick]): Dataset[RiskRow] = {
+  def runningRiskStream(ticks: Dataset[Tick]): Dataset[RiskRow] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[RiskState, RiskRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym, it, state) =>
-          var st = state.getOption.getOrElse(
-            RiskState(Double.NaN, 0L, 0L, 0L))
-          val out = it.toArray.sortBy(t => (tsKey(t.ts), t.price)).flatMap { t =>
-            if (!st.lastPrice.isNaN) {
-              val q = math.floor(math.log(t.price / st.lastPrice) * 1e5 + 0.5)
-                .toLong
-              st = RiskState(t.price, st.n + 1, st.sumQ + q,
-                st.sumSqQ + q * q)
-              Some(RiskRow(sym, t.ts, q, st.n, st.sumQ, st.sumSqQ))
-            } else {
-              st = st.copy(lastPrice = t.price)
-              None
-            }
-          }
-          state.update(st)
-          out.iterator
+    orderedFold(ticks)(_.symbol, RiskState(Double.NaN, 0L, 0L, 0L),
+        t => (tsKey(t.ts), t.price)) { (sym, st, t) =>
+      if (st.lastPrice.isNaN) (st.copy(lastPrice = t.price), None)
+      else {
+        val q = math.floor(math.log(t.price / st.lastPrice) * 1e5 + 0.5)
+          .toLong
+        val nx = RiskState(t.price, st.n + 1, st.sumQ + q, st.sumSqQ + q * q)
+        (nx, Some(RiskRow(sym, t.ts, q, nx.n, nx.sumQ, nx.sumSqQ)))
       }
+    }
   }
 
   // --------------------------------------------- streaming A/B gate
@@ -567,18 +560,9 @@ object Stateful {
     */
   def abGateStream(events: Dataset[GateEvent]): Dataset[GateRow] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.variant)
-      .flatMapGroupsWithState[Long, GateRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (variant, it, state) =>
-          var n = state.getOption.getOrElse(0L)
-          val out = it.toArray.sortBy(e => (tsKey(e.ts), e.eventId)).map { e =>
-            n += 1
-            GateRow(variant, e.ts, n)
-          }
-          state.update(n)
-          out.iterator
-      }
+    orderedFold(events)(_.variant, 0L, e => (tsKey(e.ts), e.eventId)) {
+      (variant, n, e) => (n + 1, Some(GateRow(variant, e.ts, n + 1)))
+    }
   }
 
   // ----------------------------------------- streaming win/loss streaks
@@ -602,32 +586,22 @@ object Stateful {
     * standard island prefix windows. State is one double + one int +
     * three longs per symbol — constant, no watermark needed.
     */
-  def streaksStream(ticks: Dataset[RiskTick]): Dataset[StreakRow] = {
+  def streaksStream(ticks: Dataset[Tick]): Dataset[StreakRow] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[StreakState, StreakRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym, it, state) =>
-          var st = state.getOption.getOrElse(
-            StreakState(Double.NaN, 0, 0L, 0L, 0L))
-          val out = it.toArray.sortBy(t => (tsKey(t.ts), t.price)).flatMap { t =>
-            if (!st.lastPrice.isNaN) {
-              val q = math.floor((t.price / st.lastPrice - 1.0) * 1e6 + 0.5)
-                .toLong
-              val sgn = java.lang.Long.signum(q)
-              val len = if (sgn == st.sgn) st.len + 1 else 1L
-              st = StreakState(t.price, sgn, len,
-                if (sgn == 1) math.max(st.maxWin, len) else st.maxWin,
-                if (sgn == -1) math.max(st.maxLoss, len) else st.maxLoss)
-              Some(StreakRow(sym, t.ts, sgn, len, st.maxWin, st.maxLoss))
-            } else {
-              st = st.copy(lastPrice = t.price)
-              None
-            }
-          }
-          state.update(st)
-          out.iterator
+    orderedFold(ticks)(_.symbol, StreakState(Double.NaN, 0, 0L, 0L, 0L),
+        t => (tsKey(t.ts), t.price)) { (sym, st, t) =>
+      if (st.lastPrice.isNaN) (st.copy(lastPrice = t.price), None)
+      else {
+        val q = math.floor((t.price / st.lastPrice - 1.0) * 1e6 + 0.5)
+          .toLong
+        val sgn = java.lang.Long.signum(q)
+        val len = if (sgn == st.sgn) st.len + 1 else 1L
+        val nx = StreakState(t.price, sgn, len,
+          if (sgn == 1) math.max(st.maxWin, len) else st.maxWin,
+          if (sgn == -1) math.max(st.maxLoss, len) else st.maxLoss)
+        (nx, Some(StreakRow(sym, t.ts, sgn, len, nx.maxWin, nx.maxLoss)))
       }
+    }
   }
 
   // ------------------------------------------- streaming CUSUM drift
@@ -653,29 +627,19 @@ object Stateful {
     * State is one double + three longs per symbol — constant, no
     * watermark needed (the op-146 argument).
     */
-  def cusumStream(ticks: Dataset[RiskTick]): Dataset[CusumRow] = {
+  def cusumStream(ticks: Dataset[Tick]): Dataset[CusumRow] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[CusumState, CusumRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym, it, state) =>
-          var st = state.getOption.getOrElse(
-            CusumState(Double.NaN, 0L, 0L, 0L))
-          val out = it.toArray.sortBy(t => (tsKey(t.ts), t.price)).flatMap { t =>
-            if (!st.lastPrice.isNaN) {
-              val q = math.floor((t.price / st.lastPrice - 1.0) * 1e6 + 0.5)
-                .toLong
-              st = CusumState(t.price, st.n + 1,
-                math.max(0L, st.sPos + q), math.max(0L, st.sNeg - q))
-              Some(CusumRow(sym, t.ts, q, st.n, st.sPos, st.sNeg))
-            } else {
-              st = st.copy(lastPrice = t.price)
-              None
-            }
-          }
-          state.update(st)
-          out.iterator
+    orderedFold(ticks)(_.symbol, CusumState(Double.NaN, 0L, 0L, 0L),
+        t => (tsKey(t.ts), t.price)) { (sym, st, t) =>
+      if (st.lastPrice.isNaN) (st.copy(lastPrice = t.price), None)
+      else {
+        val q = math.floor((t.price / st.lastPrice - 1.0) * 1e6 + 0.5)
+          .toLong
+        val nx = CusumState(t.price, st.n + 1,
+          math.max(0L, st.sPos + q), math.max(0L, st.sNeg - q))
+        (nx, Some(CusumRow(sym, t.ts, q, nx.n, nx.sPos, nx.sNeg)))
       }
+    }
   }
 
   // -------------------------------------- streaming bipower variation
@@ -701,32 +665,22 @@ object Stateful {
     * detector). Range: |lr| ≤ ~8 on this corpus → each term ≤ ~6e13,
     * Σ far inside int64 for ~1e5 ticks per symbol per SF.
     */
-  def bipowerStream(ticks: Dataset[RiskTick]): Dataset[BpRow] = {
+  def bipowerStream(ticks: Dataset[Tick]): Dataset[BpRow] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[BpState, BpRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym, it, state) =>
-          var st = state.getOption.getOrElse(
-            BpState(Double.NaN, Double.NaN, 0L, 0L, 0L))
-          val out = it.toArray.sortBy(t => (tsKey(t.ts), t.price)).flatMap { t =>
-            if (!st.lastPrice.isNaN) {
-              val lr = math.log(t.price / st.lastPrice)
-              val qr = math.floor(lr * lr * 1e12 + 0.5).toLong
-              val qb = if (!st.lastAbsLr.isNaN)
-                math.floor(math.abs(lr) * st.lastAbsLr * 1e12 + 0.5).toLong
-              else 0L
-              st = BpState(t.price, math.abs(lr), st.n + 1,
-                st.sumRvQ + qr, st.sumBvQ + qb)
-              Some(BpRow(sym, t.ts, st.n, st.sumRvQ, st.sumBvQ))
-            } else {
-              st = st.copy(lastPrice = t.price)
-              None
-            }
-          }
-          state.update(st)
-          out.iterator
+    orderedFold(ticks)(_.symbol, BpState(Double.NaN, Double.NaN, 0L, 0L, 0L),
+        t => (tsKey(t.ts), t.price)) { (sym, st, t) =>
+      if (st.lastPrice.isNaN) (st.copy(lastPrice = t.price), None)
+      else {
+        val lr = math.log(t.price / st.lastPrice)
+        val qr = math.floor(lr * lr * 1e12 + 0.5).toLong
+        val qb = if (!st.lastAbsLr.isNaN)
+          math.floor(math.abs(lr) * st.lastAbsLr * 1e12 + 0.5).toLong
+        else 0L
+        val nx = BpState(t.price, math.abs(lr), st.n + 1,
+          st.sumRvQ + qr, st.sumBvQ + qb)
+        (nx, Some(BpRow(sym, t.ts, nx.n, nx.sumRvQ, nx.sumBvQ)))
       }
+    }
   }
 
   // ------------------------------------- streaming stratified sample
@@ -787,29 +741,19 @@ object Stateful {
     */
   def runningTwapStream(ticks: Dataset[Tick]): Dataset[TwapRow] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState[TwapState, TwapRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym, it, state) =>
-          var st = state.getOption.getOrElse(
-            TwapState(Long.MinValue, 0L, 0L, 0L))
-          val out = it.toArray.sortBy(t => (tsKey(t.ts), t.price)).flatMap { t =>
-            val ms = t.ts.getTime
-            val qp = math.floor(t.price * 1e6 + 0.5).toLong
-            if (st.lastMs == Long.MinValue) {
-              st = TwapState(ms, qp, 0L, 0L); None
-            } else {
-              val dt = ms - st.lastMs
-              st = TwapState(ms, qp, st.sumPT + st.lastQp * dt, st.sumT + dt)
-              if (st.sumT > 0)
-                Some(TwapRow(sym, t.ts, t.price,
-                  st.sumPT.toDouble / st.sumT / 1e6))
-              else None
-            }
-          }
-          state.update(st)
-          out.iterator
+    orderedFold(ticks)(_.symbol, TwapState(Long.MinValue, 0L, 0L, 0L),
+        t => (tsKey(t.ts), t.price)) { (sym, st, t) =>
+      val ms = t.ts.getTime
+      val qp = math.floor(t.price * 1e6 + 0.5).toLong
+      if (st.lastMs == Long.MinValue) (TwapState(ms, qp, 0L, 0L), None)
+      else {
+        val dt = ms - st.lastMs
+        val nx = TwapState(ms, qp, st.sumPT + st.lastQp * dt, st.sumT + dt)
+        (nx, if (nx.sumT > 0)
+          Some(TwapRow(sym, t.ts, t.price, nx.sumPT.toDouble / nx.sumT / 1e6))
+        else None)
       }
+    }
   }
 
   // --------------------------------------- streaming space-saving top-k
@@ -891,21 +835,11 @@ object Stateful {
     */
   def transitionStream(events: Dataset[TransIn]): Dataset[TransOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[TransSt, TransOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, it, state) =>
-          var last = state.getOption.map(_.last).orNull
-          val out = it.toArray.sortBy(e => (tsKey(e.ts), e.eventId))
-            .flatMap { e =>
-              val r = if (last != null) Some(TransOut(last, e.eventType))
-                      else None
-              last = e.eventType
-              r
-            }
-          state.update(TransSt(last))
-          out.iterator
-      }
+    orderedFold(events)(_.userId, TransSt(null),
+        e => (tsKey(e.ts), e.eventId)) { (_, st, e) =>
+      (TransSt(e.eventType),
+        if (st.last != null) Some(TransOut(st.last, e.eventType)) else None)
+    }
   }
 
   // ------------------------------------- streaming conversion lag
@@ -925,27 +859,17 @@ object Stateful {
   def conversionLagStream(events: Dataset[TransIn], anchorType: String,
                           conversionType: String): Dataset[ConvOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[ConvSt, ConvOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid, it, state) =>
-          var st = state.getOption.getOrElse(ConvSt(-1L, false))
-          val out = it.toArray.sortBy(e => (tsKey(e.ts), e.eventId))
-            .flatMap { e =>
-              val us = tsMicros(e.ts)
-              if (e.eventType == anchorType && st.t0 < 0) {
-                st = st.copy(t0 = us)
-                Some(ConvOut(uid, "signup", 0L))
-              } else if (e.eventType == conversionType && st.t0 >= 0 &&
-                  !st.converted && us > st.t0) {
-                st = st.copy(converted = true)
-                Some(ConvOut(uid, "conv",
-                  math.floor((us - st.t0).toDouble / 1e6).toLong))
-              } else None
-            }
-          state.update(st)
-          out.iterator
-      }
+    orderedFold(events)(_.userId, ConvSt(-1L, false),
+        e => (tsKey(e.ts), e.eventId)) { (uid, st, e) =>
+      val us = tsMicros(e.ts)
+      if (e.eventType == anchorType && st.t0 < 0)
+        (st.copy(t0 = us), Some(ConvOut(uid, "signup", 0L)))
+      else if (e.eventType == conversionType && st.t0 >= 0 &&
+          !st.converted && us > st.t0)
+        (st.copy(converted = true), Some(ConvOut(uid, "conv",
+          math.floor((us - st.t0).toDouble / 1e6).toLong)))
+      else (st, None)
+    }
   }
 
   // ------------------------------------- streaming attribution
@@ -968,40 +892,31 @@ object Stateful {
   def attributionStream(events: Dataset[AttrIn], conversionType: String,
                         lookbackUs: Long): Dataset[AttrOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[AttrSt, AttrOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, it, state) =>
-          var st = state.getOption.getOrElse(AttrSt(null, 0L, null))
-          val out = it.toArray.sortBy(e => (tsKey(e.ts), e.eventId))
-            .flatMap { e =>
-              if (e.eventType == conversionType) {
-                val us = tsMicros(e.ts)
-                val last =
-                  if (st.lastCh != null && us - st.lastUs <= lookbackUs)
-                    st.lastCh
-                  else "direct"
-                val first = if (st.firstCh != null) st.firstCh else "direct"
-                Some(AttrOut(last, first, e.value))
-              } else {
-                // µs-grain guard (mirrors asOfEnrich's QuoteState): a
-                // cross-batch late-arriving OLDER touch must not roll
-                // the prevailing last-touch backward — only an
-                // event-time >= advance replaces it. First-touch is
-                // set-once, so late older touches can't corrupt it
-                // either (they were simply never first-seen).
-                val us = tsMicros(e.ts)
-                if (st.lastCh == null || us >= st.lastUs)
-                  st = AttrSt(e.eventType, us,
-                    if (st.firstCh == null) e.eventType else st.firstCh)
-                else if (st.firstCh == null)
-                  st = st.copy(firstCh = e.eventType)
-                None
-              }
-            }
-          state.update(st)
-          out.iterator
+    orderedFold(events)(_.userId, AttrSt(null, 0L, null),
+        e => (tsKey(e.ts), e.eventId)) { (_, st, e) =>
+      val us = tsMicros(e.ts)
+      if (e.eventType == conversionType) {
+        val last =
+          if (st.lastCh != null && us - st.lastUs <= lookbackUs) st.lastCh
+          else "direct"
+        val first = if (st.firstCh != null) st.firstCh else "direct"
+        (st, Some(AttrOut(last, first, e.value)))
+      } else {
+        // µs-grain guard (mirrors asOfEnrich's QuoteState): a
+        // cross-batch late-arriving OLDER touch must not roll the
+        // prevailing last-touch backward — only an event-time >=
+        // advance replaces it. First-touch is set-once, so late older
+        // touches can't corrupt it either (they were simply never
+        // first-seen).
+        val nx =
+          if (st.lastCh == null || us >= st.lastUs)
+            AttrSt(e.eventType, us,
+              if (st.firstCh == null) e.eventType else st.firstCh)
+          else if (st.firstCh == null) st.copy(firstCh = e.eventType)
+          else st
+        (nx, None)
       }
+    }
   }
 
   // ----------------------------------------- streaming 3-event paths
@@ -1018,21 +933,11 @@ object Stateful {
     */
   def journeyStream(events: Dataset[TransIn]): Dataset[J3Out] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[J3St, J3Out](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, it, state) =>
-          var st = state.getOption.getOrElse(J3St(null, null))
-          val out = it.toArray.sortBy(e => (tsKey(e.ts), e.eventId))
-            .flatMap { e =>
-              val r = if (st.e1 != null) Some(J3Out(st.e1, st.e2, e.eventType))
-                      else None
-              st = J3St(st.e2, e.eventType)
-              r
-            }
-          state.update(st)
-          out.iterator
-      }
+    orderedFold(events)(_.userId, J3St(null, null),
+        e => (tsKey(e.ts), e.eventId)) { (_, st, e) =>
+      (J3St(st.e2, e.eventType),
+        if (st.e1 != null) Some(J3Out(st.e1, st.e2, e.eventType)) else None)
+    }
   }
 
   // ---------------------------------------------- streaming Hawkes
@@ -1052,24 +957,16 @@ object Stateful {
     */
   def hawkesStream(arrivals: Dataset[HawkesIn]): Dataset[HawkesOut] = {
     import arrivals.sparkSession.implicits._
-    arrivals.groupByKey(_.symbol)
-      .flatMapGroupsWithState[HawkesSt, HawkesOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym, it, state) =>
-          var arr = state.getOption.map(_.arrUs).getOrElse(Array.empty[Long])
-          val out = it.toArray.sortBy(e => (tsKey(e.ts), e.eventId))
-            .map { e =>
-              val us = tsMicros(e.ts)
-              val sumq = arr.iterator.map { a =>
-                math.floor(math.pow(0.995,
-                  math.floor((us - a) / 1e6)) * 1e9 + 0.5).toLong
-              }.sum
-              arr = (arr :+ us).takeRight(60)
-              HawkesOut(sym, e.eventId, sumq)
-            }
-          state.update(HawkesSt(arr))
-          out.iterator
-      }
+    orderedFold(arrivals)(_.symbol, HawkesSt(Array.empty[Long]),
+        e => (tsKey(e.ts), e.eventId)) { (sym, st, e) =>
+      val us = tsMicros(e.ts)
+      val sumq = st.arrUs.iterator.map { a =>
+        math.floor(math.pow(0.995,
+          math.floor((us - a) / 1e6)) * 1e9 + 0.5).toLong
+      }.sum
+      (HawkesSt((st.arrUs :+ us).takeRight(60)),
+        Some(HawkesOut(sym, e.eventId, sumq)))
+    }
   }
 
   // ---------------------------------------------- streaming funnel
@@ -1083,25 +980,6 @@ object Stateful {
   case class FunnelState(t1: Long, t2: Long, s3: Boolean)
   case class FunnelOut(user_id: Long, s1: Int, s2: Int, s3: Int)
 
-  /** Per-user streaming funnel reach — the ingest-side twin of
-    * [[graft.operators.Events.funnelFlags]] (SURVEY §2 op 330): a
-    * step-k event counts only if STRICTLY later in event time than the
-    * earliest qualifying step-(k−1) event. State is two longs + one
-    * boolean per user — constant, no watermark needed (the op-146
-    * argument); because the qualifying times are the EARLIEST ones and
-    * flags only ever turn on, the fold is idempotent once reached and
-    * replays exactly in a batch engine (the batch op's oracle SQL
-    * verifies the stream verbatim). Emits the user's current reach
-    * after each micro-batch; a max per user over the sink reconstructs
-    * the final funnel. In-batch rows sort by full-precision event time
-    * (tsKey) then event_id; cross-batch continuity rides on the state.
-    * Cross-batch reordering: qualifying times are folded with min(),
-    * so a late-arriving OLDER step event correctly lowers t1/t2;
-    * EXACT batch parity additionally assumes a step-k event is not
-    * delivered before the step-(k−1) event that would qualify it —
-    * an event rejected against a then-too-late threshold is not
-    * revisited (revisiting would need unbounded step-time history).
-    */
   // ---------------------------------------------- streaming SCD2
 
   case class Scd2In(userId: Long, ts: Timestamp, eventId: Long,
@@ -1146,6 +1024,25 @@ object Stateful {
       }
   }
 
+  /** Per-user streaming funnel reach — the ingest-side twin of
+    * [[graft.operators.Events.funnelFlags]] (SURVEY §2 op 330): a
+    * step-k event counts only if STRICTLY later in event time than the
+    * earliest qualifying step-(k−1) event. State is two longs + one
+    * boolean per user — constant, no watermark needed (the op-146
+    * argument); because the qualifying times are the EARLIEST ones and
+    * flags only ever turn on, the fold is idempotent once reached and
+    * replays exactly in a batch engine (the batch op's oracle SQL
+    * verifies the stream verbatim). Emits the user's current reach
+    * after each micro-batch; a max per user over the sink reconstructs
+    * the final funnel. In-batch rows sort by full-precision event time
+    * (tsKey) then event_id; cross-batch continuity rides on the state.
+    * Cross-batch reordering: qualifying times are folded with min(),
+    * so a late-arriving OLDER step event correctly lowers t1/t2;
+    * EXACT batch parity additionally assumes a step-k event is not
+    * delivered before the step-(k−1) event that would qualify it —
+    * an event rejected against a then-too-late threshold is not
+    * revisited (revisiting would need unbounded step-time history).
+    */
   def funnelStream(events: Dataset[FunnelIn]): Dataset[FunnelOut] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.userId)

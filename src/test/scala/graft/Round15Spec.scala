@@ -19,7 +19,10 @@ import org.apache.spark.sql.functions._
   *    read-only landing dir across replays; checkpoints stay fresh.
   *    Re-running the same streaming query twice must produce the
   *    identical relation (no offset/state carry-over), and a SECOND
-  *    query over the same table must see every row.
+  *    query over the same table must see every row. A directory of
+  *    part files must replay every row (the sentinel replays once
+  *    copied it as an empty dir), and a table rewritten in-process
+  *    must be restaged (the cache is keyed on its files).
   */
 class Round15Spec extends SparkSpec {
 
@@ -78,8 +81,8 @@ class Round15Spec extends SparkSpec {
 
   test("shared landing dir: replays stay deterministic across reruns") {
     val dir = "/root/testdata/sf0.001"
-    def rows(q: String): Set[String] =
-      SparkEntry.queries(q)(spark, dir)
+    def rows(q: String, at: String = dir): Set[String] =
+      SparkEntry.queries(q)(spark, at)
         .collect().map(_.toString).toSet
     // Two consecutive runs share the staged landing dir but fresh
     // checkpoints: identical output, every row seen both times.
@@ -89,6 +92,29 @@ class Round15Spec extends SparkSpec {
     // A different query over the SAME staged table also sees all rows.
     val scd = rows("streaming_scd2")
     assert(scd.nonEmpty)
+
+    // The same events as a 3-part directory (the Scale.writeTables
+    // layout): the sentinel replays and the shared staging both copy
+    // every part file, so each query returns the single-file rows.
+    val events = spark.read.parquet(s"$dir/events.parquet")
+    val parts = java.nio.file.Files.createTempDirectory("graft-r15-parts").toString
+    events.repartition(3, col("event_id")).write.parquet(s"$parts/events.parquet")
+    assert(new java.io.File(s"$parts/events.parquet").listFiles()
+      .count(_.getName.endsWith(".parquet")) == 3)
+    for (q <- Seq("streaming_window_agg", "streaming_sessionize", "streaming_twap")) {
+      val single = if (q == "streaming_twap") first else rows(q)
+      assert(single.nonEmpty, q)
+      assert(rows(q, parts) == single, s"$q differs on the 3-part table")
+    }
+
+    // A table rewritten in-process is restaged, not replayed stale.
+    val even = events.where(col("event_id") % 2 === 0)
+    val fresh = java.nio.file.Files.createTempDirectory("graft-r15-even").toString
+    even.write.parquet(s"$fresh/events.parquet")
+    val expected = rows("streaming_twap", fresh)
+    assert(expected.nonEmpty && expected != first)
+    even.write.mode("overwrite").parquet(s"$parts/events.parquet")
+    assert(rows("streaming_twap", parts) == expected)
   }
 }
 

@@ -379,16 +379,15 @@ class StatefulStreamingSpec extends SparkSpec {
   test("runningRiskStream carries lastPrice and integer sums across batches") {
     import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Stateful.RiskTick
-    val input = MemoryStream[RiskTick]
+    val input = MemoryStream[Tick]
     val q = Stateful.runningRiskStream(input.toDS())
       .writeStream.format("memory").queryName("run_risk")
       .outputMode("append").start()
     try {
-      input.addData(RiskTick("A", ts(0), 100.0), RiskTick("A", ts(1), 110.0))
+      input.addData(Tick("A", ts(0), 100.0), Tick("A", ts(1), 110.0))
       q.processAllAvailable()
       // batch 2 continues from lastPrice=110 carried in state
-      input.addData(RiskTick("A", ts(2), 99.0))
+      input.addData(Tick("A", ts(2), 99.0))
       q.processAllAvailable()
       val out = spark.table("run_risk")
         .orderBy($"ts")
@@ -405,17 +404,16 @@ class StatefulStreamingSpec extends SparkSpec {
   test("cusumStream: Page recursion carries S+/S- across batches") {
     import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Stateful.RiskTick
-    val input = MemoryStream[RiskTick]
+    val input = MemoryStream[Tick]
     val q = Stateful.cusumStream(input.toDS())
       .writeStream.format("memory").queryName("run_cusum")
       .outputMode("append").start()
     try {
       // up 2%, up 1% (batch 1), then down 5% (batch 2)
-      input.addData(RiskTick("A", ts(0), 100.0), RiskTick("A", ts(1), 102.0),
-        RiskTick("A", ts(2), 103.02))
+      input.addData(Tick("A", ts(0), 100.0), Tick("A", ts(1), 102.0),
+        Tick("A", ts(2), 103.02))
       q.processAllAvailable()
-      input.addData(RiskTick("A", ts(3), 97.869))
+      input.addData(Tick("A", ts(3), 97.869))
       q.processAllAvailable()
       val out = spark.table("run_cusum")
         .orderBy($"ts")
@@ -431,6 +429,147 @@ class StatefulStreamingSpec extends SparkSpec {
       // after the drop: S+ = max(0, q1+q2+q3), S- = max(0, 0 - q3)
       assert(out(2) == ((q3, 3L, math.max(0L, q1 + q2 + q3),
         math.max(0L, -q3))))
+    } finally q.stop()
+  }
+
+  test("streaksStream: current and max streaks carry across batches") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Tick]
+    val q = Stateful.streaksStream(input.toDS())
+      .writeStream.format("memory").queryName("run_streaks")
+      .outputMode("append").start()
+    try {
+      // up, up (batch 1); up, down, down, flat (batch 2)
+      input.addData(Tick("A", ts(0), 100.0), Tick("A", ts(1), 101.0),
+        Tick("A", ts(2), 102.0))
+      q.processAllAvailable()
+      input.addData(Tick("A", ts(3), 103.0), Tick("A", ts(4), 100.0),
+        Tick("A", ts(5), 99.0), Tick("A", ts(6), 99.0))
+      q.processAllAvailable()
+      val out = spark.table("run_streaks")
+        .orderBy($"ts")
+        .select($"sgn", $"len", $"maxWin", $"maxLoss")
+        .as[(Int, Long, Long, Long)].collect().toSeq
+      assert(out == Seq( // first tick seeds state, emits nothing
+        (1, 1L, 1L, 0L), (1, 2L, 2L, 0L),
+        (1, 3L, 3L, 0L),  // the win streak continues only if state carried
+        (-1, 1L, 3L, 1L), (-1, 2L, 3L, 2L),
+        (0, 1L, 3L, 2L)))  // a flat return breaks both streak kinds
+    } finally q.stop()
+  }
+
+  test("bipowerStream: last |lr| and integer sums carry across batches") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Tick]
+    val q = Stateful.bipowerStream(input.toDS())
+      .writeStream.format("memory").queryName("run_bipower")
+      .outputMode("append").start()
+    try {
+      input.addData(Tick("A", ts(0), 100.0), Tick("A", ts(1), 110.0))
+      q.processAllAvailable()
+      // batch 2's bipower term needs batch 1's |lr| from state
+      input.addData(Tick("A", ts(2), 99.0))
+      q.processAllAvailable()
+      val out = spark.table("run_bipower")
+        .orderBy($"ts")
+        .select($"n", $"sumRvQ", $"sumBvQ")
+        .as[(Long, Long, Long)].collect().toSeq
+      val lr1 = math.log(110.0 / 100.0); val lr2 = math.log(99.0 / 110.0)
+      def qz(x: Double) = math.floor(x * 1e12 + 0.5).toLong
+      assert(out == Seq( // first tick seeds state, emits nothing
+        (1L, qz(lr1 * lr1), 0L),
+        (2L, qz(lr1 * lr1) + qz(lr2 * lr2), qz(math.abs(lr2) * math.abs(lr1)))))
+    } finally q.stop()
+  }
+
+  test("abGateStream: per-variant counters carry across batches") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.Stateful.GateEvent
+    val input = MemoryStream[GateEvent]
+    val q = Stateful.abGateStream(input.toDS())
+      .writeStream.format("memory").queryName("run_abgate")
+      .outputMode("append").start()
+    try {
+      input.addData(GateEvent(0, ts(0), 1L), GateEvent(1, ts(0), 2L),
+        GateEvent(0, ts(1), 3L))
+      q.processAllAvailable()
+      input.addData(GateEvent(0, ts(2), 4L), GateEvent(1, ts(2), 5L))
+      q.processAllAvailable()
+      val out = spark.table("run_abgate")
+        .select($"variant", $"ts", $"n").as[(Int, Timestamp, Long)].collect()
+        .map { case (v, t, n) => (v, t.getTime, n) }.toSet
+      assert(out == Set(
+        (0, t0, 1L), (0, t0 + 1000, 2L), (1, t0, 1L),
+        (0, t0 + 2000, 3L), (1, t0 + 2000, 2L))) // counts carried
+    } finally q.stop()
+  }
+
+  test("vpinStream: bucket prefix and tick-rule price carry across batches") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.Stateful.VolTick
+    // threshold 10, volume 4 per tick: prefixes 0,4,8,12 → buckets
+    // 0,0,0,1; directions need the previous price from state
+    val input = MemoryStream[VolTick]
+    val q = Stateful.vpinStream(input.toDS(), threshold = 10L)
+      .writeStream.format("memory").queryName("run_vpin")
+      .outputMode("append").start()
+    try {
+      input.addData(VolTick("A", ts(0), 100.0, 4.0), VolTick("A", ts(1), 101.0, 4.0))
+      q.processAllAvailable()
+      input.addData(VolTick("A", ts(2), 102.0, 4.0), VolTick("A", ts(3), 99.0, 4.0),
+        VolTick("B", ts(0), 50.0, 4.0))
+      q.processAllAvailable()
+      val out = spark.table("run_vpin")
+        .select($"symbol", $"ts", $"dirn", $"bar")
+        .as[(String, Timestamp, Int, Long)].collect()
+        .map { case (s, t, d, b) => (s, t.getTime, d, b) }.toSet
+      assert(out == Set(
+        ("A", t0, 0, 0L), ("A", t0 + 1000, 1, 0L),
+        ("A", t0 + 2000, 1, 0L),   // up-tick only against the carried 101
+        ("A", t0 + 3000, -1, 1L),  // bucket 1 only if the prefix carried
+        ("B", t0, 0, 0L)))
+    } finally q.stop()
+  }
+
+  test("dollarBarStream carries the cent prefix across batches") {
+    import org.apache.spark.sql.functions._
+    implicit val sqlCtx = spark.sqlContext
+    // threshold 100 000 cents, 40 000 cents per tick: prefixes 0, 40k,
+    // 80k, 120k → bars 0,0,0,1 — the 4th tick opens bar 1 only if
+    // state carried the 80k from batch 1.
+    val input = MemoryStream[Stateful.VolTick]
+    val q = Stateful.dollarBarStream(input.toDS(), thresholdCents = 100000L)
+      .writeStream.format("memory").queryName("dbar_stream")
+      .outputMode("append").start()
+    try {
+      input.addData(
+        Stateful.VolTick("A", ts(0), 100.0, 4.0),
+        Stateful.VolTick("A", ts(1), 100.0, 4.0))
+      q.processAllAvailable()
+      input.addData(
+        Stateful.VolTick("A", ts(2), 100.0, 4.0),
+        Stateful.VolTick("A", ts(3), 100.0, 4.0),
+        Stateful.VolTick("B", ts(0), 50.0, 25.0))
+      q.processAllAvailable()
+      val got = spark.table("dbar_stream")
+        .select(col("symbol"), col("ts"), col("bar"))
+        .as[(String, Timestamp, Long)].collect()
+        .map { case (s, t, b) => (s, t.getTime, b) }.toSet
+      assert(got == Set(
+        ("A", t0, 0L), ("A", t0 + 1000, 0L), ("A", t0 + 2000, 0L),
+        ("A", t0 + 3000, 1L),  // crossed only because state carried
+        ("B", t0, 0L)), s"unexpected bars: $got")
+      // and the streamed ids equal the batch op's on the same ticks
+      val ticks = Seq(
+        ("A", ts(0), 100.0, 4.0), ("A", ts(1), 100.0, 4.0),
+        ("A", ts(2), 100.0, 4.0), ("A", ts(3), 100.0, 4.0),
+        ("B", ts(0), 50.0, 25.0)).toDF("symbol", "ts", "price", "volume")
+      val batch = graft.operators.Bars
+        .dollarBars(ticks, "symbol", "ts", "price", "volume",
+          thresholdCents = 100000L)
+        .select(col("symbol"), col("bar"), col("n_ticks"))
+        .as[(String, Long, Long)].collect().toSet
+      assert(batch == Set(("A", 0L, 3L), ("A", 1L, 1L), ("B", 0L, 1L)))
     } finally q.stop()
   }
 
