@@ -348,9 +348,12 @@ object SparkEntry {
       |  WHERE a.event_type <> 'view' AND b.event_type = 'view'
       |)""".stripMargin
 
-  /** Oracle twin of [[pairedPrefixFrames]]: the cumulative-sum +
-    * lag-difference CTEs appended to PAIRED_CTE. Keep in lockstep with
-    * the Spark helper — both engines must derive from the same sums.
+  /** Oracle twin of [[graft.functions.Eod.rollingBeta]] and
+    * [[graft.functions.Eod.rollingCorr]]: the cumulative-sum +
+    * lag-difference CTEs appended to PAIRED_CTE. `cum − lag(cum, k)`
+    * is the library's frame difference (running sum minus the running
+    * sum k rows back), so both engines derive from the same sums; keep
+    * the algebra in lockstep with those functions.
     */
   private def prefixFrameSql(k: Int, includeXx: Boolean): String = {
     val xxCum = if (includeXx) ",\n    sum(ra * ra) OVER cum AS cxx" else ""
@@ -572,11 +575,12 @@ object SparkEntry {
         max(when(col("event_type") === "view", col("ret"))).as("rb"))
 
   /** Every non-'view' return series rn-paired against the 'view'
-    * benchmark: (pair_id, rn, ra, rb). One per-asset window pass for
-    * rn, then an equi-join on rn against the benchmark slice. The join
-    * shuffles on rn; the rolling windows downstream re-partition by
-    * pair_id — four real pairs here, N pairs at scale, so the rolling
-    * WindowExec is genuinely partitioned (never single-partition).
+    * benchmark: (pair_id, rn, ra, rb), the rows where both returns are
+    * present. One per-asset window pass for rn, then an equi-join on rn
+    * against the benchmark slice. The join shuffles on rn; the rolling
+    * windows downstream re-partition by pair_id — four real pairs here,
+    * N pairs at scale, so the rolling WindowExec is genuinely
+    * partitioned (never single-partition).
     */
   private def pairedReturnsVsView(s: SparkSession, dir: String): DataFrame = {
     val r = withRet(s, dir).withColumn("rn", row_number().over(wT))
@@ -585,36 +589,11 @@ object SparkEntry {
     r.where(col("event_type") =!= "view")
       .select(col("event_type").as("pair_id"), col("rn"), col("ret").as("ra"))
       .join(bench, "rn")
+      .where(col("ra").isNotNull && col("rb").isNotNull)
   }
 
-  /** Prefix-sum sliding-frame scaffold shared by the rolling beta/corr
-    * pair: cumulative Σx/Σy/Σxy/Σy² (+Σx² when `includeXx`) over the
-    * per-pair order, a lag-difference builder recovering the k-row
-    * frame sum in O(1) per row (WindowExec re-aggregates O(k) per row
-    * for frame-bounded aggregates), and the frame row count. One edit
-    * point for the frame arithmetic — the oracle CTE twin is
-    * [[prefixFrameSql]]; keep the two in lockstep.
-    */
-  private def pairedPrefixFrames(s: SparkSession, dir: String, k: Int,
-                                 includeXx: Boolean)
-      : (DataFrame, String => Column, Column) = {
-    val wp = Window.partitionBy(col("pair_id")).orderBy(col("rn"))
-    val cum = wp.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sums = Seq(
-      row_number().over(wp).as("i"),
-      sum(col("ra")).over(cum).as("cx"),
-      sum(col("rb")).over(cum).as("cy"),
-      sum(col("ra") * col("rb")).over(cum).as("cxy"),
-      sum(col("rb") * col("rb")).over(cum).as("cyy")) ++
-      (if (includeXx) Seq(sum(col("ra") * col("ra")).over(cum).as("cxx"))
-       else Nil)
-    val c = pairedReturnsVsView(s, dir)
-      .where(col("ra").isNotNull && col("rb").isNotNull)
-      .select(Seq(col("pair_id"), col("rn")) ++ sums: _*)
-    val sl = (name: String) =>
-      col(name) - coalesce(lag(col(name), k).over(wp), lit(0.0))
-    (c, sl, least(col("i"), lit(k)).cast("double"))
-  }
+  /** The per-pair order the rolling pair queries' frames run over. */
+  private val wPair = Window.partitionBy(col("pair_id")).orderBy(col("rn"))
 
   private def withDd(s: SparkSession, dir: String): DataFrame =
     events(s, dir).withColumn("dd", Eod.toDrawdownSeries(col("value"), wT))
@@ -1624,40 +1603,26 @@ object SparkEntry {
     // scale — so no single-partition WindowExec anywhere in the suite.
     // `+ 0.0` squashes IEEE −0.0 out of round() (Spark and DuckDB can
     // disagree on the sign of a rounded zero, which flips the hash).
-    // Rolling beta via PREFIX-SUM DIFFERENCES, not a frame-bounded
-    // covar/var: WindowExec re-aggregates the whole frame per row for
-    // sliding frames (O(k) per row — measured 4.6 s vs siblings'
-    // 1.8 s at k=60; a 1-year frame would be 252×), while cumulative
-    // sums are incremental (O(1) per row) and lag(cum, k) recovers
-    // the frame sum. beta = (nΣxy − ΣxΣy)/(nΣyy − ΣyΣy) — the
-    // (n−1) denominators of covar_samp/var_samp cancel. The oracle
-    // replays the IDENTICAL algebra, so both engines derive from the
-    // same cumulative sums. Two Window ops share one sort (same
-    // partitioning/order — one Exchange in the plan).
-    "eod_rolling_beta" -> ((s, dir) => {
-      val (c, sl, nn) = pairedPrefixFrames(s, dir, 60, includeXx = false)
-      val den = nn * sl("cyy") - sl("cy") * sl("cy")
-      val num = nn * sl("cxy") - sl("cx") * sl("cy")
-      c.select(col("pair_id"), col("rn"),
-        (round(when(den =!= 0.0, num / den), 4) + lit(0.0)).as("beta"))
-    }),
-    // Same prefix-sum idiom as eod_rolling_beta (corr additionally
-    // needs the Σx² prefix): r = (nΣxy−ΣxΣy)/√((nΣxx−Σx²)(nΣyy−Σy²)).
-    "eod_rolling_corr" -> ((s, dir) => {
-      val (c, sl, nn) = pairedPrefixFrames(s, dir, 60, includeXx = true)
-      val num = nn * sl("cxy") - sl("cx") * sl("cy")
-      val dx = nn * sl("cxx") - sl("cx") * sl("cx")
-      val dy = nn * sl("cyy") - sl("cy") * sl("cy")
-      c.select(col("pair_id"), col("rn"),
-        (round(when(dx > 0.0 && dy > 0.0, num / sqrt(dx * dy)), 4)
-          + lit(0.0)).as("roll_corr"))
-    }),
+    // Eod.rollingBeta: beta = (nΣxy − ΣxΣy)/(nΣyy − ΣyΣy) from O(1)
+    // per-row frame-difference sums (a frame-bounded covar/var
+    // re-aggregates all 60 rows per row — measured 4.6 s vs siblings'
+    // 1.8 s). The oracle replays the same sums as cumulative sums
+    // minus lag(cum, 60) (prefixFrameSql).
+    "eod_rolling_beta" -> ((s, dir) =>
+      pairedReturnsVsView(s, dir).select(col("pair_id"), col("rn"),
+        (round(Eod.rollingBeta(col("ra"), col("rb"), wPair, 60), 4)
+          + lit(0.0)).as("beta"))),
+    // Eod.rollingCorr, the same paired frame sums plus Σx²:
+    // r = (nΣxy−ΣxΣy)/√((nΣxx−Σx²)(nΣyy−Σy²)).
+    "eod_rolling_corr" -> ((s, dir) =>
+      pairedReturnsVsView(s, dir).select(col("pair_id"), col("rn"),
+        (round(Eod.rollingCorr(col("ra"), col("rb"), wPair, 60), 4)
+          + lit(0.0)).as("roll_corr"))),
     // Full-sample CAPM vs the 'view' benchmark (op 133, ffn-lineage
     // alpha/beta): ONE hash agg over the rn-paired returns emits beta,
     // annualized Jensen's alpha, R², and tracking error per pair.
     "eod_capm" -> ((s, dir) =>
       pairedReturnsVsView(s, dir)
-        .where(col("ra").isNotNull && col("rb").isNotNull)
         .groupBy(col("pair_id"))
         .agg(
           (round(Eod.capmBeta(col("ra"), col("rb")), 6) + lit(0.0)).as("beta"),
@@ -1671,7 +1636,6 @@ object SparkEntry {
     // same single paired hash agg shape as eod_capm.
     "eod_capture" -> ((s, dir) =>
       pairedReturnsVsView(s, dir)
-        .where(col("ra").isNotNull && col("rb").isNotNull)
         .groupBy(col("pair_id"))
         .agg(
           (round(Eod.upCapture(col("ra"), col("rb")), 6) + lit(0.0))
@@ -1686,7 +1650,6 @@ object SparkEntry {
     // the eod_capm convention. Same single paired hash agg as op 133.
     "eod_treynor_m2" -> ((s, dir) =>
       pairedReturnsVsView(s, dir)
-        .where(col("ra").isNotNull && col("rb").isNotNull)
         .groupBy(col("pair_id"))
         .agg(
           (round(avg(col("ra")) * Eod.TradingDaysPerYear /
@@ -1702,7 +1665,6 @@ object SparkEntry {
     // (annualization cancels in the ratio), one paired hash agg.
     "eod_sharpe_test" -> ((s, dir) =>
       pairedReturnsVsView(s, dir)
-        .where(col("ra").isNotNull && col("rb").isNotNull)
         .groupBy(col("pair_id"))
         .agg(count(lit(1)).as("n"),
           (avg(col("ra")) / stddev_samp(col("ra"))).as("sra"),
@@ -1754,7 +1716,6 @@ object SparkEntry {
     "eod_downside_capm" -> ((s, dir) => {
       val dec = (c: Column) => c.cast("decimal(19,0)")
       val p = pairedReturnsVsView(s, dir)
-        .where(col("ra").isNotNull && col("rb").isNotNull)
         .withColumn("qa", floor(col("ra") * 1e6 + 0.5).cast("long"))
         .withColumn("qb", floor(col("rb") * 1e6 + 0.5).cast("long"))
       def side(cond: Column, tag: String) = Seq(
@@ -1787,7 +1748,6 @@ object SparkEntry {
     "eod_hm_timing" -> ((s, dir) => {
       val dec = (c: Column) => c.cast("decimal(19,0)")
       val p = pairedReturnsVsView(s, dir)
-        .where(col("ra").isNotNull && col("rb").isNotNull)
         .withColumn("ya", floor(col("ra") * 1e6 + 0.5).cast("long"))
         .withColumn("x1", floor(col("rb") * 1e6 + 0.5).cast("long"))
         .withColumn("x2", greatest(floor(col("rb") * 1e6 + 0.5).cast("long"),
@@ -1836,7 +1796,6 @@ object SparkEntry {
     "eod_treynor_mazuy" -> ((s, dir) => {
       val dec = (c: Column) => c.cast("decimal(19,0)")
       val p = pairedReturnsVsView(s, dir)
-        .where(col("ra").isNotNull && col("rb").isNotNull)
         .withColumn("ya", floor(col("ra") * 1e6 + 0.5).cast("long"))
         .withColumn("x1", floor(col("rb") * 1e6 + 0.5).cast("long"))
         .withColumn("x2",
@@ -2195,36 +2154,20 @@ object SparkEntry {
     // eod_capture — trailing-60-row up/down capture and win rate per
     // pair, same per-pair window partitioning as the rolling beta/corr
     // family (never single-partition; WindowGuard enforces).
-    // Prefix-sum differences, same idiom as eod_rolling_beta/
-    // eod_rolling: up-capture = Σ(ra|rb>0)/Σ(rb|rb>0) — the frame
-    // counts cancel exactly, so only the masked sums (+ the count
-    // guarding the no-rising-row null) are carried cumulatively;
-    // O(1) per row where the frame-bounded conditional avgs
-    // re-aggregated 60 rows each. Oracle replays the identical
-    // algebra. One sort serves all cum + lag windows.
+    // Eod.rollingUpCapture / rollingDownCapture / rollingWinRate:
+    // up-capture = Σ(ra|rb>0)/Σ(rb|rb>0) over the frame (the frame
+    // counts cancel; the masked count only guards the no-rising-row
+    // null), all from O(1) per-row frame-difference sums. The oracle
+    // replays the identical algebra.
     "eod_rolling_capture" -> ((s, dir) => {
-      val wp = Window.partitionBy(col("pair_id")).orderBy(col("rn"))
-      val cum = wp.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val c = pairedReturnsVsView(s, dir)
-        .where(col("ra").isNotNull && col("rb").isNotNull)
-        .select(col("pair_id"), col("rn"),
-          row_number().over(wp).as("i"),
-          sum(when(col("rb") > 0, col("ra")).otherwise(0.0)).over(cum).as("cua"),
-          sum(when(col("rb") > 0, col("rb")).otherwise(0.0)).over(cum).as("cub"),
-          sum(when(col("rb") > 0, 1.0).otherwise(0.0)).over(cum).as("cun"),
-          sum(when(col("rb") < 0, col("ra")).otherwise(0.0)).over(cum).as("cda"),
-          sum(when(col("rb") < 0, col("rb")).otherwise(0.0)).over(cum).as("cdb"),
-          sum(when(col("rb") < 0, 1.0).otherwise(0.0)).over(cum).as("cdn"),
-          sum(when(col("ra") > 0, 1.0).otherwise(0.0)).over(cum).as("cw"))
-      def sl(name: String) =
-        col(name) - coalesce(lag(col(name), 60).over(wp), lit(0.0))
-      val n = least(col("i"), lit(60)).cast("double")
-      c.select(col("pair_id"), col("rn"),
-        (round(when(sl("cun") > 0, sl("cua") / sl("cub")), 4) + lit(0.0))
+      val (ra, rb) = (col("ra"), col("rb"))
+      pairedReturnsVsView(s, dir).select(col("pair_id"), col("rn"),
+        (round(Eod.rollingUpCapture(ra, rb, wPair, 60), 4) + lit(0.0))
           .as("up_capture"),
-        (round(when(sl("cdn") > 0, sl("cda") / sl("cdb")), 4) + lit(0.0))
+        (round(Eod.rollingDownCapture(ra, rb, wPair, 60), 4) + lit(0.0))
           .as("down_capture"),
-        (round(sl("cw") / n, 4) + lit(0.0)).as("win_rate"))
+        (round(Eod.rollingWinRate(ra, wPair, 60), 4) + lit(0.0))
+          .as("win_rate"))
     }),
     // Calendar return table (op 135, ffn's return-table/heatmap API in
     // long form): period-end value per (series, calendar bucket) — one
@@ -2911,13 +2854,10 @@ object SparkEntry {
         .agg(round(Tick.orderFlowImbalance(col("sv")), 6).as("ofi"))),
     "tick_traded_value" -> ((s, dir) =>
       events(s, dir).groupBy(col("event_type"))
-        .agg(round(sum((col("value") * volume).cast("decimal(30,10)")).cast("double"), 2)
-          .as("traded_value"))),
+        .agg(round(Tick.tradedValue(col("value"), volume), 2).as("traded_value"))),
     "tick_vwap" -> ((s, dir) =>
       events(s, dir).groupBy(col("event_type"))
-        .agg(round(
-          sum((col("value") * volume).cast("decimal(30,10)")).cast("double") /
-            sum(volume.cast("decimal(30,10)")).cast("double"), 6).as("vwap"))),
+        .agg(round(Tick.vwap(col("value"), volume), 6).as("vwap"))),
     "tick_rule" -> ((s, dir) =>
       events(s, dir).select(col("event_type"), col("event_id"),
         Tick.tickRule(col("value"), wT).cast("int").as("direction"))),
@@ -5585,8 +5525,9 @@ object SparkEntry {
         |  round(c * c, 6) + 0.0 AS r2,
         |  round(te * sqrt(252.0), 6) + 0.0 AS tracking_error
         |FROM g ORDER BY pair_id, bench_id""".stripMargin,
-    // prefix-sum twin of the Spark query (identical masked cumulative
-    // sums + lag-difference algebra; keep in lockstep).
+    // prefix-sum twin of Eod.rollingUpCapture/DownCapture/WinRate
+    // (identical masked cumulative sums + lag-difference algebra; keep
+    // in lockstep).
     "eod_rolling_capture" ->
       s"""$PAIRED_CTE, c AS (
         |  SELECT pair_id, rn,
@@ -9741,43 +9682,22 @@ object SparkEntry {
     }),
 
     // ---- rolling metrics (north-star "rolling calculations")
-    // PREFIX-SUM DIFFERENCES, same idiom as eod_rolling_beta: the
-    // frame-bounded avg/stddev forms re-aggregate O(k) per row in
-    // WindowExec (measured: the identical rewrite took rolling beta
-    // 4.6→0.9 s); cumulative Σ1/Σr/Σr²/Σloss² are O(1) per row and
-    // lag(cum, k) recovers every frame sum. Null returns (the first
-    // row of each series) contribute 0 to every sum and 0 to the
-    // count, exactly like the null-skipping frame aggregates. vol =
-    // √((Σr²−(Σr)²/n)/(n−1)) guarded ≥0 — raw-moment cancellation
-    // can go −ε where stddev_samp says 0, and the oracle replays the
-    // IDENTICAL guard so both engines agree. All cum windows share
-    // wT's sort — one Exchange, one Sort in the plan.
+    // Eod.rollingMean/Volatility/Sharpe/DownsideDev/Sortino over the
+    // trailing 20 rows, each an O(1) per-row frame difference of
+    // running sums (the frame-bounded avg/stddev re-aggregate O(k) per
+    // row). Null returns (the first row of each series) add 0 to every
+    // sum and to the count, like the null-skipping frame aggregates;
+    // vol is guarded ≥ 0 and the oracle replays the IDENTICAL algebra.
+    // Every window shares wT's sort — one Exchange, one Sort.
     "eod_rolling" -> ((s, dir) => {
-      val cum = wT.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val r0 = coalesce(col("ret"), lit(0.0))
-      val loss = when(col("ret").isNotNull, least(col("ret"), lit(0.0)))
-        .otherwise(lit(0.0))
-      val c = withRet(s, dir).select(col("event_type"), col("ts"),
-        col("event_id"),
-        sum(when(col("ret").isNotNull, 1.0).otherwise(0.0)).over(cum).as("cn"),
-        sum(r0).over(cum).as("cs"),
-        sum(r0 * r0).over(cum).as("css"),
-        sum(loss * loss).over(cum).as("cl2"))
-      def sl(name: String) =
-        col(name) - coalesce(lag(col(name), 20).over(wT), lit(0.0))
-      val n = sl("cn")
-      val mean = when(n > 0, sl("cs") / n)
-      val varS = (sl("css") - sl("cs") * sl("cs") / n) / (n - 1)
-      val vol = when(n >= 2 && varS >= 0, sqrt(varS))
-      val dsd = when(n > 0, sqrt(sl("cl2") / n))
-      c.select(col("event_type"), col("event_id"),
-        (round(mean, 4) + lit(0.0)).as("roll_mean"),
-        (round(vol, 4) + lit(0.0)).as("roll_vol"),
-        (round(safeDiv(mean, vol) * math.sqrt(252.0), 4) + lit(0.0))
-          .as("roll_sharpe"),
-        (round(dsd, 4) + lit(0.0)).as("roll_downside"),
-        (round(safeDiv(mean, dsd) * math.sqrt(252.0), 4) + lit(0.0))
-          .as("roll_sortino"))
+      val r = col("ret")
+      def r4(c: Column) = round(c, 4) + lit(0.0)
+      withRet(s, dir).select(col("event_type"), col("event_id"),
+        r4(Eod.rollingMean(r, wT, 20)).as("roll_mean"),
+        r4(Eod.rollingVolatility(r, wT, 20)).as("roll_vol"),
+        r4(Eod.rollingSharpe(r, wT, 20)).as("roll_sharpe"),
+        r4(Eod.rollingDownsideDev(r, wT, 20)).as("roll_downside"),
+        r4(Eod.rollingSortino(r, wT, 20)).as("roll_sortino"))
     }),
 
     // ---- sessionization (session_window: same expression batch+stream)
@@ -11635,18 +11555,26 @@ object SparkEntry {
     // Update-mode sink reconstructs the final counters; the global
     // top-20 is a batch scan of that sink. While buckets have spare
     // capacity counts are exact (err = 0) — the regime the oracle
-    // replays; past capacity the classical cnt−err lower bound holds.
+    // replays. Past capacity an evicted slot's count is inherited and
+    // the top-20 overcounts, so any sink row with err > 0 raises (in
+    // or out of the top 20) instead of returning inflated counts.
     "streaming_topk" -> ((s, dir) => {
       import s.implicits._
+      val capacity = 16
       val sunk = streamReplay(s, dir, "documents", "sstopk",
         mode = "update") { src =>
         val in = src.select(explode(Text.tokens(col("text"))).as("tok"))
           .select((Sketch.kmvHash(col("tok")) % 16).cast("int").as("bucket"),
             col("tok").as("token"))
           .as[graft.streaming.Stateful.SSIn]
-        graft.streaming.Stateful.spaceSavingStream(in, capacity = 16).toDF()
+        graft.streaming.Stateful.spaceSavingStream(in, capacity).toDF()
       }
-      sunk.groupBy(col("bucket"), col("token"))
+      sunk.withColumn("err", when(col("err") > 0, raise_error(concat(
+          lit("streaming_topk: bucket "), col("bucket").cast("string"),
+          lit(s" holds more than $capacity distinct tokens (space-saving " +
+            s"capacity $capacity); its counts would be overcounted"))))
+          .otherwise(col("err")))
+        .groupBy(col("bucket"), col("token"))
         .agg(max(col("cnt")).as("cnt"), max(col("err")).as("err"))
         .orderBy(col("cnt").desc, col("token"))
         .limit(20)
@@ -12117,16 +12045,8 @@ object SparkEntry {
     * makes min_by/max_by land the batch open/close.
     */
   private def barSinkReport(sunk: DataFrame): DataFrame =
-    sunk.groupBy(col("symbol"), col("bar"))
-      .agg(
-        min_by(col("price"), col("ts")).as("open"),
-        max(col("price")).as("high"),
-        min(col("price")).as("low"),
-        max_by(col("price"), col("ts")).as("close"),
-        sum(col("volume")).as("volume"),
-        (sum((col("price") * col("volume")).cast("decimal(30,10)")).cast("double") /
-          sum(col("volume").cast("decimal(30,10)")).cast("double")).as("vwap"),
-        count(lit(1)).as("n_ticks"))
+    graft.operators.Bars.ohlcv(sunk.groupBy(col("symbol"), col("bar")),
+        "ts", "price", "volume", tiebreak = None)
       .select(col("symbol").as("event_type"), col("bar"),
         round(col("open"), 6).as("open"), round(col("high"), 6).as("high"),
         round(col("low"), 6).as("low"), round(col("close"), 6).as("close"),
@@ -14493,8 +14413,9 @@ object SparkEntry {
           |)
           |SELECT e.event_type, round(min(med), 6) AS median,
           |  round(quantile_cont(abs(value - med), 0.5), 6) AS mad,
-          |  round(avg(CASE WHEN value IS NOT NULL
-          |                 THEN greatest(lo, least(hi, value)) END), 6) AS winsor_mean
+          |  round(CAST(sum(CAST(CASE WHEN value IS NOT NULL
+          |                 THEN greatest(lo, least(hi, value)) END AS DECIMAL(30,10))) AS DOUBLE)
+          |        / count(value), 6) AS winsor_mean
           |FROM events e JOIN b ON e.event_type = b.event_type
           |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
       // op 240: same pooled grid, same exact half-integer midranks,
@@ -14862,8 +14783,9 @@ object SparkEntry {
           |        THEN sqrt(vo + k * vc + (1.0 - k) * vrs) END, 6) + 0.0
           |    AS yang_zhang_vol
           |FROM a2 ORDER BY event_type""".stripMargin,
-      // prefix-sum twin of the Spark query: identical cumulative sums,
-      // identical lag-difference and guard algebra (keep in lockstep).
+      // prefix-sum twin of Eod.rollingMean/Volatility/Sharpe/
+      // DownsideDev/Sortino: identical cumulative sums, lag-difference
+      // and guard algebra (keep in lockstep).
       "eod_rolling" ->
         s"""$R_CTE, c AS (
           |  SELECT event_type, ts, event_id,

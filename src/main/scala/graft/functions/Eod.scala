@@ -82,13 +82,43 @@ object Eod {
   def trailing(w: WindowSpec, n: Int): WindowSpec =
     w.rowsBetween(-(n - 1), Window.currentRow)
 
-  /** Rolling mean return over the trailing n rows. */
-  def rollingMean(ret: Column, w: WindowSpec, n: Int): Column =
-    avg(ret).over(trailing(w, n))
+  // Rolling metrics: raw frame sums (Σ1, Σr, Σr², Σxy, …) from
+  // [[slidingSum]], with the ratios formed after the frame difference
+  // — the algebra the registry queries and their DuckDB oracles share.
+  // A null row adds 0 to every sum and to the count (for the paired
+  // functions, unless both series are non-null).
 
-  /** Rolling (sample) volatility over the trailing n rows. */
-  def rollingVolatility(ret: Column, w: WindowSpec, n: Int): Column =
-    stddev_samp(ret).over(trailing(w, n))
+  /** Σx over the trailing n rows of `w` where `m` holds, as a frame
+    * difference: the running sum minus the running sum n rows back (0
+    * before that row exists). WindowExec keeps both running sums
+    * incrementally — O(1) per row, where an aggregate over
+    * `trailing(w, n)` re-aggregates all n rows for every row.
+    */
+  private def slidingSum(m: Column, x: Column, w: WindowSpec, n: Int): Column = {
+    val v = when(m, x).otherwise(0.0)
+    sum(v).over(cum(w)) - coalesce(
+      sum(v).over(w.rowsBetween(Window.unboundedPreceding, -n)), lit(0.0))
+  }
+
+  /** Rolling mean return over the trailing n rows: Σr / n; null while
+    * the frame holds no return.
+    */
+  def rollingMean(ret: Column, w: WindowSpec, n: Int): Column = {
+    val cnt = slidingSum(ret.isNotNull, lit(1.0), w, n)
+    when(cnt > 0, slidingSum(ret.isNotNull, ret, w, n) / cnt)
+  }
+
+  /** Rolling (sample) volatility over the trailing n rows:
+    * √((Σr² − (Σr)²/n)/(n − 1)); null below 2 returns or when rounding
+    * drives the variance negative. On a flat window this raw-moment
+    * form can be null or below 1e-9 where stddev_samp gives 0.
+    */
+  def rollingVolatility(ret: Column, w: WindowSpec, n: Int): Column = {
+    val p = ret.isNotNull
+    val (cnt, s) = (slidingSum(p, lit(1.0), w, n), slidingSum(p, ret, w, n))
+    val varS = (slidingSum(p, ret * ret, w, n) - s * s / cnt) / (cnt - 1)
+    when(cnt >= 2 && varS >= 0, sqrt(varS))
+  }
 
   /** Rolling Sharpe over the trailing n rows (annualized by `periods`).
     * Partial leading frames produce partial-sample values, like a
@@ -100,17 +130,17 @@ object Eod {
       math.sqrt(periods.toDouble)
 
   /** Rolling downside deviation over the trailing n rows: RMS of the
-    * loss part, sqrt(mean(min(r,0)²)) — Sortino's denominator
-    * (ref ratios.py:23 uses the same loss-only std over the full
-    * series). Explicit x*x (not pow) so the kernel never depends on
-    * the pow² rewrite rule being registered.
+    * loss part, √(Σmin(r,0)² / n) — Sortino's denominator (ref
+    * ratios.py:23 uses the same loss-only std over the full series).
+    * Explicit x*x (not pow) so the kernel never depends on the pow²
+    * rewrite rule being registered.
     */
   def rollingDownsideDev(ret: Column, w: WindowSpec, n: Int): Column = {
-    // least() SKIPS nulls on both engines (least(null, 0) = 0), which
-    // would count a null return as a zero loss — mask explicitly so a
-    // null contributes nothing, like every other aggregate here.
-    val loss = when(ret.isNotNull, least(ret, lit(0.0)))
-    sqrt(avg(loss * loss).over(trailing(w, n)))
+    // least() SKIPS nulls (least(null, 0) = 0): the isNotNull mask is
+    // what keeps a null return out of the sum.
+    val loss = least(ret, lit(0.0))
+    val cnt = slidingSum(ret.isNotNull, lit(1.0), w, n)
+    when(cnt > 0, sqrt(slidingSum(ret.isNotNull, loss * loss, w, n) / cnt))
   }
 
   /** Rolling Sortino over the trailing n rows (annualized by
@@ -437,55 +467,68 @@ object Eod {
   }
 
   /** Rolling OLS beta of `ret` on `benchmark` over the trailing n rows:
-    * covar_samp / var_samp on the frame. Null until the frame has ≥2
-    * paired rows (sample moments undefined), null on a flat benchmark
-    * window. Feed it rows where both series are non-null — the sample
-    * counts of cov and var diverge otherwise and the ratio is not a
-    * beta.
-    *
-    * SCALE NOTE: sliding-frame aggregates re-aggregate the whole frame
-    * per row in WindowExec (O(n) per row). For long frames or hot
-    * paths, prefer the prefix-sum-difference formulation the
-    * `eod_rolling_beta` query uses (cumulative Σx/Σy/Σxy/Σy² +
-    * lag(cum, n) — O(1) per row, measured 5× faster at n=60).
+    * (nΣxy − ΣxΣy)/(nΣyy − ΣyΣy) over the paired (both non-null) rows
+    * — the (n−1) denominators of covar_samp/var_samp cancel. Null below
+    * 2 paired rows and on a flat benchmark window (which, as for
+    * [[rollingVolatility]], may also leave a tiny nonzero denominator).
     */
   def rollingBeta(ret: Column, benchmark: Column, w: WindowSpec,
-                  n: Int): Column =
-    safeDiv(covar_samp(ret, benchmark).over(trailing(w, n)),
-      var_samp(benchmark).over(trailing(w, n)))
+                  n: Int): Column = {
+    def s(x: Column) = slidingSum(ret.isNotNull && benchmark.isNotNull, x, w, n)
+    val (cnt, sy) = (s(lit(1.0)), s(benchmark))
+    val num = cnt * s(ret * benchmark) - s(ret) * sy
+    val den = cnt * s(benchmark * benchmark) - sy * sy
+    when(cnt >= 2 && den =!= 0.0, num / den)
+  }
 
   /** Rolling Pearson correlation over the trailing n rows — the
-    * diagnostic twin of [[rollingBeta]] (same frame, scale-free).
-    * Null until ≥2 paired rows / on a flat window.
+    * diagnostic twin of [[rollingBeta]] (same paired frame sums,
+    * scale-free): (nΣxy − ΣxΣy)/√((nΣxx − Σx²)(nΣyy − Σy²)). Null below
+    * 2 paired rows and on a flat window of either series.
     */
   def rollingCorr(ret: Column, benchmark: Column, w: WindowSpec,
-                  n: Int): Column =
-    corr(ret, benchmark).over(trailing(w, n))
+                  n: Int): Column = {
+    def s(x: Column) = slidingSum(ret.isNotNull && benchmark.isNotNull, x, w, n)
+    val (cnt, sx, sy) = (s(lit(1.0)), s(ret), s(benchmark))
+    val num = cnt * s(ret * benchmark) - sx * sy
+    val dx = cnt * s(ret * ret) - sx * sx
+    val dy = cnt * s(benchmark * benchmark) - sy * sy
+    when(cnt >= 2 && dx > 0.0 && dy > 0.0, num / sqrt(dx * dy))
+  }
+
+  /** Σret / Σbenchmark over the trailing paired rows where `side`
+    * holds; the frame counts cancel, so the count only guards the
+    * no-such-row null.
+    */
+  private def rollingCapture(ret: Column, benchmark: Column, side: Column,
+                             w: WindowSpec, n: Int): Column = {
+    val m = ret.isNotNull && benchmark.isNotNull && side
+    when(slidingSum(m, lit(1.0), w, n) > 0,
+      safeDiv(slidingSum(m, ret, w, n), slidingSum(m, benchmark, w, n)))
+  }
 
   /** Rolling arithmetic up-capture over the trailing n rows: the
-    * windowed twin of [[upCapture]] — avg(ret | bench>0 in frame) /
-    * avg(bench | bench>0 in frame). Null while the frame holds no
-    * rising-benchmark row. Same paired-rows contract as
-    * [[rollingBeta]].
+    * windowed twin of [[upCapture]]. Null while the frame holds no
+    * rising-benchmark row.
     */
   def rollingUpCapture(ret: Column, benchmark: Column, w: WindowSpec,
                        n: Int): Column =
-    safeDiv(avg(when(benchmark > 0, ret)).over(trailing(w, n)),
-      avg(when(benchmark > 0, benchmark)).over(trailing(w, n)))
+    rollingCapture(ret, benchmark, benchmark > 0, w, n)
 
   /** Rolling arithmetic down-capture — the falling-period twin of
     * [[rollingUpCapture]].
     */
   def rollingDownCapture(ret: Column, benchmark: Column, w: WindowSpec,
                          n: Int): Column =
-    safeDiv(avg(when(benchmark < 0, ret)).over(trailing(w, n)),
-      avg(when(benchmark < 0, benchmark)).over(trailing(w, n)))
+    rollingCapture(ret, benchmark, benchmark < 0, w, n)
 
-  /** Rolling win rate: share of positive returns in the trailing n
-    * rows ([[winRate]] windowed).
+  /** Rolling win rate: share of positive returns among the non-null
+    * returns in the trailing n rows ([[winRate]] windowed).
     */
-  def rollingWinRate(ret: Column, w: WindowSpec, n: Int): Column =
-    avg(when(ret > 0, 1.0).otherwise(0.0)).over(trailing(w, n))
+  def rollingWinRate(ret: Column, w: WindowSpec, n: Int): Column = {
+    val cnt = slidingSum(ret.isNotNull, lit(1.0), w, n)
+    when(cnt > 0, slidingSum(ret > 0, lit(1.0), w, n) / cnt)
+  }
 
   // ------------------------------------------- benchmark-relative (full)
 

@@ -25,10 +25,14 @@ object Stats {
     * isNotNull gate matters: Spark's least/greatest SKIP null
     * arguments, so an unguarded clamp would silently turn every null
     * sample into `hi` instead of dropping it like every other
-    * aggregate in this family does.
+    * aggregate in this family does. The clamped values are summed as
+    * DECIMAL(30,10) and divided by the non-null count, so the mean is
+    * independent of the order rows are added in (the quote_stats
+    * convention); null for a group with no values.
     */
   def winsorizedMean(x: Column, lo: Column, hi: Column): Column =
-    avg(when(x.isNotNull, greatest(lo, least(hi, x))))
+    safeDiv(sum(when(x.isNotNull, greatest(lo, least(hi, x)))
+      .cast("decimal(30,10)")).cast("double"), count(x))
 
   /** Fixed-width histogram: bucket index per row (combine with
     * groupBy(key, bucket).count()).

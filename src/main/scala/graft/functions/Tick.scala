@@ -75,13 +75,21 @@ object Tick {
   def orderFlowImbalance(signedVolume: Column): Column =
     sum(signedVolume).cast("double")
 
-  /** Traded (dollar) value: sum(price*volume). Ref: tick/flow.py:65. */
+  /** Traded (dollar) value: sum(price*volume). Each p·v is summed as
+    * DECIMAL(30,10), so the total is exact and independent of the
+    * order rows are added in (retries, partitionings and engines agree).
+    * Ref: tick/flow.py:65.
+    */
   def tradedValue(price: Column, volume: Column): Column =
-    sum(price * volume).cast("double")
+    sum((price * volume).cast("decimal(30,10)")).cast("double")
 
-  /** Volume-weighted average price. Ref: tick/flow.py:88. */
+  /** Volume-weighted average price: [[tradedValue]] / sum(volume), both
+    * exact DECIMAL(30,10) sums; null for a zero-volume group.
+    * Ref: tick/flow.py:88.
+    */
   def vwap(price: Column, volume: Column): Column =
-    safeDiv(sum(price * volume), sum(volume).cast("double"))
+    safeDiv(tradedValue(price, volume),
+      sum(volume.cast("decimal(30,10)")).cast("double"))
 
   /** Tick rule: +1 up-tick, -1 down-tick, 0 otherwise (incl. first row).
     * Ref: tick/direction.py:11.

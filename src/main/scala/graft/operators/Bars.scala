@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
+
+import graft.functions.Tick
 
 /** Time-based OHLCV bar construction from tick data — the content of
   * the reference's declared-but-empty bars module (ffn_polars/expr/
@@ -17,18 +19,8 @@ object Bars {
   def timeBars(df: DataFrame, key: String, ts: String, price: String,
                volume: String, barLength: String,
                tiebreak: Option[String] = None): DataFrame =
-    df.groupBy(col(key), window(col(ts), barLength).as("w"))
-      .agg(
-        min_by(col(price), ordKey(ts, tiebreak)).as("open"),
-        max(col(price)).as("high"),
-        min(col(price)).as("low"),
-        max_by(col(price), ordKey(ts, tiebreak)).as("close"),
-        sum(col(volume)).as("volume"),
-        // decimal sums: order-independent → bar VWAPs are identical
-        // across retries/partitionings (and engine-reproducible)
-        (sum((col(price) * col(volume)).cast("decimal(30,10)")).cast("double") /
-          sum(col(volume).cast("decimal(30,10)")).cast("double")).as("vwap"),
-        count(lit(1)).as("n_ticks"))
+    ohlcv(df.groupBy(col(key), window(col(ts), barLength).as("w")),
+        ts, price, volume, tiebreak)
       .select(col(key), col("w.start").as("bar_start"), col("open"),
         col("high"), col("low"), col("close"), col("volume"),
         col("vwap"), col("n_ticks"))
@@ -88,20 +80,29 @@ object Bars {
   private def orderCols(ts: String, tiebreak: Option[String]) =
     col(ts) +: tiebreak.map(col).toSeq
 
+  /** The OHLCV bar aggregation over grouped ticks: open/close by
+    * min_by/max_by on the (ts, tiebreak) order, high, low, volume, the
+    * exact-decimal [[graft.functions.Tick.vwap]] (identical across
+    * retries, partitionings and engines; null for a zero-volume bar)
+    * and the tick count.
+    */
+  private[graft] def ohlcv(bars: RelationalGroupedDataset, ts: String,
+                           price: String, volume: String,
+                           tiebreak: Option[String]): DataFrame =
+    bars.agg(
+      min_by(col(price), ordKey(ts, tiebreak)).as("open"),
+      max(col(price)).as("high"),
+      min(col(price)).as("low"),
+      max_by(col(price), ordKey(ts, tiebreak)).as("close"),
+      sum(col(volume)).as("volume"),
+      Tick.vwap(col(price), col(volume)).as("vwap"),
+      count(lit(1)).as("n_ticks"))
+
   /** Shared OHLCV aggregation over a precomputed `_bar` bucket. */
   private def barsByBucket(df: DataFrame, key: String, ts: String,
                            price: String, volume: String,
                            tiebreak: Option[String]): DataFrame =
-    df.groupBy(col(key), col("_bar"))
-      .agg(
-        min_by(col(price), ordKey(ts, tiebreak)).as("open"),
-        max(col(price)).as("high"),
-        min(col(price)).as("low"),
-        max_by(col(price), ordKey(ts, tiebreak)).as("close"),
-        sum(col(volume)).as("volume"),
-        (sum((col(price) * col(volume)).cast("decimal(30,10)")).cast("double") /
-          sum(col(volume).cast("decimal(30,10)")).cast("double")).as("vwap"),
-        count(lit(1)).as("n_ticks"))
+    ohlcv(df.groupBy(col(key), col("_bar")), ts, price, volume, tiebreak)
       .withColumnRenamed("_bar", "bar")
 
   /** Tick bars: one bar per `every` ticks (reference-adjacent concept;

@@ -29,6 +29,14 @@ class BarsSpec extends SparkSpec {
     assert(a1.getDouble(2) == 11.0 && a1.getLong(8) == 1)
   }
 
+  test("time bars: a zero-volume bar has a null vwap") {
+    val ticks = Seq(("A", t(0), 10.0, 0.0), ("A", t(1), 11.0, 0.0),
+      ("A", t(6), 12.0, 2.0)).toDF("ticker", "ts", "p", "v")
+    val vwap = Bars.timeBars(ticks, "ticker", "ts", "p", "v", "5 minutes")
+      .orderBy($"bar_start").select($"vwap").as[Option[Double]].collect()
+    assert(vwap.toSeq == Seq(None, Some(12.0)))
+  }
+
   test("tick bars: one bar per N ticks in time order") {
     val ticks = (0 until 10).map(i => ("A", t(i), 100.0 + i, 1.0))
       .toDF("ticker", "ts", "p", "v")

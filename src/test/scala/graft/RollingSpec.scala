@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -76,5 +77,91 @@ class RollingSpec extends SparkSpec {
     assert(out(0)._3.isEmpty && out(0)._2.isDefined)
     // t=3 frame {1,2,3}: down rows 1,3 → avg(ra)=0.0 / avg(rb)=-0.015 = -0.0
     assert(math.abs(out(3)._3.get - 0.0) < 1e-12)
+  }
+
+  test("rolling beta recovers an exact linear relationship") {
+    // ra = 2·rb exactly → beta = 2 once the frame has ≥2 rows
+    val rb = Seq(0.01, -0.02, 0.015, 0.005, -0.01)
+    val df = rb.zipWithIndex.map { case (b, i) => ("a", i, 2 * b, b) }
+      .toDF("k", "t", "ra", "rb")
+    val got = df.select($"t", Eod.rollingBeta($"ra", $"rb", w, 3).as("beta"))
+      .orderBy($"t").select($"beta").as[Option[Double]].collect()
+    assert(got(0).isEmpty)                             // 1-row frame: undefined
+    got.drop(1).foreach(b => assert(math.abs(b.get - 2.0) < 1e-9))
+    // rolling corr of a perfect positive linear relationship is 1
+    val corr = df.select(Eod.rollingCorr($"ra", $"rb", w, 3).as("c"))
+      .where($"c".isNotNull).select($"c").as[Double].collect()
+    corr.foreach(c => assert(math.abs(c - 1.0) < 1e-9))
+  }
+
+  test("every rolling function equals its frame-bounded aggregate (seeded)") {
+    // 3 series of 45 rows, ~15% null ra and rb each; Gaussian returns
+    // so no frame is flat. n = 60 is longer than every series.
+    val rnd = new scala.util.Random(20261019L)
+    def draw(): Option[Double] =
+      if (rnd.nextDouble() < 0.15) None else Some(0.001 + 0.02 * rnd.nextGaussian())
+    val rows = for (k <- Seq("a", "b", "c"); t <- 0 until 45)
+      yield (k, t, draw(), draw())
+    val df = rows.toDF("k", "t", "ra", "rb")
+    val (ra, rb) = (col("ra"), col("rb"))
+    val paired = ra.isNotNull && rb.isNotNull
+    val (pa, pb) = (when(paired, ra), when(paired, rb))
+    val loss = when(ra.isNotNull, least(ra, lit(0.0)))
+    val annual = math.sqrt(252.0)
+    def ratio(a: Column, b: Column) = when(b =!= 0, a / b)
+    for (n <- Seq(1, 2, 3, 20, 60)) {
+      val f = Eod.trailing(w, n)
+      val (mean, sd) = (avg(ra).over(f), stddev_samp(ra).over(f))
+      val dsd = sqrt(avg(loss * loss).over(f))
+      def capture(side: Column) =
+        ratio(avg(when(paired && side, ra)).over(f),
+          avg(when(paired && side, rb)).over(f))
+      val cases = Seq(
+        "mean" -> (Eod.rollingMean(ra, w, n), mean),
+        "vol" -> (Eod.rollingVolatility(ra, w, n), sd),
+        "sharpe" -> (Eod.rollingSharpe(ra, w, n), ratio(mean, sd) * annual),
+        "downside" -> (Eod.rollingDownsideDev(ra, w, n), dsd),
+        "sortino" -> (Eod.rollingSortino(ra, w, n), ratio(mean, dsd) * annual),
+        "beta" -> (Eod.rollingBeta(ra, rb, w, n),
+          ratio(covar_samp(pa, pb).over(f), var_samp(pb).over(f))),
+        "corr" -> (Eod.rollingCorr(ra, rb, w, n), corr(pa, pb).over(f)),
+        "up" -> (Eod.rollingUpCapture(ra, rb, w, n), capture(rb > 0)),
+        "down" -> (Eod.rollingDownCapture(ra, rb, w, n), capture(rb < 0)),
+        "win" -> (Eod.rollingWinRate(ra, w, n),
+          avg(when(ra.isNotNull, when(ra > 0, 1.0).otherwise(0.0))).over(f)))
+      val out = df.select(col("k") +: col("t") +: cases.flatMap {
+          case (name, (got, ref)) => Seq(got.as(name), ref.as(s"${name}_ref"))
+        }: _*).collect()
+      assert(out.length == rows.length)
+      for (r <- out; (name, _) <- cases) {
+        def v(c: String) =
+          if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Double](c))
+        val (got, ref) = (v(name), v(s"${name}_ref"))
+        val ok = (got, ref) match {
+          case (None, None) => true
+          case (Some(a), Some(b)) =>
+            math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
+          case _ => false
+        }
+        assert(ok, s"$name n=$n ${r.getString(0)}/${r.getInt(1)}: $got vs $ref")
+      }
+    }
+  }
+
+  test("the rolling queries plan no bounded sliding frame") {
+    // The frame-difference form shows as (unboundedpreceding, -k)
+    // frames; a (-k, currentrow) frame would be the O(k)-per-row
+    // re-aggregating form coming back.
+    for (q <- Seq("eod_rolling", "eod_rolling_beta", "eod_rolling_corr",
+                  "eod_rolling_capture")) {
+      val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      df.collect() // finalize the adaptive plan
+      val p = df.queryExecution.executedPlan.toString.toLowerCase
+      assert(p.contains("specifiedwindowframe(rowframe, unboundedpreceding$(), -"),
+        s"$q: no frame-difference window\n" + p.take(1500))
+      assert("""specifiedwindowframe\(rowframe, -\d+, currentrow""".r
+          .findFirstIn(p).isEmpty,
+        s"$q: bounded sliding frame in the plan\n" + p.take(1500))
+    }
   }
 }

@@ -152,6 +152,32 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming_topk raises once a bucket outgrows its capacity of 16") {
+    // candidate tokens sharded into buckets exactly as the query does
+    val bucket = (graft.operators.Sketch.kmvHash(col("tok")) % 16).cast("int")
+    val cands = (0 until 400).map(i => s"tok$i").toDF("tok")
+      .select(col("tok"), bucket).as[(String, Int)].collect()
+    val b0 = cands.head._2
+    val same = cands.collect { case (t, b) if b == b0 => t }.toSeq
+    assert(same.length >= 17)
+    def topk(toks: Seq[String]) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-topk").toString
+      Seq((1L, toks.mkString(" "), "en", "web", 0L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$dir/documents.parquet")
+      SparkEntry.queries("streaming_topk")(spark, dir)
+        .as[(String, Long, Long)].collect()
+    }
+    // 16 distinct tokens fit the bucket: exact counts, no error term
+    val fits = topk(same.take(16))
+    assert(fits.length == 16 && fits.forall(r => r._2 == 1L && r._3 == 0L))
+    // the 17th evicts a counter, so its count would be inherited
+    val e = intercept[Exception](topk(same.take(17)))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(msgs.contains(s"bucket $b0 ") && msgs.contains("capacity 16"), msgs)
+  }
+
   test("stream-stream time-bounded join pairs halves across batches") {
     implicit val sqlCtx = spark.sqlContext
     val trades = MemoryStream[(Long, Timestamp, Long)]
