@@ -2,10 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.DoubleType
-
-import graft.expressions.{DotProduct, ShingleMinHash, StudentTCdf, WordShingles}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: registers graft's native
   * expressions as SQL functions so pure-SQL users get them too:
@@ -20,24 +17,9 @@ import graft.expressions.{DotProduct, ShingleMinHash, StudentTCdf, WordShingles}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.SquareRewriteRule)
-    ext.injectFunction((
-      FunctionIdentifier("t_cdf"),
-      new ExpressionInfo(classOf[StudentTCdf].getName, "t_cdf"),
-      (children: Seq[Expression]) =>
-        StudentTCdf(Cast(children(0), DoubleType), Cast(children(1), DoubleType))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (children: Seq[Expression]) => WordShingles(children(0),
-        children(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_min_hash"),
-      new ExpressionInfo(classOf[ShingleMinHash].getName, "shingle_min_hash"),
-      (children: Seq[Expression]) => ShingleMinHash(children(0),
-        children(1).eval().asInstanceOf[Int])))
+    graft.functions.Graft.sqlFunctions.foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

@@ -19,6 +19,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *     counts: Exchange, Sort, join strategies, codegen spans) per
   *     query, all queries by default
   *
+  * A name that is not a registered query fails before a session is
+  * built.
+  *
   * time/sweep read $SPARK_GRAFT_SF_DIR (default sf0.1) on
   * `local[$SPARK_GRAFT_CPUS]` (default 32); explain/audit read
   * $SPARK_GRAFT_SF_DIR (default sf0.01) on `local[8]`.
@@ -39,6 +42,15 @@ object Tool {
       s"usage: Tool time|sweep|explain|audit …, got '$cmd'")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       if (timing) "/root/testdata/sf0.1" else "/root/testdata/sf0.01")
+    lazy val slow = slowest(if (rest.nonEmpty) rest(0).toInt else 25)
+    // every named query is checked before a session is built
+    val names: Seq[String] = cmd match {
+      case "time" => rest(0).split(",").toSeq
+      case "sweep" => slow.map(_._1)
+      case "explain" => rest(1).split(",").toSeq
+      case "audit" => rest.lift(1).fold(SparkEntry.queries.keys.toSeq.sorted)(_.split(",").toSeq)
+    }
+    graft.queries.Registry.requireRegistered(names)
     val cpus = if (timing) sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") else "8"
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -46,19 +58,18 @@ object Tool {
     cmd match {
       case "time" =>
         val reps = if (rest.length > 1) rest(1).toInt else 3
-        rest(0).split(",").foreach { name =>
+        names.foreach { name =>
           (1 to reps).foreach { i =>
             println(f"$name rep$i ${time(spark, sfDir, name)}%.2f s")
           }
         }
       case "sweep" =>
-        sweep(spark, sfDir, if (rest.nonEmpty) rest(0).toInt else 25)
+        sweep(spark, sfDir, slow)
       case "explain" =>
-        explain(spark, sfDir, rest(0), rest(1).split(","),
+        explain(spark, sfDir, rest(0), names,
           if (rest.length > 2) rest(2) else "")
       case "audit" =>
-        audit(spark, sfDir, rest(0),
-          if (rest.length > 1) Some(rest(1).split(",").toSet) else None)
+        audit(spark, sfDir, rest(0), names)
     }
     spark.stop()
   }
@@ -74,11 +85,19 @@ object Tool {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def sweep(spark: SparkSession, sfDir: String, n: Int): Unit = {
-    val round = sys.env.getOrElse("SPARK_GRAFT_ROUND", "r14")
+  private def round: String = sys.env.getOrElse("SPARK_GRAFT_ROUND", "r14")
+
+  /** The `n` slowest queries of the round's BENCH_LOCAL record, with
+    * their suite seconds.
+    */
+  private def slowest(n: Int): Seq[(String, Double)] = {
     val rec = Bench.parseQueries(new String(Files.readAllBytes(
       Paths.get(s"BENCH_LOCAL_$round.json")), "UTF-8"))
-    val slowest = rec.toSeq.sortBy(-_._2).take(n)
+    rec.toSeq.sortBy(-_._2).take(n)
+  }
+
+  private def sweep(spark: SparkSession, sfDir: String,
+                    slowest: Seq[(String, Double)]): Unit = {
     def r3(v: Double) = math.round(v * 1000) / 1000.0
     val mins = slowest.map { case (name, suite) =>
       val ts = (1 to 3).map { i =>
@@ -114,30 +133,28 @@ object Tool {
   }
 
   private def audit(spark: SparkSession, sfDir: String, out: String,
-                    only: Option[Set[String]]): Unit = {
+                    names: Seq[String]): Unit = {
     def count(plan: String, token: String): Int =
       token.r.findAllMatchIn(plan).size
     val sb = new StringBuilder
     sb.append("query\texchange\tsort\tsmj\tbhj\tshj\tbnlj\tcartesian\twindow\tcodegen\tscans\n")
-    SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-      .foreach { name =>
-        try {
-          // count only the numbered-operator list (before "details")
-          val head = formatted(spark, sfDir, name).split("\n\n")(0)
-          sb.append((name +: Seq("\\bExchange\\b", "\\bSort\\b",
-              "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
-              "BroadcastNestedLoopJoin", "CartesianProduct", "\\bWindow\\b",
-              "WholeStageCodegen", "Scan parquet").map(count(head, _)))
-            .mkString("\t") + "\n")
-        } catch {
-          case e: Throwable =>
-            // ERR rows padded to the header's column count so a partial
-            // audit can't silently mis-parse downstream
-            sb.append((Seq(name, s"ERR ${e.getClass.getSimpleName}") ++
-              Seq.fill(9)("ERR")).mkString("\t") + "\n")
-        }
+    names.distinct.sorted.foreach { name =>
+      try {
+        // count only the numbered-operator list (before "details")
+        val head = formatted(spark, sfDir, name).split("\n\n")(0)
+        sb.append((name +: Seq("\\bExchange\\b", "\\bSort\\b",
+            "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+            "BroadcastNestedLoopJoin", "CartesianProduct", "\\bWindow\\b",
+            "WholeStageCodegen", "Scan parquet").map(count(head, _)))
+          .mkString("\t") + "\n")
+      } catch {
+        case e: Throwable =>
+          // ERR rows padded to the header's column count so a partial
+          // audit can't silently mis-parse downstream
+          sb.append((Seq(name, s"ERR ${e.getClass.getSimpleName}") ++
+            Seq.fill(9)("ERR")).mkString("\t") + "\n")
       }
+    }
     Files.write(Paths.get(out), sb.toString.getBytes("UTF-8"))
   }
 }

@@ -9,6 +9,7 @@ object Verify {
     // queries — local iteration aid; the driver always runs all.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    only.foreach(graft.queries.Registry.requireRegistered)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.types.DoubleType
 
 import graft.expressions.{DotProduct, ShingleMinHash, StudentTCdf, WordShingles}
@@ -14,34 +14,35 @@ import graft.expressions.{DotProduct, ShingleMinHash, StudentTCdf, WordShingles}
   */
 object Graft {
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "t_cdf",
-      exprs => StudentTCdf(Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      exprs => WordShingles(exprs(0), intLit(exprs(1), "word_shingles width")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_min_hash",
-      exprs => ShingleMinHash(exprs(0), intLit(exprs(1), "shingle_min_hash width")),
-      "built-in")
+    sqlFunctions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, build, "built-in")
+    }
     if (!spark.experimental.extraOptimizations.contains(graft.plans.SquareRewriteRule)) {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.SquareRewriteRule
     }
   }
 
+  /** graft's SQL functions as (name, expression class, builder): the one
+    * table both [[register]] and [[graft.GraftExtensions]] install.
+    */
+  private[graft] val sqlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("t_cdf", classOf[StudentTCdf],
+      exprs => StudentTCdf(Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType))),
+    ("graft_dot", classOf[DotProduct], exprs => DotProduct(exprs(0), exprs(1))),
+    ("word_shingles", classOf[WordShingles],
+      exprs => WordShingles(exprs(0), intLit(exprs(1), "word_shingles width"))),
+    ("shingle_min_hash", classOf[ShingleMinHash],
+      exprs => ShingleMinHash(exprs(0), intLit(exprs(1), "shingle_min_hash width"))))
+
   /** Width arguments are plan-time constants (they select the generated
     * kernel), so the SQL form requires an integer literal.
     */
-  private def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                     what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+  private def intLit(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
+      s"$what must be an integer literal, got ${other.sql}")
   }
 
   /** Probabilistic momentum (reference ratios.py:121 / src/lib.rs:8):

@@ -511,7 +511,7 @@ class PlanSpec extends SparkSpec {
     // only windows are bucket-partitioned. The r15 localCheckpoint pins
     // hide the producer behind `Scan ExistingRDD` in the query's visible
     // plan, so assert on the UNPINNED producer (pin = false).
-    val (rg, _) = SparkEntry.kruskalRankSums(spark, dir, pin = false)
+    val (rg, _) = graft.queries.StatsQueries.kruskalRankSums(spark, dir, pin = false)
     graft.util.Guardrails.requirePartitionedWindows(rg)
     val p = rg.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p.take(800))
