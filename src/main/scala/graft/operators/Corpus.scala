@@ -246,7 +246,8 @@ object Corpus {
     * unlikely tail.
     */
   def stratifiedSampleN(df: DataFrame, idCol: String, strataCol: Column,
-                        n: Int, oversample: Double = 4.0): DataFrame = {
+                        n: Int,
+                        oversample: Double = DefaultOversample): DataFrame = {
     val withU = df.withColumn("_stratum", strataCol)
       .withColumn("_u", md5Uniform(col(idCol)))
     val counts = withU.groupBy(col("_stratum"))
@@ -254,12 +255,23 @@ object Corpus {
     val w = Window.partitionBy(col("_stratum"))
       .orderBy(col("_u"), col(idCol))
     withU.join(broadcast(counts), "_stratum")
-      .where(col("_u") < least(lit(1.0), lit(oversample * n) / col("_cnt")))
+      .where(col("_u") < sampleNRate(col("_cnt"), n, oversample))
       .withColumn("_rnk", row_number().over(w))
       .where(col("_rnk") <= n)
       .drop("_u", "_cnt", "_rnk")
       .withColumnRenamed("_stratum", "stratum")
   }
+
+  /** Default oversample factor of [[stratifiedSampleN]]'s pre-filter. */
+  val DefaultOversample = 4.0
+
+  /** The pre-filter rate of [[stratifiedSampleN]] for a stratum of
+    * `cnt` rows, min(1, oversample·n/cnt) — a stream ranking the same
+    * survivor set applies the same rate.
+    */
+  def sampleNRate(cnt: Column, n: Int,
+                  oversample: Double = DefaultOversample): Column =
+    least(lit(1.0), lit(oversample * n) / cnt)
 
   /** Weighted sampling without replacement (Efraimidis & Spirakis 2006
     * A-Res): each row draws key = ln(u)/w (u = md5-uniform, w > 0 its
@@ -358,11 +370,14 @@ object Corpus {
     */
   def mixtureWeights(df: DataFrame, strataCol: Column, textCol: String,
                      alpha: Double = 0.5): DataFrame =
-    mixtureWeightsFromCounts(
-      df.groupBy(strataCol.as("stratum"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(Text.tokenCount(col(textCol)).cast("long")).as("n_tokens")),
-      alpha)
+    mixtureWeightsFromCounts(mixtureCounts(df, strataCol, textCol), alpha)
+
+  /** The (stratum, n_docs, n_tokens) count table of [[mixtureWeights]]. */
+  def mixtureCounts(df: DataFrame, strataCol: Column,
+                    textCol: String): DataFrame =
+    df.groupBy(strataCol.as("stratum"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(Text.tokenCount(col(textCol)).cast("long")).as("n_tokens"))
 
   /** [[mixtureWeights]] from a PRECOMPUTED (stratum, n_docs, n_tokens)
     * relation — public so the streaming monitor reuses the identical

@@ -159,10 +159,16 @@ object Dedup {
       .agg(min(col(idCol)).as("_min_id"), count(lit(1)).as("_c"))
       .where(col("_c") <= maxBucket)
     val q = lshBandKeys(newDocs, idCol, textCol, k, bands, shingleWidth)
-    q.join(idx, Seq("band", "bucket"))
-      .groupBy(col(idCol))
-      .agg(min(col("_min_id")).as("dup_of"))
+    earliestSharer(q.join(idx, Seq("band", "bucket"))
+      .select(col(idCol), col("_min_id").as("dup_of")), idCol)
   }
+
+  /** Per doc, the least `dup_of` over its (idCol, dup_of) bucket hits:
+    * each hit is its bucket's minimum id, which bounds every sharer in
+    * that bucket, so the least hit is the earliest sharer overall.
+    */
+  def earliestSharer(hits: DataFrame, idCol: String): DataFrame =
+    hits.groupBy(col(idCol)).agg(min(col("dup_of")).as("dup_of"))
 
   /** 32-bit SimHash fingerprints from whitespace tokens. Token hash =
     * first 8 md5 hex chars as an int; fingerprint bit j set iff the

@@ -30,7 +30,8 @@ object Events {
     * qualifying step-(k-1) event. One pass: a running
     * min-of-qualifying-time window per step over the same
     * (user_id, ts, event_id) order — k windows, one shuffle.
-    * Returns one row per user with reach flags (step1/step2/step3).
+    * Returns one row per user with reach flags (s1/s2/s3), the
+    * [[funnelReach]] of per-event step flags.
     */
   def funnelFlags(events: DataFrame, step1: String, step2: String,
                   step3: String, maxGapUs: Option[Long] = None): DataFrame = {
@@ -51,11 +52,20 @@ object Events {
     val e3 = e2.withColumn("_q3",
       t === step3 && col("_t2").isNotNull && col("_us") > col("_t2") &&
         inWin(col("_t2")))
-    e3.groupBy(col("user_id"))
-      .agg(max(when(t === step1, 1).otherwise(0)).as("s1"),
-        max(when(col("_q2"), 1).otherwise(0)).as("s2"),
-        max(when(col("_q3"), 1).otherwise(0)).as("s3"))
+    funnelReach(e3.select(col("user_id"),
+      when(t === step1, 1).otherwise(0).as("s1"),
+      when(col("_q2"), 1).otherwise(0).as("s2"),
+      when(col("_q3"), 1).otherwise(0).as("s3")))
   }
+
+  /** Per-user reach from (user_id, s1, s2, s3) 0/1 step flags: the
+    * max of each flag. Flags only rise, so the same max merges a
+    * stream's per-batch reach emissions.
+    */
+  def funnelReach(flags: DataFrame): DataFrame =
+    flags.groupBy(col("user_id"))
+      .agg(max(col("s1")).as("s1"), max(col("s2")).as("s2"),
+        max(col("s3")).as("s3"))
 
   /** The 4-integer experiment relation BOTH A/B tests build on —
     * (n_a, conv_a, n_b, conv_b) as a 1-row DataFrame. Variant by md5
@@ -316,12 +326,19 @@ object Events {
     * as an exact decimal sum so the split replays hash-identically.
     */
   def attribution(events: DataFrame, conversionType: String,
-                  lookbackUs: Long): DataFrame = {
+                  lookbackUs: Long): DataFrame =
+    attributionReport(conversionTouches(events, conversionType, lookbackUs))
+
+  /** One (last_touch, first_touch, rev) row per conversion event: the
+    * kernel of [[attribution]].
+    */
+  def conversionTouches(events: DataFrame, conversionType: String,
+                        lookbackUs: Long): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val touchT = when(col("event_type") =!= conversionType, col("event_type"))
     val touchUs = when(col("event_type") =!= conversionType, us(col("ts")))
-    val conv = events
+    events
       .withColumn("_last_ch", last(touchT, ignoreNulls = true).over(w))
       .withColumn("_last_us", last(touchUs, ignoreNulls = true).over(w))
       .withColumn("_first_ch", first(touchT, ignoreNulls = true).over(w))
@@ -331,10 +348,17 @@ object Events {
             us(col("ts")) - col("_last_us") <= lookbackUs, col("_last_ch"))
           .otherwise(lit("direct")).as("last_touch"),
         coalesce(col("_first_ch"), lit("direct")).as("first_touch"),
-        col("value").cast("decimal(30,10)").as("_rev"))
+        col("value").as("rev"))
+  }
+
+  /** The per-channel report of [[attribution]] over (last_touch,
+    * first_touch, rev) conversion rows: last-touch count and exact
+    * decimal revenue, first-touch count, either side 0 when absent.
+    */
+  def attributionReport(conv: DataFrame): DataFrame = {
     val byLast = conv.groupBy(col("last_touch").as("channel"))
       .agg(count(lit(1)).as("n_last_touch"),
-        sum(col("_rev")).as("_rev_last"))
+        sum(col("rev").cast("decimal(30,10)")).as("_rev_last"))
     val byFirst = conv.groupBy(col("first_touch").as("channel"))
       .agg(count(lit(1)).as("n_first_touch"))
     byLast.join(byFirst, Seq("channel"), "full_outer")
@@ -462,11 +486,17 @@ object Events {
     */
   def transitions(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val pairs = events
+    transitionReport(events
       .withColumn("_from", lag(col("event_type"), 1).over(w))
       .where(col("_from").isNotNull)
-      .groupBy(col("_from").as("from_type"),
-        col("event_type").as("to_type"))
+      .select(col("_from").as("from_type"), col("event_type").as("to_type")))
+  }
+
+  /** The count/probability report of [[transitions]] over one
+    * (from_type, to_type) row per adjacency.
+    */
+  def transitionReport(adjacencies: DataFrame): DataFrame = {
+    val pairs = adjacencies.groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
     val totals = pairs.groupBy(col("from_type"))
       .agg(sum(col("n")).as("_total"))
@@ -491,7 +521,12 @@ object Events {
     * one hash(user_id) exchange — the run-compression lag() and, on
     * the surviving rows only, the interval lead().
     */
-  def scd2(events: DataFrame): DataFrame = {
+  def scd2(events: DataFrame): DataFrame = flagCurrent(scd2Intervals(events))
+
+  /** The (user_id, state, valid_from_us, valid_to_us) intervals of
+    * [[scd2]], before the open-row flag.
+    */
+  def scd2Intervals(events: DataFrame): DataFrame = {
     // epoch-µs is monotone with ts, so ordering by valid_from_us is the
     // same (ts, event_id) total order after the rename below
     val wAll = Window.partitionBy("user_id")
@@ -506,10 +541,14 @@ object Events {
     kept
       .withColumn("valid_to_us",
         coalesce(lead(col("valid_from_us"), 1).over(wKept), lit(OpenUs)))
-      .withColumn("is_current", (col("valid_to_us") === OpenUs).cast("boolean"))
       .select(col("user_id"), col("state"), col("valid_from_us"),
-        col("valid_to_us"), col("is_current"))
+        col("valid_to_us"))
   }
+
+  /** SCD2 intervals with `is_current` set on the open row. */
+  def flagCurrent(intervals: DataFrame): DataFrame =
+    intervals.select(col("user_id"), col("state"), col("valid_from_us"),
+      col("valid_to_us"), (col("valid_to_us") === OpenUs).as("is_current"))
 
   /** Per-segment A/B lift (op 398) — the heterogeneous-treatment-
     * effect readout after the op-350 global test: the SAME md5 split

@@ -338,6 +338,15 @@ object Similarity {
   def knnGraph(df: DataFrame, idCol: String, vecCol: String, k: Int,
                dim: Int, planes: Int = 4,
                tableOffsets: Seq[Int] = Seq.empty,
+               maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
+    knnTopK(knnPairs(df, idCol, vecCol, dim, planes, tableOffsets,
+      maxBucket), k)
+
+  /** The candidate edges of [[knnGraph]]: one (query_id, neighbor_id,
+    * cosine) row per pair sharing a capped bucket in any table.
+    */
+  def knnPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
+               planes: Int = 4, tableOffsets: Seq[Int] = Seq.empty,
                maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
     val capped = knnIndexRelation(df, idCol, vecCol, dim, planes,
       tableOffsets, maxBucket)
@@ -345,11 +354,18 @@ object Similarity {
       col("nm").as("qn"), col("bucket"), col("tbl"))
     val c = capped.select(col("_id").as("neighbor_id"), col("v").as("cv"),
       col("nm").as("cn"), col("bucket"), col("tbl"))
-    val pairs = q.join(c, Seq("tbl", "bucket"))
+    q.join(c, Seq("tbl", "bucket"))
       .where(col("neighbor_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(dotNative(col("qv"), col("cv"))
         / (col("qn") * col("cn"))).as("cosine"))
+  }
+
+  /** The k best neighbours per query of (query_id, neighbor_id, cosine)
+    * edges, ties to the lower neighbor id: (query_id, rank,
+    * neighbor_id, cosine).
+    */
+  def knnTopK(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
     pairs.withColumn("rank", row_number().over(w))

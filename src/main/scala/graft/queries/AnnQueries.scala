@@ -377,11 +377,8 @@ object AnnQueries {
     // oracle replays the cap via a bucket-count CTE); size planes
     // with Similarity.planesForN at real corpus scale.
     "ann_knn_graph" -> Query((s, dir) =>
-      Similarity.knnGraph(tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          3, EmbDim, planes = annPlanes(s))
-        .withColumn("rnk", col("rank").cast("long")).drop("rank")
-        .select(col("query_id"), col("rnk"), col("neighbor_id"),
-          round(col("cosine"), 6).as("cosine")),
+      knnGraphReport(Similarity.knnPairs(tbl(s, dir, "embeddings"),
+        "vec_id", "embedding", EmbDim, planes = annPlanes(s))),
       // kNN graph: both LSH tables replayed (offsets 0 and 4), pair
       // dedup by max over identical cosines, self-pairs excluded.
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),

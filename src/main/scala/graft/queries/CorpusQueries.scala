@@ -288,20 +288,8 @@ object CorpusQueries {
     // coin, thresholded twice). Per (source, split): docs, tokens, and
     // the realized fraction (exact integer ratio over the tiny
     // source-sized relation). Map + one keyed agg + one small window.
-    "corpus_split" -> Query((s, dir) => {
-      val u = Corpus.md5Uniform(col("doc_id"))
-      val wSrc = Window.partitionBy(col("source"))
-      tbl(s, dir, "documents")
-        .withColumn("split",
-          when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test"))
-        .withColumn("ntok", Text.tokenCount(col("text")).cast("long"))
-        .groupBy(col("source"), col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("ntok")).as("n_tokens"))
-        .withColumn("frac",
-          round(col("n_docs").cast("double")
-            / sum(col("n_docs")).over(wSrc), 6))
-    },
+    "corpus_split" -> Query((s, dir) =>
+      splitManifest(splitAssign(tbl(s, dir, "documents"))),
       // op 197: same md5 coin, same thresholds, exact fractions.
       s"""WITH u AS (
           |  SELECT source, doc_id,
@@ -576,10 +564,8 @@ object CorpusQueries {
           |SELECT source, doc_id FROM r WHERE rnk <= 5
           |ORDER BY source, doc_id""".stripMargin)),
     "corpus_mixture" -> Query((s, dir) =>
-      Corpus.mixtureWeights(tbl(s, dir, "documents"), col("source"),
-          "text", alpha = 0.5)
-        .select(col("stratum").as("source"), col("n_docs"),
-          col("n_tokens"), col("share"), col("weight")),
+      mixtureReport(Corpus.mixtureCounts(tbl(s, dir, "documents"),
+        col("source"), "text")),
       // Temperature-scaled mixture weights: share^alpha quantized to
       // 1e-6 longs before normalizing; floor-quantized outputs.
       ("""WITH t AS (SELECT source, len(regexp_split_to_array(trim(text), '\s+')) AS ntok FROM documents),

@@ -74,6 +74,20 @@ object DedupQueries {
       s"(strpos('0123456789abcdef', substr(md5(_w), $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
     ).mkString("(", " + ", ")")
 
+  /** CTE chain ending in bands(doc_id, band, bucket) — the front half
+    * of both the all-pairs and the incremental oracles. */
+  private val minhashBandsCte =
+      s"""$TOKS_CTE, sh AS (
+        |  SELECT doc_id, unnest(list_distinct(list_transform(
+        |    range(1, greatest(len(toks)-2, 1) + 1),
+        |    i -> array_to_string(toks[i:i+2], ' ')))) AS s
+        |  FROM t
+        |), ab AS (
+        |  SELECT doc_id, ${md5Word(0)} AS a, ${md5Word(8)} AS b
+        |  FROM (SELECT doc_id, md5(s) AS h FROM sh)
+        |), sig AS (SELECT doc_id, $sigMins FROM ab GROUP BY doc_id),
+        |bands AS ($bandSelects)""".stripMargin
+
   private val minhashPairsSql =
       s"""$minhashBandsCte
         |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -91,7 +105,16 @@ object DedupQueries {
     },
       // Incremental twin: index buckets (min id, count) from the
       // original docs; planted copies query them. Same bands chain.
-      minhashIncrementalSql),
+      s"""$minhashBandsCte,
+        |idx AS (
+        |  SELECT band, bucket, min(doc_id) AS min_id, count(*) AS c
+        |  FROM bands WHERE doc_id < 1000000 GROUP BY band, bucket
+        |),
+        |q AS (SELECT doc_id, band, bucket FROM bands WHERE doc_id >= 1000000)
+        |SELECT q.doc_id, min(idx.min_id) AS dup_of
+        |FROM q JOIN idx ON q.band = idx.band AND q.bucket = idx.bucket
+        |WHERE idx.c <= 10000
+        |GROUP BY q.doc_id ORDER BY q.doc_id""".stripMargin),
 
     // ---- dedup (ops 46-50)
     "dedup_exact" -> Query((s, dir) =>

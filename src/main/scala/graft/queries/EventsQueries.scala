@@ -51,18 +51,11 @@ object EventsQueries {
 
     // ---- sessionization (session_window: same expression batch+stream)
     "sessionize" -> Query((s, dir) =>
-      graft.streaming.EventStream.sessionize(events(s, dir), "30 minutes")
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_sessions"),
-          round(sum(col("n_events")).cast("double") / count(lit(1)), 6).as("avg_events"),
-          // integer-µs quantize instead of round(x,6): Spark's round
-          // uses the double's SHORTEST decimal (BigDecimal.valueOf),
-          // DuckDB rounds the true binary value — they disagree by 1 ulp
-          // on half-boundary averages. floor(avg_µs + 0.5)/1e6 is the
-          // same IEEE ops on both engines.
-          (floor(sum(unix_micros(col("last_ts")) - unix_micros(col("first_ts")))
-              .cast("double") / count(lit(1)) + lit(0.5)).cast("long") / 1e6)
-            .as("avg_duration_s")),
+      sessionReport(graft.streaming.EventStream
+        .sessionize(events(s, dir), "30 minutes")
+        .select(col("user_id"), col("n_events"),
+          unix_micros(col("first_ts")).as("first_us"),
+          unix_micros(col("last_ts")).as("last_us"))),
       """WITH x AS (
           |  SELECT user_id, ts, event_id,
           |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
@@ -589,8 +582,7 @@ object EventsQueries {
           |FROM act a JOIN cohorts c USING (cohort_us)
           |ORDER BY cohort_us, week_offset""".stripMargin),
     "events_scd2" -> Query((s, dir) =>
-      graft.operators.Events.scd2(events(s, dir))
-        .withColumn("is_current", col("is_current").cast("int")),
+      scd2Report(graft.operators.Events.scd2Intervals(events(s, dir))),
       """WITH e AS (
           |  SELECT user_id, event_type AS state, epoch_us(ts) AS vf, ts,
           |    event_id,
@@ -723,18 +715,7 @@ object EventsQueries {
         .agg(min(col("t1")).as("t1"), min(col("t0")).as("t0"))
         .select(floor((col("t1") - col("t0")) / 1e6).cast("long")
           .as("lag_s"))
-      val nSign = t0.agg(count(lit(1)).as("n_signups"))
-      lag_.agg(count(lit(1)).as("n_converted"),
-          // r14: one percentile buffer for both cuts (same R-7 values)
-          percentile(col("lag_s"), array(lit(0.5), lit(0.9))).as("_q2"))
-        .withColumn("_med", element_at(col("_q2"), 1))
-        .withColumn("_p90", element_at(col("_q2"), 2))
-        .crossJoin(broadcast(nSign))
-        .select(col("n_signups"), col("n_converted"),
-          (floor(col("n_converted").cast("double") / col("n_signups")
-            * 1e6 + lit(0.5)) / 1e6).as("conversion_rate"),
-          round(col("_med"), 1).as("median_lag_s"),
-          round(col("_p90"), 1).as("p90_lag_s"))
+      conversionLagReport(lag_, t0.agg(count(lit(1)).as("n_signups")))
     },
       // op 364: same first-signup/first-later-purchase lags, R-7
       // quantiles on integer seconds, exact rate.
@@ -844,14 +825,11 @@ object EventsQueries {
     // TakeOrderedAndProject (driver-sized k, no unpartitioned window).
     "events_journeys" -> Query((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      events(s, dir)
+      journeysReport(events(s, dir)
         .withColumn("e2", lag(col("event_type"), 1).over(w))
         .withColumn("e1", lag(col("event_type"), 2).over(w))
         .where(col("e1").isNotNull)
-        .groupBy(col("e1"), col("e2"), col("event_type").as("e3"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("e1"), col("e2"), col("e3"))
-        .limit(10)
+        .select(col("e1"), col("e2"), col("event_type").as("e3")))
     },
       // op 356: same two-lag path counts, same deterministic top-10.
       """WITH p AS (

@@ -1256,9 +1256,6 @@ object RelQueries {
         |GROUP BY GROUPING SETS ((c_mktsegment, o_orderpriority),
         |                        (c_mktsegment), (o_orderpriority))
         |ORDER BY seg, pri""".stripMargin),
-    // Batch twin of streaming/EventStream.windowedStats — tumbling
-    // 1h windows; identical semantics run under readStream + watermark
-    // (StreamingSpec exercises that path).
     // Salted two-phase aggregation (op 64): results must equal the
     // plain groupBy — the salt is an internal execution detail. Sum in
     // decimal so the two-phase re-association can't wiggle low bits;
@@ -1281,14 +1278,11 @@ object RelQueries {
         |  round(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE), 4) AS sum_value,
         |  count(DISTINCT event_id % 1000) AS distinct_bucket
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // Tumbling 1h windows by EventStream.windowedStats, the expression
+    // streaming_window_agg runs under readStream + watermark.
     "window_agg" -> Query((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast("decimal(30,10)")).cast("double"), 4)
-            .as("sum_value"))
-        .select(unix_micros(col("w.start")).as("ws"), col("event_type"),
-          col("n"), col("sum_value")),
+      windowAggReport(graft.streaming.EventStream
+        .windowedStats(events(s, dir), "1 hour")),
       """SELECT epoch_us(date_trunc('hour', ts)) AS ws, event_type,
           |  count(*) AS n,
           |  round(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE), 4) AS sum_value

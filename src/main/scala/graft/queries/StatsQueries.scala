@@ -1544,28 +1544,9 @@ object StatsQueries {
     // longs so the cell sum is an exact integer; χ² and dof
     // reported (the p-value needs the incomplete gamma — out of
     // replayable-SQL scope, documented).
-    "stats_chi2_independence" -> Query((s, dir) => {
-      val o = tbl(s, dir, "documents")
-        .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("o"))
-      val rowT = o.groupBy(col("source")).agg(sum(col("o")).as("rt"))
-      val colT = o.groupBy(col("lang")).agg(sum(col("o")).as("ct"))
-      val tot = o.agg(sum(col("o")).as("n"))
-      val cells = o.join(broadcast(rowT), "source")
-        .join(broadcast(colT), "lang")
-        .crossJoin(broadcast(tot))
-        .withColumn("e", (col("rt") * col("ct")).cast("double") /
-          col("n").cast("double"))
-        .withColumn("t", floor((col("o").cast("double") - col("e")) *
-          (col("o").cast("double") - col("e")) / col("e") * 1e9 + 0.5)
-          .cast("long"))
-      cells.agg(count(lit(1)).as("n_cells"),
-          countDistinct(col("source")).as("n_sources"),
-          countDistinct(col("lang")).as("n_langs"),
-          (sum(col("t")).cast("double") / 1e9).as("chi2r"))
-        .select(col("n_cells"),
-          ((col("n_sources") - 1) * (col("n_langs") - 1)).as("dof"),
-          round(col("chi2r"), 6).as("chi2"))
-    },
+    "stats_chi2_independence" -> Query((s, dir) =>
+      chi2Report(tbl(s, dir, "documents")
+        .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("o"))),
       // op 241: exact integer-ratio expected counts, 1e-9-quantized
       // cell terms.
       """WITH o AS (SELECT source, lang, count(*) AS o FROM documents GROUP BY 1, 2),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.operators.{Corpus, Similarity, Sketch}
+import graft.operators.{Corpus, Dedup, Similarity, Sketch}
 
 /** Structured Streaming replays (`streaming_`) and the harness that
   * runs them. A replay whose sink equals a batch query's result is a
@@ -225,47 +225,49 @@ object StreamingQueries {
       col("value").cast("double").as("price")) ++ extra: _*)
 
   /** Shared tail of the streaming bar twins (op 136): the batch OHLCV
-    * over a bar-stamped tick sink — the same aggregation and rounding
-    * as the batch bar queries, so the oracle is shared. The sink's
-    * synthetic replay ts is order-equivalent to (ts, event_id), which
-    * makes min_by/max_by land the batch open/close.
+    * aggregation over a bar-stamped tick sink, then the batch bar
+    * queries' [[barReport]]. The sink's synthetic replay ts is
+    * order-equivalent to (ts, event_id), which makes min_by/max_by
+    * land the batch open/close.
     */
   private def barSinkReport(sunk: DataFrame): DataFrame =
-    graft.operators.Bars.ohlcv(sunk.groupBy(col("symbol"), col("bar")),
-        "ts", "price", "volume", tiebreak = None)
-      .select(col("symbol").as("event_type"), col("bar"),
-        round(col("open"), 6).as("open"), round(col("high"), 6).as("high"),
-        round(col("low"), 6).as("low"), round(col("close"), 6).as("close"),
-        round(col("volume"), 6).as("volume"),
-        round(col("vwap"), 6).as("vwap"), col("n_ticks"))
+    barReport(graft.operators.Bars.ohlcv(
+      sunk.groupBy(col("symbol").as("event_type"), col("bar")),
+      "ts", "price", "volume", tiebreak = None))
+
+  /** Bottom-k compaction of an Update-mode bottom-k sink: `distinct`
+    * drops the re-emissions, then the k least rows by `order` per
+    * `group` are the final state (the [[graft.streaming.Stateful]]
+    * bottom-k merge argument).
+    */
+  private def bottomK(sunk: DataFrame, group: String, k: Int,
+                      order: String*): DataFrame =
+    sunk.distinct()
+      .withColumn("_rnk", row_number().over(
+        Window.partitionBy(col(group)).orderBy(order.map(col): _*)))
+      .where(col("_rnk") <= k)
+      .drop("_rnk")
 
   val registry: Seq[(String, Registration)] = Seq(
-    // Streaming Hawkes, REPLAYED to batch (op 346): ≤60 arrival-µs of
-    // state per symbol; each arrival's quantized kernel sum over the
-    // pre-append state equals the batch rowsBetween(−60,−1) frame, so
-    // the batch op-342 oracle replays the stream verbatim.
+    // Streaming Hawkes (op 346): ≤60 arrival-µs of state per symbol;
+    // each arrival's quantized kernel sum over the pre-append state
+    // equals the batch rowsBetween(−60,−1) frame.
     "streaming_hawkes" -> Twin((s, dir) => {
       import s.implicits._
-      streamReplay(s, dir, "events", "shaw") { src =>
+      hawkesReport(streamReplay(s, dir, "events", "shaw") { src =>
         val evs = graft.sources.Tables.normalizeEventTs(src)
           .select(col("event_type").as("symbol"), col("ts"),
             col("event_id").as("eventId"))
           .as[graft.streaming.Stateful.HawkesIn]
         graft.streaming.Stateful.hawkesStream(evs).toDF
-      }
-        .select(col("symbol").as("event_type"), col("event_id"),
-          round(lit(0.05) + lit(0.3) * (col("sumq").cast("double") / 1e9), 6)
-            .as("lambda"))
-    },
-      // op 346: per-arrival kernel sums over the pre-append ≤60-arrival
-      // state equal the batch rowsBetween(−60,−1) frame — the stream
-      // replays the batch op-342 oracle.
-      batch = "tick_hawkes"),
+      }.withColumnRenamed("symbol", "event_type"))
+    }, batch = "tick_hawkes"),
 
-    // ---- streaming funnel, REPLAYED to batch (op 337): the op-330
-    // reach flags maintained per user at ingest (flatMapGroupsWithState,
-    // two longs + a boolean of state per user); the oracle is the batch
-    // events_funnel SQL verbatim — batch/stream parity for funnels.
+    // ---- streaming funnel (op 337): the op-330 reach flags maintained
+    // per user at ingest (flatMapGroupsWithState, two longs + a boolean
+    // of state per user). Flags are monotone and keyed by the EARLIEST
+    // qualifying step times, so the batch reach (max per user) over the
+    // per-batch emissions is the final reach.
     "streaming_funnel" -> Twin((s, dir) => {
       import s.implicits._
       streamReplay(s, dir, "events", "sfun") { src =>
@@ -277,25 +279,15 @@ object StreamingQueries {
             col("event_id").as("eventId"), stepNo.as("step"))
           .as[graft.streaming.Stateful.FunnelIn]
         graft.streaming.Stateful.funnelStream(evs).toDF
-      }
-        // flags are monotone per user: the max over per-batch emissions
-        // is the final reach
-        .groupBy(col("user_id"))
-        .agg(max(col("s1")).as("s1"), max(col("s2")).as("s2"),
-          max(col("s3")).as("s3"))
-    },
-      // op 337: reach flags are monotone and keyed by the EARLIEST
-      // qualifying step times, so the max-merged sink equals the batch
-      // funnel exactly — the stream replays the batch op-330 oracle.
-      batch = "events_funnel"),
+      }.transform(graft.operators.Events.funnelReach)
+    }, batch = "events_funnel"),
 
     // op 366: streaming time-to-convert — (first-signup µs, converted)
     // state per user; signup markers + one exact lag per conversion
-    // equal the batch first/first-later aggs, so the rollup replays
-    // the batch op-364 oracle verbatim.
+    // equal the batch first/first-later aggs.
     "streaming_conversion_lag" -> Twin((s, dir) => {
       import s.implicits._
-      streamReplay(s, dir, "events", "sclg") { src =>
+      val rows = streamReplay(s, dir, "events", "sclg") { src =>
         val evs = graft.sources.Tables.normalizeEventTs(src)
           .select(col("user_id").as("userId"), col("ts"),
             col("event_id").as("eventId"), col("event_type").as("eventType"))
@@ -303,29 +295,14 @@ object StreamingQueries {
         graft.streaming.Stateful
           .conversionLagStream(evs, "signup", "purchase").toDF
       }
-        .transform { rows =>
-          val nSign = rows.where(col("kind") === "signup")
-            .agg(count(lit(1)).as("n_signups"))
-          rows.where(col("kind") === "conv")
-            .agg(count(lit(1)).as("n_converted"),
-              graft.functions.Stats.quantile(col("lag_s"), 0.5).as("_med"),
-              graft.functions.Stats.quantile(col("lag_s"), 0.9).as("_p90"))
-            .crossJoin(broadcast(nSign))
-            .select(col("n_signups"), col("n_converted"),
-              (floor(col("n_converted").cast("double") / col("n_signups")
-                * 1e6 + lit(0.5)) / 1e6).as("conversion_rate"),
-              round(col("_med"), 1).as("median_lag_s"),
-              round(col("_p90"), 1).as("p90_lag_s"))
-        }
-    },
-      // op 366: signup markers + first-conversion lags equal the batch
-      // first/first-later aggs — replays the batch op-364 oracle.
-      batch = "events_conversion_lag"),
+      conversionLagReport(rows.where(col("kind") === "conv"),
+        rows.where(col("kind") === "signup")
+          .agg(count(lit(1)).as("n_signups")))
+    }, batch = "events_conversion_lag"),
 
     // op 361: streaming attribution — per-user (last touch, first
-    // touch) state; each conversion's emitted row equals the batch
-    // running-window row, so the channel rollup replays the batch
-    // op-335 oracle verbatim.
+    // touch) state; each conversion's emitted (last, first, rev) row
+    // equals the batch running-window row.
     "streaming_attribution" -> Twin((s, dir) => {
       import s.implicits._
       streamReplay(s, dir, "events", "satt") { src =>
@@ -336,51 +313,25 @@ object StreamingQueries {
           .as[graft.streaming.Stateful.AttrIn]
         graft.streaming.Stateful
           .attributionStream(evs, "purchase", 604800000000L).toDF
-      }
-        .transform { conv =>
-          val byLast = conv.groupBy(col("last_touch").as("channel"))
-            .agg(count(lit(1)).as("n_last_touch"),
-              sum(col("rev").cast("decimal(30,10)")).as("_rev_last"))
-          val byFirst = conv.groupBy(col("first_touch").as("channel"))
-            .agg(count(lit(1)).as("n_first_touch"))
-          byLast.join(byFirst, Seq("channel"), "full_outer")
-            .select(col("channel"),
-              coalesce(col("n_last_touch"), lit(0L)).as("n_last_touch"),
-              round(coalesce(col("_rev_last"),
-                lit(0).cast("decimal(30,10)")).cast("double"), 6)
-                .as("rev_last_touch"),
-              coalesce(col("n_first_touch"), lit(0L)).as("n_first_touch"))
-        }
-    },
-      // op 361: each conversion's emitted (last, first, rev) equals
-      // the batch running-window row — replays the batch op-335 oracle.
-      batch = "events_attribution"),
+      }.transform(graft.operators.Events.attributionReport)
+    }, batch = "events_attribution"),
 
     // op 358: streaming 3-event paths — two-string state per user; the
-    // path multiset equals the batch two-lag pairs, so the top-10
-    // rollup replays the batch op-356 oracle verbatim.
+    // path multiset equals the batch two-lag paths.
     "streaming_journeys" -> Twin((s, dir) => {
       import s.implicits._
-      streamReplay(s, dir, "events", "sjou") { src =>
+      journeysReport(streamReplay(s, dir, "events", "sjou") { src =>
         val evs = graft.sources.Tables.normalizeEventTs(src)
           .select(col("user_id").as("userId"), col("ts"),
             col("event_id").as("eventId"), col("event_type").as("eventType"))
           .as[graft.streaming.Stateful.TransIn]
         graft.streaming.Stateful.journeyStream(evs).toDF
-      }
-        .groupBy(col("e1"), col("e2"), col("e3"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("e1"), col("e2"), col("e3"))
-        .limit(10)
-    },
-      // op 358: the emitted 3-path multiset equals the batch two-lag
-      // paths (two-string state) — replays the batch op-356 oracle.
-      batch = "events_journeys"),
+      })
+    }, batch = "events_journeys"),
 
-    // ---- streaming Markov transitions, REPLAYED to batch (op 345):
-    // one-string-per-user state; the emitted pair multiset equals the
-    // batch lag pairs, so the count/probability rollup replays the
-    // batch op-338 oracle verbatim.
+    // ---- streaming Markov transitions (op 345): one-string-per-user
+    // state; the emitted (from, to) pair multiset equals the batch lag
+    // pairs.
     "streaming_transitions" -> Twin((s, dir) => {
       import s.implicits._
       streamReplay(s, dir, "events", "stra") { src =>
@@ -389,93 +340,41 @@ object StreamingQueries {
             col("event_id").as("eventId"), col("event_type").as("eventType"))
           .as[graft.streaming.Stateful.TransIn]
         graft.streaming.Stateful.transitionStream(evs).toDF
-      }
-        .groupBy(col("from_type"), col("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .transform { pairs =>
-          val totals = pairs.groupBy(col("from_type"))
-            .agg(sum(col("n")).as("_total"))
-          pairs.join(broadcast(totals), "from_type")
-            .select(col("from_type"), col("to_type"), col("n"),
-              (floor(col("n").cast("double") / col("_total") * 1e6
-                + lit(0.5)) / 1e6).as("p"))
-        }
-    },
-      // op 345: the emitted (from, to) pair multiset equals the batch
-      // lag pairs (one-string state), so the rollup replays the batch
-      // op-338 oracle.
-      batch = "events_transitions"),
+      }.transform(graft.operators.Events.transitionReport)
+    }, batch = "events_transitions"),
 
-    // ---- streaming SCD2, REPLAYED to batch (op 339): the op-332
-    // dimension maintained per user at ingest; closed intervals emit on
-    // state change, the open row re-emits per batch, and the sink
-    // groupBy keeps min(valid_to) — equals the batch SCD2 table, so the
-    // oracle is the batch events_scd2 SQL verbatim.
+    // ---- streaming SCD2 (op 339): the op-332 dimension maintained per
+    // user at ingest; closed intervals emit on state change, the open
+    // row re-emits per batch, and the sink merge keeps min(valid_to) —
+    // the batch SCD2 intervals.
     "streaming_scd2" -> Twin((s, dir) => {
       import s.implicits._
-      streamReplay(s, dir, "events", "sscd") { src =>
+      val sunk = streamReplay(s, dir, "events", "sscd") { src =>
         val evs = graft.sources.Tables.normalizeEventTs(src)
           .select(col("user_id").as("userId"), col("ts"),
             col("event_id").as("eventId"), col("event_type").as("state"))
           .as[graft.streaming.Stateful.Scd2In]
         graft.streaming.Stateful.scd2Stream(evs).toDF
       }
+      scd2Report(sunk
         .groupBy(col("user_id"), col("valid_from_us"), col("state"))
-        .agg(min(col("valid_to_us")).as("valid_to_us"))
-        .select(col("user_id"), col("state"), col("valid_from_us"),
-          col("valid_to_us"),
-          (col("valid_to_us") === graft.operators.Events.OpenUs)
-            .cast("int").as("is_current"))
-    },
-      // op 339: closed intervals + per-batch open-row re-emissions,
-      // min(valid_to)-merged in the sink, equal the batch SCD2 table —
-      // the stream replays the batch op-332 oracle.
-      batch = "events_scd2"),
+        .agg(min(col("valid_to_us")).as("valid_to_us")))
+    }, batch = "events_scd2"),
 
-    // ---- streaming sessionization, REPLAYED to batch (op 333): the
-    // SAME session_window expression as the batch `sessionize` query,
-    // run as a real Append-mode stream with watermark-bounded state and
-    // flushed by the two-phase sentinel (see streaming_window_agg).
-    // The oracle is the batch sessionize SQL verbatim — the strongest
-    // possible batch/stream parity check for gap sessions.
-    "streaming_sessionize" -> Query((s, dir) =>
-      sentinelReplay(s, dir, "sses", "user_id", lit(-999L)) { src =>
-        graft.streaming.EventStream
-          .sessionize(graft.sources.Tables.normalizeEventTs(src),
-            "30 minutes", Some("0 seconds"))
-          .select(col("user_id"), col("n_events"),
-            unix_micros(col("first_ts")).as("first_us"),
-            unix_micros(col("last_ts")).as("last_us"))
-      }
-        // post-replay per-user rollup — identical algebra to batch
-        // `sessionize`, so the two queries share one oracle shape
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_sessions"),
-          round(sum(col("n_events")).cast("double") / count(lit(1)), 6)
-            .as("avg_events"),
-          (floor(sum(col("last_us") - col("first_us"))
-              .cast("double") / count(lit(1)) + lit(0.5)).cast("long") / 1e6)
-            .as("avg_duration_s")),
-      """WITH x AS (
-          |  SELECT user_id, ts, event_id,
-          |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-          |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= 1800000000
-          |         THEN 1 ELSE 0 END AS new_s
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-          |), s AS (
-          |  SELECT user_id, ts, sum(new_s) OVER (
-          |    PARTITION BY user_id ORDER BY ts, event_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          |  FROM x
-          |), g AS (
-          |  SELECT user_id, sid, count(*) AS n_events,
-          |    max(epoch_us(ts)) - min(epoch_us(ts)) AS dur_us
-          |  FROM s GROUP BY user_id, sid
-          |)
-          |SELECT user_id, count(*) AS n_sessions,
-          |  round(CAST(sum(n_events) AS DOUBLE) / count(*), 6) AS avg_events,
-          |  CAST(floor(CAST(sum(dur_us) AS DOUBLE) / count(*) + 0.5) AS BIGINT) / 1e6 AS avg_duration_s
-          |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // ---- streaming sessionization (op 333): the SAME session_window
+    // expression as the batch `sessionize` query, run as a real
+    // Append-mode stream with watermark-bounded state and flushed by
+    // the two-phase sentinel (see [[sentinelReplay]]).
+    "streaming_sessionize" -> Twin((s, dir) =>
+      sessionReport(
+        sentinelReplay(s, dir, "sses", "user_id", lit(-999L)) { src =>
+          graft.streaming.EventStream
+            .sessionize(graft.sources.Tables.normalizeEventTs(src),
+              "30 minutes", Some("0 seconds"))
+            .select(col("user_id"), col("n_events"),
+              unix_micros(col("first_ts")).as("first_us"),
+              unix_micros(col("last_ts")).as("last_us"))
+        }), batch = "sessionize"),
 
     // ---- streaming exact dedup, REPLAYED to batch for the oracle
     // (op 80): a real Structured Streaming run — file source →
@@ -508,16 +407,11 @@ object StreamingQueries {
     "streaming_dedup_minhash" -> Query((s, dir) => {
       streamReplay(s, dir, "documents", "smdedup") { src =>
         val base = src.select(col("doc_id"), col("text"))
-        val corpus = base
-          .unionAll(base.where(col("doc_id") % 50 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" the")).as("text")))
-          .unionAll(base.where(col("doc_id") % 97 === 0)
-            .select((col("doc_id") + 2000000).as("doc_id"), col("text")))
+        val corpus = base.unionAll(plantedCopies(base))
           .withColumn("ts", replayTs(col("doc_id")))
         graft.streaming.Stateful
           .minhashDedupStream(corpus, "doc_id", "text", "ts").toDF
-      }.groupBy(col("doc_id")).agg(min(col("dup_of")).as("dup_of"))
+      }.transform(Dedup.earliestSharer(_, "doc_id"))
     },
       // Streaming replay oracle: the same band buckets over the
       // planted corpus; event order = doc_id order (replayTs), so
@@ -547,9 +441,9 @@ object StreamingQueries {
     // written once per corpus refresh, zero signature math per
     // micro-batch on the static side). Index build+write time lands in
     // setupStats, like the bucketed CTAS. Stateless (no watermark, no
-    // state store) — the per-doc min aggregate runs post-replay,
-    // mirroring the batch twin exactly (shared oracle SQL).
-    "streaming_dedup_incremental" -> Query((s, dir) => {
+    // state store) — the batch op's per-doc earliest sharer runs
+    // post-replay.
+    "streaming_dedup_incremental" -> Twin((s, dir) => {
       val t0 = System.nanoTime()
       val ixPath =
         java.nio.file.Files.createTempDirectory("graft-sinc-ix").toString
@@ -560,16 +454,10 @@ object StreamingQueries {
       SparkEntry.setupStats("streaming_dedup_incremental") = (System.nanoTime() - t0) / 1e9
       val ix = s.read.parquet(ixPath)
       streamReplay(s, dir, "documents", "sincdedup") { src =>
-        val fresh = src.where(col("doc_id") % 50 === 0)
-          .select((col("doc_id") + 1000000).as("doc_id"),
-            concat(col("text"), lit(" the")).as("text"))
-          .unionAll(src.where(col("doc_id") % 97 === 0)
-            .select((col("doc_id") + 2000000).as("doc_id"), col("text")))
         graft.streaming.Stateful.minhashIncrementalStreamIndexed(
-          fresh, ix, "doc_id", "text")
-      }.groupBy(col("doc_id")).agg(min(col("dup_of")).as("dup_of"))
-    },
-      minhashIncrementalSql),
+          plantedCopies(src), ix, "doc_id", "text")
+      }.transform(Dedup.earliestSharer(_, "doc_id"))
+    }, batch = "dedup_incremental"),
 
     // ---- stateful streaming running drawdown, REPLAYED to batch for
     // the oracle (op 72): a real flatMapGroupsWithState run over a file
@@ -938,39 +826,16 @@ object StreamingQueries {
     // Streaming chi-square drift monitor (op 246, the op-241 live
     // twin on the op-161 pattern): the source × lang contingency
     // cells only grow, so the max-merged Update sink equals the
-    // batch table and the χ² report (same exact expected-count
-    // algebra) replays the batch oracle — "has the language mix
-    // drifted" at ingest latency.
+    // batch table — "has the language mix drifted" at ingest latency.
     "streaming_chi2" -> Twin((s, dir) => {
       val sunk = streamReplay(s, dir, "documents", "schi2",
         mode = "update") { src =>
         src.groupBy(col("source"), col("lang"))
           .agg(count(lit(1)).as("o"))
       }
-      val o = sunk.groupBy(col("source"), col("lang"))
-        .agg(max(col("o")).as("o"))
-      val rowT = o.groupBy(col("source")).agg(sum(col("o")).as("rt"))
-      val colT = o.groupBy(col("lang")).agg(sum(col("o")).as("ct"))
-      val tot = o.agg(sum(col("o")).as("n"))
-      val cells = o.join(broadcast(rowT), "source")
-        .join(broadcast(colT), "lang")
-        .crossJoin(broadcast(tot))
-        .withColumn("e", (col("rt") * col("ct")).cast("double") /
-          col("n").cast("double"))
-        .withColumn("t", floor((col("o").cast("double") - col("e")) *
-          (col("o").cast("double") - col("e")) / col("e") * 1e9 + 0.5)
-          .cast("long"))
-      cells.agg(count(lit(1)).as("n_cells"),
-          countDistinct(col("source")).as("n_sources"),
-          countDistinct(col("lang")).as("n_langs"),
-          (sum(col("t")).cast("double") / 1e9).as("chi2r"))
-        .select(col("n_cells"),
-          ((col("n_sources") - 1) * (col("n_langs") - 1)).as("dof"),
-          round(col("chi2r"), 6).as("chi2"))
-    },
-      // op 246: contingency cells only grow — same argument, same
-      // exact χ² algebra on the max-merged final counts.
-      batch = "stats_chi2_independence"),
+      chi2Report(sunk.groupBy(col("source"), col("lang"))
+        .agg(max(col("o")).as("o")))
+    }, batch = "stats_chi2_independence"),
     // Streaming bipower variation (op 224, the op-211 batch op's
     // live twin on the op-146 pattern): per-symbol running Σ(lr²)
     // and Σ(|lr_i||lr_{i−1}|) as 1e-12-quantized INTEGER state, the
@@ -1092,25 +957,19 @@ object StreamingQueries {
         |  ret_q, z, abs(z) > 3.0 AS is_anom
         |FROM z ORDER BY symbol, ts_us""".stripMargin),
 
-    // ---- streaming windowed agg, REPLAYED to batch (op 58): the real
-    // readStream → watermark → window agg path in Append mode. A
-    // sentinel row far in the future pushes the final watermark past
-    // every real window so the no-data closing batch flushes them all;
-    // the sentinel's own window is excluded by event_type.
-    "streaming_window_agg" -> Query((s, dir) =>
-      sentinelReplay(s, dir, "swa", "event_type", lit("zz_sentinel")) { src =>
-        graft.streaming.EventStream
-          .windowedStats(graft.sources.Tables.normalizeEventTs(src),
-            "1 hour", "0 seconds")
-          .select(unix_micros(col("window.start")).as("ws"), col("event_type"),
-            col("n"), round(col("sum_value"), 4).as("sum_value"))
-      },
-      // streaming windowed agg replay: once every window is flushed, the
-      // append-mode stream equals the batch tumbling-window agg
-      """SELECT epoch_us(date_trunc('hour', ts)) AS ws, event_type,
-        |  count(*) AS n,
-        |  round(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE), 4) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin),
+    // ---- streaming windowed agg (op 58): the real readStream →
+    // watermark → window agg path in Append mode, the batch
+    // `window_agg` expression. A sentinel row far in the future pushes
+    // the final watermark past every real window so the no-data closing
+    // batch flushes them all; the sentinel's own window is excluded by
+    // event_type.
+    "streaming_window_agg" -> Twin((s, dir) =>
+      windowAggReport(
+        sentinelReplay(s, dir, "swa", "event_type", lit("zz_sentinel")) { src =>
+          graft.streaming.EventStream
+            .windowedStats(graft.sources.Tables.normalizeEventTs(src),
+              "1 hour", Some("0 seconds"))
+        }), batch = "window_agg"),
 
     // ---- streaming as-of quote enrichment, REPLAYED to batch (op 73):
     // one interleaved stream (even event_id = quote, odd = trade) keyed
@@ -1182,8 +1041,7 @@ object StreamingQueries {
     // ONE long of state per symbol (the exclusive unit prefix) and
     // stamps each tick with its bar id; integer units make the prefix
     // exact under any micro-batching, so streamed ids equal the batch
-    // ids and the OHLCV report runs batch over the sink (oracles
-    // shared with tick_volume_bars / tick_dollar_bars). replayTs
+    // ids and the OHLCV report runs batch over the sink. replayTs
     // ordering == (ts, event_id) ordering: events' ts is unique and
     // monotone in event_id within each series.
     "streaming_volume_bars" -> Twin((s, dir) => {
@@ -1194,14 +1052,11 @@ object StreamingQueries {
           threshold = 5000L).toDF()
       }
       barSinkReport(sunk)
-    },
-      // op 136: streamed bar ids equal the batch ids (exact integer
-      // prefix state), so the bar twins replay the batch bar oracles.
-      batch = "tick_volume_bars"),
+    }, batch = "tick_volume_bars"),
     // Streaming VPIN (op 194): one state transition stamps each tick
     // with its equal-volume bucket AND tick-rule direction (integer
-    // prefix + last price — both micro-batch exact), so the toxicity
-    // report over the sink equals the batch op and shares its oracle.
+    // prefix + last price — both micro-batch exact), so the stamped
+    // (bar, dirn, volume) ticks equal the batch op's.
     "streaming_vpin" -> Twin((s, dir) => {
       import s.implicits._
       val sunk = streamReplay(s, dir, "events", "svp") { src =>
@@ -1209,21 +1064,9 @@ object StreamingQueries {
           replayTicks(src, volume.as("volume")).as[graft.streaming.Stateful.VolTick],
           threshold = 5000L).toDF()
       }
-      sunk.groupBy(col("symbol").as("event_type"), col("bar"))
-        .agg(sum(when(col("dirn") === 1, col("volume")).otherwise(0.0))
-          .as("vb"),
-          sum(when(col("dirn") === -1, col("volume")).otherwise(0.0))
-            .as("vs"),
-          sum(col("volume")).as("v"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_buckets"),
-          round(sum(abs(col("vb") - col("vs"))) / sum(col("v")), 6)
-            .as("vpin"))
-    },
-      // op 194: the stamped (bar, dirn, volume) triples equal the
-      // batch op's (integer prefix + order-pinned last price), so the
-      // sink-side toxicity report replays the batch VPIN oracle.
-      batch = "tick_vpin"),
+      vpinReport(sunk.select(col("symbol").as("event_type"), col("bar"),
+        col("dirn"), col("volume").as("vol")))
+    }, batch = "tick_vpin"),
     "streaming_dollar_bars" -> Twin((s, dir) => {
       import s.implicits._
       val sunk = streamReplay(s, dir, "events", "sdb") { src =>
@@ -1232,8 +1075,7 @@ object StreamingQueries {
           thresholdCents = 50000000L).toDF()
       }
       barSinkReport(sunk)
-    },
-      batch = "tick_dollar_bars"),
+    }, batch = "tick_dollar_bars"),
     // op 138: watermarked stream-stream time-bounded join — trades
     // (purchase) joined to the last day of quotes (view) per user, both
     // sides streaming. Inner-join pairs emit exactly once under any
@@ -1275,68 +1117,39 @@ object StreamingQueries {
         |FROM t JOIN q ON t.user_id = q.q_user_id
         |  AND q.qus BETWEEN t.tus - 86400000000 AND t.tus
         |ORDER BY trade_id, quote_id""".stripMargin),
-    // Streaming twin (op 123): the stream maintains the register table
-    // (Update-mode agg, state = m rows/group BY CONSTRUCTION, no
-    // watermark needed); estimates are a batch read over the sink.
-    // max is replay/duplicate-insensitive, so the streamed registers —
-    // and therefore every estimate — equal the batch op bit-for-bit
-    // (oracle shared with sketch_hll).
     // Streaming quality gate (op 170): the Gopher rules applied to
     // the ingest stream — the op is pure per-row array algebra (no
     // shuffle, no state), so the streaming plan is the batch plan
     // behind a file source and the Append sink equals the batch
-    // table row-for-row; oracle shared with corpus_gopher. This is
-    // the curation FILTER running at ingest time instead of as a
-    // nightly batch — at 100 TB the difference between storing raw
-    // and storing curated.
+    // table row-for-row. This is the curation FILTER running at
+    // ingest time instead of as a nightly batch — at 100 TB the
+    // difference between storing raw and storing curated.
     "streaming_quality_gate" -> Twin((s, dir) =>
       streamReplay(s, dir, "documents", "sgate") { src =>
         Corpus.gopherQualityRules(src, "doc_id", "text")
-      },
-      // op 170: the gate is map-only (no state, no shuffle), so the
-      // streamed Append sink equals the batch table row-for-row.
-      batch = "corpus_gopher"),
+      }, batch = "corpus_gopher"),
     // Streaming readability scoring (op 283, the op-170 stateless-gate
     // pattern on op 276): the regex counts and score algebra are pure
     // per-row maps, so the streaming plan IS the batch plan behind a
-    // file source — each arriving doc is scored at ingest, the Append
-    // sink equals the batch table row-for-row, oracle shared with
-    // text_readability.
+    // file source — each arriving doc is scored at ingest, and the
+    // Append sink equals the batch table row-for-row.
     "streaming_readability" -> Twin((s, dir) =>
       streamReplay(s, dir, "documents", "sread")(readabilityScores),
-      // op 283: same stateless-map argument for the readability gate.
       batch = "text_readability"),
     // Streaming split assignment (op 201, the op-170 stateless-gate
     // pattern on op 197): the md5-coin split is a pure per-row map, so
     // the streaming plan IS the batch plan behind a file source — each
-    // arriving doc is stamped train/val/test at ingest, the Append
-    // sink equals the batch assignment row-for-row, and the manifest
-    // report over the sink shares corpus_split's oracle.
-    "streaming_split" -> Twin((s, dir) => {
-      val u = Corpus.md5Uniform(col("doc_id"))
-      val sunk = streamReplay(s, dir, "documents", "ssplit") { src =>
-        src.select(col("source"), col("doc_id"),
-          when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test")
-            .as("split"),
-          Text.tokenCount(col("text")).cast("long").as("ntok"))
-      }
-      sunk.groupBy(col("source"), col("split"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"))
-        .withColumn("frac",
-          round(col("n_docs").cast("double")
-            / sum(col("n_docs")).over(Window.partitionBy(col("source"))), 6))
-    },
-      // op 201: the split map is stateless, the sink equals the batch
-      // assignment row-for-row → the manifest replays op 197's oracle.
+    // arriving doc is stamped train/val/test at ingest, and the Append
+    // sink equals the batch assignment row-for-row.
+    "streaming_split" -> Twin((s, dir) =>
+      splitManifest(streamReplay(s, dir, "documents", "ssplit")(splitAssign)),
       batch = "corpus_split"),
     // Streaming mixture monitor (op 161): per-source doc/token counts
     // as a declarative Update-mode streaming aggregation — state is
     // ONE row per source by construction, no watermark needed. Counts
     // only grow, so the max-merged sink IS the final count table (the
-    // op-123/142 argument) and the shared quantized weight algebra
-    // (Corpus.mixtureWeightsFromCounts) reproduces the batch mixture
-    // exactly — the live view of "what is the mix right now" during
-    // ingestion, sharing corpus_mixture's oracle.
+    // op-123/142 argument) — the live view of "what is the mix right
+    // now" during ingestion.
     "streaming_mixture" -> Twin((s, dir) => {
       val sunk = streamReplay(s, dir, "documents", "smix",
         mode = "update") { src =>
@@ -1344,23 +1157,14 @@ object StreamingQueries {
           .agg(count(lit(1)).as("n_docs"),
             sum(Text.tokenCount(col("text")).cast("long")).as("n_tokens"))
       }
-      Corpus.mixtureWeightsFromCounts(
-          sunk.groupBy(col("source"))
-            .agg(max(col("n_docs")).as("n_docs"),
-              max(col("n_tokens")).as("n_tokens"))
-            .withColumnRenamed("source", "stratum"),
-          alpha = 0.5)
-        .select(col("stratum").as("source"), col("n_docs"),
-          col("n_tokens"), col("share"), col("weight"))
-    },
-      // op 161: per-source counts only grow, so the max-merged Update
-      // sink equals the batch count table and the shared quantized
-      // weight algebra replays the batch mixture oracle.
-      batch = "corpus_mixture"),
+      mixtureReport(sunk.groupBy(col("source").as("stratum"))
+        .agg(max(col("n_docs")).as("n_docs"),
+          max(col("n_tokens")).as("n_tokens")))
+    }, batch = "corpus_mixture"),
     // Streaming intraday volume profile (op 244, the op-242 live
     // twin on the op-161 pattern): per-(symbol, hour) integer volume
     // counts only grow, so the max-merged Update sink equals the
-    // batch table and the share report replays the batch oracle.
+    // batch table.
     "streaming_volume_profile" -> Twin((s, dir) => {
       val sunk = streamReplay(s, dir, "events", "svprof",
         mode = "update") { src =>
@@ -1368,18 +1172,14 @@ object StreamingQueries {
           .agg(sum((col("event_id") % 100 + 1).cast("long")).as("vol"),
             count(lit(1)).as("n_trades"))
       }
-      val h = sunk.groupBy(col("event_type"), col("hr"))
-        .agg(max(col("vol")).as("vol"), max(col("n_trades")).as("n_trades"))
-      val t = h.groupBy(col("event_type")).agg(sum(col("vol")).as("tv"))
-      h.join(t, "event_type")
-        .select(col("event_type"), col("hr"), col("n_trades"), col("vol"),
-          round(col("vol").cast("double") / col("tv").cast("double"), 6)
-            .as("vol_share"))
-    },
-      // op 244: per-(symbol, hour) integer volume counts only grow,
-      // so the max-merged Update sink equals the batch table and the
-      // share report replays op 242's oracle.
-      batch = "tick_volume_profile"),
+      volumeProfileReport(sunk.groupBy(col("event_type"), col("hr"))
+        .agg(max(col("vol")).as("vol"), max(col("n_trades")).as("n_trades")))
+    }, batch = "tick_volume_profile"),
+    // Streaming HLL (op 123): the stream maintains the register table
+    // (Update-mode agg, state = m rows/group BY CONSTRUCTION, no
+    // watermark needed); estimates are a batch read over the sink.
+    // max is replay/duplicate-insensitive, so the streamed registers —
+    // and therefore every estimate — equal the batch op bit-for-bit.
     "streaming_hll" -> Twin((s, dir) => {
       // State = sources×256 register rows — the small-state replay
       // shape ReplayPartitions is sized for.
@@ -1393,18 +1193,12 @@ object StreamingQueries {
       // micro-batches; max-merge makes the read idempotent.
       hllReport(s, dir, sunk.groupBy(col("source"), col("reg"))
         .agg(max(col("max_rank")).as("max_rank")))
-    },
-      // ops 123/124: the streamed sketch state equals the batch state
-      // (HLL registers max-merge; CMS counters only grow, so the sink
-      // max-merge is the final cumulative table) — the streaming queries
-      // share the batch ops' oracles.
-      batch = "sketch_hll"),
+    }, batch = "sketch_hll"),
     // Streaming twin (op 142): the histogram is an Update-mode
     // streaming agg with construction-bounded state (≤ nBins counts
     // per type, no watermark — the same O(1)-state family as
     // streaming_hll/cms/kmv). Counts only grow, so a max-merge over
-    // the Update sink reconstructs the batch bin table exactly and the
-    // report shares sketch_quantiles' oracle.
+    // the Update sink reconstructs the batch bin table exactly.
     "streaming_quantiles" -> Twin((s, dir) => {
       val sunk = streamReplay(s, dir, "events", "sqh",
         mode = "update") { src =>
@@ -1413,18 +1207,12 @@ object StreamingQueries {
       }
       histQuantileReport(sunk.groupBy(col("event_type"), col("bin"))
         .agg(max(col("cnt")).as("cnt")))
-    },
-      // op 142: counts only grow, so the max-merged Update sink equals
-      // the batch bin table and the report replays the batch oracle.
-      batch = "sketch_quantiles"),
+    }, batch = "sketch_quantiles"),
     // Streaming twin (op 132): flatMapGroupsWithState maintains the
     // per-source bottom-k distinct-hash array (construction-bounded
     // state — k longs/group, the KMV analogue of op 123's register
-    // rows); the hash is staged with the batch op's own expression.
-    // Bottom-k of a union = bottom-k of the union of bottom-ks, and
-    // Update-mode re-emissions only repeat historical sketch subsets,
-    // so distinct + per-group bottom-k over the sink reconstructs the
-    // batch sketch bit-for-bit (oracle shared with sketch_kmv).
+    // rows); the hash is staged with the batch op's own expression, so
+    // the [[bottomK]] compaction of the sink is the batch sketch.
     "streaming_kmv" -> Twin((s, dir) => {
       import s.implicits._
       val sunk = streamReplay(s, dir,
@@ -1436,18 +1224,15 @@ object StreamingQueries {
             .as[graft.streaming.Stateful.KmvIn],
           k = 64).toDF()
       }
-      val wG = Window.partitionBy(col("source")).orderBy(col("h"))
-      val sk = sunk.select(col("g").as("source"), col("h")).distinct()
-        .withColumn("rank", row_number().over(wG))
-        .where(col("rank") <= 64)
-      kmvReport(s, dir, sk)
-    },
-      batch = "sketch_kmv"),
+      kmvReport(s, dir,
+        bottomK(sunk.select(col("g").as("source"), col("h")), "source", 64,
+          "h"))
+    }, batch = "sketch_kmv"),
     // Streaming Count-Min (op 124): the stream maintains the fixed
     // depth×width counter table (Update-mode agg, construction-bounded
     // state); counters only grow, so max-merging the sink reconstructs
-    // the batch table exactly and the heavy-hitter probe runs batch
-    // over it (oracle shared with sketch_cms_topk).
+    // the batch table exactly and the batch op's heavy-hitter ranking
+    // (Sketch.rankProbes, through cmsProbeTopK) runs over it.
     "streaming_cms" -> Twin((s, dir) => {
       val sunk = streamReplay(s, dir,
         "documents", "streaming_cms", mode = "update") { src =>
@@ -1462,8 +1247,7 @@ object StreamingQueries {
       Sketch.cmsProbeTopK(toks, "tok", counters, depth = 4, width = 1024,
           topK = 20)
         .select(col("v").as("token"), col("est_cnt"), col("exact_cnt"))
-    },
-      batch = "sketch_cms_topk"),
+    }, batch = "sketch_cms_topk"),
     // Streaming space-saving top-k (op 145): heavy hitters with
     // CONSTANT state by construction — buckets×capacity counters, each
     // token hash-sharded to exactly one bucket's space-saving instance
@@ -1507,14 +1291,13 @@ object StreamingQueries {
     // by the md5 coin, maintained in constant state (5 (key, id) pairs
     // per stratum — the KMV bottom-k merge argument applied to
     // sampling). distinct + per-stratum bottom-n over the Update sink
-    // reconstructs the batch sample exactly; oracle shared with
-    // corpus_sample_n (same coin, same (key, id) order). The batch
-    // op's oversample pre-filter (u < 4n/cnt) replays here as a
-    // stream-static broadcast of the stratum counts, so the stream
-    // ranks over the IDENTICAL survivor set as batch + oracle — in
-    // the ~e^-Ω(n) tail where a stratum's bottom-n doesn't all
-    // survive the cut, all three shrink together instead of the
-    // stream silently emitting extra rows.
+    // reconstructs the batch sample exactly (same coin, same (key, id)
+    // order). The batch op's oversample pre-filter
+    // (Corpus.sampleNRate) replays here as a stream-static broadcast
+    // of the stratum counts, so the stream ranks over the IDENTICAL
+    // survivor set as batch + oracle — in the ~e^-Ω(n) tail where a
+    // stratum's bottom-n doesn't all survive the cut, all three shrink
+    // together instead of the stream silently emitting extra rows.
     "streaming_sample" -> Twin((s, dir) => {
       import s.implicits._
       val cnts = tbl(s, dir, "documents")
@@ -1524,22 +1307,16 @@ object StreamingQueries {
         graft.streaming.Stateful.sampleNStream(
           src.join(broadcast(cnts), "source")
             .where(Corpus.md5Uniform(col("doc_id")) <
-              least(lit(1.0), lit(20.0) / col("_cnt")))
+              Corpus.sampleNRate(col("_cnt"), n = 5))
             .select(col("source").as("g"),
             Sketch.kmvHash(col("doc_id")).as("key"),
             col("doc_id").as("id"))
             .as[graft.streaming.Stateful.SampIn],
           n = 5).toDF()
       }
-      val w = Window.partitionBy(col("g")).orderBy(col("key"), col("id"))
-      sunk.distinct()
-        .withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= 5)
+      bottomK(sunk, "g", 5, "key", "id")
         .select(col("g").as("source"), col("id").as("doc_id"))
-    },
-      // op 147: same md5 coin, same (key, id) bottom-n — the streamed
-      // sample equals the batch stratified sample exactly.
-      batch = "corpus_sample_n"),
+    }, batch = "corpus_sample_n"),
     // Streaming kNN-graph maintenance (op 152): the op-115 pattern on
     // op 150 — the capped (tbl, bucket) index is materialized ONCE
     // (parquet, the expensive Σ bucket² build amortized), and each
@@ -1547,9 +1324,8 @@ object StreamingQueries {
     // no state store: the index carries the history, the stream is
     // map-shaped). Because the pair join is on equal (tbl, bucket),
     // capping the index side alone equals the batch op's symmetric
-    // cap, so the max-merge + top-k compaction over the Append sink
-    // reproduces ann_knn_graph exactly and shares its oracle. At
-    // 100 TB this is live neighbor-graph upkeep: probe cost per
+    // cap, so the max-merged Append sink holds ann_knn_graph's pairs.
+    // At 100 TB this is live neighbor-graph upkeep: probe cost per
     // arrival ∝ its buckets' occupancy, index refresh is a periodic
     // batch rebuild.
     "streaming_knn_graph" -> Twin((s, dir) => {
@@ -1565,18 +1341,8 @@ object StreamingQueries {
         Similarity.knnProbe(src, ix, "vec_id", "embedding", EmbDim,
           planes = annPlanes(s))
       }
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      sunk.groupBy(col("query_id"), col("neighbor_id"))
-        .agg(max(col("cosine")).as("cosine"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .where(col("rnk") <= 3)
-        .select(col("query_id"), col("rnk"), col("neighbor_id"),
-          round(col("cosine"), 6).as("cosine"))
-    },
-      // op 154: stateless probes of the capped index emit the same
-      // pair set as the batch kNN graph (equi-join cap equivalence),
-      // so the compacted sink replays the batch oracle.
-      batch = "ann_knn_graph")
+      knnGraphReport(sunk.groupBy(col("query_id"), col("neighbor_id"))
+        .agg(max(col("cosine")).as("cosine")))
+    }, batch = "ann_knn_graph")
   )
 }

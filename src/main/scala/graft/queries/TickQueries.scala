@@ -128,14 +128,9 @@ object TickQueries {
     // integer ratio. One keyed agg + a per-symbol total join.
     "tick_volume_profile" -> Query((s, dir) => {
       val v = (col("event_id") % 100 + 1).cast("long")
-      val h = events(s, dir)
+      volumeProfileReport(events(s, dir)
         .groupBy(col("event_type"), hour(col("ts")).as("hr"))
-        .agg(sum(v).as("vol"), count(lit(1)).as("n_trades"))
-      val t = h.groupBy(col("event_type")).agg(sum(col("vol")).as("tv"))
-      h.join(t, "event_type")
-        .select(col("event_type"), col("hr"), col("n_trades"), col("vol"),
-          round(col("vol").cast("double") / col("tv").cast("double"), 6)
-            .as("vol_share"))
+        .agg(sum(v).as("vol"), count(lit(1)).as("n_trades")))
     },
       // op 242: integer volume sums, exact share ratios.
       s"""WITH h AS (
@@ -347,14 +342,11 @@ object TickQueries {
     // α=0.3, B=0.995/sec documented literals; branching ratio per
     // symbol = α·Σ B^j bounded < α/(1−B).
     "tick_hawkes" -> Query((s, dir) =>
-      events(s, dir)
+      hawkesReport(events(s, dir)
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("sumq", graft.expressions.HawkesKernelSum(
           collect_list(col("us")).over(wT.rowsBetween(-60, -1)),
-          col("us"), base = 0.995))
-        .select(col("event_type"), col("event_id"),
-          round(lit(0.05) + lit(0.3) * (col("sumq").cast("double") / 1e9), 6)
-            .as("lambda")),
+          col("us"), base = 0.995))),
       // op 342: O(60·n) pairwise replay of the truncated Hawkes kernel;
       // each term an exact 1e-9 long, so the unordered sum replays the
       // Spark fold bit-for-bit (LEFT JOIN keeps the empty first frame:
@@ -728,19 +720,11 @@ object TickQueries {
       val wPre = wT.rowsBetween(Window.unboundedPreceding, -1)
       val dirn = when(col("value") > lag(col("value"), 1).over(wT), 1)
         .when(col("value") < lag(col("value"), 1).over(wT), -1).otherwise(0)
-      events(s, dir)
+      vpinReport(events(s, dir)
         .withColumn("vol", volume)
         .select(col("event_type"), col("vol"), dirn.as("dirn"),
           floor(coalesce(sum(col("vol")).over(wPre), lit(0.0)) / 5000L)
-            .cast("long").as("bar"))
-        .groupBy(col("event_type"), col("bar"))
-        .agg(sum(when(col("dirn") === 1, col("vol")).otherwise(0.0)).as("vb"),
-          sum(when(col("dirn") === -1, col("vol")).otherwise(0.0)).as("vs"),
-          sum(col("vol")).as("v"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_buckets"),
-          round(sum(abs(col("vb") - col("vs"))) / sum(col("v")), 6)
-            .as("vpin"))
+            .cast("long").as("bar")))
     },
       s"""WITH c AS (
           |  SELECT event_type, $SQL_VOL AS vol,
@@ -914,14 +898,9 @@ object TickQueries {
     // the cumsum engine-exact, so bar EDGES replay bit-for-bit.
     "tick_volume_bars" -> Query((s, dir) => {
       val e = events(s, dir).withColumn("volume", volume)
-      graft.operators.Bars
+      barReport(graft.operators.Bars
         .volumeBars(e, "event_type", "ts", "value", "volume", threshold = 5000L,
-          tiebreak = Some("event_id"))
-        .select(col("event_type"), col("bar"),
-          round(col("open"), 6).as("open"), round(col("high"), 6).as("high"),
-          round(col("low"), 6).as("low"), round(col("close"), 6).as("close"),
-          round(col("volume"), 6).as("volume"),
-          round(col("vwap"), 6).as("vwap"), col("n_ticks"))
+          tiebreak = Some("event_id")))
     },
       s"""WITH c AS (
           |  SELECT event_type, ts, value, $SQL_VOL AS vol,
@@ -940,14 +919,9 @@ object TickQueries {
           |FROM c GROUP BY event_type, bar ORDER BY event_type, bar""".stripMargin),
     "tick_dollar_bars" -> Query((s, dir) => {
       val e = events(s, dir).withColumn("volume", volume)
-      graft.operators.Bars
+      barReport(graft.operators.Bars
         .dollarBars(e, "event_type", "ts", "value", "volume",
-          thresholdCents = 50000000L, tiebreak = Some("event_id"))
-        .select(col("event_type"), col("bar"),
-          round(col("open"), 6).as("open"), round(col("high"), 6).as("high"),
-          round(col("low"), 6).as("low"), round(col("close"), 6).as("close"),
-          round(col("volume"), 6).as("volume"),
-          round(col("vwap"), 6).as("vwap"), col("n_ticks"))
+          thresholdCents = 50000000L, tiebreak = Some("event_id")))
     },
       s"""WITH c AS (
           |  SELECT event_type, ts, value, $SQL_VOL AS vol,

@@ -97,18 +97,25 @@ package object queries {
     events(s, dir).withColumn("ret", Eod.toReturns(col("value"), wT))
 
   /** Documents corpus with deterministic planted duplicates so dedup
-    * queries have real positives: exact copies (id+2e6, doc_id%97==0)
-    * and near copies with one appended token (id+1e6, doc_id%50==0).
-    * Identical construction in the oracle CTE.
+    * queries have real positives. Identical construction in the oracle
+    * CTE.
     */
   private[queries] def docCorpus(s: SparkSession, dir: String): DataFrame = {
     val d = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
-    d.unionAll(d.where(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" the")).as("text")))
+    d.unionAll(plantedCopies(d))
+  }
+
+  /** The planted duplicates of (doc_id, text) rows `d`: near copies
+    * with one appended token (id+1e6, doc_id%50==0), then exact copies
+    * (id+2e6, doc_id%97==0). Also built in-stream by the replays that
+    * receive the copies as arrivals.
+    */
+  private[queries] def plantedCopies(d: DataFrame): DataFrame =
+    d.where(col("doc_id") % 50 === 0)
+      .select((col("doc_id") + 1000000).as("doc_id"),
+        concat(col("text"), lit(" the")).as("text"))
       .unionAll(d.where(col("doc_id") % 97 === 0)
         .select((col("doc_id") + 2000000).as("doc_id"), col("text")))
-  }
 
   /** op-385's AND-composed 2-of-4 band candidate pairs over the
     * dHash band relation — shared by mm_phash_dedup (which verifies
@@ -307,6 +314,185 @@ package object queries {
         col("exact_distinct"))
   }
 
+  // ---- Batch/stream reports. Each runs once in its batch query, over
+  // the batch relation, and once in the query's streaming [[Twin]], over
+  // the replay sink after any stream-only merge step (max-merge of
+  // Update-mode counts, distinct, bottom-k compaction). The shared
+  // report is what makes the twin's result equal the batch result.
+
+  /** tick_hawkes / streaming_hawkes (ops 342/346): λ = μ + α·Σ kernel
+    * terms from each (event_type, event_id) arrival's 1e-9-quantized
+    * kernel sum `sumq`; μ = 0.05, α = 0.3.
+    */
+  private[queries] def hawkesReport(sums: DataFrame): DataFrame =
+    sums.select(col("event_type"), col("event_id"),
+      round(lit(0.05) + lit(0.3) * (col("sumq").cast("double") / 1e9), 6)
+        .as("lambda"))
+
+  /** sessionize / streaming_sessionize (ops 68/333): the per-user rollup
+    * of (user_id, n_events, first_us, last_us) gap sessions.
+    */
+  private[queries] def sessionReport(sessions: DataFrame): DataFrame =
+    sessions.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_sessions"),
+        round(sum(col("n_events")).cast("double") / count(lit(1)), 6)
+          .as("avg_events"),
+        // integer-µs quantize instead of round(x,6): Spark's round
+        // uses the double's SHORTEST decimal (BigDecimal.valueOf),
+        // DuckDB rounds the true binary value — they disagree by 1 ulp
+        // on half-boundary averages. floor(avg_µs + 0.5)/1e6 is the
+        // same IEEE ops on both engines.
+        (floor(sum(col("last_us") - col("first_us"))
+            .cast("double") / count(lit(1)) + lit(0.5)).cast("long") / 1e6)
+          .as("avg_duration_s"))
+
+  /** events_conversion_lag / streaming_conversion_lag (ops 364/366):
+    * R-7 median/p90 of the integer `lag_s` conversion lags and the
+    * exact conversion rate against the one-row `n_signups` relation.
+    */
+  private[queries] def conversionLagReport(lags: DataFrame,
+                                           nSign: DataFrame): DataFrame =
+    lags.agg(count(lit(1)).as("n_converted"),
+        // r14: one percentile buffer for both cuts (same R-7 values)
+        percentile(col("lag_s"), array(lit(0.5), lit(0.9))).as("_q2"))
+      .withColumn("_med", element_at(col("_q2"), 1))
+      .withColumn("_p90", element_at(col("_q2"), 2))
+      .crossJoin(broadcast(nSign))
+      .select(col("n_signups"), col("n_converted"),
+        (floor(col("n_converted").cast("double") / col("n_signups")
+          * 1e6 + lit(0.5)) / 1e6).as("conversion_rate"),
+        round(col("_med"), 1).as("median_lag_s"),
+        round(col("_p90"), 1).as("p90_lag_s"))
+
+  /** events_journeys / streaming_journeys (ops 356/358): the global
+    * top-10 of (e1, e2, e3) 3-event path counts, as a
+    * TakeOrderedAndProject (driver-sized k, no unpartitioned window).
+    */
+  private[queries] def journeysReport(paths: DataFrame): DataFrame =
+    paths.groupBy(col("e1"), col("e2"), col("e3"))
+      .agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("e1"), col("e2"), col("e3"))
+      .limit(10)
+
+  /** events_scd2 / streaming_scd2 (ops 332/339): the SCD2 intervals
+    * with the open-row flag as the oracle's INT.
+    */
+  private[queries] def scd2Report(intervals: DataFrame): DataFrame =
+    graft.operators.Events.flagCurrent(intervals)
+      .withColumn("is_current", col("is_current").cast("int"))
+
+  /** stats_chi2_independence / streaming_chi2 (ops 241/246): χ² and
+    * dof of a (source, lang, o) contingency table. Expected counts are
+    * exact integer ratios, each (o−e)²/e cell term quantizes to 1e-9
+    * longs, so the cell sum is an exact integer.
+    */
+  private[queries] def chi2Report(o: DataFrame): DataFrame = {
+    val rowT = o.groupBy(col("source")).agg(sum(col("o")).as("rt"))
+    val colT = o.groupBy(col("lang")).agg(sum(col("o")).as("ct"))
+    val tot = o.agg(sum(col("o")).as("n"))
+    val cells = o.join(broadcast(rowT), "source")
+      .join(broadcast(colT), "lang")
+      .crossJoin(broadcast(tot))
+      .withColumn("e", (col("rt") * col("ct")).cast("double") /
+        col("n").cast("double"))
+      .withColumn("t", floor((col("o").cast("double") - col("e")) *
+        (col("o").cast("double") - col("e")) / col("e") * 1e9 + 0.5)
+        .cast("long"))
+    cells.agg(count(lit(1)).as("n_cells"),
+        countDistinct(col("source")).as("n_sources"),
+        countDistinct(col("lang")).as("n_langs"),
+        (sum(col("t")).cast("double") / 1e9).as("chi2r"))
+      .select(col("n_cells"),
+        ((col("n_sources") - 1) * (col("n_langs") - 1)).as("dof"),
+        round(col("chi2r"), 6).as("chi2"))
+  }
+
+  /** tick_vpin / streaming_vpin (ops 183/194): tick-rule buy/sell
+    * volumes per (event_type, bar) equal-volume bucket from (dirn,
+    * vol) ticks, then VPIN = Σ|V_buy − V_sell| / ΣV per symbol.
+    * Volumes are integral, so every sum is exact in any order.
+    */
+  private[queries] def vpinReport(ticks: DataFrame): DataFrame =
+    ticks.groupBy(col("event_type"), col("bar"))
+      .agg(sum(when(col("dirn") === 1, col("vol")).otherwise(0.0)).as("vb"),
+        sum(when(col("dirn") === -1, col("vol")).otherwise(0.0)).as("vs"),
+        sum(col("vol")).as("v"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_buckets"),
+        round(sum(abs(col("vb") - col("vs"))) / sum(col("v")), 6)
+          .as("vpin"))
+
+  /** The volume/dollar bar queries and their streaming twins (op
+    * 136): OHLCV bars per (event_type, bar), rounded as the oracles.
+    */
+  private[queries] def barReport(bars: DataFrame): DataFrame =
+    bars.select(col("event_type"), col("bar"),
+      round(col("open"), 6).as("open"), round(col("high"), 6).as("high"),
+      round(col("low"), 6).as("low"), round(col("close"), 6).as("close"),
+      round(col("volume"), 6).as("volume"),
+      round(col("vwap"), 6).as("vwap"), col("n_ticks"))
+
+  /** corpus_split / streaming_split (ops 197/201): each document's
+    * md5-coin split (80/10/10, reproducible on any engine and
+    * partitioning) and token count — a pure per-row map.
+    */
+  private[queries] def splitAssign(docs: DataFrame): DataFrame = {
+    val u = graft.operators.Corpus.md5Uniform(col("doc_id"))
+    docs.select(col("source"), col("doc_id"),
+      when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test")
+        .as("split"),
+      Text.tokenCount(col("text")).cast("long").as("ntok"))
+  }
+
+  /** The split manifest over [[splitAssign]] rows: per (source, split)
+    * docs, tokens and the realized fraction (an exact integer ratio
+    * over the tiny source-sized relation).
+    */
+  private[queries] def splitManifest(assigned: DataFrame): DataFrame =
+    assigned.groupBy(col("source"), col("split"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"))
+      .withColumn("frac",
+        round(col("n_docs").cast("double")
+          / sum(col("n_docs")).over(Window.partitionBy(col("source"))), 6))
+
+  /** tick_volume_profile / streaming_volume_profile (ops 242/244):
+    * each (event_type, hr) integer volume's share of its symbol's
+    * total.
+    */
+  private[queries] def volumeProfileReport(h: DataFrame): DataFrame = {
+    val t = h.groupBy(col("event_type")).agg(sum(col("vol")).as("tv"))
+    h.join(t, "event_type")
+      .select(col("event_type"), col("hr"), col("n_trades"), col("vol"),
+        round(col("vol").cast("double") / col("tv").cast("double"), 6)
+          .as("vol_share"))
+  }
+
+  /** corpus_mixture / streaming_mixture (ops 99/161): the quantized
+    * temperature-0.5 weights of a (stratum, n_docs, n_tokens) count
+    * table, keyed by source.
+    */
+  private[queries] def mixtureReport(counts: DataFrame): DataFrame =
+    graft.operators.Corpus.mixtureWeightsFromCounts(counts, alpha = 0.5)
+      .select(col("stratum").as("source"), col("n_docs"),
+        col("n_tokens"), col("share"), col("weight"))
+
+  /** window_agg / streaming_window_agg (op 58): the hourly
+    * (window, event_type, n, sum_value) stats of
+    * [[graft.streaming.EventStream.windowedStats]], keyed by the
+    * window start in µs.
+    */
+  private[queries] def windowAggReport(stats: DataFrame): DataFrame =
+    stats.select(unix_micros(col("window.start")).as("ws"),
+      col("event_type"), col("n"), round(col("sum_value"), 4).as("sum_value"))
+
+  /** ann_knn_graph / streaming_knn_graph (ops 150/152): the top-3
+    * neighbours per query from (query_id, neighbor_id, cosine) pairs.
+    */
+  private[queries] def knnGraphReport(pairs: DataFrame): DataFrame =
+    Similarity.knnTopK(pairs, 3)
+      .select(col("query_id"), col("rank").cast("long").as("rnk"),
+        col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
+
   /** CTE chain replaying Pq.encode over the ANN corpus (vec_id >= 5,
     * k=16 codes, m=8 subspaces of 8 dims): v, seed, cb, enc — same
     * seed rule (k lowest ids), same argmin (|c_s|² − 2·x_s·c_s, ties
@@ -493,35 +679,6 @@ package object queries {
   private[queries] val langScores = Text.LangMarkers.map { case (l, ws) =>
       s"len(list_filter(toks, x -> ${ws.map(w => s"x = '$w'").mkString(" OR ")})) AS s_$l"
     }.mkString(", ")
-
-    // Shared CTE chain ending in bands(doc_id, band, bucket) — the
-    // front half of both the all-pairs and the incremental oracles.
-  private[queries] val minhashBandsCte =
-      s"""$TOKS_CTE, sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, greatest(len(toks)-2, 1) + 1),
-        |    i -> array_to_string(toks[i:i+2], ' ')))) AS s
-        |  FROM t
-        |), ab AS (
-        |  SELECT doc_id, ${md5Word(0)} AS a, ${md5Word(8)} AS b
-        |  FROM (SELECT doc_id, md5(s) AS h FROM sh)
-        |), sig AS (SELECT doc_id, $sigMins FROM ab GROUP BY doc_id),
-        |bands AS ($bandSelects)""".stripMargin
-
-    // Shared by the batch op (dedup_incremental) and its stream-static
-    // twin (streaming_dedup_incremental): same index, same new batch,
-    // same verdicts.
-  private[queries] val minhashIncrementalSql =
-      s"""$minhashBandsCte,
-        |idx AS (
-        |  SELECT band, bucket, min(doc_id) AS min_id, count(*) AS c
-        |  FROM bands WHERE doc_id < 1000000 GROUP BY band, bucket
-        |),
-        |q AS (SELECT doc_id, band, bucket FROM bands WHERE doc_id >= 1000000)
-        |SELECT q.doc_id, min(idx.min_id) AS dup_of
-        |FROM q JOIN idx ON q.band = idx.band AND q.bucket = idx.bucket
-        |WHERE idx.c <= 10000
-        |GROUP BY q.doc_id ORDER BY q.doc_id""".stripMargin
 
   private[queries] val langBest = "greatest(" + Text.LangMarkers.map("s_" + _._1).mkString(", ") + ")"
 

@@ -19,7 +19,9 @@ object EventStream {
   private def eventTime(df: DataFrame, c: String): DataFrame =
     graft.sources.Tables.coerceNtz(df, c)
 
-  /** Tumbling-window per-type stats with a lateness watermark. The sum
+  /** Tumbling-window per-type stats, with a lateness watermark when
+    * run as a stream — the SAME expression runs batch (the `window_agg`
+    * query) and streaming (`streaming_window_agg`). The sum
     * runs in decimal(30,10): double addition is order-sensitive and
     * shuffle-merge order is not deterministic, so a double sum can
     * differ in the last bits run to run — decimal makes the result
@@ -27,9 +29,8 @@ object EventStream {
     * is what lets a batch oracle replay this stream exactly.
     */
   def windowedStats(events: DataFrame, windowLen: String,
-                    watermark: String): DataFrame =
-    eventTime(events, "ts")
-      .withWatermark("ts", watermark)
+                    watermark: Option[String] = None): DataFrame =
+    watermarked(events, watermark)
       .groupBy(window(col("ts"), windowLen), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(30,10)")).as("_sum_dec"))
@@ -38,18 +39,26 @@ object EventStream {
         (col("_sum_dec") / col("n")).cast("double").as("avg_value"))
 
   /** Gap-based sessionization via session_window — declarative, so the
-    * SAME expression runs batch (SparkEntry `sessionize` query) and
-    * streaming (with watermark-bounded state). Per-session stats by
-    * (user, session); the session key is the shuffle key at scale.
+    * SAME expression runs batch (the `sessionize` query) and
+    * streaming (`streaming_sessionize`, with watermark-bounded state).
+    * Per-session stats by (user, session); the session key is the
+    * shuffle key at scale.
     */
   def sessionize(events: DataFrame, gap: String,
-                 watermark: Option[String] = None): DataFrame = {
-    val ev = eventTime(events, "ts")
-    val base = watermark.map(ev.withWatermark("ts", _)).getOrElse(ev)
-    base.groupBy(session_window(col("ts"), gap).as("sw"), col("user_id"))
+                 watermark: Option[String] = None): DataFrame =
+    watermarked(events, watermark)
+      .groupBy(session_window(col("ts"), gap).as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         min(col("ts")).as("first_ts"),
         max(col("ts")).as("last_ts"))
+
+  /** `events` on its event time `ts`, watermarked by `watermark` if
+    * one is given (a stream); a batch relation passes None.
+    */
+  private def watermarked(events: DataFrame,
+                          watermark: Option[String]): DataFrame = {
+    val ev = eventTime(events, "ts")
+    watermark.fold(ev)(ev.withWatermark("ts", _))
   }
 
   /** Streaming exact dedup — the ingestion-side twin of

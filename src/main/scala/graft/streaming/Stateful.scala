@@ -465,6 +465,17 @@ object Stateful {
 
   // ------------------------------------------------- streaming KMV sketch
 
+  /** The bottom-k merge behind [[kmvSketchStream]] and
+    * [[sampleNStream]]: the k least distinct values of the stored state
+    * and a micro-batch's arrivals. Bottom-k of a union equals the
+    * bottom-k of the union of bottom-ks (the KMV merge losslessness,
+    * Sketch.scala:230), so the state is exact however the input was
+    * micro-batched.
+    */
+  private def bottomK[T: Ordering: scala.reflect.ClassTag](
+      state: Iterator[T], arrivals: Iterator[T], k: Int): Array[T] =
+    (state ++ arrivals).toArray.distinct.sorted.take(k)
+
   case class KmvIn(g: String, h: Long)
   case class KmvState(hs: Array[Long])
 
@@ -478,10 +489,9 @@ object Stateful {
     * construction-bounded — k longs per group, no watermark or TTL
     * needed (the same reason op 123's register table needs none).
     *
-    * Replay/duplicate-insensitivity: bottom-k of a union equals the
-    * bottom-k of the union of bottom-ks (the KMV merge losslessness,
-    * Sketch.scala:230), and Update-mode re-emissions only repeat
-    * subsets of historical sketches — so `distinct` + per-group
+    * Replay/duplicate-insensitivity: the [[bottomK]] merge is
+    * lossless, and Update-mode re-emissions only repeat subsets of
+    * historical sketches — so `distinct` + per-group
     * bottom-k over the sink reconstructs the batch sketch
     * bit-for-bit, however the input was micro-batched.
     */
@@ -492,8 +502,7 @@ object Stateful {
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (g, it, state) =>
           val prev = state.getOption.map(_.hs).getOrElse(Array.empty[Long])
-          val merged = (prev.iterator ++ it.map(_.h))
-            .toArray.distinct.sorted.take(k)
+          val merged = bottomK(prev.iterator, it.map(_.h), k)
           state.update(KmvState(merged))
           merged.iterator.map(KmvIn(g, _))
       }
@@ -691,9 +700,9 @@ object Stateful {
   /** Streaming fixed-n stratified sample — the ingestion twin of
     * [[graft.operators.Corpus.stratifiedSampleN]]: maintain the n
     * SMALLEST (md5-key, id) pairs per stratum across micro-batches.
-    * The md5 coin makes membership a pure order statistic, so this is
-    * the KMV merge argument verbatim (bottom-n of a union = bottom-n
-    * of the union of bottom-ns): state is n pairs per stratum by
+    * The md5 coin makes membership a pure order statistic, so the state
+    * transition is the same [[bottomK]] merge as [[kmvSketchStream]]'s,
+    * over (key, id) pairs: state is n pairs per stratum by
     * construction, Update-mode re-emissions only repeat historical
     * subsets, and distinct + per-stratum bottom-n over the sink equals
     * the batch sample exactly — a uniform n-per-stratum sample of an
@@ -715,8 +724,7 @@ object Stateful {
         (g, it, state) =>
           val prev = state.getOption.map(s => s.keys.zip(s.ids))
             .getOrElse(Array.empty[(Long, Long)])
-          val merged = (prev.iterator ++ it.map(e => (e.key, e.id)))
-            .toArray.distinct.sorted.take(n)
+          val merged = bottomK(prev.iterator, it.map(e => (e.key, e.id)), n)
           state.update(SampState(merged.map(_._1), merged.map(_._2)))
           merged.iterator.map { case (k, id) => SampIn(g, k, id) }
       }
@@ -829,9 +837,9 @@ object Stateful {
     * 338): state is ONE string per user (the last event type); each
     * arrival emits its (from, to) pair and becomes the new state. The
     * emitted pair multiset equals the batch lag-window pairs exactly
-    * (in-batch tsKey sort + cross-batch last-state carry), so a
-    * count/probability rollup over the sink replays the batch oracle
-    * verbatim.
+    * (in-batch tsKey sort + cross-batch last-state carry), so the batch
+    * op's [[graft.operators.Events.transitionReport]] over the sink
+    * equals the batch result.
     */
   def transitionStream(events: Dataset[TransIn]): Dataset[TransOut] = {
     import events.sparkSession.implicits._
@@ -852,9 +860,9 @@ object Stateful {
     * signup µs, converted flag). The first signup emits a 'signup'
     * marker; the first strictly-later conversion emits one 'conv' row
     * with the exact floor-division lag in seconds. Marker + lag
-    * multisets equal the batch first/first-later aggs, so the
-    * quantile/rate rollup replays the batch oracle verbatim. State is
-    * one long + one boolean per user.
+    * multisets equal the batch first/first-later aggs, so the batch
+    * quantile/rate report over the sink equals the batch result. State
+    * is one long + one boolean per user.
     */
   def conversionLagStream(events: Dataset[TransIn], anchorType: String,
                           conversionType: String): Dataset[ConvOut] = {
@@ -886,8 +894,9 @@ object Stateful {
     * lifetime first touch; each conversion emits its (last-touch
     * within the lookback else 'direct', first-touch else 'direct',
     * revenue) row. The emitted multiset equals the batch running
-    * first/last window rows, so the channel rollup replays the batch
-    * oracle verbatim. State is two strings + one long per user.
+    * first/last window rows, so the batch op's
+    * [[graft.operators.Events.attributionReport]] over the sink equals
+    * the batch result. State is two strings + one long per user.
     */
   def attributionStream(events: Dataset[AttrIn], conversionType: String,
                         lookbackUs: Long): Dataset[AttrOut] = {
@@ -928,8 +937,8 @@ object Stateful {
     * the `events_journeys` two-lag window (SURVEY §2 op 356): state is
     * the user's last TWO event types; each arrival emits (two-back,
     * one-back, current) once the history is deep enough, then shifts.
-    * The emitted path multiset equals the batch lag pairs exactly, so
-    * the top-10 rollup replays the batch oracle verbatim.
+    * The emitted path multiset equals the batch lag paths exactly, so
+    * the batch top-10 report over the sink equals the batch result.
     */
   def journeyStream(events: Dataset[TransIn]): Dataset[J3Out] = {
     import events.sparkSession.implicits._
@@ -952,8 +961,8 @@ object Stateful {
     * no watermark); each arrival emits the quantized kernel sum
     * Σ floor(B^Δsec·1e9 + 0.5) over the state BEFORE being appended —
     * exactly the batch op's rowsBetween(−60, −1) frame, so the batch
-    * oracle replays the stream verbatim. Same pow(B, int) shared-libm
-    * caveat as the batch op (the op-106 precedent).
+    * λ report over the sink equals the batch result. Same pow(B, int)
+    * shared-libm caveat as the batch op (the op-106 precedent).
     */
   def hawkesStream(arrivals: Dataset[HawkesIn]): Dataset[HawkesOut] = {
     import arrivals.sparkSession.implicits._
@@ -997,7 +1006,7 @@ object Stateful {
     * SAME valid_from, so the sink assembly is a groupBy
     * (user, valid_from, state) keeping min(valid_to) — closed beats
     * open, duplicates collapse — and the result equals the batch SCD2
-    * table exactly (the batch oracle verifies the stream verbatim).
+    * intervals exactly.
     * State is one string + one long per user; no-op repeats never
     * touch state (the batch op's run compression).
     */
@@ -1031,11 +1040,12 @@ object Stateful {
     * boolean per user — constant, no watermark needed (the op-146
     * argument); because the qualifying times are the EARLIEST ones and
     * flags only ever turn on, the fold is idempotent once reached and
-    * replays exactly in a batch engine (the batch op's oracle SQL
-    * verifies the stream verbatim). Emits the user's current reach
-    * after each micro-batch; a max per user over the sink reconstructs
-    * the final funnel. In-batch rows sort by full-precision event time
-    * (tsKey) then event_id; cross-batch continuity rides on the state.
+    * replays exactly in a batch engine. Emits the user's current reach
+    * after each micro-batch; the batch op's
+    * [[graft.operators.Events.funnelReach]] (a max per user) over the
+    * sink reconstructs the final funnel. In-batch rows sort by
+    * full-precision event time (tsKey) then event_id; cross-batch
+    * continuity rides on the state.
     * Cross-batch reordering: qualifying times are folded with min(),
     * so a late-arriving OLDER step event correctly lowers t1/t2;
     * EXACT batch parity additionally assumes a step-k event is not

@@ -68,6 +68,16 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("no two queries carry the same oracle SQL") {
+    val shared = Registry.families.flatten
+      .collect { case (n, Query(_, sql)) => sql -> n }
+      .groupBy(_._1).values.collect {
+        case ns if ns.size > 1 => ns.map(_._2).sorted.mkString(" = ")
+      }.toSeq.sorted
+    assert(shared.isEmpty, "a replay checked by a batch query's oracle " +
+      s"is a Twin: ${shared.mkString("; ")}")
+  }
+
   test("Verify and Tool reject an unknown query name before building a session") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-verify")
     val out = tmp.resolve("out")

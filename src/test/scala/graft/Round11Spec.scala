@@ -262,16 +262,6 @@ class Round11Spec extends SparkSpec {
     }
   }
 
-  test("streaming_vpin sink report equals the batch tick_vpin exactly") {
-    val batch = SparkEntry.queries("tick_vpin")(spark, dir)
-      .select($"event_type", $"n_buckets", $"vpin")
-      .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
-    val streamed = SparkEntry.queries("streaming_vpin")(spark, dir)
-      .select($"event_type", $"n_buckets", $"vpin")
-      .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
-    assert(streamed == batch)
-  }
-
   test("eod_pain_index: pain ≤ |max drawdown| and ≥ 0; ulcer dominates pain") {
     val pain = SparkEntry.queries("eod_pain_index")(spark, dir)
       .select($"event_type", $"pain_index").as[(String, Double)].collect().toMap
@@ -384,16 +374,6 @@ class Round11Spec extends SparkSpec {
       assert(math.abs(rows.map(_._5).sum - active) < 1e-5,
         s"blk $blk attribution identity")
     }
-  }
-
-  test("streaming_split sink report equals the batch corpus_split exactly") {
-    val batch = SparkEntry.queries("corpus_split")(spark, dir)
-      .select($"source", $"split", $"n_docs", $"n_tokens", $"frac")
-      .as[(String, String, Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val streamed = SparkEntry.queries("streaming_split")(spark, dir)
-      .select($"source", $"split", $"n_docs", $"n_tokens", $"frac")
-      .as[(String, String, Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    assert(streamed == batch)
   }
 
   test("layout_overlap: disjoint consecutive shards touch ≤ 1 file per probe") {

@@ -898,26 +898,6 @@ class Round11bSpec extends SparkSpec {
     for ((ok, q) <- got) assert(math.abs(q - qty(ok)) < 0.02, s"order $ok")
   }
 
-  test("streaming_volume_profile equals the batch volume profile") {
-    val batch = SparkEntry.queries("tick_volume_profile")(spark, dir)
-      .select($"event_type", $"hr", $"vol", $"vol_share")
-      .as[(String, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
-    val stream = SparkEntry.queries("streaming_volume_profile")(spark, dir)
-      .select($"event_type", $"hr", $"vol", $"vol_share")
-      .as[(String, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
-    assert(stream.toSeq == batch.toSeq)
-  }
-
-  test("streaming_chi2 equals the batch chi-square report") {
-    val batch = SparkEntry.queries("stats_chi2_independence")(spark, dir)
-      .select($"n_cells", $"dof", $"chi2").as[(Long, Long, Double)]
-      .collect().head
-    val stream = SparkEntry.queries("streaming_chi2")(spark, dir)
-      .select($"n_cells", $"dof", $"chi2").as[(Long, Long, Double)]
-      .collect().head
-    assert(stream == batch)
-  }
-
   test("eod_hill_tail: Hill estimator over the top-50 losses") {
     val rets = rows().groupBy(_._1).map { case (k, rs) =>
       k -> rs.sortBy(r => (r._2.getTime, r._3)).map(_._4)

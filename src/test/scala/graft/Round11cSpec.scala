@@ -352,15 +352,6 @@ class Round11cSpec extends SparkSpec {
     assert(bySeg.values.sum == byPri.values.sum, "both partitions cover all")
   }
 
-  test("streaming_readability equals the batch scores row-for-row") {
-    val batch = SparkEntry.queries("text_readability")(spark, dir)
-      .orderBy($"doc_id")
-      .as[(Long, Long, Long, Long, Double, Double)].collect()
-    val stream = SparkEntry.queries("streaming_readability")(spark, dir)
-      .as[(Long, Long, Long, Long, Double, Double)].collect()
-    assert(stream.sameElements(batch))
-  }
-
   test("rel_tpch_q14: promo share from an independent row scan") {
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select($"l_partkey", $"l_extendedprice", $"l_discount",

@@ -16,7 +16,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Timestamp, String, Double)]
     val events = input.toDF().toDF("ts", "event_type", "value")
 
-    val agg = EventStream.windowedStats(events, "1 minute", "5 minutes")
+    val agg = EventStream.windowedStats(events, "1 minute", Some("5 minutes"))
     val q = agg.writeStream.format("memory").queryName("win_agg")
       .outputMode("update").start()
     try {
