@@ -23,7 +23,7 @@ class TwinParitySpec extends SparkSpec {
     df.collect().toSeq.sortBy(_.toString)
 
   twins.foreach { case (twin, batch) =>
-    test(s"$twin replays $batch: same schema and sorted rows") {
+    test(s"$twin replays $batch: schema and sorted rows") {
       val b = SparkEntry.queries(batch)(spark, dir)
       val t = SparkEntry.queries(twin)(spark, dir)
       assert(columns(t) == columns(b))
