@@ -71,12 +71,13 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Graft.register(spark)
     // Warm up JIT/codegen + the parquet reader on EVERY table so the
-    // first query touching each one isn't charged footer/metadata setup.
+    // first query touching each one isn't charged footer/metadata setup
+    // or its schema inference (Tables.load resolves it once).
     graft.sources.Tables.All.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try graft.sources.Tables.load(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    graft.sources.Tables.load(spark, sfDir, "lineitem")
       .groupBy("l_returnflag").count().collect()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Each query runs REPS times and records the MIN: a single-shot

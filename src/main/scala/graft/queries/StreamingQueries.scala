@@ -57,26 +57,21 @@ object StreamingQueries {
     */
   private val ReplayPartitions = 8
 
-  /** A table's parquet files: `path` itself when it is one file, else
-    * its `.parquet` part files. Staging copies files, never the
-    * directory — a dir copied as one entry arrives EMPTY and the replay
-    * silently processes zero batches.
+  /** Copy `path`'s data `files` into the landing dir `in`, each at its
+    * path below `path`. Staging copies files, never the directory — a
+    * dir copied as one entry arrives EMPTY and the replay silently
+    * processes zero batches.
     */
-  private def tableFiles(path: String): Seq[java.nio.file.Path] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isDirectory(p)) Seq(p)
-    else {
-      import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(p)
-      try ls.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally ls.close()
+  private def stageFiles(s: SparkSession, path: String,
+                         files: Seq[org.apache.hadoop.fs.FileStatus],
+                         in: java.nio.file.Path): Unit = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    files.foreach { f =>
+      f.getPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .copyToLocalFile(false, f.getPath, new org.apache.hadoop.fs.Path(
+          in.resolve(graft.sources.Tables.relative(root, f)).toUri), true)
     }
   }
-
-  private def stageFiles(files: Seq[java.nio.file.Path],
-                         in: java.nio.file.Path): Unit =
-    files.foreach(f => java.nio.file.Files.copy(f, in.resolve(f.getFileName)))
 
   /** Process-lifetime landing-dir cache for [[streamReplay]] (r15,
     * r14 verdict #1): each source table is staged into a read-only
@@ -84,33 +79,30 @@ object StreamingQueries {
     * replay of that table. Staging is input preparation — a production
     * ingest's landing dir already exists before the stream starts —
     * so re-copying the same immutable source file per query (and per
-    * bench rep) only measured the harness. The key is the path plus
-    * every staged file's (name, size, mtime), so a table rewritten
-    * in-process is restaged rather than served stale. Nothing stateful
-    * is shared: checkpoint and sink dirs stay per-invocation, so every
-    * replay still starts from a fresh offset log and processes every
-    * file. [[sentinelReplay]] APPENDS to its landing dir mid-query and
-    * therefore stages a private one — only the immutable-source path
-    * goes through this cache.
+    * bench rep) only measured the harness. The key is the path plus its
+    * [[graft.sources.Tables.FileSet]], the identity the schema cache
+    * keys on too, so a table rewritten in-process is restaged rather
+    * than served stale. Nothing stateful is shared: checkpoint and sink
+    * dirs stay per-invocation, so every replay still starts from a
+    * fresh offset log and processes every file. [[sentinelReplay]]
+    * APPENDS to its landing dir mid-query and therefore stages a
+    * private one — only the immutable-source path goes through this
+    * cache.
     */
   private val stagedSources = scala.collection.concurrent.TrieMap[
-    (String, Seq[(String, Long, Long)]),
-    (String, org.apache.spark.sql.types.StructType)]()
+    (String, graft.sources.Tables.FileSet), String]()
 
   /** Stage `path` (single parquet file OR a directory of part files)
-    * into a landing dir, once per process and file set; returns
-    * (landing dir, source schema).
+    * into a landing dir, once per process and file set; returns the
+    * landing dir.
     */
-  private def stageSource(s: SparkSession, path: String,
-                          table: String): (String, org.apache.spark.sql.types.StructType) = {
-    val files = tableFiles(path)
-    val key = (path, files.map(f => (f.getFileName.toString,
-      java.nio.file.Files.size(f),
-      java.nio.file.Files.getLastModifiedTime(f).toMillis)))
+  private def stageSource(s: SparkSession, path: String, table: String): String = {
+    val files = graft.sources.Tables.dataFiles(s, path)
+    val key = (path, graft.sources.Tables.fileSet(new org.apache.hadoop.fs.Path(path), files))
     stagedSources.getOrElseUpdate(key, {
       val in = java.nio.file.Files.createTempDirectory(s"graft-src-$table")
-      stageFiles(files, in)
-      (in.toString, s.read.parquet(path).schema)
+      stageFiles(s, path, files, in)
+      in.toString
     })
   }
 
@@ -119,8 +111,10 @@ object StreamingQueries {
                            tag: String, mode: String = "append")
                           (build: DataFrame => DataFrame): DataFrame = {
     val t0 = System.nanoTime()
-    val (in, schema) = stageSource(s, s"$dir/$table.parquet", table)
-    runReplay(s, tag, t0, in, schema, mode, None, None)(build)
+    val path = s"$dir/$table.parquet"
+    val in = stageSource(s, path, table)
+    runReplay(s, tag, t0, in, graft.sources.Tables.schemaOf(s, path), mode,
+      None, None)(build)
   }
 
   /** Two-run sentinel flush for the watermark-gated `events` replays
@@ -146,8 +140,8 @@ object StreamingQueries {
     val t0 = System.nanoTime()
     val path = s"$dir/events.parquet"
     val in = java.nio.file.Files.createTempDirectory(s"graft-$tag-in")
-    stageFiles(tableFiles(path), in)
-    val raw = s.read.parquet(path)
+    stageFiles(s, path, graft.sources.Tables.dataFiles(s, path), in)
+    val raw = graft.sources.Tables.read(s, path)
     // Sentinel ts in whatever physical type the source carries, so the
     // fixed readStream schema still matches.
     val sentinelTs = raw.schema("ts").dataType match {
@@ -169,9 +163,11 @@ object StreamingQueries {
     * (each micro-batch filtered by `keep`), then — if `flush` is given —
     * run `flush` and run again against the same checkpoint. Records the
     * tag's [[replayStats]] (stage timed from `t0`) and returns the sink
-    * read back.
+    * read back with the schema its micro-batches wrote. A replay that
+    * ran no micro-batch (its landing dir held no file) raises, naming
+    * `tag`, rather than read its empty sink as zero rows.
     */
-  private def runReplay(s: SparkSession, tag: String, t0: Long, in: String,
+  private[graft] def runReplay(s: SparkSession, tag: String, t0: Long, in: String,
                         schema: org.apache.spark.sql.types.StructType,
                         mode: String, keep: Option[Column],
                         flush: Option[() => Unit])
@@ -181,6 +177,8 @@ object StreamingQueries {
     val stage = (System.nanoTime() - t0) / 1e9
     var wall = 0.0
     var addBatch = 0.0
+    val written = new java.util.concurrent.atomic.AtomicReference[
+      org.apache.spark.sql.types.StructType]()
     def run(): Unit = {
       val saved = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", ReplayPartitions.toString)
@@ -189,8 +187,11 @@ object StreamingQueries {
         val t1 = System.nanoTime()
         val q = build(src).writeStream
           .outputMode(mode)
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            keep.fold(batch)(batch.where).write.mode("append").parquet(out))
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            val kept = keep.fold(batch)(batch.where)
+            written.set(kept.schema)
+            kept.write.mode("append").parquet(out)
+          }
           .option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
@@ -202,8 +203,10 @@ object StreamingQueries {
     }
     run()
     flush.foreach { f => f(); run() }
+    val sunk = Option(written.get).getOrElse(throw new IllegalStateException(
+      s"replay $tag ran no micro-batch: its landing dir $in held no file"))
     SparkEntry.replayStats(tag) = (stage, wall, addBatch)
-    s.read.parquet(out)
+    s.read.schema(sunk).parquet(out)
   }
 
   /** Tie-free synthetic event time for streaming replays: 1 ms per
@@ -447,12 +450,12 @@ object StreamingQueries {
       val t0 = System.nanoTime()
       val ixPath =
         java.nio.file.Files.createTempDirectory("graft-sinc-ix").toString
-      graft.streaming.Stateful.minhashIndexRelation(
-          tbl(s, dir, "documents").select(col("doc_id"), col("text")),
-          "doc_id", "text")
-        .write.mode("overwrite").parquet(ixPath)
+      val ixRel = graft.streaming.Stateful.minhashIndexRelation(
+        tbl(s, dir, "documents").select(col("doc_id"), col("text")),
+        "doc_id", "text")
+      ixRel.write.mode("overwrite").parquet(ixPath)
       SparkEntry.setupStats("streaming_dedup_incremental") = (System.nanoTime() - t0) / 1e9
-      val ix = s.read.parquet(ixPath)
+      val ix = s.read.schema(ixRel.schema).parquet(ixPath)
       streamReplay(s, dir, "documents", "sincdedup") { src =>
         graft.streaming.Stateful.minhashIncrementalStreamIndexed(
           plantedCopies(src), ix, "doc_id", "text")
@@ -1332,11 +1335,11 @@ object StreamingQueries {
       val t0 = System.nanoTime()
       val ixPath =
         java.nio.file.Files.createTempDirectory("graft-sknn-ix").toString
-      Similarity.knnIndexRelation(tbl(s, dir, "embeddings"), "vec_id",
-          "embedding", EmbDim, planes = annPlanes(s))
-        .write.mode("overwrite").parquet(ixPath)
+      val ixRel = Similarity.knnIndexRelation(tbl(s, dir, "embeddings"),
+        "vec_id", "embedding", EmbDim, planes = annPlanes(s))
+      ixRel.write.mode("overwrite").parquet(ixPath)
       SparkEntry.setupStats("streaming_knn_graph") = (System.nanoTime() - t0) / 1e9
-      val ix = s.read.parquet(ixPath)
+      val ix = s.read.schema(ixRel.schema).parquet(ixPath)
       val sunk = streamReplay(s, dir, "embeddings", "sknn") { src =>
         Similarity.knnProbe(src, ix, "vec_id", "embedding", EmbDim,
           planes = annPlanes(s))

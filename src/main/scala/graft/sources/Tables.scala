@@ -1,12 +1,16 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Source layer for the star-schema testdata (and any parquet lake with
-  * the same shape). Readers stay plain `spark.read.parquet` so Catalyst
-  * keeps pushdown/pruning; the one normalization this layer owns is the
+  * the same shape). Every table is read through [[read]]: plain
+  * `spark.read.parquet` on the first read of a file set, and
+  * `spark.read.schema(schemaOf(…)).parquet` after it, so Catalyst keeps
+  * pushdown and pruning exactly as before and only the schema-inference
+  * job goes. The one normalization this layer owns is the
   * nanosecond-timestamp fix-up for `events`.
   */
 object Tables {
@@ -14,9 +18,91 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = read(spark, s"$dir/$name.parquet")
     normalizeTimestamps(if (name == "events") normalizeEventTs(df) else df)
   }
+
+  /** The identity of a file set: each data file's path relative to the
+    * table path, length and modification time. A table rewritten in
+    * place gets a new identity, so nothing keyed on it is served stale.
+    */
+  type FileSet = Seq[(String, Long, Long)]
+
+  /** A table's data files, sorted by path: `path` itself when it is one
+    * file, else every file under it (recursively) whose name Spark's
+    * reader would not skip (`_`- or `.`-prefixed, e.g. `_SUCCESS` or a
+    * `.crc`). Listed through the Hadoop `FileSystem`, so `hdfs://` and
+    * `s3a://` tables work as local ones do. Empty when nothing exists
+    * at `path` (a glob, or a missing table).
+    */
+  def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    st match {
+      case None => Seq.empty
+      case Some(f) if f.isFile => Seq(f)
+      case _ =>
+        val it = fs.listFiles(p, true)
+        val out = Seq.newBuilder[FileStatus]
+        while (it.hasNext) {
+          val f = it.next()
+          if (!relative(p, f).split('/').exists(n => n.startsWith(".") ||
+              n.startsWith("_") && !n.contains("="))) out += f
+        }
+        out.result().sortBy(_.getPath.toString)
+    }
+  }
+
+  /** `f`'s path below the table path `root` (its name when `root` is the file). */
+  def relative(root: Path, f: FileStatus): String = {
+    val r = root.toUri.getPath.stripSuffix("/")
+    val fp = f.getPath.toUri.getPath
+    if (fp == r) f.getPath.getName else fp.stripPrefix(r + "/")
+  }
+
+  def fileSet(root: Path, files: Seq[FileStatus]): FileSet =
+    files.map(f => (relative(root, f), f.getLen, f.getModificationTime))
+
+  /** Process-lifetime schema cache of [[schemaOf]]. The key is the path,
+    * its [[FileSet]] and the session's explicitly set parquet confs. */
+  private val schemas = scala.collection.concurrent.TrieMap[
+    (String, FileSet, Seq[(String, String)]), StructType]()
+
+  /** The cached schema of `path`, or — on a miss — the DataFrame whose
+    * inference just filled the cache, so a miss lists the files once.
+    * An empty file set is never cached: Spark reads it and raises its
+    * own error (or expands the glob) as a bare read would.
+    */
+  private def resolve(spark: SparkSession, path: String): Either[StructType, DataFrame] = {
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    val files = fileSet(new Path(path), dataFiles(spark, path))
+    val key = (path, files, confs)
+    schemas.get(key) match {
+      case Some(schema) => Left(schema)
+      case None =>
+        val df = spark.read.parquet(path)
+        if (files.nonEmpty) schemas.putIfAbsent(key, df.schema)
+        Right(df)
+    }
+  }
+
+  /** Spark's own inferred schema of the parquet at `path`, inferred once
+    * per process for each file set and parquet conf set (the
+    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` confs the
+    * session sets explicitly; `nanosAsLong` or `binaryAsString` change
+    * what inference returns). Inference is a Spark job over the
+    * footers; its answer only changes when a file does.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    resolve(spark, path).fold(identity, _.schema)
+
+  /** The parquet at `path`, un-normalized, read with [[schemaOf]]. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    resolve(spark, path).fold(spark.read.schema(_).parquet(path), identity)
 
   /** ns→µs ingest shim (reference README.md:40's nanosecond-support
     * TODO): accept nanosecond-grain event time as int64 ns-since-epoch

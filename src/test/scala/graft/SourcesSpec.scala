@@ -130,4 +130,82 @@ class SourcesSpec extends SparkSpec {
     assert(us(4L) == 1712928600000000L)
     assert(us(5L) == -1L)
   }
+
+  test("a file set's first load starts at most one job, a second load none") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      .write.parquet(s"$dir/t.parquet")
+    val first = jobCount(Tables.load(spark, dir, "t"))
+    val second = jobCount(Tables.load(spark, dir, "t"))
+    assert(first <= 1, s"first load ran $first jobs")
+    assert(second == 0, s"second load ran $second jobs")
+    assert(Tables.load(spark, dir, "t").as[(Long, String)].collect().sorted
+      .sameElements(Array((1L, "a"), (2L, "b"))))
+  }
+
+  test("a table rewritten with an added column shows it on the next load") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    Seq(1L, 2L).toDF("k").write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k"))
+    Seq((3L, 4.0)).toDF("k", "x")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = Tables.load(spark, dir, "t")
+    assert(again.columns.toSeq == Seq("k", "x"))
+    assert(again.as[(Long, Double)].collect().toSeq == Seq((3L, 4.0)))
+  }
+
+  test("spark.sql.parquet.binaryAsString flipped between loads gives each type") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    // Written without Spark's schema in the footer: a bare BINARY column
+    // is what binaryAsString reinterprets.
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    val schema = MessageTypeParser.parseMessageType("message m { required binary b; }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/t.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "x"))
+    finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    try {
+      spark.conf.set(key, "false")
+      assert(Tables.load(spark, dir, "t").schema("b").dataType == BinaryType)
+      spark.conf.set(key, "true")
+      val asString = Tables.load(spark, dir, "t")
+      assert(asString.schema("b").dataType == StringType)
+      assert(asString.as[String].collect().toSeq == Seq("x"))
+      spark.conf.set(key, "false")
+      assert(Tables.load(spark, dir, "t").schema("b").dataType == BinaryType)
+    } finally spark.conf.unset(key)
+  }
+
+  test("each sf0.001 table loads with the schema of a plain read, normalized") {
+    val dir = "/root/testdata/sf0.001"
+    Tables.All.foreach { t =>
+      val plain = spark.read.parquet(s"$dir/$t.parquet")
+      val want = Tables.normalizeTimestamps(
+        if (t == "events") Tables.normalizeEventTs(plain) else plain).schema
+      // twice: the first load may infer, the second reads the cache
+      assert(Tables.load(spark, dir, t).schema == want, t)
+      assert(Tables.load(spark, dir, t).schema == want, t)
+    }
+  }
+
+  test("a read with the cached schema still prunes partitions and pushes filters") {
+    val out = java.nio.file.Files.createTempDirectory("graft-part").toString
+    Tables.writePartitioned(Seq((1L, 2.0, "click"), (2L, 5.0, "view"))
+      .toDF("event_id", "value", "event_type"), out, Seq("event_type"))
+    Tables.read(spark, out)
+    val back = Tables.read(spark, out)
+      .where($"event_type" === "click" && $"value" > 1.0)
+    assert(back.schema == spark.read.parquet(out).schema)
+    assert(back.select($"event_id").as[Long].collect().toSeq == Seq(1L))
+    val plan = back.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
+      s"no partition pruning in scan:\n${plan.take(1200)}")
+    assert(plan.contains("PushedFilters: [IsNotNull(value), GreaterThan(value,1.0)]"),
+      s"no filter pushdown in scan:\n${plan.take(1200)}")
+  }
 }

@@ -205,4 +205,15 @@ class StreamingSpec extends SparkSpec {
       assert(got == Set((7L, 100L)), got.toString)
     } finally q.stop()
   }
+
+  test("a replay whose landing dir holds no file raises, naming its tag") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val in = java.nio.file.Files.createTempDirectory("graft-empty-in").toString
+    val e = intercept[IllegalStateException] {
+      graft.queries.StreamingQueries.runReplay(spark, "empty_landing",
+        System.nanoTime(), in, StructType(Seq(StructField("x", LongType))),
+        "append", None, None)(identity)
+    }
+    assert(e.getMessage.contains("empty_landing"), e.getMessage)
+  }
 }
