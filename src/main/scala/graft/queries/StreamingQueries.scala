@@ -57,21 +57,24 @@ object StreamingQueries {
     */
   private val ReplayPartitions = 8
 
-  /** Copy `path`'s data `files` into the landing dir `in`, each at its
-    * path below `path`. Staging copies files, never the directory — a
-    * dir copied as one entry arrives EMPTY and the replay silently
-    * processes zero batches.
+  /** Copy a table's data `files` ([[graft.sources.Tables.dataFiles]])
+    * into the landing dir `in`, each at its path below the table path.
+    * Staging copies files, never the directory — a dir copied as one
+    * entry arrives EMPTY and the replay silently processes zero batches.
+    * A destination outside `in` is refused: copying a source onto
+    * itself would truncate it.
     */
-  private def stageFiles(s: SparkSession, path: String,
-                         files: Seq[org.apache.hadoop.fs.FileStatus],
-                         in: java.nio.file.Path): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    files.foreach { f =>
+  private def stageFiles(s: SparkSession,
+                         files: Seq[(String, org.apache.hadoop.fs.FileStatus)],
+                         in: java.nio.file.Path): Unit =
+    files.foreach { case (rel, f) =>
+      val dst = in.resolve(rel).normalize()
+      require(!java.nio.file.Paths.get(rel).isAbsolute && dst.startsWith(in),
+        s"staged file $rel lands outside the landing dir $in")
       f.getPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .copyToLocalFile(false, f.getPath, new org.apache.hadoop.fs.Path(
-          in.resolve(graft.sources.Tables.relative(root, f)).toUri), true)
+        .copyToLocalFile(false, f.getPath,
+          new org.apache.hadoop.fs.Path(dst.toUri), true)
     }
-  }
 
   /** Process-lifetime landing-dir cache for [[streamReplay]] (r15,
     * r14 verdict #1): each source table is staged into a read-only
@@ -92,29 +95,29 @@ object StreamingQueries {
   private val stagedSources = scala.collection.concurrent.TrieMap[
     (String, graft.sources.Tables.FileSet), String]()
 
-  /** Stage `path` (single parquet file OR a directory of part files)
-    * into a landing dir, once per process and file set; returns the
-    * landing dir.
+  /** Stage `path` (single parquet file OR a directory of part files),
+    * whose data files are `files`, into a landing dir, once per process
+    * and file set; returns the landing dir.
     */
-  private def stageSource(s: SparkSession, path: String, table: String): String = {
-    val files = graft.sources.Tables.dataFiles(s, path)
-    val key = (path, graft.sources.Tables.fileSet(new org.apache.hadoop.fs.Path(path), files))
-    stagedSources.getOrElseUpdate(key, {
+  private[graft] def stageSource(s: SparkSession, path: String, table: String,
+                                 files: Seq[(String, org.apache.hadoop.fs.FileStatus)]): String =
+    stagedSources.getOrElseUpdate((path, graft.sources.Tables.fileSet(files)), {
       val in = java.nio.file.Files.createTempDirectory(s"graft-src-$table")
-      stageFiles(s, path, files, in)
+      stageFiles(s, files, in)
       in.toString
     })
-  }
 
-  /** Replay `table` through `build` in one AvailableNow run. */
+  /** Replay `table` through `build` in one AvailableNow run. The table
+    * is listed once, for both the staging key and the schema key. */
   private def streamReplay(s: SparkSession, dir: String, table: String,
                            tag: String, mode: String = "append")
                           (build: DataFrame => DataFrame): DataFrame = {
     val t0 = System.nanoTime()
     val path = s"$dir/$table.parquet"
-    val in = stageSource(s, path, table)
-    runReplay(s, tag, t0, in, graft.sources.Tables.schemaOf(s, path), mode,
-      None, None)(build)
+    val files = graft.sources.Tables.dataFiles(s, path)
+    val in = stageSource(s, path, table, files)
+    runReplay(s, tag, t0, in, graft.sources.Tables.schemaOf(s, path,
+      graft.sources.Tables.fileSet(files)), mode, None, None)(build)
   }
 
   /** Two-run sentinel flush for the watermark-gated `events` replays
@@ -140,8 +143,9 @@ object StreamingQueries {
     val t0 = System.nanoTime()
     val path = s"$dir/events.parquet"
     val in = java.nio.file.Files.createTempDirectory(s"graft-$tag-in")
-    stageFiles(s, path, graft.sources.Tables.dataFiles(s, path), in)
-    val raw = graft.sources.Tables.read(s, path)
+    val files = graft.sources.Tables.dataFiles(s, path)
+    stageFiles(s, files, in)
+    val raw = graft.sources.Tables.read(s, path, graft.sources.Tables.fileSet(files))
     // Sentinel ts in whatever physical type the source carries, so the
     // fixed readStream schema still matches.
     val sentinelTs = raw.schema("ts").dataType match {

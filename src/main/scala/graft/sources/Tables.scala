@@ -28,58 +28,59 @@ object Tables {
     */
   type FileSet = Seq[(String, Long, Long)]
 
-  /** A table's data files, sorted by path: `path` itself when it is one
-    * file, else every file under it (recursively) whose name Spark's
-    * reader would not skip (`_`- or `.`-prefixed, e.g. `_SUCCESS` or a
-    * `.crc`). Listed through the Hadoop `FileSystem`, so `hdfs://` and
-    * `s3a://` tables work as local ones do. Empty when nothing exists
-    * at `path` (a glob, or a missing table).
+  /** A table's data files, sorted by path, each with its path below
+    * `path` (its name when `path` is one file): every file under `path`
+    * (recursively) whose name Spark's reader would not skip (`_`- or
+    * `.`-prefixed, e.g. `_SUCCESS` or a `.crc`). Listed through the
+    * Hadoop `FileSystem`, so `hdfs://` and `s3a://` tables work as local
+    * ones do. The listing returns qualified paths, so the root is
+    * qualified before they are cut below it: a relative `path` gives
+    * the same relative names as an absolute one. Empty when nothing
+    * exists at `path` (a glob, or a missing table).
     */
-  def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+  def dataFiles(spark: SparkSession, path: String): Seq[(String, FileStatus)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = try Some(fs.getFileStatus(p))
       catch { case _: java.io.FileNotFoundException => None }
     st match {
       case None => Seq.empty
-      case Some(f) if f.isFile => Seq(f)
-      case _ =>
+      case Some(f) if f.isFile => Seq(f.getPath.getName -> f)
+      case Some(d) =>
+        val root = fs.makeQualified(d.getPath).toUri.getPath.stripSuffix("/") + "/"
         val it = fs.listFiles(p, true)
-        val out = Seq.newBuilder[FileStatus]
+        val out = Seq.newBuilder[(String, FileStatus)]
         while (it.hasNext) {
           val f = it.next()
-          if (!relative(p, f).split('/').exists(n => n.startsWith(".") ||
-              n.startsWith("_") && !n.contains("="))) out += f
+          val fp = fs.makeQualified(f.getPath).toUri.getPath
+          require(fp.startsWith(root), s"listed file $fp is not below $root")
+          val rel = fp.stripPrefix(root)
+          if (!rel.split('/').exists(n => n.startsWith(".") ||
+              n.startsWith("_") && !n.contains("="))) out += rel -> f
         }
-        out.result().sortBy(_.getPath.toString)
+        out.result().sortBy(_._1)
     }
   }
 
-  /** `f`'s path below the table path `root` (its name when `root` is the file). */
-  def relative(root: Path, f: FileStatus): String = {
-    val r = root.toUri.getPath.stripSuffix("/")
-    val fp = f.getPath.toUri.getPath
-    if (fp == r) f.getPath.getName else fp.stripPrefix(r + "/")
-  }
-
-  def fileSet(root: Path, files: Seq[FileStatus]): FileSet =
-    files.map(f => (relative(root, f), f.getLen, f.getModificationTime))
+  def fileSet(files: Seq[(String, FileStatus)]): FileSet =
+    files.map { case (rel, f) => (rel, f.getLen, f.getModificationTime) }
 
   /** Process-lifetime schema cache of [[schemaOf]]. The key is the path,
     * its [[FileSet]] and the session's explicitly set parquet confs. */
   private val schemas = scala.collection.concurrent.TrieMap[
     (String, FileSet, Seq[(String, String)]), StructType]()
 
-  /** The cached schema of `path`, or — on a miss — the DataFrame whose
-    * inference just filled the cache, so a miss lists the files once.
+  /** The cached schema of `path` with file set `files`, or — on a miss —
+    * the DataFrame whose inference just filled the cache, so a miss
+    * infers once rather than once for the schema and again for the read.
     * An empty file set is never cached: Spark reads it and raises its
     * own error (or expands the glob) as a bare read would.
     */
-  private def resolve(spark: SparkSession, path: String): Either[StructType, DataFrame] = {
+  private def resolve(spark: SparkSession, path: String,
+                      files: FileSet): Either[StructType, DataFrame] = {
     val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
     }.sorted
-    val files = fileSet(new Path(path), dataFiles(spark, path))
     val key = (path, files, confs)
     schemas.get(key) match {
       case Some(schema) => Left(schema)
@@ -95,14 +96,22 @@ object Tables {
     * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` confs the
     * session sets explicitly; `nanosAsLong` or `binaryAsString` change
     * what inference returns). Inference is a Spark job over the
-    * footers; its answer only changes when a file does.
+    * footers; its answer only changes when a file does. Each call lists
+    * the file set once for the key, besides Spark's own listing of any
+    * read; pass `files` when the caller has listed them already.
     */
   def schemaOf(spark: SparkSession, path: String): StructType =
-    resolve(spark, path).fold(identity, _.schema)
+    schemaOf(spark, path, fileSet(dataFiles(spark, path)))
+
+  def schemaOf(spark: SparkSession, path: String, files: FileSet): StructType =
+    resolve(spark, path, files).fold(identity, _.schema)
 
   /** The parquet at `path`, un-normalized, read with [[schemaOf]]. */
   def read(spark: SparkSession, path: String): DataFrame =
-    resolve(spark, path).fold(spark.read.schema(_).parquet(path), identity)
+    read(spark, path, fileSet(dataFiles(spark, path)))
+
+  def read(spark: SparkSession, path: String, files: FileSet): DataFrame =
+    resolve(spark, path, files).fold(spark.read.schema(_).parquet(path), identity)
 
   /** ns→µs ingest shim (reference README.md:40's nanosecond-support
     * TODO): accept nanosecond-grain event time as int64 ns-since-epoch

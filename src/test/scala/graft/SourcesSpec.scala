@@ -193,6 +193,30 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
+  test("a table under a relative path loads and stages without touching its files") {
+    val base = java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+    val rel = java.nio.file.Files.createTempDirectory(base, "graft-rel")
+    assert(!rel.isAbsolute, rel)
+    val dir = rel.toString
+    val path = s"$dir/t.parquet"
+    try {
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(2).write.parquet(path)
+      val files = Tables.dataFiles(spark, path)
+      val lens = files.map { case (r, f) => r -> f.getLen }
+      assert(files.nonEmpty && files.forall { case (r, f) =>
+        r == f.getPath.getName && r.startsWith("part-") && f.getLen > 0 }, lens)
+      assert(Tables.load(spark, dir, "t").count() == 2)
+      val in = graft.queries.StreamingQueries.stageSource(spark, path, "t", files)
+      assert(spark.read.parquet(in).count() == 2)
+      assert(Tables.dataFiles(spark, path).map { case (r, f) => r -> f.getLen } == lens)
+      assert(Tables.load(spark, dir, "t").as[(Long, String)].collect().sorted
+        .sameElements(Array((1L, "a"), (2L, "b"))))
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
   test("a read with the cached schema still prunes partitions and pushes filters") {
     val out = java.nio.file.Files.createTempDirectory("graft-part").toString
     Tables.writePartitioned(Seq((1L, 2.0, "click"), (2L, 5.0, "view"))
