@@ -119,31 +119,16 @@ object Cluster {
     pairsFromAssign(kmeansAssigned(df, idCol, vecCol, k, iters), df,
       idCol, vecCol, threshold, maxCluster)
 
+  /** Pairs within a cluster: each id is in exactly one cluster, so the
+    * pairs are already unique — no distinct needed.
+    */
   private def pairsFromAssign(assign: DataFrame, df: DataFrame,
                               idCol: String, vecCol: String,
                               threshold: Double,
-                              maxCluster: Int): DataFrame = {
-    // Pairs within a cluster: ids only (each id is in exactly one
-    // cluster, so pairs are already unique — no distinct needed).
-    val cand = assign.groupBy(col("cid"))
-      .agg(collect_list(col("id")).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxCluster)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-    val v = df.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", Similarity.normNative(col("v")))
-    val a = v.select(col("id").as("id_a"), col("v").as("va"), col("n").as("na"))
-      .hint("shuffle_hash")
-    val b = v.select(col("id").as("id_b"), col("v").as("vb"), col("n").as("nb"))
-      .hint("shuffle_hash")
-    cand.join(a, "id_a").join(b, "id_b")
-      .withColumn("cosine",
-        Similarity.dotNative(col("va"), col("vb")) / (col("na") * col("nb")))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-  }
+                              maxCluster: Int): DataFrame =
+    Dedup.verifyCosine(
+      Dedup.bucketPairs(assign, Seq(col("cid")), col("id"), maxCluster),
+      Dedup.normedVectors(df, idCol, vecCol), threshold)
 
   /** SemDeDup verdicts — [[semanticDedupPairs]] made actionable: the
     * ≥τ pair graph resolves to connected components

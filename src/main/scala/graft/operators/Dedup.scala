@@ -41,17 +41,35 @@ object Dedup {
   /** Modulus for the affine minhash family (2^32). */
   private[graft] val MinhashMod = 4294967296L
 
-  /** Default cap on a bucket/posting id list (minhashLshPairs,
-    * ngramJaccardPairs, embeddingCosinePairs). The in-bucket pair
-    * expansion aggregates each bucket's ids into ONE collect_list row,
-    * so an unbounded hot bucket (a stop-shingle in millions of docs, a
-    * degenerate band signature) concentrates O(c) heap on one executor
-    * and c² candidate pairs downstream. 10k ids ≈ 80 KB buffer and
-    * ≤5·10⁷ pairs — safe; and a bucket hotter than that carries no
-    * per-pair signal worth quadratic work (the standard stop-shingle
-    * drop). Pass Int.MaxValue explicitly for exact uncapped runs.
+  /** Default cap on a bucket/posting id list ([[bucketPairs]]). The
+    * in-bucket pair expansion aggregates each bucket's ids into ONE
+    * collect_list row, so an unbounded hot bucket (a stop-shingle in
+    * millions of docs, a degenerate band signature) concentrates O(c)
+    * heap on one executor and c² candidate pairs downstream. 10k ids ≈
+    * 80 KB buffer and ≤5·10⁷ pairs — safe; and a bucket hotter than that
+    * carries no per-pair signal worth quadratic work (the standard
+    * stop-shingle drop). Pass Int.MaxValue explicitly for exact uncapped
+    * runs.
     */
   val DefaultMaxBucket = 10000
+
+  /** The in-bucket pair expansion of every candidate generator here
+    * and [[Cluster.semanticDedupPairs]]: each pair of `member`s sharing
+    * a `bucket` of 2..`maxBucket` members, as columns `a`, `b` with
+    * `key(a) < key(b)` — once per shared bucket. Generated WITHIN each
+    * bucket (groupBy + double explode), not by a bucket self-join: the
+    * keyed input is computed once instead of twice, and one shuffle
+    * replaces two.
+    */
+  private[graft] def bucketPairs(keyed: DataFrame, bucket: Seq[Column],
+                                 member: Column, maxBucket: Int,
+                                 key: Column => Column = identity): DataFrame =
+    keyed.groupBy(bucket: _*)
+      .agg(collect_list(member).as("ids"))
+      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
+      .select(explode(col("ids")).as("a"), col("ids"))
+      .select(col("a"), explode(col("ids")).as("b"))
+      .where(key(col("a")) < key(col("b")))
 
   /** MinHash signatures: k min values per doc under the affine family
     * h_i(s) = (a(s) + i·b(s)) mod 2^32, where a,b are the first two
@@ -106,24 +124,12 @@ object Dedup {
                       k: Int = 8, bands: Int = 4,
                       shingleWidth: Int = 3,
                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val bandKeys = lshBandKeys(df, idCol, textCol, k, bands, shingleWidth)
-    // Pairs are generated WITHIN each bucket (groupBy + double explode)
-    // rather than via a bucket self-join: the signature pipeline runs
-    // once instead of twice, and one shuffle replaces two. LSH buckets
-    // are small by construction, so the per-bucket id list is bounded;
-    // a degenerate all-docs-identical bucket is the pathological case
-    // either way (c² candidate pairs is inherent to LSH).
-    // maxBucket caps the c² pair blowup of a degenerate bucket (every
-    // doc sharing a band signature): such buckets carry no near-dup
-    // signal worth quadratic work, the same way production dedup drops
-    // hot shingles. See DefaultMaxBucket for the default's rationale.
-    bandKeys.groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col(idCol)).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
+    // LSH buckets are small by construction; maxBucket caps the c²
+    // blowup of a degenerate one (every doc sharing a band signature).
+    bucketPairs(lshBandKeys(df, idCol, textCol, k, bands, shingleWidth),
+        Seq(col("band"), col("bucket")), col(idCol), maxBucket)
       .distinct()
+      .select(col("a").as("id_a"), col("b").as("id_b"))
   }
 
   /** Incremental MinHash-LSH dedup: flag NEW docs against an EXISTING
@@ -219,61 +225,54 @@ object Dedup {
       struct(lit(b).as("band"),
         shiftright(col("simhash"), lo).bitwiseAND(lit(mask)).as("bucket"))
     }: _*)
-    fps.select(col("id"), col("simhash"), explode(bandArr).as("bb"))
+    val keyed = fps.select(col("id"), col("simhash"), explode(bandArr).as("bb"))
       .select(col("id"), col("simhash"),
         col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(struct(col("id"), col("simhash"))).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(explode(col("ids")).as("a"), col("ids"))
-      .select(col("a"), explode(col("ids")).as("b"))
-      .where(col("a.id") < col("b.id"))
+    bucketPairs(keyed, Seq(col("band"), col("bucket")),
+        struct(col("id"), col("simhash")), maxBucket, _.getField("id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
   }
 
+  /** (id_a, id_b, common = |A∩B|, sz_a = |A|, sz_b) for every doc
+    * pair sharing a kept shingle — the front half of
+    * [[ngramJaccardPairs]] and [[containmentPairs]]. |A| is
+    * size(shingle array), attached to every posting at explosion time (a
+    * sizes relation would re-explode the corpus or cost a third
+    * shuffle); pair hits inside each posting list count |A∩B|, so the
+    * postings shuffle ONCE. maxPostings drops stop-shingles, so capped
+    * runs UNDERCOUNT |A∩B| slightly for pairs sharing a dropped shingle
+    * — the standard recall/cost trade at 100 TB.
+    */
+  private def shingleOverlaps(df: DataFrame, idCol: String, textCol: String,
+                              shingleWidth: Int, maxPostings: Int): DataFrame = {
+    val sh = df
+      .select(col(idCol).as("id"), shingles(col(textCol), shingleWidth).as("_arr"))
+      .select(col("id"), size(col("_arr")).as("sz"), explode(col("_arr")).as("sh"))
+    bucketPairs(sh, Seq(col("sh")), struct(col("id"), col("sz")), maxPostings,
+        _.getField("id"))
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .agg(count(lit(1)).as("common"),
+        // min of a per-id constant: deterministic under partial agg
+        min(col("a.sz")).as("sz_a"), min(col("b.sz")).as("sz_b"))
+  }
+
   /** Exact n-gram Jaccard similarity for candidate pairs, via the
-    * explode-join-count formulation: |A∩B| from a shingle self-join,
+    * explode-join-count formulation: |A∩B| from [[shingleOverlaps]],
     * |A∪B| = |A|+|B|-|A∩B|. Shuffles on the shingle key — linear in
     * total postings, never materializes the full pair matrix.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleWidth: Int = 3, threshold: Double = 0.2,
-                        maxPostings: Int = DefaultMaxBucket): DataFrame = {
-    // |A| is just size(shingle array), attached to every posting at
-    // explosion time — a sizes relation would either re-explode the
-    // corpus (recomputing the shingles) or cost a third shuffle.
-    val sh = df
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleWidth).as("_arr"))
-      .select(col("id"), size(col("_arr")).as("sz"), explode(col("_arr")).as("sh"))
-    // Same single-pass shape as the LSH banding: group postings by
-    // shingle, emit (id_a < id_b) pairs inside each posting list, count
-    // pair hits = |A∩B|. The postings are shuffled ONCE (vs a window
-    // sort + a two-sided self-join reading the explosion twice), and the
-    // pair cardinality is identical to the self-join's by construction.
-    // maxPostings drops stop-shingles (present in a large fraction of
-    // the corpus): they contribute c² candidate pairs and near-zero
-    // Jaccard evidence. Capped runs UNDERCOUNT |A∩B| slightly for pairs
-    // sharing a dropped shingle — the standard recall/cost trade at
-    // 100 TB. See DefaultMaxBucket for the default's rationale.
-    sh.groupBy(col("sh"))
-      .agg(collect_list(struct(col("id"), col("sz"))).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxPostings)
-      .select(explode(col("ids")).as("a"), col("ids"))
-      .select(col("a"), explode(col("ids")).as("b"))
-      .where(col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("common"),
-        // min of a per-id constant: deterministic under partial agg
-        min(col("a.sz")).as("sz_a"), min(col("b.sz")).as("sz_b"))
+                        maxPostings: Int = DefaultMaxBucket): DataFrame =
+    shingleOverlaps(df, idCol, textCol, shingleWidth, maxPostings)
       .withColumn("jaccard",
         col("common").cast("double") /
           (col("sz_a") + col("sz_b") - col("common")).cast("double"))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
 
   /** Directed shingle containment C(A→B) = |A∩B| / |A| — the
     * ASYMMETRIC near-dup signal Jaccard can't see: a short document
@@ -282,27 +281,15 @@ object Dedup {
     * for quote/subset detection in corpus curation (Broder 1997's
     * second resemblance measure).
     *
-    * Same single-postings-shuffle shape as [[ngramJaccardPairs]]
-    * (grouped postings → in-list pairs → count = |A∩B|), emitting
+    * The same [[shingleOverlaps]] as [[ngramJaccardPairs]], emitting
     * BOTH directions' containment per unordered pair; kept when
     * either direction clears the threshold. Same stop-shingle cap,
     * same slight undercount trade under capping.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        shingleWidth: Int = 3, threshold: Double = 0.5,
-                       maxPostings: Int = DefaultMaxBucket): DataFrame = {
-    val sh = df
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleWidth).as("_arr"))
-      .select(col("id"), size(col("_arr")).as("sz"), explode(col("_arr")).as("sh"))
-    sh.groupBy(col("sh"))
-      .agg(collect_list(struct(col("id"), col("sz"))).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxPostings)
-      .select(explode(col("ids")).as("a"), col("ids"))
-      .select(col("a"), explode(col("ids")).as("b"))
-      .where(col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("common"),
-        min(col("a.sz")).as("sz_a"), min(col("b.sz")).as("sz_b"))
+                       maxPostings: Int = DefaultMaxBucket): DataFrame =
+    shingleOverlaps(df, idCol, textCol, shingleWidth, maxPostings)
       .withColumn("containment_a",
         col("common").cast("double") / col("sz_a").cast("double"))
       .withColumn("containment_b",
@@ -311,7 +298,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         round(col("containment_a"), 6).as("containment_a"),
         round(col("containment_b"), 6).as("containment_b"))
-  }
 
   /** Embedding near-duplicates: pairs with cosine >= threshold, with
     * candidates generated by sign-LSH bucketing (never all-pairs).
@@ -342,9 +328,7 @@ object Dedup {
                            threshold: Double, dim: Int, planes: Int = 8,
                            tables: Int = 4,
                            maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val v = df.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", Similarity.normNative(col("v")))
+    val v = normedVectors(df, idCol, vecCol)
     // One row per (table, vector): a single exploded array of structs,
     // not `tables` unioned selects (which would rescan the corpus).
     val tb = array((0 until tables).map { t =>
@@ -353,33 +337,44 @@ object Dedup {
     }: _*)
     val keys = v.select(col("id"), explode(tb).as("tb"))
       .select(col("id"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-    // Same in-bucket pair expansion as minhashLshPairs; distinct()
-    // because a pair may collide in several tables.
-    val cand = keys.groupBy(col("tbl"), col("bucket"))
-      .agg(collect_list(col("id")).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .distinct()
-    // Exact verification: candidates are a skinny (id_a, id_b) relation;
-    // vectors re-attach via two key joins (shuffle on id — vectors never
-    // ride through the bucket aggregation).
-    // shuffle_hash, never broadcast: the vector relation is O(n·dim)
-    // bytes — at corpus scale it cannot fit a broadcast (the Scale probe
-    // caught exactly this: at 100k×64d Spark picked a broadcast build
-    // and died with notEnoughMemoryToBuildAndBroadcast). A hash join on
-    // the id shuffle is the plan that survives any n.
-    val a = v.select(col("id").as("id_a"), col("v").as("va"), col("n").as("na"))
-      .hint("shuffle_hash")
-    val b = v.select(col("id").as("id_b"), col("v").as("vb"), col("n").as("nb"))
-      .hint("shuffle_hash")
-    cand.join(a, "id_a").join(b, "id_b")
-      .withColumn("cosine",
+    // distinct() because a pair may collide in several tables.
+    verifyCosine(
+      bucketPairs(keys, Seq(col("tbl"), col("bucket")), col("id"), maxBucket)
+        .distinct(),
+      v, threshold)
+  }
+
+  /** (id, v, n) — vectors as doubles with their norms, once per vector,
+    * so each verified pair costs one native dot product.
+    */
+  private[graft] def normedVectors(df: DataFrame, idCol: String,
+                                   vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
+      .withColumn("n", Similarity.normNative(col("v")))
+
+  /** (s, vs, ns): one side of a cosine verify. */
+  private def side(v: DataFrame, s: String): DataFrame =
+    v.select(col("id").as(s), col("v").as("v" + s), col("n").as("n" + s))
+
+  /** (id_a, id_b, cosine rounded to 6) of the sided pairs at cosine >= threshold. */
+  private def keepCosine(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.withColumn("cosine",
         Similarity.dotNative(col("va"), col("vb")) / (col("na") * col("nb")))
       .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-  }
+      .select(col("a").as("id_a"), col("b").as("id_b"),
+        round(col("cosine"), 6).as("cosine"))
+
+  /** Exact cosine verify of skinny (a, b) id candidates: vectors
+    * re-attach via two key joins (shuffle on id — vectors never ride
+    * through a bucket aggregation). shuffle_hash, never broadcast: the
+    * vector relation is O(n·dim) bytes — at 100k×64d the Scale probe saw
+    * Spark pick a broadcast build and die with
+    * notEnoughMemoryToBuildAndBroadcast.
+    */
+  private[graft] def verifyCosine(cand: DataFrame, v: DataFrame,
+                                  threshold: Double): DataFrame =
+    keepCosine(cand.join(side(v, "a").hint("shuffle_hash"), "a")
+      .join(side(v, "b").hint("shuffle_hash"), "b"), threshold)
 
   /** Duplicate-cluster resolution: connected components over a pair
     * relation (from [[minhashLshPairs]], [[simhashPairs]], …), labeling
@@ -449,18 +444,8 @@ object Dedup {
     */
   def embeddingCosinePairsBrute(df: DataFrame, idCol: String, vecCol: String,
                                 threshold: Double): DataFrame = {
-    // Norms once per vector (O(n·d)); each of the n²/2 pairs then costs
-    // one native codegen'd dot product (HOF folds are interpreted —
-    // see graft.expressions.DotProduct).
-    val v = df.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", Similarity.normNative(col("v")))
-    val a = v.select(col("id").as("id_a"), col("v").as("va"), col("n").as("na"))
-    val b = v.select(col("id").as("id_b"), col("v").as("vb"), col("n").as("nb"))
-    a.crossJoin(b).where(col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        Similarity.dotNative(col("va"), col("vb")) / (col("na") * col("nb")))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
+    val v = normedVectors(df, idCol, vecCol)
+    keepCosine(side(v, "a").crossJoin(side(v, "b")).where(col("a") < col("b")),
+      threshold)
   }
 }

@@ -255,25 +255,9 @@ object Similarity {
     * recall matters more than latency. Default 4 suits n ≲ 10⁴.
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-              vecCol: String, k: Int, dim: Int, planes: Int = 4): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("bucket", lshBucket(col("qv"), planes, dim))
-      .withColumn("qn", normNative(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("bucket", lshBucket(col("cv"), planes, dim))
-      .withColumn("cn", normNative(col("cv")))
-    val scored = c.join(q, "bucket")
-      .withColumn("cosine",
-        dotNative(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
-  }
+              vecCol: String, k: Int, dim: Int, planes: Int = 4): DataFrame =
+    knnTopK(lshCandidates(queries, corpus, idCol, vecCol, dim, planes), k)
+      .withColumn("cosine", round(col("cosine"), 6))
 
   /** LSH-bucketed RANGE search (op 384) — the other first-class
     * vector-search API next to top-k: ALL corpus vectors whose cosine
@@ -287,7 +271,20 @@ object Similarity {
     */
   def lshRangeSearch(queries: DataFrame, corpus: DataFrame, idCol: String,
                      vecCol: String, minCosine: Double, dim: Int,
-                     planes: Int = 4): DataFrame = {
+                     planes: Int = 4): DataFrame =
+    lshCandidates(queries, corpus, idCol, vecCol, dim, planes)
+      .where(col("cosine") >= minCosine)
+      .select(col("query_id"), col("neighbor_id"),
+        round(col("cosine"), 6).as("cosine"))
+
+  /** The candidate generator of [[lshTopK]] and [[lshRangeSearch]]:
+    * every (query, corpus vector) pair sharing a sign bucket under
+    * `planes` planes, one bucket equi-join, with its raw exact cosine
+    * (query_id, neighbor_id, cosine, …).
+    */
+  private def lshCandidates(queries: DataFrame, corpus: DataFrame,
+                            idCol: String, vecCol: String, dim: Int,
+                            planes: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qv"))
       .withColumn("bucket", lshBucket(col("qv"), planes, dim))
@@ -299,9 +296,6 @@ object Similarity {
     c.join(q, "bucket")
       .withColumn("cosine",
         dotNative(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .where(col("cosine") >= minCosine)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
   }
 
   /** Plane count sized to the corpus for the kNN-graph build:

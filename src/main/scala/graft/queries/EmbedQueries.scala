@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{dot, let, SMAX}
-import graft.operators.{Cluster, Similarity}
+import graft.operators.{Cluster, PageRank, Similarity}
 
 /** Embedding-store compression, clustering and graph operators. */
 object EmbedQueries {
@@ -246,15 +246,10 @@ object EmbedQueries {
           "SELECT id AS vec_id, sub, code FROM enc ORDER BY vec_id, sub")),
     // PageRank over the op-150 kNN graph (op 317; corpus centrality —
     // the representative-document signal cluster-based curation ranks
-    // by). INTEGER micro-rank algebra end-to-end: ranks live on the
-    // 1e-9 grid as longs, per-edge contribution is integer division by
-    // out-degree, damping 0.85 is ·17 div 20 — every iteration is
-    // exact long arithmetic with NO float summation anywhere, so any
-    // engine/partitioning replays it bit-for-bit (the dropped division
-    // remainders are the standard integer-PageRank mass leak; both
-    // engines drop identical remainders). 3 iterations on the ≤3N-row
-    // edge relation, localCheckpoint per step; the graph build is the
-    // one data-sized stage (same capped-bucket shape as op 150).
+    // by): graft.operators.PageRank.integerRank, the unweighted case
+    // (wt = 1, st = out-degree), 3 iterations on the ≤3N-row edge
+    // relation; the graph build is the one data-sized stage (same
+    // capped-bucket shape as op 150).
     "embed_pagerank" -> Query((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       // r15 note: pinning `edges` itself before this join was tried
@@ -267,29 +262,11 @@ object EmbedQueries {
       val edges = Similarity.knnGraph(emb, "vec_id", "embedding", 3,
           EmbDim, planes = annPlanes(s))
         .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-      val edgesOd = edges.join(
-          edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src")
-        .localCheckpoint()
-      val nodes = emb.select(col("vec_id"))
-        .crossJoin(broadcast(emb.agg(count(lit(1)).as("nn"))))
-        .localCheckpoint()
-      val r0 = nodes.select(col("vec_id"), col("nn"),
-        expr("1000000000 div nn").as("rq"))
-      val rF = (1 to 3).foldLeft(r0) { (rank, _) =>
-        val inflow = edgesOd
-          .join(rank.select(col("vec_id").as("src"), col("rq")), "src")
-          .withColumn("c", expr("rq div od"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        val next = nodes
-          .join(inflow, col("vec_id") === col("dst"), "left")
-          .select(col("vec_id"), col("nn"),
-            (expr("150000000 div nn") +
-              expr("(17 * coalesce(inflow, 0L)) div 20")).as("rq"))
-          .localCheckpoint()
-        org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(rank)
-        next
-      }
-      rF.select(col("vec_id"),
+      PageRank.integerRank(
+          emb.select(col("vec_id").as("node")),
+          edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("st")), "src")
+            .withColumn("wt", lit(1L)))
+        .select(col("node").as("vec_id"),
           (col("rq").cast("double") / 1e9).as("pagerank"))
     },
       // op 317: the op-150 edge CTE verbatim, then 3 PageRank

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Pii, Text}
-import graft.operators.Corpus
+import graft.operators.{Corpus, PageRank}
 
 /** Text analysis over the documents table. */
 object TextQueries {
@@ -253,13 +253,12 @@ object TextQueries {
           |SELECT bigram, b_count, pmi FROM sc
           |ORDER BY pmi DESC, bigram LIMIT 20""".stripMargin),
     // TextRank keywords (op 326; Mihalcea/Tarau 2004 — the op-317
-    // integer-PageRank idiom on the WORD graph): corpus-level keyword
-    // extraction for tagging/topic routing. Nodes are tokens, edges
-    // the undirected adjacent-token co-occurrences (self-loops
-    // dropped), contributions weighted by edge count over node
-    // strength — all on the 1e-9 integer rank grid with floor
-    // division, so the 3 iterations replay bit-for-bit on any
-    // engine/partitioning (the oracle unrolls them). Every stage is a
+    // integer PageRank, graft.operators.PageRank.integerRank, on the
+    // WORD graph): corpus-level keyword extraction for tagging/topic
+    // routing. Nodes are tokens, edges the undirected adjacent-token
+    // co-occurrences (self-loops dropped), contributions weighted by
+    // edge count over node strength; the 3 iterations replay
+    // bit-for-bit on any engine (the oracle unrolls them). Every stage is a
     // keyed agg on the token key; the graph is vocabulary-sized, not
     // corpus-sized, so at 100 TB this costs one token-bigram pass +
     // iterations over a relation ~|vocab|.
@@ -286,28 +285,10 @@ object TextQueries {
       // node count — pin the vocab-sized relation.
       val strength = edges.groupBy(col("src")).agg(sum(col("wt")).as("st"))
         .localCheckpoint()
-      val edgesSt = edges.join(strength, "src").localCheckpoint()
-      val nodes = strength.select(col("src").as("w"))
-        .crossJoin(broadcast(strength.agg(count(lit(1)).as("nw"))))
-        .localCheckpoint()
-      val r0 = nodes.select(col("w"), col("nw"),
-        expr("1000000000 div nw").as("rq"))
-      val rF = (1 to 3).foldLeft(r0) { (rank, _) =>
-        val inflow = edgesSt
-          .join(rank.select(col("w").as("src"), col("rq")), "src")
-          .withColumn("cc", expr("(rq * wt) div st"))
-          .groupBy(col("dst")).agg(sum(col("cc")).as("inflow"))
-        val next = nodes
-          .join(inflow, col("w") === col("dst"), "left")
-          .select(col("w"), col("nw"),
-            (expr("150000000 div nw") +
-              expr("(17 * coalesce(inflow, 0L)) div 20")).as("rq"))
-          .localCheckpoint()
-        org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(rank)
-        next
-      }
-      rF.orderBy(col("rq").desc, col("w")).limit(20)
-        .select(col("w").as("word"),
+      PageRank.integerRank(
+          strength.select(col("src").as("node")), edges.join(strength, "src"))
+        .orderBy(col("rq").desc, col("node")).limit(20)
+        .select(col("node").as("word"),
           (col("rq").cast("double") / 1e9).as("textrank"))
     },
       // op 326: the op-317 integer-PageRank replay on the word graph —

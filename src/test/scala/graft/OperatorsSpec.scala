@@ -27,6 +27,49 @@ class OperatorsSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L)))
   }
 
+  test("bucket pairs: maxBucket members kept, maxBucket + 1 dropped, singletons silent") {
+    // bucket 1 holds exactly 4 members, bucket 2 holds 5, bucket 3 one;
+    // rows arrive in descending id order so a < b is the filter's doing
+    val rows = ((1L to 4L).map(id => (1, id)) ++ (11L to 15L).map(id => (2, id)) :+
+      (3, 21L)).reverse.toDF("bucket", "id")
+    def pairs(max: Int) = Dedup.bucketPairs(rows, Seq($"bucket"), $"id", max)
+      .as[(Long, Long)].collect().toSeq.sorted
+    def all(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (a, b)
+    assert(pairs(4) == all(1L to 4L))
+    assert(pairs(5) == (all(1L to 4L) ++ all(11L to 15L)).sorted)
+    assert(pairs(Int.MaxValue) == pairs(5))
+    // struct members pair on their key, once each
+    val keyed = Dedup.bucketPairs(rows, Seq($"bucket"), struct($"id", $"bucket"), 4,
+        _.getField("id"))
+      .select($"a.id", $"b.id").as[(Long, Long)].collect().toSeq.sorted
+    assert(keyed == all(1L to 4L))
+  }
+
+  test("brute cosine pairs hold every LSH pair at the same cosine and every exact duplicate") {
+    val rnd = new scala.util.Random(17)
+    val base = (1L to 60L).map(i => (i, Array.fill(8)(rnd.nextGaussian())))
+    // ids 101-105 copy ids 1-5 exactly; ids 201-205 copy ids 6-10 with noise
+    val exact = (1L to 5L).map(i => (100 + i, base(i.toInt - 1)._2))
+    val near = (6L to 10L).map(i => (200 + i - 5, base(i.toInt - 1)._2.map(_ + rnd.nextGaussian() * 0.01)))
+    val df = (base ++ exact ++ near).map { case (i, v) => (i, v.toSeq) }.toDF("vec_id", "embedding")
+    val lsh = Dedup.embeddingCosinePairs(df, "vec_id", "embedding", 0.95, dim = 8, planes = 4)
+      .as[(Long, Long, Double)].collect()
+    val brute = Dedup.embeddingCosinePairsBrute(df, "vec_id", "embedding", 0.95)
+      .as[(Long, Long, Double)].collect()
+    val bruteCos = brute.map { case (a, b, c) => (a, b) -> c }.toMap
+    // the baseline is every pair at cosine >= 0.95, once, as a < b
+    val vecs = (base ++ exact ++ near).sortBy(_._1)
+    def dot(x: Array[Double], y: Array[Double]) = x.indices.map(i => x(i) * y(i)).sum
+    val allPairs = for ((a, x) <- vecs; (b, y) <- vecs if a < b
+      if dot(x, y) / (math.sqrt(dot(x, x)) * math.sqrt(dot(y, y))) >= 0.95) yield (a, b)
+    assert(bruteCos.size == brute.length && bruteCos.keySet == allPairs.toSet)
+    assert(lsh.nonEmpty && lsh.forall { case (a, b, c) => bruteCos.get((a, b)).contains(c) })
+    val dupPairs = (1L to 5L).map(i => (i, 100 + i))
+    assert(dupPairs.forall(p => bruteCos.get(p).contains(1.0)))
+    assert(dupPairs.forall(p => lsh.exists { case (a, b, _) => (a, b) == p }))
+    assert((6L to 10L).forall(i => bruteCos.contains((i, 200 + i - 5))))
+  }
+
   test("clusters: transitive chain resolves to one component, min id wins") {
     // 1-2, 2-3, 3-4 chain (1~4 never paired directly) + separate 10-11:
     // label propagation must walk the chain, not just the direct pairs.
