@@ -532,13 +532,16 @@ object Scale {
       .withColumn("ts", timestamp_micros(
         lit(1712928600000000L) + col("doc_id") * 1000L))
     val t0 = System.nanoTime()
-    val q = graft.streaming.Stateful
-      .minhashDedupStream(src, "doc_id", "text", "ts", retention = retention)
-      .toDF.writeStream.format("noop")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val q = graft.queries.StreamingQueries.streamScope(spark) {
+      val run = graft.streaming.Stateful
+        .minhashDedupStream(src, "doc_id", "text", "ts", retention = retention)
+        .toDF.writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      run.awaitTermination()
+      run
+    }
     val sec = math.round((System.nanoTime() - t0) / 1e6) / 1e3
     val stateRows = q.recentProgress.reverseIterator
       .flatMap(p => Option(p.stateOperators).filter(_.nonEmpty))
@@ -576,19 +579,21 @@ object Scale {
     // op runs in Update mode); the LAST batch's emission is the final
     // counter table, so keep its count.
     val lastBatchRows = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val q = graft.streaming.Stateful.spaceSavingStream(in, capacity)
-      .toDF.writeStream.outputMode("update")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.persist() // one execution: count + write share the batch
-        lastBatchRows.set(b.count())
-        b.write.mode("append").parquet(out)
-        b.unpersist()
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.queries.StreamingQueries.streamScope(spark) {
+      graft.streaming.Stateful.spaceSavingStream(in, capacity)
+        .toDF.writeStream.outputMode("update")
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.persist() // one execution: count + write share the batch
+          lastBatchRows.set(b.count())
+          b.write.mode("append").parquet(out)
+          b.unpersist()
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
     val sec = math.round((System.nanoTime() - t0) / 1e6) / 1e3
     (sec, lastBatchRows.get())
   }

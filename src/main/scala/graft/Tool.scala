@@ -2,12 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Query tools over `SparkEntry.queries`, one session per run:
   *
-  *   Tool time <name>[,<name>…] [reps]  — per-rep wall times (default 3)
+  *   Tool time <name>[,<name>…] [reps]  — per-rep wall time (default 3
+  *     reps), with the generated classes the rep compiled and the ms
+  *     Janino spent on them (`CodegenMetrics`; in local mode that counts
+  *     the tasks too). A warm rep that still compiles is recompiling
+  *     code it already had.
   *   Tool sweep [n]                     — min-of-3 the n (default 25)
   *     slowest queries of the round's BENCH_LOCAL record and write
   *     BENCHONE_<round>.json ($SPARK_GRAFT_ROUND, default r14), so a
@@ -60,7 +64,12 @@ object Tool {
         val reps = if (rest.length > 1) rest(1).toInt else 3
         names.foreach { name =>
           (1 to reps).foreach { i =>
-            println(f"$name rep$i ${time(spark, sfDir, name)}%.2f s")
+            val c0 = GraftSqlBridge.codegenCompiles
+            val n0 = GraftSqlBridge.codegenCompileNanos
+            val dt = time(spark, sfDir, name)
+            val compiles = GraftSqlBridge.codegenCompiles - c0
+            val ms = (GraftSqlBridge.codegenCompileNanos - n0) / 1e6
+            println(f"$name rep$i $dt%.2f s $compiles%d compiles $ms%.0f ms")
           }
         }
       case "sweep" =>

@@ -57,6 +57,43 @@ object StreamingQueries {
     */
   private val ReplayPartitions = 8
 
+  /** Session conf that scopes artifact isolation; on by default in
+    * Spark 4.1. */
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
+  /** Run `body`, which starts a stream and waits for it, under the
+    * stream-run settings, restoring the caller's values afterwards (set
+    * or unset, as they were) even when `body` throws:
+    *
+    *  - [[ReplayPartitions]] shuffle partitions;
+    *  - artifact isolation off, unless the session holds artifacts of
+    *    its own. `writeStream.start()` clones the session, and under
+    *    isolation the clone gets a fresh artifact state, so each run's
+    *    tasks ran under a new executor class loader. Spark's codegen
+    *    cache is keyed by (class loader, code), so every replay
+    *    recompiled every generated class its tasks use, on every run.
+    *    With isolation off the clone's tasks run under the executor's
+    *    default loader, the same on every run, and a warm replay
+    *    compiles nothing. A session holding an `addArtifact` jar or
+    *    class keeps isolation, so its stream still sees them.
+    *
+    * Every stream graft starts goes through here: each replay's run
+    * (both of [[sentinelReplay]]'s) and `Scale`'s stream probes.
+    */
+  private[graft] def streamScope[T](s: SparkSession)(body: => T): T = {
+    val set = Seq("spark.sql.shuffle.partitions" -> ReplayPartitions.toString) ++
+      (if (org.apache.spark.sql.GraftSqlBridge.canShareLoader(s))
+        Seq(ArtifactIsolation -> "false") else Nil)
+    val explicit = s.conf.getAll
+    val saved = set.map { case (k, _) => k -> explicit.get(k) }
+    set.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** Copy a table's data `files` ([[graft.sources.Tables.dataFiles]])
     * into the landing dir `in`, each at its path below the table path.
     * Staging copies files, never the directory — a dir copied as one
@@ -155,9 +192,13 @@ object StreamingQueries {
         expr("timestamp_ntz'2200-01-01 00:00:00'")
       case _ => expr("timestamp'2200-01-01 00:00:00'")
     }
+    // The sentinel is the first source row, taken on the driver: a
+    // `limit(1)` in the write plan would name its generated counter
+    // from a process-wide sequence, a class recompiled on every run.
     runReplay(s, tag, t0, in.toString, raw.schema, "append",
       Some(col(markCol) =!= mark),
-      Some(() => raw.limit(1).withColumn("ts", sentinelTs)
+      Some(() => s.createDataFrame(java.util.Arrays.asList(raw.take(1): _*), raw.schema)
+        .withColumn("ts", sentinelTs)
         .withColumn(markCol, mark)
         .write.mode("append").parquet(in.toString)))(build)
   }
@@ -183,27 +224,23 @@ object StreamingQueries {
     var addBatch = 0.0
     val written = new java.util.concurrent.atomic.AtomicReference[
       org.apache.spark.sql.types.StructType]()
-    def run(): Unit = {
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", ReplayPartitions.toString)
-      try {
-        val src = s.readStream.schema(schema).parquet(in)
-        val t1 = System.nanoTime()
-        val q = build(src).writeStream
-          .outputMode(mode)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val kept = keep.fold(batch)(batch.where)
-            written.set(kept.schema)
-            kept.write.mode("append").parquet(out)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        wall += (System.nanoTime() - t1) / 1e9
-        addBatch += q.recentProgress.iterator.flatMap(p =>
-          Option(p.durationMs.get("addBatch")).map(_.toDouble / 1e3)).sum
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    def run(): Unit = streamScope(s) {
+      val src = s.readStream.schema(schema).parquet(in)
+      val t1 = System.nanoTime()
+      val q = build(src).writeStream
+        .outputMode(mode)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val kept = keep.fold(batch)(batch.where)
+          written.set(kept.schema)
+          kept.write.mode("append").parquet(out)
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      wall += (System.nanoTime() - t1) / 1e9
+      addBatch += q.recentProgress.iterator.flatMap(p =>
+        Option(p.durationMs.get("addBatch")).map(_.toDouble / 1e3)).sum
     }
     run()
     flush.foreach { f => f(); run() }

@@ -771,6 +771,14 @@ object Stateful {
   case class SSState(entries: Array[SSEntry])
   case class SSOut(bucket: Int, token: String, cnt: Long, err: Long)
 
+  /** One state encoder for every space-saving stream. An encoder of an
+    * array field names its element variable from a process-wide
+    * sequence, and the state's generated (de)serializers carry that
+    * name, so an encoder built per query is a class recompiled on every
+    * run. */
+  private lazy val ssStateEncoder: Encoder[SSState] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[SSState]()
+
   /** Streaming heavy hitters by the space-saving algorithm
     * (Metwally/Agrawal/El Abbadi 2005), sharded by a hash bucket:
     * each key lives in exactly ONE bucket (hash-determined), each
@@ -822,7 +830,7 @@ object Stateful {
             SSEntry(t, c, err)
           }.toArray))
           m.iterator.map { case (t, (c, err)) => SSOut(bucket, t, c, err) }
-      }
+      }(ssStateEncoder, implicitly[Encoder[SSOut]])
   }
 
   // ------------------------------------- streaming Markov transitions

@@ -216,4 +216,98 @@ class StreamingSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("empty_landing"), e.getMessage)
   }
+
+  private val taskLoader = udf(() => StreamingSpec.loaderName()).asNondeterministic()
+
+  /** The loader tasks of a job with no session artifact state run under
+    * (an RDD job, outside any SQL execution): the executor's default. */
+  private def defaultLoader(): Set[String] = spark.sparkContext
+    .parallelize(1 to 4, 2).mapPartitions(_ => Iterator(StreamingSpec.loaderName()))
+    .collect().toSet
+
+  private val isolation = "spark.sql.artifact.isolation.enabled"
+
+  /** A landing dir holding one parquet file of ids 0..9. */
+  private def landing(): String = {
+    val in = java.nio.file.Files.createTempDirectory("graft-loader-in").toString
+    spark.range(10).coalesce(1).write.mode("overwrite").parquet(in)
+    in
+  }
+
+  /** Replay `in` on `s`, recording each task's loader and the confs the
+    * stream started under; returns (loaders, shuffle partitions, isolation). */
+  private def loaderReplay(s: org.apache.spark.sql.SparkSession, in: String)
+      : (Set[String], String, String) = {
+    var seen = ("", "")
+    val sunk = graft.queries.StreamingQueries.runReplay(s, "loader",
+      System.nanoTime(), in, spark.read.parquet(in).schema, "append",
+      None, None) { src =>
+      seen = (s.conf.get("spark.sql.shuffle.partitions"), s.conf.get(isolation))
+      src.select(col("id"), taskLoader().as("loader"))
+    }
+    (sunk.select("loader").as[String].collect().toSet, seen._1, seen._2)
+  }
+
+  test("a warm replay compiles no class: each run's tasks share one loader") {
+    import org.apache.spark.sql.GraftSqlBridge.codegenCompiles
+    val dir = "/root/testdata/sf0.001"
+    // twap: one stateful run; topk: an array-typed state encoder;
+    // window_agg: the sentinel flush's second run and its sentinel write
+    Seq("streaming_twap", "streaming_topk", "streaming_window_agg").foreach { q =>
+      def replay() = SparkEntry.queries(q)(spark, dir).collect()
+      val cold = replay()
+      val c0 = codegenCompiles
+      val warm = replay()
+      assert(codegenCompiles == c0, s"the warm $q compiled ${codegenCompiles - c0} classes")
+      assert(warm.toSeq == cold.toSeq, q)
+    }
+    // Spark's codegen cache is keyed by (class loader, code): two runs
+    // of a replay hit it only under one loader, the executor's default
+    val in = landing()
+    val (run1, _, _) = loaderReplay(spark, in)
+    val (run2, _, _) = loaderReplay(spark, in)
+    val default = defaultLoader()
+    assert(default.size == 1 && run1 == default && run2 == default,
+      s"replay runs $run1, $run2; default $default")
+  }
+
+  test("a replay restores the shuffle partitions and the isolation conf") {
+    val in = landing()
+    def confs(s: org.apache.spark.sql.SparkSession) =
+      Seq("spark.sql.shuffle.partitions", isolation)
+        .map(k => (s.conf.get(k), s.conf.getAll.get(k)))
+    val before = confs(spark)
+    val (_, partitions, iso) = loaderReplay(spark, in)
+    assert((partitions, iso) == ("8", "false"))
+    assert(confs(spark) == before)
+    // a replay that raises restores them too
+    val empty = java.nio.file.Files.createTempDirectory("graft-empty-in").toString
+    intercept[IllegalStateException] {
+      graft.queries.StreamingQueries.runReplay(spark, "empty_landing",
+        System.nanoTime(), empty, spark.read.parquet(in).schema, "append",
+        None, None)(identity)
+    }
+    assert(confs(spark) == before)
+    // a session holding its own artifact keeps isolation for its stream,
+    // whose tasks then run under that session's loader, not the default
+    // (a class file, never loaded: an added jar would also be registered
+    // with the SparkContext, which outlives this test)
+    val own = spark.newSession()
+    own.addArtifact(Array[Byte](0), "classes/GraftArtifactProbe.class")
+    assert(!org.apache.spark.sql.GraftSqlBridge.canShareLoader(own))
+    val ownBefore = confs(own)
+    val (loaders, _, ownIso) = loaderReplay(own, in)
+    assert(ownIso == "true")
+    val default = defaultLoader()
+    assert(loaders.nonEmpty && (loaders & default).isEmpty, s"$loaders vs $default")
+    assert(confs(own) == ownBefore)
+  }
+}
+
+object StreamingSpec {
+  /** The calling thread's context class loader, as "class@identity". */
+  def loaderName(): String = {
+    val l = Thread.currentThread.getContextClassLoader
+    s"${l.getClass.getName}@${System.identityHashCode(l)}"
+  }
 }
